@@ -1,14 +1,16 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Repeated per-query timer for variant adjudication —
   * `runMain graft.QRepeat <sfDir> <n> <query>...` times each NAMED query
   * n times in one JVM (artifacts prebuilt first, same session config as
-  * Bench) and prints every attempt plus min/median. Single QBench runs at
-  * sf0.1 swing ±30% on this host (r15 measured the same HEAD at 3.3-5.4 s
-  * for one query across three runs); a variant decision needs the
-  * distribution, not a draw from it. */
+  * Bench) and prints every attempt plus min/median and each attempt's
+  * Janino compile count. Single QBench runs at sf0.1 swing ±30% under
+  * co-tenant load (r15 measured the same HEAD at 3.3-5.4 s for one query
+  * across three runs); a variant decision needs the distribution, not a
+  * draw from it. */
 object QRepeat {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -33,9 +35,14 @@ object QRepeat {
     names.foreach { name =>
       // attempt 1 decomposed: builder (may run eager memoized artifact
       // work) / analysis+optimization+physical planning / first execution
-      // (codegen compile + run). Later attempts re-plan the same tree but
-      // hit the codegen cache and any plan-canonical caches — the spread
-      // between exec1 and min isolates what first-pass bench entries pay.
+      // (codegen compile + run). Later attempts re-plan the same tree and
+      // reuse any plan-canonical caches; their generated classes come from
+      // Spark's JVM-wide codegen cache only while every class the JVM has
+      // generated fits its LRU (spark.sql.codegen.cache.maxEntries, 100 by
+      // default). A nonzero compile count on a later attempt means the
+      // cache evicted this query's classes, so the spread between exec1
+      // and min then understates what first-pass bench entries pay.
+      val c0 = compiles()
       val b0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
       val b1 = System.nanoTime()
@@ -43,17 +50,23 @@ object QRepeat {
       val p1 = System.nanoTime()
       df.count()
       val e1 = System.nanoTime()
-      val ts = ((e1 - b0) / 1e9) +: (2 to n).map { _ =>
+      val attempts = ((e1 - b0) / 1e9, compiles() - c0) +: (2 to n).map { _ =>
+        val c = compiles()
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
+        ((System.nanoTime() - t0) / 1e9, compiles() - c)
       }
+      val ts = attempts.map(_._1)
       val sorted = ts.sorted
       println(f"QREPEAT $name%-28s min ${sorted.head}%6.2f  " +
         f"med ${sorted(n / 2)}%6.2f  all ${ts.map(t => f"$t%.2f").mkString(" ")}" +
         f"  [build ${(b1 - b0) / 1e9}%.2f plan ${(p1 - b1) / 1e9}%.2f " +
-        f"exec1 ${(e1 - p1) / 1e9}%.2f]")
+        f"exec1 ${(e1 - p1) / 1e9}%.2f]" +
+        s"  compiles ${attempts.map(_._2).mkString(" ")}")
     }
     spark.stop()
   }
+
+  /** Janino compilations so far in this JVM (one histogram sample each). */
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

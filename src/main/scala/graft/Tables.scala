@@ -18,8 +18,22 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val schemas = new SessionMemo[String, StructType]
+
+  /** `$dir/$name.parquet` read with the schema its footer resolved to on
+    * the session's first read of that path. Inferring a parquet schema
+    * runs a Spark job over the footer, and every entry builder reads its
+    * tables afresh, so without the memo each call pays one job per table.
+    * Only the StructType is shared: each call still gets a new relation
+    * (fresh attribute IDs, so self-joins analyze) over a fresh file
+    * listing. This relies on a session treating the star-schema inputs as
+    * read-only: a file rewritten with a different schema under the same
+    * path is read with the old one until the session's context ends. */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = schemas.computeIfAbsent(spark, path, spark.read.parquet(_).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = t(s, d, "nation")

@@ -236,7 +236,7 @@ object NdvJoinReorderRule extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(PureProjected(jl @ Join(a, b, Inner, Some(condAB), hAB)),
+    case j @ Join(PureProjected(Join(a, b, Inner, Some(condAB), hAB)),
         c, Inner, Some(condAC), hJ)
         if hintless(hAB) && hintless(hJ) &&
           // the outer condition must be detachable from B

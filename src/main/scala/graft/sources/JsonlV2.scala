@@ -1844,7 +1844,7 @@ private[sources] class JsonlScanBuilder(path: String, full: StructType, splitSiz
       : Option[JsonlMetaAgg] = {
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
-    import JsonlV2.{FileStats, cmpVals, normVal}
+    import JsonlV2.{FileStats, cmpVals}
     if (limit >= 0) return None
     val files = JsonlV2.listFiles(path).filter { case (f, _) =>
       fileWhitelist.forall(_.contains(f.substring(f.lastIndexOf('/') + 1)))

@@ -6,7 +6,6 @@ import org.apache.spark.sql.streaming.GroupStateTimeout
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.Ops._
 
 /** Streaming surface (SURVEY.md §2.9).
   *

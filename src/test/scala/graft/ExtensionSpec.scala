@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Similarity}
 import graft.functions.{Multimodal, RollingHashMin, TextAnalysis}

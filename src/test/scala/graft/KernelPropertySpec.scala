@@ -342,7 +342,7 @@ class KernelPropertySpec extends AnyFunSuite {
   test("simhash64 ≡ the composed xxhash64 majority-vote HOF form") {
     val spark = SparkSpec.session
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.expr
     graft.functions.Simhash64.register(spark)
     val docs = Seq(
       Seq("a b c", "b c d", "c d e"),

@@ -49,8 +49,6 @@ class PlanSpec extends SparkSpec {
         .contains("SortMergeJoin"), "-1 threshold must leave SMJ visible")
       // control: byte-identical side tables WITHOUT ndv sidecars — no
       // evidence, no reorder: written order survives
-      val schemaA = graft.Tables.documents(spark, d)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       val bPlain = java.nio.file.Files.createTempDirectory("s46_b_plain").toString
       val cPlain = java.nio.file.Files.createTempDirectory("s46_c_plain").toString
       spark.read.format("graft-jsonl").schema(
@@ -846,7 +844,7 @@ class PlanSpec extends SparkSpec {
     // dissolves ResolvedHint into Join hints.
     import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, GlobalLimit, LogicalPlan, ResolvedHint}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BinaryComparison, In, Literal}
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BinaryComparison, In}
     val broadcastBounded = bounded ++ Set(
       "shard", "dow", "digit", // fixed 32-shard split / 7 weekdays / 10 digits
       "cell", "band",          // IVF cell count / LSH band count are constants

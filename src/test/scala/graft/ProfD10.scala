@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Scratch profiler decomposing d10's per-stage cost — test scope, not
   * shipped. Runs each stage twice to split codegen/JIT warmup from

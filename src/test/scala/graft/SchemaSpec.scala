@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -74,6 +80,75 @@ class SchemaSpec extends SparkSpec {
       s"eventsRawSchema.ts=${declared("ts").dataType} but parquet holds " +
         s"${phys("ts").dataType} — update Streams.eventsRawSchema and " +
         "normalizeTs together")
+  }
+
+  /** Spark jobs `body` launches on this thread. They carry a job group
+    * unique to this call; a fence job in a second group runs after `body`,
+    * and since the bus delivers job starts in order, once the fence's
+    * start arrives every job `body` launched has been counted. */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"schemaspec-${java.util.UUID.randomUUID}"
+    val counted = new AtomicInteger
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => counted.incrementAndGet()
+          case Some(g) if g == s"$group-fence" => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-fence", "fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, TimeUnit.SECONDS), "fence job never reached the listener")
+      counted.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** lineitem copied under a fresh directory, so no earlier suite has
+    * resolved its schema in this session yet. */
+  private def freshLineitemDir(): String = {
+    val dir = Files.createTempDirectory("schemaspec_tables")
+    Files.copy(Paths.get(s"$d/lineitem.parquet"), dir.resolve("lineitem.parquet"))
+    dir.toString
+  }
+
+  test("Tables resolves a path's parquet schema once per session: the " +
+    "second read of a table launches no Spark job") {
+    val dir = freshLineitemDir()
+    val first = jobsLaunchedBy { Tables.lineitem(spark, dir) }
+    assert(first >= 1, "the first read must infer the schema (listener sanity)")
+    assert(jobsLaunchedBy { Tables.lineitem(spark, dir) } === 0)
+  }
+
+  test("a memoized-schema read equals a plain parquet read: same schema, " +
+    "same rows") {
+    val dir = freshLineitemDir()
+    Tables.lineitem(spark, dir)
+    val memo = Tables.lineitem(spark, dir)
+    val plain = spark.read.parquet(s"$dir/lineitem.parquet")
+    assert(memo.schema === plain.schema)
+    assert(memo.exceptAll(plain).isEmpty && plain.exceptAll(memo).isEmpty)
+  }
+
+  test("two reads of one table carry distinct attribute IDs, so a self-join " +
+    "on them analyzes and matches the same join over plain reads") {
+    val selfJoin = (a: DataFrame, b: DataFrame) =>
+      a.join(b, a("l_orderkey") === b("l_orderkey") &&
+        a("l_linenumber") === b("l_linenumber"))
+    val (a, b) = (Tables.lineitem(spark, d), Tables.lineitem(spark, d))
+    val ids = (df: DataFrame) => df.queryExecution.analyzed.output.map(_.exprId).toSet
+    assert(ids(a).intersect(ids(b)).isEmpty)
+    val plain = () => spark.read.parquet(s"$d/lineitem.parquet")
+    assert(selfJoin(a, b).count() === selfJoin(plain(), plain()).count())
   }
 
   test("embeddings/documents contracted types for the ANN/dedup families") {
