@@ -22,7 +22,7 @@ SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") \
     else "/root/testdata/sf0.01"
 # per-SF dump dir: a long sf0.1 run and a quick sf0.01 gate must not
 # clobber each other's Spark outputs mid-compare. --out=DIR points the
-# compare at a targeted DumpOne dir instead.
+# compare at a targeted dump (`graft.Verify <sfDir> <outDir> <name>...`).
 OUT = "/tmp/graft_verify_" + os.path.basename(SF.rstrip("/"))
 JOBS = 1
 ONLY = None

@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** (1-min, 5-min) load averages — ambient host pressure. Benches have
@@ -60,25 +59,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffle/spill on the headroom-checked scratch policy (shm first) —
-      // the r8 driver bench was lost to disk-contended /tmp shuffle dirs
-      .config("spark.local.dir", Scratch.localDir)
-      // storage-partitioned reads: let V2 scans honor KeyGroupedPartitioning
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // sides clustered on a SUBSET of the join keys are still co-partitioned
-      // (same key -> same partition pair) -- required for storage-partitioned
-      // joins whose keys superset the layout's partition columns
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     val (warmBytes, warmSec) = warmPageCache(sfDir)
     val (load1Start, load5Start) = loadavg()
     val ioMsStart = diskIoMs()

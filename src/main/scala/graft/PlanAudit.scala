@@ -1,35 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-quality audit: prints the formatted physical plan of selected
   * queries so scan pruning (ReadSchema/PushedFilters), join strategy and
   * WholeStageCodegen spans can be inspected —
-  * `runMain graft.PlanAudit <sfDir> <query>...`. */
+  * `runMain graft.PlanAudit <sfDir> <query>...`. Runs on the session Bench
+  * times, so an audited plan is the plan the gate runs. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else Seq("q01_top5_products")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      // same extensions as the gate mains — an audited plan must be the
-      // plan the gate actually runs (rewrite-dependent entries: p08/p14/j19)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffle/spill on the headroom-checked scratch policy (shm first) —
-      // the r8 driver bench was lost to disk-contended /tmp shuffle dirs
-      .config("spark.local.dir", Scratch.localDir)
-      // storage-partitioned reads: let V2 scans honor KeyGroupedPartitioning
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // sides clustered on a SUBSET of the join keys are still co-partitioned
-      // (same key -> same partition pair) -- required for storage-partitioned
-      // joins whose keys superset the layout's partition columns
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     names.foreach { n =>
       println(s"===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

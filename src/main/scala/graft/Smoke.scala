@@ -1,28 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner mirroring the driver's t1 check: `SparkEntry.entry`
   * must return rows > 0 on sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffle/spill on the headroom-checked scratch policy (shm first) —
-      // the r8 driver bench was lost to disk-contended /tmp shuffle dirs
-      .config("spark.local.dir", Scratch.localDir)
-      // storage-partitioned reads: let V2 scans honor KeyGroupedPartitioning
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // sides clustered on a SUBSET of the join keys are still co-partitioned
-      // (same key -> same partition pair) -- required for storage-partitioned
-      // joins whose keys superset the layout's partition columns
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

@@ -2,58 +2,48 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare —
+  * `runMain graft.Verify <sfDir> <outDir> [name...]`. Naming entries dumps
+  * only those, with both manifests restricted to them, so
+  * `scripts/check.py <sfDir> --skip-verify --out=<outDir>` gates just them. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is INT64 TIMESTAMP(NANOS) — read as long, converted in
-      // Tables.events (Spark cannot read nanos timestamps natively).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffle/spill on the headroom-checked scratch policy (shm first) —
-      // the r8 driver bench was lost to disk-contended /tmp shuffle dirs
-      .config("spark.local.dir", Scratch.localDir)
-      // storage-partitioned reads: let V2 scans honor KeyGroupedPartitioning
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // sides clustered on a SUBSET of the join keys are still co-partitioned
-      // (same key -> same partition pair) -- required for storage-partitioned
-      // joins whose keys superset the layout's partition columns
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [name...]")
+    val spark = GraftSession.local(GraftSession.cpus)
+    try dump(spark, args(0), args(1), args.drop(2).toSeq)
+    finally spark.stop()
+  }
+
+  /** Dump `names` (every entry when empty) under `outDir`. An unknown name
+    * fails before anything is written. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      names: Seq[String]): Unit = {
+    val all = SparkEntry.queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown entries: ${unknown.mkString(", ")}")
+    val queries =
+      if (names.isEmpty) all else all.filter { case (n, _) => names.contains(n) }
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    import JsonEscape.q
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => queries.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Manifest of every declared query, so tooling can spot entries whose
+    // Manifest of every dumped query, so tooling can spot entries whose
     // Spark run failed (no output dir written).
-    val manifest = SparkEntry.queries.keys.toSeq.sorted
-      .map(q).mkString("[", ",", "]")
+    val manifest = queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]")
     Files.writeString(Paths.get(s"$outDir/queries.json"), manifest)
-    spark.stop()
   }
-}
 
-/** JSON string escape shared by the manifest writers ([[Verify]],
-  * [[DumpOne]]): backslash, quote, and ALL control chars (<0x20) — a tab
-  * or CR in builder-authored SQL would otherwise make the driver's
-  * json.load fail and silently zero the round's correctness. */
-private[graft] object JsonEscape {
-  def q(s: String): String = "\"" + s.flatMap {
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20) —
+    * a tab or CR in builder-authored SQL would otherwise make the driver's
+    * json.load fail and silently zero the round's correctness. */
+  private def q(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

@@ -206,7 +206,7 @@ object Relational {
     * like any text source; the parse itself is Jackson inside codegen, one
     * pass, no shuffle. Normalization (`lang` default, tag counts, score
     * filter) happens in the same scan. */
-  def s12JsonlScan(s: SparkSession, d: String): DataFrame = {
+  def s12JsonlScan(s: SparkSession): DataFrame = {
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("score", DoubleType),
@@ -3794,7 +3794,7 @@ object Relational {
     "s08_count_scan"             -> s08CountScan _,
     "s09_partitioned_write_prune" -> s09PartitionedWritePrune _,
     "s10_bucketed_join"          -> s10BucketedJoin _,
-    "s12_jsonl_scan"             -> s12JsonlScan _,
+    "s12_jsonl_scan"             -> ((s, _) => s12JsonlScan(s)),
     "s13_incremental_agg"        -> s13IncrementalAgg _,
     "s14_compaction"             -> s14Compaction _,
     "s15_schema_evolution"       -> s15SchemaEvolution _,

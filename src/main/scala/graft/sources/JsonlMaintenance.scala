@@ -332,8 +332,7 @@ object JsonlVacuum {
     StructField("stats_files_after", LongType, nullable = false),
     StructField("dead_entries_dropped", LongType, nullable = false)))
 
-  def vacuum(spark: SparkSession, catalog: JsonlCatalog,
-      tableName: String): VacuumReport = {
+  def vacuum(catalog: JsonlCatalog, tableName: String): VacuumReport = {
     val parts = tableName.split('.').toSeq
     require(parts.length >= 2 && parts.forall(_.nonEmpty),
       s"graft-jsonl vacuum: table must be namespace.name, got '$tableName'")
@@ -450,7 +449,7 @@ private[sources] class VacuumProcedure(catalog: JsonlCatalog)
 
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val table = input.getUTF8String(0).toString
-      val r = JsonlVacuum.vacuum(SparkSession.active, catalog, table)
+      val r = JsonlVacuum.vacuum(catalog, table)
       val row: InternalRow = new GenericInternalRow(Array[Any](
         r.tempsRemoved, r.statsFilesBefore, r.statsFilesAfter,
         r.deadEntriesDropped))
@@ -1149,7 +1148,7 @@ private[sources] class TransactProcedure(catalog: JsonlCatalog)
           s"graft-jsonl transact: table must be namespace.name, got '$t'")
         (Identifier.of(parts.init.toArray, parts.last), spark.table(v))
       }
-      val (txnId, nFiles) = JsonlTransact.transact(spark, catalog, batches)
+      val (txnId, nFiles) = JsonlTransact.transact(catalog, batches)
       val row: InternalRow = new GenericInternalRow(Array[Any](
         org.apache.spark.unsafe.types.UTF8String.fromString(txnId),
         tables.size.toLong, nFiles))

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.catalog.Identifier
 
 /** ATOMIC MULTI-TABLE COMMIT for the governed jsonl lake — fact + dims
@@ -90,7 +90,7 @@ private[graft] object JsonlTransact {
 
   /** Atomically append every (table, batch) as one transaction. Returns
     * (txnId, total files published). */
-  def transact(spark: SparkSession, catalog: JsonlCatalog,
+  def transact(catalog: JsonlCatalog,
       batches: Seq[(Identifier, DataFrame)]): (String, Long) = {
     require(batches.nonEmpty, "graft-jsonl transact: no batches")
     val idents = batches.map(_._1)

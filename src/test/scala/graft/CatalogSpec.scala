@@ -86,7 +86,7 @@ class CatalogSpec extends SparkSpec {
     }
     try {
       val e = intercept[Exception] {
-        graft.sources.JsonlTransact.transact(spark,
+        graft.sources.JsonlTransact.transact(
           spark.sessionState.catalogManager.catalog(cat)
             .asInstanceOf[graft.sources.JsonlCatalog],
           Seq(org.apache.spark.sql.connector.catalog.Identifier

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 
 import graft.operators.{Dedup, Similarity}
 import graft.functions.{Multimodal, RollingHashMin, TextAnalysis}
@@ -264,12 +266,21 @@ class ExtensionSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects the custom functions into a session builder") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.functions.GraftExtensions().apply(ext)
-    // applying against the live session registry proves the builders resolve
-    graft.functions.RollingHashMin.register(spark)
-    graft.functions.CosineSim.register(spark)
-    val r = spark.sql(
+    // a fresh session's registry is the builtins plus what the extensions
+    // inject: `register` calls made on the shared session do not carry over,
+    // so each name resolving here is the extension's doing
+    val fresh = spark.newSession()
+    val injected = Seq("rolling_hash_min", "cosine_sim", "minhash_sig",
+      "hyperplane_sketch", "word_shingles", "stopword_hits", "simhash64",
+      "l2_sq", "topk_agg", "topk_rows_agg", "topk_long_agg",
+      "sorted_inter_count", "sorted_inter", "nfc_normalize",
+      "winnow_fingerprints", "deletion_hashes", "cdc_boundaries",
+      "cosine_scores").map(FunctionIdentifier(_))
+    assert(injected.forall(!FunctionRegistry.builtin.functionExists(_)),
+      "no injected name may shadow a builtin")
+    val missing = injected.filterNot(fresh.sessionState.functionRegistry.functionExists)
+    assert(missing.isEmpty, s"not injected: ${missing.mkString(", ")}")
+    val r = fresh.sql(
       "SELECT rolling_hash_min('abc', 2), cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F))")
       .head()
     assert(r.getLong(0) > 0 && r.getDouble(1) === 1.0)

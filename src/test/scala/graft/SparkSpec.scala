@@ -12,25 +12,5 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffle/spill on the headroom-checked scratch policy (shm first) —
-      // the r8 driver bench was lost to disk-contended /tmp shuffle dirs
-      .config("spark.local.dir", Scratch.localDir)
-      // storage-partitioned reads: let V2 scans honor KeyGroupedPartitioning
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // sides clustered on a SUBSET of the join keys are still co-partitioned
-      // (same key → same partition pair) — required for storage-partitioned
-      // joins whose keys superset the layout's partition columns
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.local(8)
 }

@@ -147,11 +147,7 @@ object BpeTrain {
   def main(args: Array[String]): Unit = {
     val docsParquet = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001") + "/documents.parquet"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("bpe-train")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.GraftSession.local(4)
     import org.apache.spark.sql.functions._
     val corpusFreq: Map[String, Long] = spark.read.parquet(docsParquet)
       .select(explode(split(lower(col("text")), "\\s+")).as("w"))
