@@ -112,4 +112,29 @@ object Ops {
   def pctChange(cur: Column, prev: Column): Column =
     when(prev === 0.0, lit(null).cast(DoubleType))
       .otherwise((cur - prev) * 100.0 / prev)
+
+  /** First-hit-wins multi-format date parse: the `coalesce` of
+    * `try_to_date(c, f)` over `formats` in order (the reference's try/catch
+    * ladder, `MeshJoin.java:158,172-186`), with each attempt guarded by
+    * `c` containing every literal (non-letter) character of its pattern.
+    *
+    * Guard rule: a strict `java.time` parse must consume every literal of
+    * the pattern, so the guard is a necessary condition for success. A
+    * skipped attempt could only have returned null, and a null input gives
+    * a null guard and so null, as the bare ladder does. Results therefore
+    * cannot change; only parses that cannot succeed are skipped. That
+    * matters because a failed parse throws inside the formatter: on Spark
+    * 4.1 it costs about 3.6 µs against 0.9 µs for a successful one.
+    *
+    * Patterns with quoted text or optional sections (`'`, `[`, `]`, `{`,
+    * `}`, `#`) break the "every non-letter is required" rule and are
+    * refused. A timestamp pattern is fine: `try_to_date` plans the same
+    * `gettimestamp` as `try_to_timestamp(c, f).cast(DateType)`. */
+  def firstDate(c: Column, formats: String*): Column =
+    coalesce(formats.map { f =>
+      require(!f.exists("'[]{}#".contains(_)), s"firstDate: unsupported pattern '$f'")
+      val parse = try_to_date(c, f)
+      f.filterNot(_.isLetter).distinct.map(ch => c.contains(ch.toString))
+        .reduceOption(_ && _).fold(parse)(when(_, parse))
+    }: _*)
 }

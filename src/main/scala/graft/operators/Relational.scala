@@ -1099,15 +1099,19 @@ object Relational {
 
   /** P6: multi-format date parse, first-hit-wins (`MeshJoin.java:158,172-186`).
     * Spark 4 runs ANSI mode, so fallible parses use try_to_date (the
-    * reference's try/catch ladder, declaratively). */
+    * reference's try/catch ladder, declaratively) through `firstDate`,
+    * which attempts a format only when the input holds every literal
+    * separator of its pattern. A strict parse must consume each literal,
+    * so a skipped attempt could only have returned null and the result
+    * cannot change. Every row here is `yyyy/MM/dd`, so the `dd-MM-yyyy`
+    * attempt is never made (no `-` in the input); it would fail on every
+    * row, at about 3.6 µs a failed parse against 0.9 µs for the hit. */
   def p06MultiformatDate(s: SparkSession, d: String): DataFrame =
     orders(s, d)
       .select(col("o_orderkey"),
         date_format(col("o_orderdate"), "yyyy/MM/dd").as("raw"))
       .select(col("o_orderkey"),
-        coalesce(
-          try_to_date(col("raw"), "dd-MM-yyyy"),
-          try_to_date(col("raw"), "yyyy/MM/dd")).as("parsed_date"))
+        firstDate(col("raw"), "dd-MM-yyyy", "yyyy/MM/dd").as("parsed_date"))
       .orderBy(col("o_orderkey"))
 
   val p06Sql: String =

@@ -77,6 +77,26 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 
+  test("P6 date ladders: every gettimestamp in the optimized plan is the value " +
+    "of a CASE WHEN branch (no format is parsed without its separator guard)") {
+    import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Expression, GetTimestamp}
+    // the parses not sitting in a branch value (conditions and else count as bare)
+    def bare(e: Expression): Seq[Expression] = e match {
+      case cw: CaseWhen   => (cw.branches.map(_._1) ++ cw.elseValue).flatMap(bare)
+      case g: GetTimestamp => Seq(g)
+      case _              => e.children.flatMap(bare)
+    }
+    Seq(
+      "transactions" -> graft.sources.RetailIngest.transactions(spark,
+        res("retail/transactions.csv")),
+      "p06" -> Relational.p06MultiformatDate(spark, d)).foreach { case (name, df) =>
+      val exprs = df.queryExecution.optimizedPlan.flatMap(_.expressions)
+      assert(exprs.exists(_.exists(_.isInstanceOf[GetTimestamp])), s"$name: no parse planned")
+      val unguarded = exprs.flatMap(bare)
+      assert(unguarded.isEmpty, s"$name: unguarded parse ${unguarded.mkString(", ")}")
+    }
+  }
+
   test("q01: top-5 plans as TakeOrderedAndProject, not a global sort") {
     assert(plan(Olap.q01(spark, d)).contains("TakeOrderedAndProject"))
   }

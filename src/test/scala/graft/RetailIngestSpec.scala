@@ -70,6 +70,85 @@ class RetailIngestSpec extends SparkSpec {
     assert(!dates.contains("1009")) // unparseable quantity
   }
 
+  test("firstDate: separator guards change no result — guarded ladder equals " +
+    "the unguarded try_to_date coalesce on a fixed-seed dirty-date corpus") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.types.DateType
+    import spark.implicits._
+    val formats = Seq("yyyy-MM-dd HH:mm:ss", "yyyy-MM-dd", "MM/dd/yyyy", "dd-MM-yyyy", "yyyy/MM/dd")
+    val rnd = new scala.util.Random(20190401L)
+    def d2(i: Int) = f"$i%02d"
+    def valid(): String = {
+      val (y, m, d) = (1990 + rnd.nextInt(40), 1 + rnd.nextInt(12), 1 + rnd.nextInt(28))
+      rnd.nextInt(5) match {
+        case 0 => s"$y-${d2(m)}-${d2(d)} ${d2(rnd.nextInt(24))}:${d2(rnd.nextInt(60))}:${d2(rnd.nextInt(60))}"
+        case 1 => s"$y-${d2(m)}-${d2(d)}"
+        case 2 => s"${d2(m)}/${d2(d)}/$y"
+        case 3 => s"${d2(d)}-${d2(m)}-$y"
+        case _ => s"$y/${d2(m)}/${d2(d)}"
+      }
+    }
+    // a valid string with one character replaced, inserted or deleted
+    val noise = "0123456789-/: +T"
+    def mutate(s: String): String = {
+      val i = rnd.nextInt(s.length)
+      val ch = noise(rnd.nextInt(noise.length)).toString
+      rnd.nextInt(3) match {
+        case 0 => s.patch(i, ch, 1)
+        case 1 => s.patch(i, ch, 0)
+        case _ => s.patch(i, "", 1)
+      }
+    }
+    val planted = Seq(
+      null, "", " ", "not-a-date", "1819-04-01 12:00:00", "1819-04-01",
+      // 1-digit fields
+      "2019-5-1", "5/1/2019", "1-5-2019", "2019/5/1", "2019-05-01 1:2:3", "2019-5-1 01:02:03",
+      // 5-digit and signed years
+      "12019-05-15", "+12019-05-15", "-2019-05-15", "+2019-05-15", "05/15/12019",
+      "15-05-+2019", "+12019/05/15", "-0001-01-01", "+10000-01-01 00:00:00",
+      // leading / trailing spaces
+      " 2019-05-15", "2019-05-15 ", " 05/15/2019", "15-05-2019 ", " 2019/05/15 ",
+      "2019-05-15  10:00:00", " 2019-05-15 10:00:00",
+      // time suffix on the date-only shapes
+      "05/15/2019 10:00:00", "15-05-2019 10:00:00", "2019/05/15 10:00:00", "2019-05-15T10:00:00",
+      "2019-05-15 10:00", "2019-05-15 10:00:00.5",
+      // swapped separators
+      "2019/05-15", "2019-05/15", "05-15/2019", "15/05-2019", "2019:05:15", "2019 05 15",
+      "05-15-2019", "15/05/2019", "2019-05-15 10-00-00", "2019/05/15 10:00:00",
+      // impossible dates and times
+      "2019-13-01", "2019-02-29", "02/29/2019", "29-02-2019", "2019/02/29", "2020-02-29",
+      "2019-04-31", "2019-00-10", "2019-05-32", "2019-05-15 24:00:00", "2019-05-15 10:60:00")
+    val corpus = planted ++ Seq.fill(6000) {
+      val s = valid()
+      if (rnd.nextInt(3) == 0) mutate(s) else s
+    }
+    val df = corpus.toDF("raw")
+    val c = col("raw")
+    def bare(fs: Seq[String]): Column = coalesce(fs.map(try_to_date(c, _)): _*)
+    // the reference ladder's own timestamp step, try_to_timestamp cast to a date,
+    // must agree with firstDate's try_to_date on the same pattern
+    val legacy = coalesce(try_to_timestamp(c, lit(formats.head)).cast(DateType) +:
+      formats.tail.map(try_to_date(c, _)): _*)
+    val p06Formats = Seq("dd-MM-yyyy", "yyyy/MM/dd")
+    val out = df.select(
+      RetailIngest.parseOrderDate(c).as("guarded"), bare(formats).as("model"),
+      legacy.as("legacy"),
+      Ops.firstDate(c, p06Formats: _*).as("p06_guarded"), bare(p06Formats).as("p06_model"))
+    val diff = out.filter(!(col("guarded") <=> col("model")) ||
+      !(col("guarded") <=> col("legacy")) || !(col("p06_guarded") <=> col("p06_model")))
+    assert(diff.count() === 0, diff.limit(10).collect().mkString("; "))
+    // the corpus exercises both outcomes of both ladders
+    val parsed = out.filter(col("model").isNotNull).count()
+    assert(parsed > 3000 && parsed < corpus.size - 500, s"parsed $parsed of ${corpus.size}")
+    assert(out.filter(col("p06_model").isNotNull).count() > 1000)
+  }
+
+  test("firstDate: patterns with quoted text or optional sections are refused") {
+    Seq("yyyy-MM-dd'T'HH", "yyyy-MM-dd[ HH:mm]", "yyyy{MM}", "yyyy#MM").foreach { f =>
+      assertThrows[IllegalArgumentException](Ops.firstDate(col("raw"), "yyyy-MM-dd", f))
+    }
+  }
+
   test("fact: duplicate ORDER_ID resolves last-write-wins after enrichment") {
     val fact = RetailIngest.etl(spark, res("retail/customers_data.csv")
       .stripSuffix("/customers_data.csv"))
