@@ -267,10 +267,6 @@ object BpeStats {
     Array(nWords, nChars, nTokens, idSum)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_stats", exprs => BpeStats(exprs(0)), "built-in")
-
   // === table-parameterized apply (x33-trained tables) =======================
 
   /** Compact table spec (`a|b`, space-separated, rank order) — the same

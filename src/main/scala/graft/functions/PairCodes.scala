@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -48,7 +47,7 @@ object PairCodes {
   private final val MaxId = 1L << 31
   // C(n, 2) stays well under Spark's array-element limits and the Int
   // size arithmetic below; the in-repo callers are basket/cap-bounded
-  // (≤ a few thousand), but the function is session-registered, so the
+  // (≤ a few thousand), but the function is callable from any SQL, so the
   // bound must be enforced, not assumed
   private final val MaxElems = 1 << 15
 
@@ -84,8 +83,4 @@ object PairCodes {
     }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pair_codes", exprs => PairCodes(exprs.head), "built-in")
 }

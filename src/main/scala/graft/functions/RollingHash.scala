@@ -1,12 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 import org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Content-defined document fingerprint: the minimum polynomial rolling hash
@@ -70,110 +67,5 @@ object RollingHashMin {
       i += 1
     }
     min
-  }
-
-  /** Register as a SQL function on an existing session (the harness builds
-    * its own SparkSession, so injection-at-build is not always available). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash_min", exprs => RollingHashMin(exprs(0), exprs(1)), "built-in")
-}
-
-/** `SparkSessionExtensions` hook for production deployments:
-  * `spark.sql.extensions=graft.functions.GraftExtensions` makes
-  * `rolling_hash_min(text, k)` and `cosine_sim(a, b)` available in SQL. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash_min"),
-      new ExpressionInfo(classOf[RollingHashMin].getName, "rolling_hash_min"),
-      (exprs: Seq[Expression]) => RollingHashMin(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSim(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinhashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => MinhashSig(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("hyperplane_sketch"),
-      new ExpressionInfo(classOf[HyperplaneSketch].getName, "hyperplane_sketch"),
-      (exprs: Seq[Expression]) => HyperplaneSketch(exprs.head, exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (exprs: Seq[Expression]) => WordShingles(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("stopword_hits"),
-      new ExpressionInfo(classOf[StopwordHits].getName, "stopword_hits"),
-      (exprs: Seq[Expression]) => StopwordHits(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[Simhash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => Simhash64(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("l2_sq"),
-      new ExpressionInfo(classOf[L2Sq].getName, "l2_sq"),
-      (exprs: Seq[Expression]) => L2Sq(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("topk_agg"),
-      new ExpressionInfo(classOf[TopKAgg].getName, "topk_agg"),
-      (exprs: Seq[Expression]) => TopKAgg(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("topk_rows_agg"),
-      new ExpressionInfo(classOf[TopKRowsAgg].getName, "topk_rows_agg"),
-      (exprs: Seq[Expression]) => TopKRowsAgg(exprs.head, exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("topk_long_agg"),
-      new ExpressionInfo(classOf[TopKLongAgg].getName, "topk_long_agg"),
-      (exprs: Seq[Expression]) => TopKLongAgg(exprs.head, exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_inter_count"),
-      new ExpressionInfo(classOf[SortedInterCount].getName, "sorted_inter_count"),
-      (exprs: Seq[Expression]) => SortedInterCount(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_inter"),
-      new ExpressionInfo(classOf[SortedInter].getName, "sorted_inter"),
-      (exprs: Seq[Expression]) => SortedInter(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fingerprints"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName, "winnow_fingerprints"),
-      (exprs: Seq[Expression]) =>
-        WinnowFingerprints(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("deletion_hashes"),
-      new ExpressionInfo(classOf[DeletionHashes].getName, "deletion_hashes"),
-      (exprs: Seq[Expression]) => DeletionHashes(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("cdc_boundaries"),
-      new ExpressionInfo(classOf[CdcBoundaries].getName, "cdc_boundaries"),
-      (exprs: Seq[Expression]) => CdcBoundaries(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_scores"),
-      new ExpressionInfo(classOf[graft.plans.CosineScores].getName, "cosine_scores"),
-      (exprs: Seq[Expression]) => graft.plans.CosineScores(exprs.head, exprs(1))))
-    // sidecar-HLL cardinality-aware broadcast (see the rule's doc)
-    ext.injectOptimizerRule(_ => graft.plans.NdvBroadcastRule)
-    // sketch-driven 3+-way join reorder: smallest proven intermediate
-    // first (see the rule's doc)
-    ext.injectOptimizerRule(_ => graft.plans.NdvJoinReorderRule)
-    // `year(d) = y` → pushdown-able half-open date range (see the rule's doc)
-    ext.injectOptimizerRule(_ => graft.plans.YearRangeRewrite)
-    // `substring(s,1,n) = 'lit'` → StartsWith → parquet StringStartsWith
-    ext.injectOptimizerRule(_ => graft.plans.PrefixPushdownRewrite)
-    // `k_l = k_r AND abs(ts_l - ts_r) <= W` → native band join (logical
-    // node + strategy + physical operator; see graft.plans.BandJoin)
-    ext.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.BandJoinStrategy)
-    // posexplode(cosine_scores(emb, <matrix lit>)) → vectorized columnar
-    // scoring (logical node + strategy + ColumnarBatch physical operator;
-    // see graft.plans.ColumnarCosine)
-    ext.injectOptimizerRule(_ => graft.plans.CosineScoreRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.CosineScoreStrategy)
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -64,10 +63,6 @@ object MinhashSig {
     }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinhashSig(exprs(0), exprs(1)), "built-in")
 }
 
 /** `sorted_digests(shingles)` → array<long>: the ascending xxhash64
@@ -111,10 +106,6 @@ object SortedDigests {
     java.util.Arrays.sort(out)
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_digests", exprs => SortedDigests(exprs(0)), "built-in")
 }
 
 /** `simhash64(shingles)` → long: the 64-bit SimHash of the shingle set —
@@ -168,10 +159,6 @@ object Simhash64 {
     }
     sig
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => Simhash64(exprs(0)), "built-in")
 }
 
 /** `hyperplane_sketch(vec, tables, bits)` → array<long>: per table t, a
@@ -224,9 +211,4 @@ object HyperplaneSketch {
     }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_sketch",
-      exprs => HyperplaneSketch(exprs(0), exprs(1), exprs(2)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -65,8 +64,4 @@ object SortedInter {
     System.arraycopy(buf, 0, out, 0, n)
     UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_inter", exprs => SortedInter(exprs(0), exprs(1)), "built-in")
 }

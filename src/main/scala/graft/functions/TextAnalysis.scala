@@ -76,7 +76,6 @@ object TextAnalysis {
     * five-interpreted-HOF form re-tokenized each document five times and
     * was the slowest query of the round-1 bench. */
   def x02LangId(s: SparkSession, d: String): DataFrame = {
-    StopwordHits.register(s)
     val withHits = Tables.documents(s, d)
       .withColumn("h", expr("stopword_hits(text)"))
     val Seq(en, de, es, fr, zh) = stopwords.indices.map(i => col("h").getItem(i))
@@ -207,7 +206,6 @@ object TextAnalysis {
     * table (fp groups) stays value-pinned in GoldenSpec via
     * [[x05Clusters]]. */
   def x05FingerprintRolling(s: SparkSession, d: String): DataFrame = {
-    RollingHashMin.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         when(length(col("text")) <= 0, 0L)
@@ -227,7 +225,6 @@ object TextAnalysis {
     * Hash VALUES have no DuckDB twin → golden-pinned; cross-validated
     * against the exact Jaccard pairs in ExtensionSpec. */
   private[graft] def x05Clusters(s: SparkSession, d: String): DataFrame = {
-    RollingHashMin.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"), expr("rolling_hash_min(text, 16)").as("fp"))
       .groupBy(col("fp"))
@@ -506,7 +503,6 @@ object TextAnalysis {
     * mirrored exactly by the oracle; flagging filters on the RAW ratio,
     * rounding only at the output boundary. */
   def x10Repetition(s: SparkSession, d: String): DataFrame = {
-    WordShingles.register(s)
     val base = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         expr("size(filter(split(lower(text), '\\\\s+'), t -> t != ''))").as("nt"),
@@ -1155,7 +1151,6 @@ object TextAnalysis {
     * no gram-gram join, no broadcast of anything corpus-sized). The
     * presence-mask aggregation is the same move as w14's grain collapse. */
   def x20SplitContamination(s: SparkSession, d: String): DataFrame = {
-    graft.functions.WordShingles.register(s)
     val splits = x18SplitAssign(s, d).select(col("doc_id"), col("split"))
     val pres = Tables.documents(s, d)
       .repartition(32, col("doc_id"))
@@ -1350,13 +1345,6 @@ object TextAnalysis {
     * count — the ANY-overlap audit trail, vs x08's ratio-thresholded flag.
     */
   def x22BloomDecontaminate(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg", exprs => new BloomFilterAggregate(exprs.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => BloomFilterMightContain(exprs.head, exprs(1)), "built-in")
     val sh = graft.operators.Dedup.shingled(s, d)
       .select(col("doc_id"), col("shingles"))
     sh.filter(col("doc_id") < ProbeDocs)
@@ -1463,7 +1451,6 @@ object TextAnalysis {
     * Scale shape: pure scan-stage row work, no shuffle before the output
     * sort; at 100 TB this is a zero-cost prefix to every ingest digest. */
   def x24UnicodeNfc(s: SparkSession, d: String): DataFrame = {
-    graft.functions.NfcNormalize.register(s)
     val suffix = when(col("doc_id") % 3 === 0, lit(" caf" + "e\u0301"))
       .when(col("doc_id") % 3 === 1, lit(" caf" + "\u00e9"))
       .otherwise(lit(""))
@@ -1511,7 +1498,6 @@ object TextAnalysis {
   /** (doc_id, chunks): the text split at its content-defined boundaries —
     * exposed for the shift-robustness invariant spec. */
   private[graft] def cdcChunks(s: SparkSession, docs: DataFrame): DataFrame = {
-    CdcBoundaries.register(s)
     docs
       .select(col("doc_id"), col("text"),
         expr("cdc_boundaries(text, 8, 64)").as("bs"))
@@ -2063,7 +2049,6 @@ object TextAnalysis {
     * word set — the merge table being pinned is exactly what makes the
     * oracle replay application instead of training. */
   def x32BpeEncode(s: SparkSession, d: String): DataFrame = {
-    graft.functions.BpeStats.register(s)
     Tables.documents(s, d)
       // coalesce: the null-propagating kernel would emit NULL stats for a
       // NULL text where the oracle's LEFT JOIN + COALESCE emits zeros

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
@@ -171,10 +170,6 @@ object TopKAgg {
       h
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_agg", exprs => TopKAgg(exprs(0), exprs(1)), "built-in")
 }
 
 /** `topk_rows_agg(value, payload, k)` → the k largest (value, payload)
@@ -361,10 +356,6 @@ object TopKRowsAgg {
       h
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_rows_agg", exprs => TopKRowsAgg(exprs(0), exprs(1), exprs(2)), "built-in")
 }
 
 /** `topk_long_agg(value, id, k)` → the k largest (value, id) pairs per group
@@ -518,8 +509,4 @@ object TopKLongAgg {
       h
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_long_agg", exprs => TopKLongAgg(exprs(0), exprs(1), exprs(2)), "built-in")
 }

@@ -369,7 +369,6 @@ object Aggregates {
     * ceil(n/4) — reproduced exactly from (rn, n). The oracle keeps the
     * original four window functions, pinning the equivalence. */
   def w05Ranking(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TopKRowsAgg.register(s)
     lineitem(s, d)
       .join(broadcast(supplier(s, d)), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(nation(s, d)), col("s_nationkey") === col("n_nationkey"))

@@ -56,8 +56,6 @@ object Dedup {
 
   private[graft] def shingled(s: SparkSession, d: String): DataFrame =
     shingleCache.computeIfAbsent(s, d, _ => {
-      graft.functions.WordShingles.register(s)
-      graft.functions.SortedDigests.register(s)
       val out = uniquePath("shingles", d, s)
       Tables.documents(s, d)
         .repartition(32, col("doc_id"))
@@ -228,7 +226,6 @@ object Dedup {
   /** Returns (pairs, the builder's internal caches) so the memo wrapper
     * can release them once the pairs parquet lands. */
   private def computeVerifiedPairs(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) = {
-    graft.functions.SortedInterCount.register(s)
     val sh = shingled(s, d)
     // prefix = the ⌊n/2⌋+1 rarest postings per doc — a slice of the shared
     // ranked-postings artifact (rare-first rank precomputed once per corpus)
@@ -300,7 +297,6 @@ object Dedup {
 
   private[graft] def minhashSignatures(s: SparkSession, d: String): DataFrame =
     minhashSigCache.computeIfAbsent(s, d, _ => {
-      graft.functions.MinhashSig.register(s)
       val out = uniquePath("minhash_sig", d, s)
       shingled(s, d)
         .withColumn("sig", expr(s"minhash_sig(shingles, $MinhashK)"))
@@ -394,7 +390,6 @@ object Dedup {
 
   private[graft] def simhashSignatures(s: SparkSession, d: String): DataFrame =
     simhashSigCache.computeIfAbsent(s, d, _ => {
-      graft.functions.Simhash64.register(s)
       val out = uniquePath("simhash_sig", d, s)
       shingled(s, d)
         .withColumn("simhash", expr("simhash64(shingles)"))
@@ -520,7 +515,6 @@ object Dedup {
     * when near-dups are genuinely near (cosine ≥ 0.9, p_bit ≥ 0.86) — that
     * regime is [[d06EmbeddingNearDupLsh]], same verify, pruned candidates. */
   def d05EmbeddingNearDup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val e = Tables.embeddings(s, d)
     requireExactBaselineBoundFor(s, d, "d05_embedding_neardup", "d06/d12/d14")
     triangleNearDup(e, 0.45)
@@ -615,8 +609,6 @@ object Dedup {
     * the VALUES are golden-pinned; the gate-checkable truth is exported by
     * [[d06EmbeddingNearDupLsh]]. */
   private[graft] def d06LshPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
-    graft.functions.HyperplaneSketch.register(s)
     val e = Tables.embeddings(s, d)
       .withColumn("sigs", expr(s"hyperplane_sketch(embedding, $LshTables, $LshBits)"))
       .select(col("vec_id"), col("embedding"), col("sigs"))
@@ -877,7 +869,6 @@ object Dedup {
     * and the join-back (HOF-built arrays re-evaluate per consumer
     * otherwise, see [[shingled]]). */
   def d08SpanDedup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.WordShingles.register(s)
     val grams = Tables.documents(s, d)
       .repartition(32, col("doc_id"))
       .select(col("doc_id"), explode(expr("word_shingles(text, 5)")).as("g"))
@@ -1204,7 +1195,6 @@ object Dedup {
     * so the corpus is scanned and assigned once; st15 shows the
     * join-back-free alternative (the fold emits verdicts directly). */
   def d12SemanticDedup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val assigned = Similarity.ivfAssigned(s, d)
     val members = assigned.select(col("vec_id"), col("embedding"), col("cell"))
     val removed = members.toDF("ia", "ea", "cell")
@@ -1261,7 +1251,6 @@ object Dedup {
     * Bidirectional containment implies J ≥ 2/3, so every mutual pair must
     * also be a d02 pair — the cross-entry invariant the spec pins. */
   def d14Containment(s: SparkSession, d: String): DataFrame = {
-    graft.functions.SortedInterCount.register(s)
     val sh = shingled(s, d).filter(size(col("hs")) > 0)
     val rp = rankedPostings(s, d)
     val prefix = rp
@@ -1364,7 +1353,6 @@ object Dedup {
     // neighborhood keys via the O(n) codegen kernel — no variant string is
     // ever materialized (the HOF form built ~len strings of ~len chars per
     // row, all CodegenFallback)
-    graft.functions.DeletionHashes.register(s)
     // (len+1)·corpus keyed rows, consumed by BOTH self-join sides — the
     // alias-renamed branches don't canonicalize to one exchange, so
     // uncached each side re-ran the title planting + deletion kernel
@@ -1445,7 +1433,6 @@ object Dedup {
     * the driver); now the only shuffle is the fingerprint output itself.
     * Identical output schema and oracle. */
   def d15Winnowing(s: SparkSession, d: String): DataFrame = {
-    graft.functions.WinnowFingerprints.register(s)
     Tables.documents(s, d)
       .filter(length(col("text")) >= WinK)
       .select(col("doc_id"),

@@ -56,7 +56,6 @@ object Graph {
       // basket size bounds the fan-out, so no join and no skew, and the
       // dedup (`distinct`) runs on ONE primitive long key before the pair
       // ever widens to (x, y)
-      graft.functions.PairCodes.register(s)
       Tables.lineitem(s, d)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("k"))
         .groupBy(col("o"))
@@ -132,7 +131,6 @@ object Graph {
       .join(deg.select(col("v").as("y"), col("dg").as("dy")), Seq("y"))
     val xOrd = struct(col("dx").as("d"), col("x").as("i"))
     val yOrd = struct(col("dy").as("d"), col("y").as("i"))
-    graft.functions.SortedInter.register(s)
     val adjacencyPath = Dedup.uniquePath("g01_adjacency", d, s)
     withDeg.select(
         when(xOrd < yOrd, col("x")).otherwise(col("y")).as("s"),
@@ -886,7 +884,6 @@ object Graph {
     * rank window). */
   def g09LinkPredict(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.PairCodes.register(s)
     val e = copurchaseEdges(s, d)
     // the witness-pair stream is PACKED LONGS end to end
     // ([[graft.functions.PairCodes]]): the per-node C(cap, 2) expansion is

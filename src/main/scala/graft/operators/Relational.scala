@@ -873,15 +873,9 @@ object Relational {
     * customers' orders) die at the scan instead of shuffling. Uses Spark's
     * own `BloomFilterAggregate`/`BloomFilterMightContain` expressions,
     * which ship unregistered (they back the internal runtime-filter rule);
-    * exposing them is registration, not reimplementation. */
+    * `GraftExtensions` exposes them as `graft_bloom_agg` and
+    * `graft_might_contain` rather than reimplementing them. */
   def j13BloomPrejoin(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg", exprs => new BloomFilterAggregate(exprs.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => BloomFilterMightContain(exprs.head, exprs(1)), "built-in")
     customer(s, d).filter(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey"), col("c_name"))
       .createOrReplaceTempView("j13_dim")
@@ -1396,7 +1390,6 @@ object Relational {
     * `TakeOrderedAndProject`. PlanSpec asserts the plan has partial
     * aggregation and NO Window/global Sort below the aggregate. */
   def o04GroupedTopk(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TopKAgg.register(s)
     orders(s, d)
       .groupBy(col("o_orderpriority"))
       .agg(expr("topk_agg(o_totalprice, 3)").as("top"))
@@ -1424,7 +1417,6 @@ object Relational {
     * needs. Same two-phase plan shape as o04: shuffle carries ≤ k
     * (double, string) pairs per group per map partition. */
   def o05GroupedTopkRows(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TopKRowsAgg.register(s)
     orders(s, d)
       .groupBy(col("o_orderpriority"))
       .agg(expr("topk_rows_agg(o_totalprice, CAST(o_orderkey AS STRING), 3)").as("top"))
@@ -1460,7 +1452,6 @@ object Relational {
     * result deterministic. Oracle = the full recompute over all history —
     * the merge must be indistinguishable from rescanning. */
   def o06TopkDelta(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TopKRowsAgg.register(s)
     def topkOf(df: DataFrame): DataFrame = df
       .groupBy(col("o_orderpriority"))
       .agg(expr("topk_rows_agg(o_totalprice, CAST(o_orderkey AS STRING), 3)").as("top"))
@@ -2135,7 +2126,6 @@ object Relational {
     * Output: per user, pair count and exact |Δt| mass — aggregated so the
     * result is stable however the pairs are produced. */
   def j19BandJoinNative(s: SparkSession, d: String): DataFrame = {
-    graft.plans.BandJoinOp.register(s)
     val ev = events(s, d)
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("user_id").as("pu"), unix_millis(col("ts")).as("pt"),

@@ -46,7 +46,6 @@ object Similarity {
     * self-matches excluded, ties broken by neighbor id. The query side is
     * tiny → broadcast; one scan of the corpus, no O(N²). */
   def n01BruteTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("ea"))
@@ -143,8 +142,6 @@ object Similarity {
   /** The raw LSH top-k (murmur-seeded sketches — no DuckDB twin; values
     * golden-pinned, gate truth exported by [[n02LshTopK]]). */
   private[graft] def n02LshTopKRaw(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
-    graft.functions.HyperplaneSketch.register(s)
     val e = sketched(Tables.embeddings(s, d))
     val buckets = e.select(col("vec_id"), col("embedding"),
       posexplode(col("sigs")).as(Seq("t", "sig")))
@@ -205,7 +202,6 @@ object Similarity {
     * round-1 row_number window over the full corpus was the n03 bench
     * hotspot. Shared by n03 and d12. */
   private[graft] def ivfAssigned(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     Tables.embeddings(s, d).join(broadcast(ivfCents(s, d)))
       .withColumn("cosine", expr("cosine_sim(embedding, centroid)"))
       .groupBy(col("vec_id"))
@@ -216,7 +212,6 @@ object Similarity {
   }
 
   def n03IvfTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val e = Tables.embeddings(s, d)
     val cents = ivfCents(s, d)
     val assigned = ivfAssigned(s, d)
@@ -369,7 +364,6 @@ object Similarity {
     * [[graft.functions.L2Sq]] kernel (index-ordered double accumulation —
     * bit-identical to DuckDB's list-fold twin). */
   private[graft] def exactL2TopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.L2Sq.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("ea"))
@@ -566,7 +560,6 @@ object Similarity {
       s"$tag-m${cfg.m}-k${cfg.kcent}-$normalize",
       _ => new graft.SessionMemo[String, DataFrame])
     memo.computeIfAbsent(s, d, _ => {
-      graft.functions.L2Sq.register(s)
       val sv = pqSubvectors(pqCorpus(raw, normalize), cfg)
       val cents = pqBooks(s, d, sv, cfg, normalize).toDF("sub", "code", "cv")
       val out = graft.operators.Dedup.uniquePath(
@@ -584,7 +577,6 @@ object Similarity {
       normalize: Boolean = false, cfg: PqConfig = PqCoarse,
       candidates: Option[DataFrame] = None, corpusTag: String = "raw"): DataFrame = {
     val PqConfig(m, subDim, kcent) = cfg
-    graft.functions.L2Sq.register(s)
     val e = pqCorpus(raw, normalize)
     import s.implicits._
     val cb = pqBooks(s, d, pqSubvectors(e, cfg), cfg, normalize)
@@ -665,7 +657,6 @@ object Similarity {
     * n08 must equal (the spec's coverage check) and the shape its oracle
     * SQL mirrors. */
   private[graft] def n08Exact(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val e = clusteredCorpus(s, d)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("ea"))
@@ -690,7 +681,6 @@ object Similarity {
     * on vec_id, so the expensive exact kernel runs on a constant-sized
     * set regardless of N (the round-2 N/4 width is gone; see RerankR). */
   def n08PqRerank(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val e = clusteredCorpus(s, d).cache()
     val shortlist = pqAdcPairs(s, d, e, normalize = true, cfg = PqFine,
         corpusTag = "clustered")
@@ -752,7 +742,6 @@ object Similarity {
     * three stages and must agree on every pick and score (doubles flow
     * through the same cosine kernel contract as n01/n05). */
   def n09MmrRerank(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("ea"))
@@ -871,7 +860,6 @@ object Similarity {
     * (d02's machinery) and the vector leg an ANN pass (n02-n04) feeding
     * the same fusion — the scoring contract is what this entry pins. */
   def n05HybridTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val toks = Tables.documents(s, d).select(col("doc_id"),
       expr("array_distinct(filter(split(lower(text), '\\\\s+'), t -> t != ''))")
         .as("t"))
@@ -945,8 +933,6 @@ object Similarity {
     * the exact triangle (n02/n03 machinery) — the selection contract this
     * entry pins is unchanged. */
   def n06KnnJoin(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
-    graft.functions.TopKLongAgg.register(s)
     val e = Tables.embeddings(s, d)
     Dedup.requireExactBaselineBoundFor(s, d, "n06_knn_join", "n02/n03/n12")
     val left = e.select(col("vec_id").as("ia"), col("embedding").as("ea"),
@@ -1096,7 +1082,6 @@ object Similarity {
     * machinery) slots in front unchanged when the corpus no longer wants a
     * full pass. */
   def n10RangeSearch(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("ea"))
@@ -1306,8 +1291,6 @@ object Similarity {
     * the exact kernel touches Q·R rows. Nothing global but the two
     * bounded training collects. */
   def n12IvfAdc(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
-    graft.functions.L2Sq.register(s)
     val e = clusteredCorpus(s, d).cache()
     val cand = n12Candidates(s, d)
     val shortlist = pqAdcPairs(s, d, e, normalize = true, cfg = PqFine,
@@ -1327,7 +1310,6 @@ object Similarity {
   /** The candidate (probed-cell member) pairs — exposed so the spec can
     * assert the scan restriction and probe coverage. */
   private[graft] def n12Candidates(s: SparkSession, d: String): DataFrame = {
-    graft.functions.L2Sq.register(s)
     val e = clusteredCorpus(s, d).cache()
     val cents = ivfCoarseCents(s, d, e)
     // cell-assignment distances through the codegen kernel: the HOF form
@@ -1372,7 +1354,6 @@ object Similarity {
     * corpus the prefix columns are a separate, 4× smaller artifact);
     * stage 2 touches shortlist×queries rows only. */
   def n13MrlTopk(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("ea"),
@@ -1436,7 +1417,6 @@ object Similarity {
     * probe key — one corpus scan, the per-label partitions of an IVF-style
     * index being the 100 TB growth path (filter → cell routing). */
   def n14FilteredAnn(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("ea"),
@@ -1485,7 +1465,6 @@ object Similarity {
     * row-wise fallback returns the identical rows (no null embeddings in
     * the corpus, so outer ≡ inner semantically). */
   private[graft] def n15TopK(s: SparkSession, d: String, outer: Boolean): DataFrame = {
-    graft.plans.ColumnarCosine.register(s)
     val e = Tables.embeddings(s, d)
     val qRows = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id"), col("embedding"))

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -13,8 +12,7 @@ import org.apache.spark.sql.types.LongType
 /** BAND JOIN as a first-class operator — the full custom-operator stack
   * (SURVEY.md §7.4 tier (c)): a logical node, an optimizer rule that
   * RECOGNIZES the declarative pattern, a planner strategy, and a physical
-  * operator registered through `SparkSessionExtensions` /
-  * `experimental.extraStrategies`.
+  * operator, all injected by [[graft.functions.GraftExtensions]].
   *
   * The problem: `a JOIN b ON a.k = b.k AND abs(a.ts − b.ts) <= W` — the
   * temporal-tolerance join behind sensor fusion, click attribution and
@@ -163,18 +161,5 @@ case class BandJoinExec(left: SparkPlan, right: SparkPlan,
         }
       }
     }
-  }
-}
-
-object BandJoinOp {
-  /** Session-local registration (the RollingHashMin.register pattern —
-    * harness sessions are built before extensions can be configured). */
-  def register(s: SparkSession): Unit = {
-    if (!s.experimental.extraOptimizations.contains(BandJoinRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ BandJoinRewrite
-    if (!s.experimental.extraStrategies.contains(BandJoinStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ BandJoinStrategy
   }
 }

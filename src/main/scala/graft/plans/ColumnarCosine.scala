@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -241,19 +240,4 @@ case class CosineScoreExec(qmat: Seq[Seq[Float]], emb: Attribute,
 
   override protected def withNewChildInternal(c: SparkPlan): CosineScoreExec =
     copy(child = c)
-}
-
-object ColumnarCosine {
-  /** Session-local registration (the BandJoin.register pattern — harness
-    * sessions are built before extensions can be configured). */
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_scores", exprs => CosineScores(exprs.head, exprs(1)), "built-in")
-    if (!s.experimental.extraOptimizations.contains(CosineScoreRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ CosineScoreRewrite
-    if (!s.experimental.extraStrategies.contains(CosineScoreStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ CosineScoreStrategy
-  }
 }

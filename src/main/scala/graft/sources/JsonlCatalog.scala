@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
@@ -168,11 +168,26 @@ class JsonlCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
     (schema, routes, split, mor, morMerge, ndvCols, bucketHistory)
   }
 
-  private[sources] def writeManifest(ident: Identifier, schema: StructType,
+  /** Publish the manifest via temp + rename, the [[EpochHighWater]]
+    * discipline: a concurrent `loadTable` reads the old manifest or the
+    * new one, never a truncated file. The raw filesystem writes no `.crc`
+    * sidecar: a checksummed rename moves the file and its sidecar in two
+    * steps, and a reader between them would check the new bytes against
+    * the old sum. A sidecar left by an older writer is dropped first. */
+  private[graft] def writeManifest(ident: Identifier, schema: StructType,
       routes: Seq[RouteExpr], split: Long, mor: Boolean, morMerge: Boolean,
       ndvCols: Seq[String], overwrite: Boolean,
       bucketHistory: Seq[Int] = Nil): Unit = {
-    val out: java.io.OutputStream = fs.create(manifestOf(ident), overwrite)
+    val dst = manifestOf(ident)
+    if (!overwrite && fs.exists(dst))
+      throw new org.apache.hadoop.fs.FileAlreadyExistsException(s"$dst already exists")
+    val (raw, staleSum) = fs match {
+      case c: ChecksumFileSystem => (c.getRawFileSystem, Some(c.getChecksumFile(dst)))
+      case other => (other, None)
+    }
+    val tmp = new Path(dst.getParent,
+      s".tmp-${JsonlCatalog.Manifest}-${java.util.UUID.randomUUID()}")
+    val out: java.io.OutputStream = raw.create(tmp, true)
     val gen = new com.fasterxml.jackson.core.JsonFactory().createGenerator(out)
     gen.writeStartObject()
     gen.writeStringField("schema", schema.json)
@@ -204,6 +219,13 @@ class JsonlCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
     }
     gen.writeEndObject()
     gen.close(); out.close()
+    staleSum.foreach(raw.delete(_, false))
+    // POSIX rename replaces the destination atomically; a filesystem that
+    // refuses rename-onto-existing falls back to delete-then-rename
+    if (!raw.rename(tmp, dst)) {
+      raw.delete(dst, false)
+      require(raw.rename(tmp, dst), s"graft-jsonl: failed to publish $dst")
+    }
   }
 
   override def loadTable(ident: Identifier): Table = {

@@ -1063,7 +1063,6 @@ object Streams {
     * centroid table is a literal-array HOF argmin — no stream-static
     * shuffle at all. */
   def st15OnlineSemdedup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val tau = graft.operators.Dedup.SemTau
     // the fold carries BOTH the kept representatives (the state the next
     // step folds against) and the per-member verdicts (the output) — so
@@ -1106,7 +1105,6 @@ object Streams {
         val c = r.getSeq[Float](1).map(v => s"CAST($v AS FLOAT)").mkString(",")
         s"struct($cell AS cell, array($c) AS centroid)"
       }.mkString("array(", ",", ")")
-    graft.functions.CosineSim.register(s)
     emb
       .withColumn("cell", expr(
         s"""array_min(transform($cents,

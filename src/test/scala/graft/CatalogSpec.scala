@@ -2292,6 +2292,32 @@ class CatalogSpec extends SparkSpec {
     info(s"occfuzz: aborted=${aborted.get} of ${nThreads * opsPerThread} ops")
   }
 
+  test("manifest rewrites are atomic: a loadTable racing writeManifest " +
+    "always reads a whole manifest") {
+    val cat = freshCat("manifestrace")
+    spark.sql(s"CREATE NAMESPACE $cat.lake")
+    spark.sql(s"CREATE TABLE $cat.lake.t (doc_id BIGINT, val BIGINT)")
+    val catalog = spark.sessionState.catalogManager.catalog(cat)
+      .asInstanceOf[graft.sources.JsonlCatalog]
+    val ident = org.apache.spark.sql.connector.catalog.Identifier.of(Array("lake"), "t")
+    val schema = catalog.loadTable(ident).schema()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val reader = new Thread(() =>
+      try while (!done.get) {
+        assert(catalog.loadTable(ident).schema() === schema)
+        reads.incrementAndGet()
+      } catch { case t: Throwable => failure.set(t) })
+    reader.start()
+    try (0 until 2000).takeWhile(_ => failure.get == null).foreach { _ =>
+      catalog.writeManifest(ident, schema, Nil, 1L << 20, mor = false,
+        morMerge = false, ndvCols = Nil, overwrite = true)
+    } finally { done.set(true); reader.join() }
+    assert(failure.get == null, s"torn manifest read: ${failure.get}")
+    assert(reads.get > 0)
+  }
+
   test("vacuum folds epoch markers OLDER than the oldest live snapshot " +
     "into the high-water record; markers newer than it survive as files") {
     val cat = freshCat("epochfold")

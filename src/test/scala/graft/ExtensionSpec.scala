@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 
 import graft.operators.{Dedup, Similarity}
-import graft.functions.{Multimodal, RollingHashMin, TextAnalysis}
+import graft.functions.{GraftExtensions, Multimodal, RollingHashMin, TextAnalysis}
 
 /** M5 extension surface (SURVEY.md §7.3): dedup family cross-validation,
   * ANN recall floors, text-analysis determinism, multimodal plumbing. The
@@ -63,7 +63,6 @@ class ExtensionSpec extends SparkSpec {
 
   test("d05 triangle join ≡ brute force under adversarial id distributions") {
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
     val rng = new scala.util.Random(7)
     def vecs(ids: Seq[Long]): Seq[(Long, Array[Float])] =
       ids.map(id => id -> Array.fill(4)(rng.nextFloat() * 2 - 1))
@@ -234,7 +233,6 @@ class ExtensionSpec extends SparkSpec {
     // shorter than k → single whole-string window
     assert(RollingHashMin.minHash("ab", 5) === 'a'.toLong * B + 'b')
     // expression path (codegen) matches the direct implementation
-    RollingHashMin.register(spark)
     val viaSql = spark.sql("SELECT rolling_hash_min('abcd', 3)").head().getLong(0)
     assert(viaSql === math.min(abc, bcd))
   }
@@ -267,15 +265,19 @@ class ExtensionSpec extends SparkSpec {
 
   test("GraftExtensions injects the custom functions into a session builder") {
     // a fresh session's registry is the builtins plus what the extensions
-    // inject: `register` calls made on the shared session do not carry over,
-    // so each name resolving here is the extension's doing
+    // inject, so each name resolving here is the extension's doing
     val fresh = spark.newSession()
-    val injected = Seq("rolling_hash_min", "cosine_sim", "minhash_sig",
+    val names = Seq("rolling_hash_min", "cosine_sim", "minhash_sig",
       "hyperplane_sketch", "word_shingles", "stopword_hits", "simhash64",
-      "l2_sq", "topk_agg", "topk_rows_agg", "topk_long_agg",
-      "sorted_inter_count", "sorted_inter", "nfc_normalize",
-      "winnow_fingerprints", "deletion_hashes", "cdc_boundaries",
-      "cosine_scores").map(FunctionIdentifier(_))
+      "sorted_digests", "l2_sq", "topk_agg", "topk_rows_agg", "topk_long_agg",
+      "sorted_inter_count", "sorted_inter", "pair_codes", "nfc_normalize",
+      "winnow_fingerprints", "deletion_hashes", "cdc_boundaries", "bpe_stats",
+      "cosine_scores", "graft_bloom_agg", "graft_might_contain")
+    assert(names.size === 23)
+    assert(names.toSet === GraftExtensions.kernels.map(_.name).toSet,
+      "the spec's name list and the kernel table must agree")
+    assert(GraftExtensions.kernels.size === names.size, "no name twice in the table")
+    val injected = names.map(FunctionIdentifier(_))
     assert(injected.forall(!FunctionRegistry.builtin.functionExists(_)),
       "no injected name may shadow a builtin")
     val missing = injected.filterNot(fresh.sessionState.functionRegistry.functionExists)
@@ -286,10 +288,17 @@ class ExtensionSpec extends SparkSpec {
     assert(r.getLong(0) > 0 && r.getDouble(1) === 1.0)
   }
 
+  test("every injected function rejects a wrong argument count with WRONG_NUM_ARGS") {
+    val fresh = spark.newSession()
+    for (k <- GraftExtensions.kernels; n <- Seq(k.arity - 1, k.arity + 1)) {
+      val call = s"${k.name}(${Seq.fill(n)("NULL").mkString(", ")})"
+      val e = intercept[AnalysisException](fresh.sql(s"SELECT $call"))
+      assert(e.getCondition.startsWith("WRONG_NUM_ARGS"), s"$call: ${e.getMessage}")
+    }
+  }
+
   test("topk aggregates are SQL-callable with natural literals " +
     "(ImplicitCastInputTypes coerces BIGINT values and INT k)") {
-    graft.functions.TopKAgg.register(spark)
-    graft.functions.TopKRowsAgg.register(spark)
     import spark.implicits._
     Seq((1L, 10L, "a"), (1L, 30L, "b"), (1L, 20L, "c"), (2L, 5L, "d"))
       .toDF("g", "v", "p").createOrReplaceTempView("topk_sql_t")

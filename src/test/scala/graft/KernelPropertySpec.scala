@@ -343,7 +343,6 @@ class KernelPropertySpec extends AnyFunSuite {
     val spark = SparkSpec.session
     import spark.implicits._
     import org.apache.spark.sql.functions.expr
-    graft.functions.Simhash64.register(spark)
     val docs = Seq(
       Seq("a b c", "b c d", "c d e"),
       Seq("一 二 三"),
@@ -366,7 +365,6 @@ class KernelPropertySpec extends AnyFunSuite {
     val spark = SparkSpec.session
     import spark.implicits._
     import org.apache.spark.sql.functions.expr
-    graft.functions.SortedDigests.register(spark)
     val docs = Seq(
       Seq("a b c", "b c d", "c d e"),
       Seq("一 二 三", "solo"),
@@ -386,7 +384,6 @@ class KernelPropertySpec extends AnyFunSuite {
     val spark = SparkSpec.session
     import spark.implicits._
     import org.apache.spark.sql.functions.expr
-    graft.functions.L2Sq.register(spark)
     val rnd = new scala.util.Random(42)
     val rows = Seq.fill(200)((
       Seq.fill(8)(rnd.nextDouble() * 10 - 5),
@@ -480,7 +477,6 @@ class KernelPropertySpec extends AnyFunSuite {
 
   test("topk_agg: non-literal k fails at analysis, not in a running task") {
     val spark = SparkSpec.session
-    graft.functions.TopKAgg.register(spark)
     import spark.implicits._
     Seq((1, 2)).toDF("g", "v").createOrReplaceTempView("topk_badk_t")
     val e = intercept[Exception](

@@ -10,7 +10,6 @@ class OperatorInvariantSpec extends SparkSpec {
 
   test("o04 invariant: the bounded-heap aggregate equals the window top-k " +
     "under adversarial partitioning (merge path exercised)") {
-    graft.functions.TopKAgg.register(spark)
     import org.apache.spark.sql.expressions.Window
     val base = graft.Tables.orders(spark, d)
       .select(col("o_orderpriority"), col("o_totalprice"))
@@ -73,7 +72,6 @@ class OperatorInvariantSpec extends SparkSpec {
 
   test("o05 invariant: the row-carrying heap equals the tie-broken window " +
     "top-k under adversarial partitioning, including forced value ties") {
-    graft.functions.TopKRowsAgg.register(spark)
     import org.apache.spark.sql.expressions.Window
     // quantize prices so value ties are common — the tie-break must decide
     val base = graft.Tables.orders(spark, d)
@@ -478,7 +476,6 @@ class OperatorInvariantSpec extends SparkSpec {
 
   test("n06 invariant: the triangle + bounded-heap k-NN join equals the " +
     "brute-force directed window model") {
-    graft.functions.CosineSim.register(spark)
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(spark, d)
     val a = e.select(col("vec_id").as("vid"), col("embedding").as("ea"))
@@ -552,7 +549,6 @@ class OperatorInvariantSpec extends SparkSpec {
 
   test("o06 invariant: the top-k state+delta merge equals the full window " +
     "recompute at ANY split point (the algebraic-merge property)") {
-    graft.functions.TopKRowsAgg.register(spark)
     import org.apache.spark.sql.expressions.Window
     val base = graft.Tables.orders(spark, d)
     val full = base
@@ -1233,7 +1229,6 @@ class OperatorInvariantSpec extends SparkSpec {
     "synthetic data — duplicate timestamps, band-edge ties, empty keys, " +
     "and several band widths") {
     import spark.implicits._
-    graft.plans.BandJoinOp.register(spark)
     val rnd = new scala.util.Random(42)
     // clustered timestamps make band-edge ties and duplicates common
     val left = Seq.tabulate(400)(i =>

@@ -4,20 +4,47 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every SparkSession comes from [[GraftSession.local]]: a builder anywhere
-  * else is a second copy of the session config, free to drift. */
+/** Every SparkSession comes from [[GraftSession.local]] and every graft SQL
+  * function from the [[graft.functions.GraftExtensions]] table: a builder
+  * or a registration anywhere else is a second copy, free to drift. */
 class SessionGuardSpec extends AnyFunSuite {
+
+  private def sources(f: File): Seq[File] =
+    if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(sources)
+    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+
+  private def text(f: File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+
+  private def root(dir: String): File = {
+    val f = new File(dir)
+    assert(f.isDirectory, "run from the repository root")
+    f
+  }
+
+  /** Lines of code, without whole-line `//` and scaladoc comments. */
+  private def codeLines(f: File): Seq[String] =
+    text(f).split("\n").toSeq.filterNot { l =>
+      val t = l.trim
+      t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
+    }
 
   test("GraftSession.scala is the only source that builds a SparkSession") {
     val needle = "SparkSession" + ".builder"
-    def sources(f: File): Seq[File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val roots = Seq(new File("src/main"), new File("src/test"))
-    assert(roots.forall(_.isDirectory), "run from the repository root")
-    val hits = roots.flatMap(sources).filter { f =>
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains(needle)
-    }
+    val hits = Seq(root("src/main"), root("src/test")).flatMap(sources)
+      .filter(text(_).contains(needle))
     assert(hits.map(_.getName) === Seq("GraftSession.scala"))
+  }
+
+  test("SQL functions, rules and strategies reach a session only through GraftExtensions") {
+    val main = sources(root("src/main"))
+    // run-time names bound to trained tables: BpeStats.registerWith, once
+    val fnHits = main
+      .map(f => f.getName -> codeLines(f).count(_.contains("createOrReplaceTempFunction")))
+      .filter(_._2 > 0)
+    assert(fnHits === Seq("BpeStats.scala" -> 1))
+    val ruleHits = main.filter(f => codeLines(f)
+      .exists(l => l.contains("extraOptimizations") || l.contains("extraStrategies")))
+    assert(ruleHits.map(_.getName).isEmpty)
   }
 }
