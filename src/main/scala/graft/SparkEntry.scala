@@ -30,21 +30,39 @@ object SparkEntry {
       .orderBy(col("n_name"), col("c_mktsegment"))
   }
 
+  /** Every module's entries, each module named once. */
+  lazy val entries: Seq[Entry] =
+    Seq(Olap, Relational, Aggregates, graft.streaming.Streams, Dedup, Similarity, Graph,
+      graft.functions.TextAnalysis, graft.functions.Multimodal,
+      graft.sources.RetailIngest).flatMap(_.entries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Olap.queries ++ Relational.queries ++ Aggregates.queries ++
-      graft.streaming.Streams.queries ++
-      Dedup.queries ++ Similarity.queries ++ Graph.queries ++
-      graft.functions.TextAnalysis.queries ++ graft.functions.Multimodal.queries ++
-      graft.sources.RetailIngest.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Entry.byName(entries)(_.run)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops →
-    * driver records a weaker rows-only check. */
-  def oracleSql: Map[String, String] =
-    Olap.oracles ++ Relational.oracles ++ Aggregates.oracles ++
-      graft.streaming.Streams.oracles ++
-      Dedup.oracles ++ Similarity.oracles ++ Graph.oracles ++
-      graft.functions.TextAnalysis.oracles ++ graft.functions.Multimodal.oracles ++
-      graft.sources.RetailIngest.oracles
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] = Entry.byName(entries)(_.oracle)
+}
+
+/** One surface entry: its name, its builder `(session, sfDir) => result`
+  * and the DuckDB SQL that must reproduce the result row for row. */
+final case class Entry(name: String, run: (SparkSession, String) => DataFrame, oracle: String)
+
+object Entry {
+  /** `entries` keyed by name; a name bound twice fails loudly instead of
+    * one row silently replacing the other. */
+  def byName[A](entries: Seq[Entry])(f: Entry => A): Map[String, A] = {
+    val dup = entries.groupBy(_.name).collect { case (n, es) if es.size > 1 => n }
+    require(dup.isEmpty, s"entry names bound twice: ${dup.toSeq.sorted.mkString(", ")}")
+    entries.map(e => e.name -> f(e)).toMap
+  }
+}
+
+/** A module of entries: `queries` and `oracles` are derived once from the
+  * one `entries` table, so no entry can lack an oracle. Lazy: a trait's
+  * strict vals initialize before the module body sets `entries`. */
+trait Entries {
+  def entries: Seq[Entry]
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Entry.byName(entries)(_.run)
+  lazy val oracles: Map[String, String] = Entry.byName(entries)(_.oracle)
 }

@@ -1,6 +1,12 @@
 package graft
+
+import java.io.File
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare —
   * `runMain graft.Verify <sfDir> <outDir> [name...]`. Naming entries dumps
@@ -23,7 +29,7 @@ object Verify {
     require(unknown.isEmpty, s"unknown entries: ${unknown.mkString(", ")}")
     val queries =
       if (names.isEmpty) all else all.filter { case (n, _) => names.contains(n) }
-    new java.io.File(outDir).mkdirs()
+    new File(outDir).mkdirs()
     queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -31,25 +37,13 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql.filter { case (k, _) => queries.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes every control character, so a tab or CR in oracle
+    // SQL cannot break the compare's json.load
+    val json = new ObjectMapper()
+    json.writeValue(new File(s"$outDir/oracle_sql.json"),
+      SparkEntry.oracleSql.filter { case (k, _) => queries.contains(k) }.asJava)
     // Manifest of every dumped query, so tooling can spot entries whose
     // Spark run failed (no output dir written).
-    val manifest = queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]")
-    Files.writeString(Paths.get(s"$outDir/queries.json"), manifest)
+    json.writeValue(new File(s"$outDir/queries.json"), queries.keys.toSeq.sorted.asJava)
   }
-
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20) —
-    * a tab or CR in builder-authored SQL would otherwise make the driver's
-    * json.load fail and silently zero the round's correctness. */
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

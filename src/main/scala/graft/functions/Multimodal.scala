@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Entries, Entry, Tables}
 
 /** Multimodal-column operators (SURVEY.md §7.3 M5): image/audio/video
   * payloads as opaque `binary` columns with typed metadata, plus
@@ -29,7 +29,7 @@ import graft.Tables
   * partition, the Scala-native equivalent of `mapInPandas` batch UDFs, no
   * per-row closure dispatch.
   */
-object Multimodal {
+object Multimodal extends Entries {
 
   private val FrameBytes = 32  // fake "frame" stride in the byte stream
   private val SampleEvery = 4  // keep every 4th frame
@@ -1011,31 +1011,17 @@ object Multimodal {
       |SELECT doc_id, patch_idx, CAST(SUM(v) AS DOUBLE) / 16 AS patch_mean
       |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m12_patch_embed"     -> m12PatchEmbed _,
-    "m01_binary_meta"     -> m01BinaryMeta _,
-    "m02_frame_sample"    -> m02FrameSample _,
-    "m03_media_features"  -> m03Features _,
-    "m04_media_phash"     -> m04MediaPhash _,
-    "m05_media_resize"    -> m05MediaResize _,
-    "m06_audio_energy"    -> m06AudioEnergy _,
-    "m07_scene_change"    -> m07SceneChange _,
-    "m08_modality_router" -> m08ModalityRouter _,
-    "m09_keyframes"       -> m09Keyframes _,
-    "m10_silence_runs"    -> m10SilenceRuns _,
-    "m11_crossmodal_dedup" -> m11CrossmodalDedup _)
-
-  val oracles: Map[String, String] = Map(
-    "m12_patch_embed"  -> m12Sql,
-    "m01_binary_meta"  -> m01Sql,
-    "m02_frame_sample" -> m02Sql,
-    "m03_media_features" -> m03Sql,
-    "m04_media_phash"  -> m04Sql,
-    "m05_media_resize" -> m05Sql,
-    "m06_audio_energy" -> m06Sql,
-    "m07_scene_change" -> m07Sql,
-    "m08_modality_router" -> m08Sql,
-    "m09_keyframes"    -> m09Sql,
-    "m10_silence_runs" -> m10Sql,
-    "m11_crossmodal_dedup" -> m11Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("m12_patch_embed", m12PatchEmbed _, m12Sql),
+    Entry("m01_binary_meta", m01BinaryMeta _, m01Sql),
+    Entry("m02_frame_sample", m02FrameSample _, m02Sql),
+    Entry("m03_media_features", m03Features _, m03Sql),
+    Entry("m04_media_phash", m04MediaPhash _, m04Sql),
+    Entry("m05_media_resize", m05MediaResize _, m05Sql),
+    Entry("m06_audio_energy", m06AudioEnergy _, m06Sql),
+    Entry("m07_scene_change", m07SceneChange _, m07Sql),
+    Entry("m08_modality_router", m08ModalityRouter _, m08Sql),
+    Entry("m09_keyframes", m09Keyframes _, m09Sql),
+    Entry("m10_silence_runs", m10SilenceRuns _, m10Sql),
+    Entry("m11_crossmodal_dedup", m11CrossmodalDedup _, m11Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Entries, Entry, Tables}
 
 /** Text-analysis operators for a training-data pipeline (SURVEY.md §7.3 M5)
   * over the `documents` table: token counting, language-ID heuristic,
@@ -17,7 +17,7 @@ import graft.Tables
   * embarrassingly parallel single-pass scans: no shuffle at all until an
   * aggregation consumes their output.
   */
-object TextAnalysis {
+object TextAnalysis extends Entries {
 
   /** Whitespace tokens of the lowercased text. */
   private def toks: Column = split(lower(col("text")), "\\s+")
@@ -2204,73 +2204,38 @@ object TextAnalysis {
        |SELECT r AS rank, a AS lhs, b AS rhs, a || b AS product, n
        |FROM bpem ORDER BY rank""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x33_bpe_train"           -> x33BpeTrain _,
-    "x32_bpe_encode"          -> x32BpeEncode _,
-    "x31_shard_export"        -> x31ShardExport _,
-    "x30_bpe_pairs"           -> x30BpePairs _,
-    "x29_gopher_rules"        -> x29GopherRules _,
-    "x28_fim_spans"           -> x28FimSpans _,
-    "x01_token_count"         -> x01TokenCount _,
-    "x02_lang_id"             -> x02LangId _,
-    "x03_quality_score"       -> x03Quality _,
-    "x04_fingerprint_md5"     -> x04FingerprintMd5 _,
-    "x05_fingerprint_rolling" -> x05FingerprintRolling _,
-    "x06_pipeline_e2e"        -> x06PipelineE2e _,
-    "x07_stratified_sample"   -> x07StratifiedSample _,
-    "x08_decontaminate"       -> x08Decontaminate _,
-    "x09_sequence_pack"       -> x09SequencePack _,
-    "x10_repetition"          -> x10Repetition _,
-    "x11_tfidf"               -> x11Tfidf _,
-    "x12_token_rarity"        -> x12TokenRarity _,
-    "x13_domain_balance"      -> x13DomainBalance _,
-    "x14_pii_redact"          -> x14PiiRedact _,
-    "x15_ngram_lm"            -> x15NgramLm _,
-    "x16_line_filter"         -> x16LineFilter _,
-    "x17_chunk_overlap"       -> x17ChunkOverlap _,
-    "x18_split_assign"        -> x18SplitAssign _,
-    "x19_boilerplate_df"      -> x19BoilerplateDf _,
-    "x20_split_contamination" -> x20SplitContamination _,
-    "x21_mixture_sample"      -> x21MixtureSample _,
-    "x22_bloom_decontaminate" -> x22BloomDecontaminate _,
-    "x23_ngram_novelty"       -> x23NgramNovelty _,
-    "x24_unicode_nfc"         -> x24UnicodeNfc _,
-    "x25_cdc_chunk"           -> x25CdcChunk _,
-    "x26_dsir_weight"         -> x26DsirWeight _,
-    "x27_dup_spectrum"        -> x27DupSpectrum _)
-
-  val oracles: Map[String, String] = Map(
-    "x33_bpe_train"           -> x33Sql,
-    "x32_bpe_encode"          -> x32Sql,
-    "x31_shard_export"        -> x31Sql,
-    "x30_bpe_pairs"           -> x30Sql,
-    "x29_gopher_rules"        -> x29Sql,
-    "x28_fim_spans"           -> x28Sql,
-    "x01_token_count"       -> x01Sql,
-    "x02_lang_id"           -> x02Sql,
-    "x03_quality_score"     -> x03Sql,
-    "x04_fingerprint_md5"   -> x04Sql,
-    "x05_fingerprint_rolling" -> x05Sql,
-    "x06_pipeline_e2e"      -> x06Sql,
-    "x07_stratified_sample" -> x07Sql,
-    "x08_decontaminate"     -> x08Sql,
-    "x09_sequence_pack"     -> x09Sql,
-    "x10_repetition"        -> x10Sql,
-    "x11_tfidf"             -> x11Sql,
-    "x12_token_rarity"      -> x12Sql,
-    "x13_domain_balance"    -> x13Sql,
-    "x14_pii_redact"        -> x14Sql,
-    "x15_ngram_lm"          -> x15Sql,
-    "x16_line_filter"       -> x16Sql,
-    "x17_chunk_overlap"     -> x17Sql,
-    "x18_split_assign"      -> x18Sql,
-    "x19_boilerplate_df"    -> x19Sql,
-    "x20_split_contamination" -> x20Sql,
-    "x21_mixture_sample"    -> x21Sql,
-    "x22_bloom_decontaminate" -> x22Sql,
-    "x23_ngram_novelty"       -> x23Sql,
-    "x24_unicode_nfc"         -> x24Sql,
-    "x25_cdc_chunk"           -> x25Sql,
-    "x26_dsir_weight"         -> x26Sql,
-    "x27_dup_spectrum"        -> x27Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("x33_bpe_train", x33BpeTrain _, x33Sql),
+    Entry("x32_bpe_encode", x32BpeEncode _, x32Sql),
+    Entry("x31_shard_export", x31ShardExport _, x31Sql),
+    Entry("x30_bpe_pairs", x30BpePairs _, x30Sql),
+    Entry("x29_gopher_rules", x29GopherRules _, x29Sql),
+    Entry("x28_fim_spans", x28FimSpans _, x28Sql),
+    Entry("x01_token_count", x01TokenCount _, x01Sql),
+    Entry("x02_lang_id", x02LangId _, x02Sql),
+    Entry("x03_quality_score", x03Quality _, x03Sql),
+    Entry("x04_fingerprint_md5", x04FingerprintMd5 _, x04Sql),
+    Entry("x05_fingerprint_rolling", x05FingerprintRolling _, x05Sql),
+    Entry("x06_pipeline_e2e", x06PipelineE2e _, x06Sql),
+    Entry("x07_stratified_sample", x07StratifiedSample _, x07Sql),
+    Entry("x08_decontaminate", x08Decontaminate _, x08Sql),
+    Entry("x09_sequence_pack", x09SequencePack _, x09Sql),
+    Entry("x10_repetition", x10Repetition _, x10Sql),
+    Entry("x11_tfidf", x11Tfidf _, x11Sql),
+    Entry("x12_token_rarity", x12TokenRarity _, x12Sql),
+    Entry("x13_domain_balance", x13DomainBalance _, x13Sql),
+    Entry("x14_pii_redact", x14PiiRedact _, x14Sql),
+    Entry("x15_ngram_lm", x15NgramLm _, x15Sql),
+    Entry("x16_line_filter", x16LineFilter _, x16Sql),
+    Entry("x17_chunk_overlap", x17ChunkOverlap _, x17Sql),
+    Entry("x18_split_assign", x18SplitAssign _, x18Sql),
+    Entry("x19_boilerplate_df", x19BoilerplateDf _, x19Sql),
+    Entry("x20_split_contamination", x20SplitContamination _, x20Sql),
+    Entry("x21_mixture_sample", x21MixtureSample _, x21Sql),
+    Entry("x22_bloom_decontaminate", x22BloomDecontaminate _, x22Sql),
+    Entry("x23_ngram_novelty", x23NgramNovelty _, x23Sql),
+    Entry("x24_unicode_nfc", x24UnicodeNfc _, x24Sql),
+    Entry("x25_cdc_chunk", x25CdcChunk _, x25Sql),
+    Entry("x26_dsir_weight", x26DsirWeight _, x26Sql),
+    Entry("x27_dup_spectrum", x27DupSpectrum _, x27Sql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
+import graft.{Entries, Entry}
 import graft.Tables._
 import graft.Ops._
 
@@ -20,7 +21,7 @@ import graft.Ops._
   * aggregation, hash-vs-sort selection and spill are Catalyst's job
   * (HashAggregateExec) — nothing hand-scheduled.
   */
-object Aggregates {
+object Aggregates extends Entries {
 
   // === A — aggregations ======================================================
 
@@ -2776,133 +2777,68 @@ object Aggregates {
       |        / (CAST(n2 AS DOUBLE) * n2 * (n2 - 1))), 6) AS t_stat
       |FROM m""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a01_grouped_sum"      -> a01GroupedSum _,
-    "a02_multi_measure"    -> a02MultiMeasure _,
-    "a03_grouped_avg"      -> a03GroupedAvg _,
-    "a04_count_having"     -> a04CountHaving _,
-    "a05_global_agg"       -> a05GlobalAgg _,
-    "a06_conditional_agg"  -> a06ConditionalAgg _,
-    "a08_string_agg"       -> a08StringAgg _,
-    "a09_agg_of_agg"       -> a09AggOfAgg _,
-    "a10_groupby_ordinal"  -> a10GroupByOrdinal _,
-    "a11_distinct_agg"     -> a11DistinctAgg _,
-    "a12_approx_distinct"  -> a12ApproxDistinct _,
-    "a13_percentile"       -> a13Percentile _,
-    "a14_minmax"           -> a14MinMax _,
-    "a15_stddev"           -> a15Stddev _,
-    "a16_cube"             -> a16Cube _,
-    "a17_histogram"        -> a17Histogram _,
-    "a18_mode"             -> a18Mode _,
-    "a19_grouping_sets"    -> a19GroupingSets _,
-    "a20_heavy_hitters"    -> a20HeavyHitters _,
-    "a21_pivot"            -> a21Pivot _,
-    "a22_corr"             -> a22Corr _,
-    "a23_approx_quantile"  -> a23ApproxQuantile _,
-    "a26_grouping_sets"    -> a26GroupingSets _,
-    "a27_exact_median"     -> a27ExactMedian _,
-    "a28_group_mode"       -> a28GroupMode _,
-    "a29_exact_quartiles"  -> a29ExactQuartiles _,
-    "a30_weighted_median"  -> a30WeightedMedian _,
-    "a31_argminmax"        -> a31ArgMinMax _,
-    "a32_moments"          -> a32Moments _,
-    "a33_gini"             -> a33Gini _,
-    "a34_chi2"             -> a34Chi2 _,
-    "a35_ks_test"          -> a35KsTest _,
-    "a36_benford"          -> a36Benford _,
-    "a37_mann_whitney"     -> a37MannWhitney _,
-    "a38_lorenz_gini"      -> a38LorenzGini _,
-    "a39_welch_t"          -> a39WelchT _,
-    "w26_cohort_retention" -> w26CohortRetention _,
-    "w27_interval_coverage" -> w27IntervalCoverage _,
-    "w24_zscore_outlier"   -> w24ZscoreOutlier _,
-    "w25_seasonality"      -> w25Seasonality _,
-    "a24_hll_mergeable"    -> a24HllMergeable _,
-    "a25_sample_estimate"  -> a25SampleEstimate _,
-    "w01_lag_default"      -> w01LagDefault _,
-    "w03_lag_null_guard"   -> w03LagNullGuard _,
-    "w05_ranking"          -> w05Ranking _,
-    "w06_running_sum"      -> w06RunningSum _,
-    "w07_lead"             -> w07Lead _,
-    "w08_ntile"            -> w08Ntile _,
-    "w09_range_frame"      -> w09RangeFrame _,
-    "w10_first_last"       -> w10FirstLast _,
-    "w11_percent_rank"     -> w11PercentRank _,
-    "w12_sessionize"       -> w12Sessionize _,
-    "w13_streaks"          -> w13Streaks _,
-    "w14_moving_distinct"  -> w14MovingDistinct _,
-    "w15_funnel"           -> w15Funnel _,
-    "w16_gapfill_locf"     -> w16GapfillLocf _,
-    "w17_time_weighted"    -> w17TimeWeightedAvg _,
-    "w18_rolling_median"   -> w18RollingMedian _,
-    "w19_ohlc_resample"    -> w19OhlcResample _,
-    "w20_ntile_decile"     -> w20NtileDecile _,
-    "w21_ewma"             -> w21Ewma _,
-    "w22_cusum"            -> w22Cusum _,
-    "w23_rolling_corr"     -> w23RollingCorr _)
-
-  val oracles: Map[String, String] = Map(
-    "a01_grouped_sum"      -> a01Sql,
-    "a02_multi_measure"    -> a02Sql,
-    "a03_grouped_avg"      -> a03Sql,
-    "a04_count_having"     -> a04Sql,
-    "a05_global_agg"       -> a05Sql,
-    "a06_conditional_agg"  -> a06Sql,
-    "a08_string_agg"       -> a08Sql,
-    "a09_agg_of_agg"       -> a09Sql,
-    "a10_groupby_ordinal"  -> a10Sql,
-    "a11_distinct_agg"     -> a11Sql,
-    "a12_approx_distinct"  -> a12Sql,
-    "a13_percentile"       -> a13Sql,
-    "a14_minmax"           -> a14Sql,
-    "a15_stddev"           -> a15Sql,
-    "a16_cube"             -> a16Sql,
-    "a17_histogram"        -> a17Sql,
-    "a18_mode"             -> a18Sql,
-    "a19_grouping_sets"    -> a19Sql,
-    "a20_heavy_hitters"    -> a20Sql,
-    "a21_pivot"            -> a21Sql,
-    "a22_corr"             -> a22Sql,
-    "a23_approx_quantile"  -> a23Sql,
-    "a26_grouping_sets"    -> a26Sql,
-    "a27_exact_median"     -> a27Sql,
-    "a28_group_mode"       -> a28Sql,
-    "a29_exact_quartiles"  -> a29Sql,
-    "a30_weighted_median"  -> a30Sql,
-    "a31_argminmax"        -> a31Sql,
-    "a32_moments"          -> a32Sql,
-    "a33_gini"             -> a33Sql,
-    "a34_chi2"             -> a34Sql,
-    "a35_ks_test"          -> a35Sql,
-    "a36_benford"          -> a36Sql,
-    "a37_mann_whitney"     -> a37Sql,
-    "a38_lorenz_gini"      -> a38Sql,
-    "a39_welch_t"          -> a39Sql,
-    "w26_cohort_retention" -> w26Sql,
-    "w27_interval_coverage" -> w27Sql,
-    "w24_zscore_outlier"   -> w24Sql,
-    "w25_seasonality"      -> w25Sql,
-    "a24_hll_mergeable"    -> a24Sql,
-    "a25_sample_estimate"  -> a25Sql,
-    "w01_lag_default"      -> w01Sql,
-    "w03_lag_null_guard"   -> w03Sql,
-    "w05_ranking"          -> w05Sql,
-    "w06_running_sum"      -> w06Sql,
-    "w07_lead"             -> w07Sql,
-    "w08_ntile"            -> w08Sql,
-    "w09_range_frame"      -> w09Sql,
-    "w10_first_last"       -> w10Sql,
-    "w11_percent_rank"     -> w11Sql,
-    "w12_sessionize"       -> w12Sql,
-    "w13_streaks"          -> w13Sql,
-    "w14_moving_distinct"  -> w14Sql,
-    "w15_funnel"           -> w15Sql,
-    "w16_gapfill_locf"     -> w16Sql,
-    "w17_time_weighted"    -> w17Sql,
-    "w18_rolling_median"   -> w18Sql,
-    "w19_ohlc_resample"    -> w19Sql,
-    "w20_ntile_decile"     -> w20Sql,
-    "w21_ewma"             -> w21Sql,
-    "w22_cusum"            -> w22Sql,
-    "w23_rolling_corr"     -> w23Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("a01_grouped_sum", a01GroupedSum _, a01Sql),
+    Entry("a02_multi_measure", a02MultiMeasure _, a02Sql),
+    Entry("a03_grouped_avg", a03GroupedAvg _, a03Sql),
+    Entry("a04_count_having", a04CountHaving _, a04Sql),
+    Entry("a05_global_agg", a05GlobalAgg _, a05Sql),
+    Entry("a06_conditional_agg", a06ConditionalAgg _, a06Sql),
+    Entry("a08_string_agg", a08StringAgg _, a08Sql),
+    Entry("a09_agg_of_agg", a09AggOfAgg _, a09Sql),
+    Entry("a10_groupby_ordinal", a10GroupByOrdinal _, a10Sql),
+    Entry("a11_distinct_agg", a11DistinctAgg _, a11Sql),
+    Entry("a12_approx_distinct", a12ApproxDistinct _, a12Sql),
+    Entry("a13_percentile", a13Percentile _, a13Sql),
+    Entry("a14_minmax", a14MinMax _, a14Sql),
+    Entry("a15_stddev", a15Stddev _, a15Sql),
+    Entry("a16_cube", a16Cube _, a16Sql),
+    Entry("a17_histogram", a17Histogram _, a17Sql),
+    Entry("a18_mode", a18Mode _, a18Sql),
+    Entry("a19_grouping_sets", a19GroupingSets _, a19Sql),
+    Entry("a20_heavy_hitters", a20HeavyHitters _, a20Sql),
+    Entry("a21_pivot", a21Pivot _, a21Sql),
+    Entry("a22_corr", a22Corr _, a22Sql),
+    Entry("a23_approx_quantile", a23ApproxQuantile _, a23Sql),
+    Entry("a26_grouping_sets", a26GroupingSets _, a26Sql),
+    Entry("a27_exact_median", a27ExactMedian _, a27Sql),
+    Entry("a28_group_mode", a28GroupMode _, a28Sql),
+    Entry("a29_exact_quartiles", a29ExactQuartiles _, a29Sql),
+    Entry("a30_weighted_median", a30WeightedMedian _, a30Sql),
+    Entry("a31_argminmax", a31ArgMinMax _, a31Sql),
+    Entry("a32_moments", a32Moments _, a32Sql),
+    Entry("a33_gini", a33Gini _, a33Sql),
+    Entry("a34_chi2", a34Chi2 _, a34Sql),
+    Entry("a35_ks_test", a35KsTest _, a35Sql),
+    Entry("a36_benford", a36Benford _, a36Sql),
+    Entry("a37_mann_whitney", a37MannWhitney _, a37Sql),
+    Entry("a38_lorenz_gini", a38LorenzGini _, a38Sql),
+    Entry("a39_welch_t", a39WelchT _, a39Sql),
+    Entry("w26_cohort_retention", w26CohortRetention _, w26Sql),
+    Entry("w27_interval_coverage", w27IntervalCoverage _, w27Sql),
+    Entry("w24_zscore_outlier", w24ZscoreOutlier _, w24Sql),
+    Entry("w25_seasonality", w25Seasonality _, w25Sql),
+    Entry("a24_hll_mergeable", a24HllMergeable _, a24Sql),
+    Entry("a25_sample_estimate", a25SampleEstimate _, a25Sql),
+    Entry("w01_lag_default", w01LagDefault _, w01Sql),
+    Entry("w03_lag_null_guard", w03LagNullGuard _, w03Sql),
+    Entry("w05_ranking", w05Ranking _, w05Sql),
+    Entry("w06_running_sum", w06RunningSum _, w06Sql),
+    Entry("w07_lead", w07Lead _, w07Sql),
+    Entry("w08_ntile", w08Ntile _, w08Sql),
+    Entry("w09_range_frame", w09RangeFrame _, w09Sql),
+    Entry("w10_first_last", w10FirstLast _, w10Sql),
+    Entry("w11_percent_rank", w11PercentRank _, w11Sql),
+    Entry("w12_sessionize", w12Sessionize _, w12Sql),
+    Entry("w13_streaks", w13Streaks _, w13Sql),
+    Entry("w14_moving_distinct", w14MovingDistinct _, w14Sql),
+    Entry("w15_funnel", w15Funnel _, w15Sql),
+    Entry("w16_gapfill_locf", w16GapfillLocf _, w16Sql),
+    Entry("w17_time_weighted", w17TimeWeightedAvg _, w17Sql),
+    Entry("w18_rolling_median", w18RollingMedian _, w18Sql),
+    Entry("w19_ohlc_resample", w19OhlcResample _, w19Sql),
+    Entry("w20_ntile_decile", w20NtileDecile _, w20Sql),
+    Entry("w21_ewma", w21Ewma _, w21Sql),
+    Entry("w22_cusum", w22Cusum _, w22Sql),
+    Entry("w23_rolling_corr", w23RollingCorr _, w23Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Entries, Entry, Tables}
 
 /** Deduplication operators for a training-data pipeline (SURVEY.md §7.3 M5)
   * over the `documents` / `embeddings` tables: exact, n-gram Jaccard,
@@ -27,7 +27,7 @@ import graft.Tables
   * [[graft.functions.MinhashSig]], [[graft.functions.Simhash64]],
   * [[graft.functions.CosineSim]]) — one scan per table, no UDFs.
   */
-object Dedup {
+object Dedup extends Entries {
 
   /** Distinct lowercase word-3-gram shingles per document, MATERIALIZED to
     * parquet once per (session, corpus) and memoized as the read-back.
@@ -1781,43 +1781,24 @@ object Dedup {
       |FROM cand c JOIN wc USING (span_len, h)
       |ORDER BY c.doc_id, c.start""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d18_dup_span_report"   -> d18DupSpanReport _,
-    "d17_longest_dup_span"  -> d17LongestDupSpan _,
-    "d15_winnowing"         -> d15Winnowing _,
-    "d16_soft_dedup"        -> d16SoftDedup _,
-    "d01_exact_dedup"       -> d01Exact _,
-    "d14_containment"       -> d14Containment _,
-    "d02_ngram_jaccard"     -> d02NgramJaccard _,
-    "d03_minhash_lsh"       -> d03MinhashLsh _,
-    "d04_simhash"           -> d04Simhash _,
-    "d05_embedding_neardup" -> d05EmbeddingNearDup _,
-    "d06_embedding_neardup_lsh" -> d06EmbeddingNearDupLsh _,
-    "d07_dedup_clusters"    -> d07DedupClusters _,
-    "d08_span_dedup"        -> d08SpanDedup _,
-    "d09_quality_canonical" -> d09QualityCanonical _,
-    "d10_url_canonical"     -> d10UrlCanonical _,
-    "d11_incremental_dedup" -> d11IncrementalDedup _,
-    "d12_semantic_dedup"    -> d12SemanticDedup _,
-    "d13_fuzzy_link"        -> d13FuzzyLink _)
-
-  val oracles: Map[String, String] = Map(
-    "d18_dup_span_report"   -> d18Sql,
-    "d17_longest_dup_span"  -> d17Sql,
-    "d15_winnowing"         -> d15Sql,
-    "d16_soft_dedup"        -> d16Sql,
-    "d01_exact_dedup"       -> d01Sql,
-    "d14_containment"       -> d14Sql,
-    "d02_ngram_jaccard"     -> d02Sql,
-    "d03_minhash_lsh"       -> d02Sql, // LSH + exact verify ≡ exact pairs (see Scaladoc)
-    "d04_simhash"           -> d04Sql,
-    "d05_embedding_neardup" -> d05Sql,
-    "d06_embedding_neardup_lsh" -> d06Sql,
-    "d07_dedup_clusters"    -> d07Sql,
-    "d08_span_dedup"        -> d08Sql,
-    "d09_quality_canonical" -> d09Sql,
-    "d10_url_canonical"     -> d10Sql,
-    "d11_incremental_dedup" -> d11Sql,
-    "d12_semantic_dedup"    -> d12Sql,
-    "d13_fuzzy_link"        -> d13Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("d18_dup_span_report", d18DupSpanReport _, d18Sql),
+    Entry("d17_longest_dup_span", d17LongestDupSpan _, d17Sql),
+    Entry("d15_winnowing", d15Winnowing _, d15Sql),
+    Entry("d16_soft_dedup", d16SoftDedup _, d16Sql),
+    Entry("d01_exact_dedup", d01Exact _, d01Sql),
+    Entry("d14_containment", d14Containment _, d14Sql),
+    Entry("d02_ngram_jaccard", d02NgramJaccard _, d02Sql),
+    // LSH + exact verify ≡ exact pairs (see Scaladoc)
+    Entry("d03_minhash_lsh", d03MinhashLsh _, d02Sql),
+    Entry("d04_simhash", d04Simhash _, d04Sql),
+    Entry("d05_embedding_neardup", d05EmbeddingNearDup _, d05Sql),
+    Entry("d06_embedding_neardup_lsh", d06EmbeddingNearDupLsh _, d06Sql),
+    Entry("d07_dedup_clusters", d07DedupClusters _, d07Sql),
+    Entry("d08_span_dedup", d08SpanDedup _, d08Sql),
+    Entry("d09_quality_canonical", d09QualityCanonical _, d09Sql),
+    Entry("d10_url_canonical", d10UrlCanonical _, d10Sql),
+    Entry("d11_incremental_dedup", d11IncrementalDedup _, d11Sql),
+    Entry("d12_semantic_dedup", d12SemanticDedup _, d12Sql),
+    Entry("d13_fuzzy_link", d13FuzzyLink _, d13Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Entries, Entry, Tables}
 
 /** Graph analytics over the part co-purchase graph (SURVEY.md §7.3 M5) —
   * the corpus-link workloads a training-data pipeline runs beyond d07's
@@ -37,7 +37,7 @@ import graft.Tables
   *    bit-exact. Mass leaked by flooring stays leaked (deterministically);
   *    the CONTRACT is the integer recurrence, not the real-valued limit.
   */
-object Graph {
+object Graph extends Entries {
 
   private val edgeCache =
     new graft.SessionMemo[String, DataFrame]
@@ -1018,29 +1018,16 @@ object Graph {
        |SELECT rank, a, b, common, union_size, jaccard FROM r
        |WHERE rank <= $JacTopK ORDER BY rank""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g01_triangle_count" -> g01TriangleCount _,
-    "g02_pagerank"       -> g02Pagerank _,
-    "g03_kcore_peel"     -> g03KcorePeel _,
-    "g04_embeddedness"   -> g04Embeddedness _,
-    "g05_bfs_hops"       -> g05BfsHops _,
-    "g06_assortativity"  -> g06Assortativity _,
-    "g07_clustering"     -> g07ClusteringCoeff _,
-    "g08_label_prop"     -> g08LabelProp _,
-    "g09_link_predict"   -> g09LinkPredict _,
-    "g10_modularity"     -> g10Modularity _,
-    "g11_edge_jaccard"   -> g11EdgeJaccard _)
-
-  val oracles: Map[String, String] = Map(
-    "g01_triangle_count" -> g01Sql,
-    "g02_pagerank"       -> g02Sql,
-    "g03_kcore_peel"     -> g03Sql,
-    "g04_embeddedness"   -> g04Sql,
-    "g05_bfs_hops"       -> g05Sql,
-    "g06_assortativity"  -> g06Sql,
-    "g07_clustering"     -> g07Sql,
-    "g08_label_prop"     -> g08Sql,
-    "g09_link_predict"   -> g09Sql,
-    "g10_modularity"     -> g10Sql,
-    "g11_edge_jaccard"   -> g11Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("g01_triangle_count", g01TriangleCount _, g01Sql),
+    Entry("g02_pagerank", g02Pagerank _, g02Sql),
+    Entry("g03_kcore_peel", g03KcorePeel _, g03Sql),
+    Entry("g04_embeddedness", g04Embeddedness _, g04Sql),
+    Entry("g05_bfs_hops", g05BfsHops _, g05Sql),
+    Entry("g06_assortativity", g06Assortativity _, g06Sql),
+    Entry("g07_clustering", g07ClusteringCoeff _, g07Sql),
+    Entry("g08_label_prop", g08LabelProp _, g08Sql),
+    Entry("g09_link_predict", g09LinkPredict _, g09Sql),
+    Entry("g10_modularity", g10Modularity _, g10Sql),
+    Entry("g11_edge_jaccard", g11EdgeJaccard _, g11Sql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
+import graft.{Entries, Entry}
 import graft.Tables._
 import graft.Ops._
 
@@ -22,7 +23,7 @@ import graft.Ops._
   * group keys, which AQE coalesces at runtime. No driver-side collection
   * anywhere; every operator is a pure declarative plan.
   */
-object Olap {
+object Olap extends Entries {
 
   /** The analysis year used by the year-scoped queries (reference uses 2019
     * / 2017 over its CSV range; testdata dates span 1995–2001). */
@@ -655,45 +656,24 @@ object Olap {
       |FROM daily JOIN stats ON l_partkey = pk
       |WHERE day_cents * n_days > tot_cents * 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_top5_products"          -> q01 _,
-    "q02_quarterly_growth"       -> q02 _,
-    "q02b_growth_java_variant"   -> q02b _,
-    "q05b_volatility_avg"        -> q05b _,
-    "q03b_total_contribution"    -> q03b _,
-    "q04b_seasonal_total"        -> q04b _,
-    "q06b_affinity_count"        -> q06b _,
-    "q07b_yearly_total"          -> q07b _,
-    "q07c_rollup_3level"         -> q07c _,
-    "q08b_halfyear_totals"       -> q08b _,
-    "q09b_spike_count"           -> q09b _,
-    "q03_supplier_contribution"  -> q03 _,
-    "q04_seasonal_sales"         -> q04 _,
-    "q05_monthly_volatility"     -> q05 _,
-    "q06_basket_affinity"        -> q06 _,
-    "q07_rollup_sales"           -> q07 _,
-    "q08_halfyear_sales"         -> q08 _,
-    "q09_daily_spikes"           -> q09 _,
-    "q10_quarterly_view"         -> q10 _)
-
-  val oracles: Map[String, String] = Map(
-    "q01_top5_products"          -> q01Sql,
-    "q02_quarterly_growth"       -> q02Sql,
-    "q02b_growth_java_variant"   -> q02bSql,
-    "q05b_volatility_avg"        -> q05bSql,
-    "q03b_total_contribution"    -> q03bSql,
-    "q04b_seasonal_total"        -> q04bSql,
-    "q06b_affinity_count"        -> q06bSql,
-    "q07b_yearly_total"          -> q07bSql,
-    "q07c_rollup_3level"         -> q07cSql,
-    "q08b_halfyear_totals"       -> q08bSql,
-    "q09b_spike_count"           -> q09bSql,
-    "q03_supplier_contribution"  -> q03Sql,
-    "q04_seasonal_sales"         -> q04Sql,
-    "q05_monthly_volatility"     -> q05Sql,
-    "q06_basket_affinity"        -> q06Sql,
-    "q07_rollup_sales"           -> q07Sql,
-    "q08_halfyear_sales"         -> q08Sql,
-    "q09_daily_spikes"           -> q09Sql,
-    "q10_quarterly_view"         -> q10Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q01_top5_products", q01 _, q01Sql),
+    Entry("q02_quarterly_growth", q02 _, q02Sql),
+    Entry("q02b_growth_java_variant", q02b _, q02bSql),
+    Entry("q05b_volatility_avg", q05b _, q05bSql),
+    Entry("q03b_total_contribution", q03b _, q03bSql),
+    Entry("q04b_seasonal_total", q04b _, q04bSql),
+    Entry("q06b_affinity_count", q06b _, q06bSql),
+    Entry("q07b_yearly_total", q07b _, q07bSql),
+    Entry("q07c_rollup_3level", q07c _, q07cSql),
+    Entry("q08b_halfyear_totals", q08b _, q08bSql),
+    Entry("q09b_spike_count", q09b _, q09bSql),
+    Entry("q03_supplier_contribution", q03 _, q03Sql),
+    Entry("q04_seasonal_sales", q04 _, q04Sql),
+    Entry("q05_monthly_volatility", q05 _, q05Sql),
+    Entry("q06_basket_affinity", q06 _, q06Sql),
+    Entry("q07_rollup_sales", q07 _, q07Sql),
+    Entry("q08_halfyear_sales", q08 _, q08Sql),
+    Entry("q09_daily_spikes", q09 _, q09Sql),
+    Entry("q10_quarterly_view", q10 _, q10Sql))
 }

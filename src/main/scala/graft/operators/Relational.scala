@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
+import graft.{Entries, Entry}
 import graft.Tables._
 import graft.Ops._
 
@@ -17,7 +18,7 @@ import graft.Ops._
   * only at the output boundary (a real deployment would drop the global sort
   * — it exists here because the oracle hash-compare needs stable row order).
   */
-object Relational {
+object Relational extends Entries {
 
   // === S — sources / sinks ===================================================
 
@@ -3781,185 +3782,94 @@ object Relational {
       |    AS sum_qty
       |FROM lineitem GROUP BY 1, 2 ORDER BY l_year, batch""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s04_upsert_last_write_wins" -> s04UpsertLww _,
-    "s06_partitioned_scan"       -> s06PartitionedScan _,
-    "s07_chunked_scan_offset"    -> s07ChunkedScan _,
-    "s08_count_scan"             -> s08CountScan _,
-    "s09_partitioned_write_prune" -> s09PartitionedWritePrune _,
-    "s10_bucketed_join"          -> s10BucketedJoin _,
-    "s12_jsonl_scan"             -> ((s, _) => s12JsonlScan(s)),
-    "s13_incremental_agg"        -> s13IncrementalAgg _,
-    "s14_compaction"             -> s14Compaction _,
-    "s15_schema_evolution"       -> s15SchemaEvolution _,
-    "s16_orc_interchange"        -> s16OrcInterchange _,
-    "s17_cdc_apply"              -> s17CdcApply _,
-    "s18_jdbc_roundtrip"         -> s18JdbcRoundtrip _,
-    "j10_asof_join"              -> j10AsofJoin _,
-    "j11_range_join"             -> j11RangeJoin _,
-    "j12_salted_skew_join"       -> j12SaltedSkewJoin _,
-    "j13_bloom_prejoin"          -> j13BloomPrejoin _,
-    "j14_full_outer"             -> j14FullOuter _,
-    "j15_interval_overlap"       -> j15IntervalOverlap _,
-    "j16_dpp_prune"              -> j16DppPrune _,
-    "j17_nearest_join"           -> j17NearestJoin _,
-    "j18_scd2_join"              -> j18Scd2Join _,
-    "j19_band_join_native"       -> j19BandJoinNative _,
-    "j21_aqe_skew_join"          -> j21AqeSkewJoin _,
-    "s24_jsonl_v2_pushdown"      -> s24JsonlV2Pushdown _,
-    "s25_jsonl_v2_write"         -> s25JsonlV2Write _,
-    "s26_metadata_agg"           -> s26MetadataAgg _,
-    "s27_grouped_metadata_agg"   -> s27GroupedMetadataAgg _,
-    "s28_storage_partitioned_agg" -> s28StoragePartitionedAgg _,
-    "s29_storage_partitioned_join" -> s29StoragePartitionedJoin _,
-    "s30_bucketed_join"          -> s30BucketedJoin _,
-    "s31_catalog_delete"         -> s31CatalogDelete _,
-    "s32_merge_upsert"           -> s32MergeUpsert _,
-    "s33_cow_update"             -> s33CowUpdate _,
-    "s34_mor_delete"             -> s34MorDelete _,
-    "s35_sorted_join"            -> s35SortedJoin _,
-    "s36_compacted_agg"          -> s36CompactedAgg _,
-    "s37_zorder_scan"            -> s37ZorderScan _,
-    "s38_vacuumed_agg"           -> s38VacuumedAgg _,
-    "s39_bloom_lookup"           -> s39BloomLookup _,
-    "s40_show_partitions"        -> s40ShowPartitions _,
-    "s41_truncate_partition"     -> s41TruncatePartition _,
-    "s42_mor_upsert"             -> s42MorUpsert _,
-    "s43_catalog_time_travel"    -> s43CatalogTimeTravel _,
-    "s44_changes_feed"           -> s44ChangesFeed _,
-    "s45_ndv_broadcast_agg"      -> s45NdvBroadcastAgg _,
-    "s46_ndv_join_reorder"       -> s46NdvJoinReorder _,
-    "s47_transact_star"          -> s47TransactStar _,
-    "p13_quality_gate"           -> p13QualityGate _,
-    "p11_nested_arrays"          -> p11NestedArrays _,
-    "p12_unicode_clean"          -> p12UnicodeClean _,
-    "p01_projection"             -> p01Projection _,
-    "p02_trim"                   -> p02Trim _,
-    "p03_regex_clean"            -> p03RegexClean _,
-    "p04_empty_filter"           -> p04EmptyFilter _,
-    "p05_domain_filter"          -> p05DomainFilter _,
-    "p06_multiformat_date"       -> p06MultiformatDate _,
-    "p07_derived_column"         -> p07DerivedColumn _,
-    "p08_year_filter"            -> p08YearFilter _,
-    "p09_regex_predicate"        -> p09RegexPredicate _,
-    "p14_prefix_filter"          -> p14PrefixFilter _,
-    "p10_json_extract"           -> p10JsonExtract _,
-    "j01_meshjoin_enrich"        -> j01MeshJoin _,
-    "j03_left_join"              -> j03LeftJoin _,
-    "j04_fact_dim_join"          -> j04FactDim _,
-    "j05_self_join_pairs"        -> j05SelfJoinPairs _,
-    "j06_agg_agg_join"           -> j06AggJoin _,
-    "j07_semi_join"              -> j07SemiJoin _,
-    "j08_anti_join"              -> j08AntiJoin _,
-    "j09_cross_join"             -> j09CrossJoin _,
-    "o01_topk"                   -> o01TopK _,
-    "o02_top1"                   -> o02Top1 _,
-    "o03_multi_sort"             -> o03MultiSort _,
-    "o04_grouped_topk"           -> o04GroupedTopk _,
-    "o05_grouped_topk_rows"      -> o05GroupedTopkRows _,
-    "o06_topk_delta"             -> o06TopkDelta _,
-    "o07_keyset_page"            -> o07KeysetPage _,
-    "s19_time_travel"            -> s19TimeTravel _,
-    "s22_vacuum_retention"       -> s22VacuumRetention _,
-    "s23_constraint_audit"       -> s23ConstraintAudit _,
-    "j20_pit_features"           -> j20PitFeatures _,
-    "u04_union_evolved"          -> u04UnionEvolved _,
-    "u06_multiset_ops"           -> u06MultisetOps _,
-    "s20_zorder_layout"          -> s20ZorderLayout _,
-    "s21_dynamic_overwrite"      -> s21DynamicOverwrite _,
-    "u01_union_all"              -> u01UnionAll _,
-    "u02_set_ops"                -> u02SetOps _,
-    "u03_salted_skew_agg"        -> u03SaltedSkewAgg _,
-    "u05_snapshot_diff"          -> u05SnapshotDiff _)
-
-  val oracles: Map[String, String] = Map(
-    "s04_upsert_last_write_wins" -> s04Sql,
-    "s06_partitioned_scan"       -> s06Sql,
-    "s07_chunked_scan_offset"    -> s07Sql,
-    "s08_count_scan"             -> s08Sql,
-    "s09_partitioned_write_prune" -> s09Sql,
-    "s10_bucketed_join"          -> s10Sql,
-    "s12_jsonl_scan"             -> s12Sql,
-    "s13_incremental_agg"        -> s13Sql,
-    "s14_compaction"             -> s14Sql,
-    "s15_schema_evolution"       -> s15Sql,
-    "s16_orc_interchange"        -> s16Sql,
-    "s17_cdc_apply"              -> s17Sql,
-    "s18_jdbc_roundtrip"         -> s18Sql,
-    "j10_asof_join"              -> j10Sql,
-    "j11_range_join"             -> j11Sql,
-    "j12_salted_skew_join"       -> j12Sql,
-    "j13_bloom_prejoin"          -> j13Sql,
-    "j14_full_outer"             -> j14Sql,
-    "j15_interval_overlap"       -> j15Sql,
-    "j16_dpp_prune"              -> j16Sql,
-    "j17_nearest_join"           -> j17Sql,
-    "j18_scd2_join"              -> j18Sql,
-    "j19_band_join_native"       -> j19Sql,
-    "j21_aqe_skew_join"          -> j21Sql,
-    "s24_jsonl_v2_pushdown"      -> s24Sql,
-    "s25_jsonl_v2_write"         -> s25Sql,
-    "s26_metadata_agg"           -> s26Sql,
-    "s27_grouped_metadata_agg"   -> s27Sql,
-    "s28_storage_partitioned_agg" -> s28Sql,
-    "s29_storage_partitioned_join" -> s29Sql,
-    "s30_bucketed_join"          -> s30Sql,
-    "s31_catalog_delete"         -> s31Sql,
-    "s32_merge_upsert"           -> s32Sql,
-    "s33_cow_update"             -> s33Sql,
-    "s34_mor_delete"             -> s34Sql,
-    "s35_sorted_join"            -> s35Sql,
-    "s36_compacted_agg"          -> s36Sql,
-    "s37_zorder_scan"            -> s37Sql,
-    "s38_vacuumed_agg"           -> s38Sql,
-    "s39_bloom_lookup"           -> s39Sql,
-    "s40_show_partitions"        -> s40Sql,
-    "s41_truncate_partition"     -> s41Sql,
-    "s42_mor_upsert"             -> s42Sql,
-    "s43_catalog_time_travel"    -> s43Sql,
-    "s44_changes_feed"           -> s44Sql,
-    "s45_ndv_broadcast_agg"      -> s45Sql,
-    "s46_ndv_join_reorder"       -> s46Sql,
-    "s47_transact_star"          -> s47Sql,
-    "p13_quality_gate"           -> p13Sql,
-    "p11_nested_arrays"          -> p11Sql,
-    "p12_unicode_clean"          -> p12Sql,
-    "p01_projection"             -> p01Sql,
-    "p02_trim"                   -> p02Sql,
-    "p03_regex_clean"            -> p03Sql,
-    "p04_empty_filter"           -> p04Sql,
-    "p05_domain_filter"          -> p05Sql,
-    "p06_multiformat_date"       -> p06Sql,
-    "p07_derived_column"         -> p07Sql,
-    "p08_year_filter"            -> p08Sql,
-    "p09_regex_predicate"        -> p09Sql,
-    "p14_prefix_filter"          -> p14Sql,
-    "p10_json_extract"           -> p10Sql,
-    "j01_meshjoin_enrich"        -> j01Sql,
-    "j03_left_join"              -> j03Sql,
-    "j04_fact_dim_join"          -> j04Sql,
-    "j05_self_join_pairs"        -> j05Sql,
-    "j06_agg_agg_join"           -> j06Sql,
-    "j07_semi_join"              -> j07Sql,
-    "j08_anti_join"              -> j08Sql,
-    "j09_cross_join"             -> j09Sql,
-    "o01_topk"                   -> o01Sql,
-    "o02_top1"                   -> o02Sql,
-    "o03_multi_sort"             -> o03Sql,
-    "o04_grouped_topk"           -> o04Sql,
-    "o05_grouped_topk_rows"      -> o05Sql,
-    "o06_topk_delta"             -> o06Sql,
-    "o07_keyset_page"            -> o07Sql,
-    "s19_time_travel"            -> s19Sql,
-    "s22_vacuum_retention"       -> s22Sql,
-    "s23_constraint_audit"       -> s23Sql,
-    "j20_pit_features"           -> j20Sql,
-    "u04_union_evolved"          -> u04Sql,
-    "u06_multiset_ops"           -> u06Sql,
-    "s20_zorder_layout"          -> s20Sql,
-    "s21_dynamic_overwrite"      -> s21Sql,
-    "u01_union_all"              -> u01Sql,
-    "u02_set_ops"                -> u02Sql,
-    "u03_salted_skew_agg"        -> u03Sql,
-    "u05_snapshot_diff"          -> u05Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("s04_upsert_last_write_wins", s04UpsertLww _, s04Sql),
+    Entry("s06_partitioned_scan", s06PartitionedScan _, s06Sql),
+    Entry("s07_chunked_scan_offset", s07ChunkedScan _, s07Sql),
+    Entry("s08_count_scan", s08CountScan _, s08Sql),
+    Entry("s09_partitioned_write_prune", s09PartitionedWritePrune _, s09Sql),
+    Entry("s10_bucketed_join", s10BucketedJoin _, s10Sql),
+    Entry("s12_jsonl_scan", (s, _) => s12JsonlScan(s), s12Sql),
+    Entry("s13_incremental_agg", s13IncrementalAgg _, s13Sql),
+    Entry("s14_compaction", s14Compaction _, s14Sql),
+    Entry("s15_schema_evolution", s15SchemaEvolution _, s15Sql),
+    Entry("s16_orc_interchange", s16OrcInterchange _, s16Sql),
+    Entry("s17_cdc_apply", s17CdcApply _, s17Sql),
+    Entry("s18_jdbc_roundtrip", s18JdbcRoundtrip _, s18Sql),
+    Entry("j10_asof_join", j10AsofJoin _, j10Sql),
+    Entry("j11_range_join", j11RangeJoin _, j11Sql),
+    Entry("j12_salted_skew_join", j12SaltedSkewJoin _, j12Sql),
+    Entry("j13_bloom_prejoin", j13BloomPrejoin _, j13Sql),
+    Entry("j14_full_outer", j14FullOuter _, j14Sql),
+    Entry("j15_interval_overlap", j15IntervalOverlap _, j15Sql),
+    Entry("j16_dpp_prune", j16DppPrune _, j16Sql),
+    Entry("j17_nearest_join", j17NearestJoin _, j17Sql),
+    Entry("j18_scd2_join", j18Scd2Join _, j18Sql),
+    Entry("j19_band_join_native", j19BandJoinNative _, j19Sql),
+    Entry("j21_aqe_skew_join", j21AqeSkewJoin _, j21Sql),
+    Entry("s24_jsonl_v2_pushdown", s24JsonlV2Pushdown _, s24Sql),
+    Entry("s25_jsonl_v2_write", s25JsonlV2Write _, s25Sql),
+    Entry("s26_metadata_agg", s26MetadataAgg _, s26Sql),
+    Entry("s27_grouped_metadata_agg", s27GroupedMetadataAgg _, s27Sql),
+    Entry("s28_storage_partitioned_agg", s28StoragePartitionedAgg _, s28Sql),
+    Entry("s29_storage_partitioned_join", s29StoragePartitionedJoin _, s29Sql),
+    Entry("s30_bucketed_join", s30BucketedJoin _, s30Sql),
+    Entry("s31_catalog_delete", s31CatalogDelete _, s31Sql),
+    Entry("s32_merge_upsert", s32MergeUpsert _, s32Sql),
+    Entry("s33_cow_update", s33CowUpdate _, s33Sql),
+    Entry("s34_mor_delete", s34MorDelete _, s34Sql),
+    Entry("s35_sorted_join", s35SortedJoin _, s35Sql),
+    Entry("s36_compacted_agg", s36CompactedAgg _, s36Sql),
+    Entry("s37_zorder_scan", s37ZorderScan _, s37Sql),
+    Entry("s38_vacuumed_agg", s38VacuumedAgg _, s38Sql),
+    Entry("s39_bloom_lookup", s39BloomLookup _, s39Sql),
+    Entry("s40_show_partitions", s40ShowPartitions _, s40Sql),
+    Entry("s41_truncate_partition", s41TruncatePartition _, s41Sql),
+    Entry("s42_mor_upsert", s42MorUpsert _, s42Sql),
+    Entry("s43_catalog_time_travel", s43CatalogTimeTravel _, s43Sql),
+    Entry("s44_changes_feed", s44ChangesFeed _, s44Sql),
+    Entry("s45_ndv_broadcast_agg", s45NdvBroadcastAgg _, s45Sql),
+    Entry("s46_ndv_join_reorder", s46NdvJoinReorder _, s46Sql),
+    Entry("s47_transact_star", s47TransactStar _, s47Sql),
+    Entry("p13_quality_gate", p13QualityGate _, p13Sql),
+    Entry("p11_nested_arrays", p11NestedArrays _, p11Sql),
+    Entry("p12_unicode_clean", p12UnicodeClean _, p12Sql),
+    Entry("p01_projection", p01Projection _, p01Sql),
+    Entry("p02_trim", p02Trim _, p02Sql),
+    Entry("p03_regex_clean", p03RegexClean _, p03Sql),
+    Entry("p04_empty_filter", p04EmptyFilter _, p04Sql),
+    Entry("p05_domain_filter", p05DomainFilter _, p05Sql),
+    Entry("p06_multiformat_date", p06MultiformatDate _, p06Sql),
+    Entry("p07_derived_column", p07DerivedColumn _, p07Sql),
+    Entry("p08_year_filter", p08YearFilter _, p08Sql),
+    Entry("p09_regex_predicate", p09RegexPredicate _, p09Sql),
+    Entry("p14_prefix_filter", p14PrefixFilter _, p14Sql),
+    Entry("p10_json_extract", p10JsonExtract _, p10Sql),
+    Entry("j01_meshjoin_enrich", j01MeshJoin _, j01Sql),
+    Entry("j03_left_join", j03LeftJoin _, j03Sql),
+    Entry("j04_fact_dim_join", j04FactDim _, j04Sql),
+    Entry("j05_self_join_pairs", j05SelfJoinPairs _, j05Sql),
+    Entry("j06_agg_agg_join", j06AggJoin _, j06Sql),
+    Entry("j07_semi_join", j07SemiJoin _, j07Sql),
+    Entry("j08_anti_join", j08AntiJoin _, j08Sql),
+    Entry("j09_cross_join", j09CrossJoin _, j09Sql),
+    Entry("o01_topk", o01TopK _, o01Sql),
+    Entry("o02_top1", o02Top1 _, o02Sql),
+    Entry("o03_multi_sort", o03MultiSort _, o03Sql),
+    Entry("o04_grouped_topk", o04GroupedTopk _, o04Sql),
+    Entry("o05_grouped_topk_rows", o05GroupedTopkRows _, o05Sql),
+    Entry("o06_topk_delta", o06TopkDelta _, o06Sql),
+    Entry("o07_keyset_page", o07KeysetPage _, o07Sql),
+    Entry("s19_time_travel", s19TimeTravel _, s19Sql),
+    Entry("s22_vacuum_retention", s22VacuumRetention _, s22Sql),
+    Entry("s23_constraint_audit", s23ConstraintAudit _, s23Sql),
+    Entry("j20_pit_features", j20PitFeatures _, j20Sql),
+    Entry("u04_union_evolved", u04UnionEvolved _, u04Sql),
+    Entry("u06_multiset_ops", u06MultisetOps _, u06Sql),
+    Entry("s20_zorder_layout", s20ZorderLayout _, s20Sql),
+    Entry("s21_dynamic_overwrite", s21DynamicOverwrite _, s21Sql),
+    Entry("u01_union_all", u01UnionAll _, u01Sql),
+    Entry("u02_set_ops", u02SetOps _, u02Sql),
+    Entry("u03_salted_skew_agg", u03SaltedSkewAgg _, u03Sql),
+    Entry("u05_snapshot_diff", u05SnapshotDiff _, u05Sql))
 }

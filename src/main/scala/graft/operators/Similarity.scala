@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{Entries, Entry, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (SURVEY.md §7.3 M5): brute-force cosine top-k as the exact baseline, a
@@ -20,7 +20,7 @@ import graft.Tables
   * 100 TB ANN shape. Recall of both is cross-checked against n01 in
   * SimilaritySpec.
   */
-object Similarity {
+object Similarity extends Entries {
 
   private val K = 5         // neighbors per query
   private val NQueries = 10 // queries = vec_id < 10
@@ -1481,43 +1481,26 @@ object Similarity {
     topK(scored)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "n15_columnar_topk"  -> n15ColumnarTopK _,
-    "n01_ann_brute_topk" -> n01BruteTopK _,
-    "n02_ann_lsh_topk"   -> n02LshTopK _,
-    "n03_ann_ivf_topk"   -> n03IvfTopK _,
-    "n04_ann_pq_topk"    -> n04PqTopK _,
-    "n05_hybrid_topk"    -> n05HybridTopK _,
-    "n06_knn_join"       -> n06KnnJoin _,
-    "n07_classifier_filter" -> n07ClassifierFilter _,
-    "n08_pq_rerank"      -> n08PqRerank _,
-    "n09_mmr_rerank"     -> n09MmrRerank _,
-    "n10_range_search"   -> n10RangeSearch _,
-    "n11_bm25_topk"      -> n11Bm25TopK _,
-    "n12_ivfadc_topk"    -> n12IvfAdc _,
-    "n13_mrl_topk"       -> n13MrlTopk _,
-    "n14_filtered_ann"   -> n14FilteredAnn _)
-
-  val oracles: Map[String, String] = Map(
-    "n01_ann_brute_topk" -> n01Sql,
-    "n02_ann_lsh_topk"   -> n02Sql,
-    "n03_ann_ivf_topk"   -> n03Sql,
-    "n04_ann_pq_topk"    -> n04Sql,
-    "n05_hybrid_topk"    -> n05Sql,
-    "n06_knn_join"       -> n06Sql,
-    "n07_classifier_filter" -> n07Sql,
-    // rerank repairs PQ error + the L2↔cosine gap exactly when the
-    // shortlist covers (SimilaritySpec asserts) ⇒ the exact oracle applies
-    "n08_pq_rerank"      -> n08Sql,
-    "n09_mmr_rerank"     -> n09Sql,
-    "n10_range_search"   -> n10Sql,
-    "n11_bm25_topk"      -> n11Sql,
-    // IVFADC+refine is exact while probe + shortlist coverage hold
-    // (SimilaritySpec asserts both) ⇒ n08's exact clustered-corpus oracle
-    "n12_ivfadc_topk"    -> n08Sql,
-    "n13_mrl_topk"       -> n13Sql,
-    "n14_filtered_ann"   -> n14Sql,
+  val entries: Seq[Entry] = Seq(
     // the columnar kernel is an execution change only — n01's oracle
     // applies verbatim (same pairs, same fold, same tie-break)
-    "n15_columnar_topk"  -> n01Sql)
+    Entry("n15_columnar_topk", n15ColumnarTopK _, n01Sql),
+    Entry("n01_ann_brute_topk", n01BruteTopK _, n01Sql),
+    Entry("n02_ann_lsh_topk", n02LshTopK _, n02Sql),
+    Entry("n03_ann_ivf_topk", n03IvfTopK _, n03Sql),
+    Entry("n04_ann_pq_topk", n04PqTopK _, n04Sql),
+    Entry("n05_hybrid_topk", n05HybridTopK _, n05Sql),
+    Entry("n06_knn_join", n06KnnJoin _, n06Sql),
+    Entry("n07_classifier_filter", n07ClassifierFilter _, n07Sql),
+    // rerank repairs PQ error + the L2↔cosine gap exactly when the
+    // shortlist covers (SimilaritySpec asserts) ⇒ the exact oracle applies
+    Entry("n08_pq_rerank", n08PqRerank _, n08Sql),
+    Entry("n09_mmr_rerank", n09MmrRerank _, n09Sql),
+    Entry("n10_range_search", n10RangeSearch _, n10Sql),
+    Entry("n11_bm25_topk", n11Bm25TopK _, n11Sql),
+    // IVFADC+refine is exact while probe + shortlist coverage hold
+    // (SimilaritySpec asserts both) ⇒ n08's exact clustered-corpus oracle
+    Entry("n12_ivfadc_topk", n12IvfAdc _, n08Sql),
+    Entry("n13_mrl_topk", n13MrlTopk _, n13Sql),
+    Entry("n14_filtered_ann", n14FilteredAnn _, n14Sql))
 }

@@ -15,8 +15,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   *
   *   Join(..., Aggregate(groupKeys ⊆ graft-jsonl columns with `_ndv`
   *   sidecar sketches, ...), ...)  →  same Join with a BROADCAST hint on
-  *   that side, iff  Π NDV(groupKey) × output row width ≤
-  *   `spark.graft.ndvBroadcastThreshold` (default 8 MiB).
+  *   that side, iff  Π NDV(groupKey) × output row width ≤ 8 MiB.
   *
   * Π NDV over the grouping keys is an UPPER bound on the aggregate's
   * output rows (joint distinct ≤ product of marginals), and the merged
@@ -36,9 +35,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * strategy selection consume it through the standard channel. */
 object NdvBroadcastRule extends Rule[LogicalPlan] {
 
-  private def thresholdBytes: Long =
-    conf.getConfString("spark.graft.ndvBroadcastThreshold",
-      (8L << 20).toString).toLong
+  private val thresholdBytes: Long = 8L << 20
 
   /** Resolve `attr` down through Project/Filter/SubqueryAlias to a
     * graft-jsonl relation column: (table dir, column name). A Filter

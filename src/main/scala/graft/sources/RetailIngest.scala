@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Ops
+import graft.{Entries, Entry, Ops}
 
 /** The reference's ETL surface (SURVEY.md §2.1 S1-S3, §2.2 P1-P7, §2.3 J1,
   * §2.1 S4/S5): dirty-CSV ingest → cleaning → last-write-wins upsert →
@@ -27,7 +27,7 @@ import graft.Ops
   * position at read time; never from `monotonically_increasing_id` after a
   * repartition (SURVEY §7.5 #4).
   */
-object RetailIngest {
+object RetailIngest extends Entries {
 
   // Raw CSV schemas — fixed, declared up front (`metro.sql:13-59`); no
   // inference, so semantics cannot drift with data.
@@ -399,10 +399,11 @@ object RetailIngest {
 
   /** Gate entries ignore the sfDir argument: the operator's semantic input
     * is the reference-shaped dirty CSV, not the TPC-H parquet. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s01_csv_customers" -> ((s, _) =>
-      customers(s, s"$FixtureDir/customers_data.csv").orderBy(col("customer_id"))),
-    "s02_csv_products" -> ((s, _) =>
+  val entries: Seq[Entry] = Seq(
+    Entry("s01_csv_customers", (s, _) =>
+      customers(s, s"$FixtureDir/customers_data.csv").orderBy(col("customer_id")),
+      s01Sql),
+    Entry("s02_csv_products", (s, _) =>
       products(s, s"$FixtureDir/products_data.csv")
         // DECIMAL(10,2) → integer cents at the gate boundary only: the full
         // decimal cleaning pipeline still runs (and s05 consumes it as
@@ -412,21 +413,15 @@ object RetailIngest {
         .drop("productPrice")
         .select(col("productID"), col("productName"), col("price_cents"),
           col("supplierID"), col("supplierName"), col("storeID"), col("storeName"))
-        .orderBy(col("productID"))),
-    "s03_csv_transactions" -> ((s, _) =>
+        .orderBy(col("productID")),
+      s02Sql),
+    Entry("s03_csv_transactions", (s, _) =>
       transactions(s, s"$FixtureDir/transactions.csv")
         .drop("ingest_order") // file position is not SQL-derivable for the oracle
-        .orderBy(col("order_id"), col("order_date"))),
-    "s05_fact_etl" -> ((s, _) =>
-      etl(s, FixtureDir).orderBy(col("ORDER_ID"))),
-    "s11_scd2_history" -> ((s, _) =>
-      scd2(s, s"$FixtureDir/customers_data.csv")
-        .orderBy(col("customer_id"), col("version"))))
-
-  val oracles: Map[String, String] = Map(
-    "s01_csv_customers"    -> s01Sql,
-    "s02_csv_products"     -> s02Sql,
-    "s03_csv_transactions" -> s03Sql,
-    "s05_fact_etl"         -> s05Sql,
-    "s11_scd2_history"     -> s11Sql)
+        .orderBy(col("order_id"), col("order_date")),
+      s03Sql),
+    Entry("s05_fact_etl", (s, _) => etl(s, FixtureDir).orderBy(col("ORDER_ID")), s05Sql),
+    Entry("s11_scd2_history", (s, _) =>
+      scd2(s, s"$FixtureDir/customers_data.csv").orderBy(col("customer_id"), col("version")),
+      s11Sql))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Entries, Entry, Tables}
 
 /** Streaming surface (SURVEY.md §2.9).
   *
@@ -18,10 +18,10 @@ import graft.Tables
   * watermarks — absent in the reference — are part of the extension surface.
   *
   * Each windowed aggregation ships as a pair: the streaming plan (tested for
-  * stream≡batch equivalence in StreamingSpec) and a batch twin registered in
-  * `queries` so the driver's DuckDB oracle can hash-check the semantics.
+  * stream≡batch equivalence in StreamingSpec) and a batch twin listed in
+  * `entries` so the driver's DuckDB oracle can hash-check the semantics.
   */
-object Streams {
+object Streams extends Entries {
 
   /** Event schema as the streaming reader needs it declared up front.
     * The harness writes `ts` as timestamp[us] without timezone → declared
@@ -1764,77 +1764,46 @@ object Streams {
     s.table(name)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st01_tumbling_window" -> st01Tumbling _,
-    "st02_sliding_window"  -> st02Sliding _,
-    "st03_session_window"  -> st03Session _,
-    "st04_stateful_agg"    -> st04Stateful _,
-    "st05_stream_dedup"    -> st05Dedup _,
-    "st06_stream_stream_join" -> st06StreamStreamJoin _,
-    "st07_stream_corpus_ingest" -> st07CorpusIngest _,
-    "st08_late_drop"            -> st08LateDrop _,
-    "st09_stream_topk"          -> st09TopK _,
-    "st10_stream_matview"       -> st10Matview _,
-    "st11_stream_outer_join"    -> st11OuterJoin _,
-    "st12_bounded_dedup"        -> st12BoundedDedup _,
-    "st13_incremental_dedup"    -> st13IncrementalDedup _,
-    "st14_sessionize_state"     -> st14SessionizeState _,
-    "st15_online_semdedup"      -> st15OnlineSemdedup _,
-    "st16_stream_ohlc"          -> st16StreamOhlc _,
-    "st17_stream_ewma"          -> st17StreamEwma _,
-    "st18_stream_cdc"           -> st18StreamCdc _,
-    "st19_stream_cusum"         -> st19StreamCusum _,
-    "st20_stream_funnel"        -> st20StreamFunnel _,
-    "st21_stream_zscore"        -> st21StreamZscore _,
-    "st22_stream_coverage"      -> st22StreamCoverage _,
-    "st23_stream_pit"           -> st23StreamPit _,
-    "st24_jsonl_stream"         -> st24JsonlStream _,
-    "st25_jsonl_sink"           -> st25JsonlSink _,
-    "st26_where_stream"         -> st26WhereStream _,
-    "st27_streamed_lake"        -> st27StreamedLake _,
-    "st28_stream_merge"         -> st28StreamMerge _,
-    "st29_changes_stream"       -> st29ChangesStream _)
-
-  val oracles: Map[String, String] = Map(
-    "st01_tumbling_window" -> st01Sql,
-    "st02_sliding_window"  -> st02Sql,
-    "st03_session_window"  -> st03Sql,
-    "st04_stateful_agg"    -> st04Sql,
-    "st05_stream_dedup"    -> st05Sql,
-    "st06_stream_stream_join" -> st06Sql,
-    "st07_stream_corpus_ingest" -> st07Sql,
-    "st08_late_drop"            -> st08Sql,
-    "st09_stream_topk"          -> st09Sql,
-    "st10_stream_matview"       -> st10Sql,
-    "st11_stream_outer_join"    -> st11Sql,
-    "st12_bounded_dedup"        -> st12Sql,
-    "st13_incremental_dedup"    -> st13Sql,
+  val entries: Seq[Entry] = Seq(
+    Entry("st01_tumbling_window", st01Tumbling _, st01Sql),
+    Entry("st02_sliding_window", st02Sliding _, st02Sql),
+    Entry("st03_session_window", st03Session _, st03Sql),
+    Entry("st04_stateful_agg", st04Stateful _, st04Sql),
+    Entry("st05_stream_dedup", st05Dedup _, st05Sql),
+    Entry("st06_stream_stream_join", st06StreamStreamJoin _, st06Sql),
+    Entry("st07_stream_corpus_ingest", st07CorpusIngest _, st07Sql),
+    Entry("st08_late_drop", st08LateDrop _, st08Sql),
+    Entry("st09_stream_topk", st09TopK _, st09Sql),
+    Entry("st10_stream_matview", st10Matview _, st10Sql),
+    Entry("st11_stream_outer_join", st11OuterJoin _, st11Sql),
+    Entry("st12_bounded_dedup", st12BoundedDedup _, st12Sql),
+    Entry("st13_incremental_dedup", st13IncrementalDedup _, st13Sql),
     // w12's oracle verbatim: the stateful sessionizer must reproduce the
     // window form row for row
-    "st14_sessionize_state"     -> graft.operators.Aggregates.w12Sql,
-    "st15_online_semdedup"      -> st15Sql,
+    Entry("st14_sessionize_state", st14SessionizeState _, graft.operators.Aggregates.w12Sql),
+    Entry("st15_online_semdedup", st15OnlineSemdedup _, st15Sql),
     // w19's oracle verbatim: the algebraic-state bars must reproduce the
     // rank-window form row for row
-    "st16_stream_ohlc"          -> graft.operators.Aggregates.w19Sql,
-    "st17_stream_ewma"          -> graft.operators.Aggregates.w21Sql,
-    "st18_stream_cdc"           -> graft.operators.Relational.s17Sql,
-    "st19_stream_cusum"         -> graft.operators.Aggregates.w22Sql,
+    Entry("st16_stream_ohlc", st16StreamOhlc _, graft.operators.Aggregates.w19Sql),
+    Entry("st17_stream_ewma", st17StreamEwma _, graft.operators.Aggregates.w21Sql),
+    Entry("st18_stream_cdc", st18StreamCdc _, graft.operators.Relational.s17Sql),
+    Entry("st19_stream_cusum", st19StreamCusum _, graft.operators.Aggregates.w22Sql),
     // w15's oracle verbatim: the keyed-state funnel must reproduce the
     // min-join form's summary row
-    "st20_stream_funnel"        -> graft.operators.Aggregates.w15Sql,
-    "st21_stream_zscore"        -> st21Sql,
+    Entry("st20_stream_funnel", st20StreamFunnel _, graft.operators.Aggregates.w15Sql),
+    Entry("st21_stream_zscore", st21StreamZscore _, st21Sql),
     // w27's oracle verbatim: the keyed-state sweep must reproduce the
     // two-window gaps-and-islands form row for row
-    "st22_stream_coverage"      -> graft.operators.Aggregates.w27Sql,
+    Entry("st22_stream_coverage", st22StreamCoverage _, graft.operators.Aggregates.w27Sql),
     // j20's oracle verbatim: the online feature fold must reproduce the
     // RANGE-frame training table row for row
-    "st23_stream_pit"           -> graft.operators.Relational.j20Sql,
-    "st24_jsonl_stream"         -> st24Sql,
-    "st25_jsonl_sink"           -> st25Sql,
-    "st26_where_stream"         -> st26Sql,
-    "st27_streamed_lake"        -> st27Sql,
-    "st28_stream_merge"         -> st28Sql,
-    "st29_changes_stream"       -> st29Sql)
+    Entry("st23_stream_pit", st23StreamPit _, graft.operators.Relational.j20Sql),
+    Entry("st24_jsonl_stream", st24JsonlStream _, st24Sql),
+    Entry("st25_jsonl_sink", st25JsonlSink _, st25Sql),
+    Entry("st26_where_stream", st26WhereStream _, st26Sql),
+    Entry("st27_streamed_lake", st27StreamedLake _, st27Sql),
+    Entry("st28_stream_merge", st28StreamMerge _, st28Sql),
+    Entry("st29_changes_stream", st29ChangesStream _, st29Sql))
 }
 
 /** Keyed running aggregate emitted by [[Streams.statefulUserAgg]]. */

@@ -4,9 +4,10 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every SparkSession comes from [[GraftSession.local]] and every graft SQL
-  * function from the [[graft.functions.GraftExtensions]] table: a builder
-  * or a registration anywhere else is a second copy, free to drift. */
+/** Every SparkSession comes from [[GraftSession.local]], every graft SQL
+  * function from the [[graft.functions.GraftExtensions]] table and every
+  * entry from an [[Entry]] table: a builder, a registration or a map
+  * anywhere else is a second copy, free to drift. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private def sources(f: File): Seq[File] =
@@ -46,5 +47,15 @@ class SessionGuardSpec extends AnyFunSuite {
     val ruleHits = main.filter(f => codeLines(f)
       .exists(l => l.contains("extraOptimizations") || l.contains("extraStrategies")))
     assert(ruleHits.map(_.getName).isEmpty)
+  }
+
+  test("entries are bound only in Entry tables, never in a second name-keyed map") {
+    // the two literal shapes each module once kept side by side
+    val needles = Seq(
+      "Map[String, (SparkSession, String) => DataFrame] = " + "Map(",
+      "oracles: Map[String, String] = " + "Map(")
+    val hits = sources(root("src/main"))
+      .filter(f => codeLines(f).exists(l => needles.exists(l.contains)))
+    assert(hits.map(_.getName).isEmpty)
   }
 }

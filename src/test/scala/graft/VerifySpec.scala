@@ -6,7 +6,8 @@ import java.nio.file.Files
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** [[Verify.dump]]'s named mode: only the named entries are dumped, and
-  * both manifests are restricted to them. */
+  * both manifests are restricted to them; the entry table it dumps from
+  * gives every name exactly one builder and one oracle. */
 class VerifySpec extends SparkSpec {
 
   private val d = sf("sf0.001")
@@ -32,6 +33,17 @@ class VerifySpec extends SparkSpec {
       assert(oracles.keySet.toArray.toSet === names.toSet)
       names.foreach(n => assert(oracles.get(n) === SparkEntry.oracleSql(n)))
     }
+  }
+
+  test("the entry table binds 294 distinct names, each with a non-blank oracle") {
+    val names = SparkEntry.entries.map(_.name)
+    assert(names.size === 294)
+    assert(names.distinct.size === names.size)
+    assert(SparkEntry.entries.filter(_.oracle.trim.isEmpty).map(_.name).isEmpty)
+    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
+    val q01 = SparkEntry.entries.find(_.name == "q01_top5_products").get
+    val dup = intercept[IllegalArgumentException](Entry.byName(Seq(q01, q01))(_.run))
+    assert(dup.getMessage.contains("q01_top5_products"))
   }
 
   test("an unknown name fails the dump before anything is written") {
