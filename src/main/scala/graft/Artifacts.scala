@@ -26,139 +26,60 @@ import org.apache.spark.sql.SparkSession
   * label tables are one-time jobs amortized over every downstream query —
   * separating their cost from query cost is how a capacity plan reads.
   *
-  * Ordering: dependencies first (shingles before the postings built from
-  * them, the lake catalog before the tables living in it, the decode pass
-  * before the cross-modal labels), then alphabetical within a family.
-  * Every builder is idempotent and memoized, so a query later re-touching
-  * an artifact pays only the memo lookup. */
+  * Each artifact is one [[Artifact]] value, listed once in its module's
+  * `artifacts`; this table is derived from those lists. Ordering:
+  * dependencies first (shingles before the postings built from them, the
+  * lake catalog before the tables living in it, the decode pass before
+  * the cross-modal labels), then by family. Every build is memoized, so a
+  * query later re-touching an artifact pays only the memo lookup. */
 object Artifacts {
 
-  /** (artifact name, builder). Builders force materialization as a side
-    * effect (each memoized builder writes its parquet/tables eagerly
-    * inside its `computeIfAbsent`). */
-  val all: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    // --- dedup signature/index substrate (shingles feed everything) ---------
-    "shingles"           -> ((s, d) => { operators.Dedup.shingled(s, d); () }),
-    "ranked_postings"    -> ((s, d) => { operators.Dedup.rankedPostings(s, d); () }),
-    "verified_pairs"     -> ((s, d) => { operators.Dedup.verifiedPairs(s, d); () }),
-    "minhash_signatures" -> ((s, d) => { operators.Dedup.minhashSignatures(s, d); () }),
-    "simhash_signatures" -> ((s, d) => { operators.Dedup.simhashSignatures(s, d); () }),
-    "dedup_labels"       -> ((s, d) => { operators.Dedup.clusterLabels(s, d); () }),
-    "d17_spans"          -> ((s, d) => { operators.Dedup.dupSpanReport(s, d); () }),
-    // --- media decode pass + the cross-modal labels built on it -------------
-    "media_decoded"      -> ((s, d) => { functions.Multimodal.mediaDecoded(s, d); () }),
-    "m11_labels"         -> ((s, d) => { functions.Multimodal.m11Labels(s, d); () }),
-    // --- graph substrate -----------------------------------------------------
-    "copurchase_edges"   -> ((s, d) => { operators.Graph.copurchaseEdges(s, d); () }),
-    "triangle_rows"      -> ((s, d) => { operators.Graph.triangleRows(s, d); () }),
-    "chunked_adjacency"  -> ((s, d) => { operators.Graph.chunkedAdjacency(s, d); () }),
-    "lpa_labels"         -> ((s, d) => { operators.Graph.lpaLabels(s, d); () }),
-    // --- text-curation intermediates -----------------------------------------
-    "x_tokens"           -> ((s, d) => { functions.TextAnalysis.xTokens(s, d); () }),
-    "x25_chunks"         -> ((s, d) => { functions.TextAnalysis.x25Chunks(s, d); () }),
-    "x26_bigrams"        -> ((s, d) => { functions.TextAnalysis.x26Bigrams(s, d); () }),
-    "x31_shards"         -> ((s, d) => { functions.TextAnalysis.x31Export(s, d); () }),
-    "bpe_merges"         -> ((s, d) => { functions.BpeTraining.trainedMerges(s, d); () }),
-    // --- relational layouts (partitioned/bucketed/fragmented/chunked) -------
-    "year_layout"        -> ((s, d) => { operators.Relational.yearLayout(s, d); () }),
-    "s10_buckets"        -> ((s, d) => { operators.Relational.s10Tables(s, d); () }),
-    "s14_fragments"      -> ((s, d) => { operators.Relational.s14Layout(s, d); () }),
-    "s20_chunks"         -> ((s, d) => { operators.Relational.s20Prepare(s, d); () }),
-    "s21_layout"         -> ((s, d) => { operators.Relational.s21Layout(s, d); () }),
-    "j21_skew"           -> ((s, d) => { operators.Relational.j21Materialize(s, d); () }),
-    "s24_layout"         -> ((s, d) => { operators.Relational.s24Layout(s, d); () }),
-    "s25_layout"         -> ((s, d) => { operators.Relational.s25Layout(s, d); () }),
-    "s27_layout"         -> ((s, d) => { operators.Relational.s27Layout(s, d); () }),
-    "s29_layout"         -> ((s, d) => { operators.Relational.s29Layout(s, d); () }),
-    // --- governed lake: catalog first, then the SHARED staged bases the
-    // --- identical-load tables branch from at the file level, then the
-    // --- tables themselves (their keys now time copy + mutation only) ----
-    "s30_lake"           -> ((s, d) => { operators.Relational.s30Lake(s, d); () }),
-    "lake_base4"         -> ((s, d) => { operators.Relational.lakeDocsBase4(s, d); () }),
-    "lake_base3"         -> ((s, d) => { operators.Relational.lakeDocsBase3(s, d); () }),
-    "s31_table"          -> ((s, d) => { operators.Relational.s31Table(s, d); () }),
-    "s32_table"          -> ((s, d) => { operators.Relational.s32Table(s, d); () }),
-    "s33_table"          -> ((s, d) => { operators.Relational.s33Table(s, d); () }),
-    "s34_table"          -> ((s, d) => { operators.Relational.s34Table(s, d); () }),
-    "s35_lake"           -> ((s, d) => { operators.Relational.s35Lake(s, d); () }),
-    "s36_table"          -> ((s, d) => { operators.Relational.s36Table(s, d); () }),
-    "s37_table"          -> ((s, d) => { operators.Relational.s37Table(s, d); () }),
-    "s38_table"          -> ((s, d) => { operators.Relational.s38Table(s, d); () }),
-    "s39_layout"         -> ((s, d) => { operators.Relational.s39Layout(s, d); () }),
-    "s40_table"          -> ((s, d) => { operators.Relational.s40Table(s, d); () }),
-    "s41_table"          -> ((s, d) => { operators.Relational.s41Table(s, d); () }),
-    "s42_table"          -> ((s, d) => { operators.Relational.s42Table(s, d); () }),
-    "s43_table"          -> ((s, d) => { operators.Relational.s43Table(s, d); () }),
-    "s44_table"          -> ((s, d) => { operators.Relational.s44Table(s, d); () }),
-    "s45_ndv"            -> ((s, d) => { operators.Relational.s45Layout(s, d); () }),
-    "s46_layout"         -> ((s, d) => { operators.Relational.s46Layout(s, d); () }),
-    "s47_tables"         -> ((s, d) => { operators.Relational.s47Tables(s, d); () }),
-    "ann_ivf"            -> ((s, d) => { operators.Similarity.forceIvfIndex(s, d); () }),
-    "ann_ivf_coarse"     -> ((s, d) => { operators.Similarity.forceIvfCoarseIndex(s, d); () }),
-    "ann_pq_raw"         -> ((s, d) => { operators.Similarity.forcePqRawIndex(s, d); () }),
-    "ann_pq_fine"        -> ((s, d) => { operators.Similarity.forcePqFineIndex(s, d); () }),
-    // --- staged streaming inputs/outputs -------------------------------------
-    "st24_waves"         -> ((s, d) => { streaming.Streams.st24Waves(s, d); () }),
-    "st25_out"           -> ((s, d) => { streaming.Streams.st25Out(s, d); () }),
-    "st26_out"           -> ((s, d) => { streaming.Streams.st26Out(s, d); () }),
-    "st27_out"           -> ((s, d) => { streaming.Streams.st27Out(s, d); () }),
-    "st28_table"         -> ((s, d) => { streaming.Streams.st28Table(s, d); () }),
-    "st29_out"           -> ((s, d) => { streaming.Streams.st29Out(s, d); () }))
+  /** Every artifact in the pinned prebuild order, validated once: a name
+    * bound twice, a dependency naming no artifact, or a dependency cycle
+    * (which would leave [[prebuild]]'s latch waiting forever) fails here,
+    * naming the offenders. It is strict so that reading it initializes
+    * the eight module objects on the caller's thread, before two prebuild
+    * pool threads can first-touch two mutually referencing modules at
+    * once and deadlock on their class-initialization monitors (seen r14). */
+  private val table: Seq[Artifact[_]] = validated(
+    operators.Dedup.artifacts ++ functions.Multimodal.artifacts ++
+      operators.Graph.artifacts ++ functions.TextAnalysis.artifacts ++
+      operators.Relational.artifacts ++ operators.Similarity.artifacts ++
+      streaming.Streams.artifacts)
 
-  /** Explicit dependency edges for the DAG pre-build: an artifact starts
-    * the moment its listed dependencies finish, never at a stage barrier.
-    * The r13 stage-barrier executor made the phase wall = Σ stage-walls,
-    * and each stage's wall = its longest member — measured 54-56 s at
-    * sf0.1 idle, with long poles (d17_spans, triangle_rows) idling behind
-    * unrelated stage-mates (guide §2.6: overlap independent jobs; the
-    * scheduler back-fills). Dependencies stay correct even if misplaced:
-    * every builder reaches its inputs through the same memoized
-    * functions, and concurrent callers of one memo key block inside
-    * computeIfAbsent until the first completes — a misplacement only
-    * smears ATTRIBUTION (the waiter's key absorbs the wait), never
-    * correctness. Artifacts absent from this map have no dependencies.
-    * prebuild asserts key/value coverage against [[all]] so a new
-    * artifact cannot silently reference a phantom dependency. */
-  val deps: Map[String, Seq[String]] = Map(
-    // dedup signature/index substrate
-    "ranked_postings"    -> Seq("shingles"),
-    "minhash_signatures" -> Seq("shingles"),
-    "simhash_signatures" -> Seq("shingles"),
-    "verified_pairs"     -> Seq("ranked_postings"),
-    "dedup_labels"       -> Seq("verified_pairs"),
-    "d17_spans"          -> Seq("x_tokens"),
-    // media decode pass feeds the cross-modal labels
-    "m11_labels"         -> Seq("media_decoded"),
-    // graph substrate
-    "triangle_rows"      -> Seq("copurchase_edges"),
-    "chunked_adjacency"  -> Seq("copurchase_edges"),
-    "lpa_labels"         -> Seq("chunked_adjacency"),
-    // text-curation intermediates
-    "x26_bigrams"        -> Seq("x_tokens"),
-    // governed lake: catalog, then shared staged bases, then tables
-    "lake_base4"         -> Seq("s30_lake"),
-    "lake_base3"         -> Seq("s30_lake"),
-    "s35_lake"           -> Seq("s30_lake"),
-    "s31_table"          -> Seq("lake_base4"),
-    "s32_table"          -> Seq("s30_lake"),
-    "s33_table"          -> Seq("lake_base4"),
-    "s34_table"          -> Seq("lake_base4"),
-    "s36_table"          -> Seq("lake_base4"),
-    "s37_table"          -> Seq("s30_lake"),
-    "s38_table"          -> Seq("s30_lake"),
-    "s40_table"          -> Seq("s30_lake"),
-    "s41_table"          -> Seq("s30_lake"),
-    "s42_table"          -> Seq("lake_base3"),
-    "s43_table"          -> Seq("lake_base3"),
-    "s44_table"          -> Seq("lake_base3", "lake_base4", "s30_lake"),
-    "s46_layout"         -> Seq(),
-    "s47_tables"         -> Seq("s30_lake"),
-    "ann_ivf"            -> Seq("s30_lake"),
-    "ann_ivf_coarse"     -> Seq("s30_lake"),
-    "ann_pq_raw"         -> Seq("s30_lake"),
-    "ann_pq_fine"        -> Seq("s30_lake"),
-    "st28_table"         -> Seq("s30_lake"),
-    "st29_out"           -> Seq("s44_table"))
+  /** (artifact name, build). Each build forces materialization as a side
+    * effect (each artifact writes its parquet/tables eagerly inside its
+    * build). */
+  val all: Seq[(String, (SparkSession, String) => Unit)] =
+    table.map(a => a.name -> ((s: SparkSession, d: String) => { a(s, d); () }))
+
+  /** Each artifact's direct dependencies, which [[Artifact]] enforces: a
+    * build that reads an artifact its row does not list throws. The DAG
+    * pre-build starts an artifact the moment its dependencies finish,
+    * never at a stage barrier — the r13 stage-barrier executor made the
+    * phase wall = Σ stage-walls, each the wall of its longest member
+    * (measured 54-56 s at sf0.1 idle, with long poles such as d17_spans
+    * and triangle_rows idling behind unrelated stage-mates; guide §2.6:
+    * overlap independent jobs, the scheduler back-fills). */
+  val deps: Map[String, Seq[String]] = table.map(a => a.name -> a.deps).toMap
+
+  private[graft] def validated(table: Seq[Artifact[_]]): Seq[Artifact[_]] = {
+    val names = table.map(_.name)
+    val twice = names.diff(names.distinct).distinct
+    require(twice.isEmpty, s"artifact names bound twice: ${twice.mkString(", ")}")
+    val unknown = for (a <- table; d <- a.deps if !names.contains(d)) yield s"${a.name} -> $d"
+    require(unknown.isEmpty, s"artifact deps name no artifact: ${unknown.mkString(", ")}")
+    // Kahn's algorithm: peel artifacts whose deps are all peeled
+    var left = table
+    var progressed = true
+    while (progressed) {
+      val (ready, rest) = left.partition(_.deps.forall(d => !left.exists(_.name == d)))
+      progressed = ready.nonEmpty
+      left = rest
+    }
+    require(left.isEmpty, s"artifact deps form a cycle through: ${left.map(_.name).mkString(", ")}")
+    table
+  }
 
   /** Force every artifact, dependency-DAG-driven with bounded
     * parallelism: a worker pool of `parallelism` threads drains a ready
@@ -175,48 +96,15 @@ object Artifacts {
   def prebuild(s: SparkSession, d: String, parallelism: Int = 8)
       : (Seq[(String, Double)], Seq[String], Double) = {
     val names = all.map(_._1)
-    require(deps.keySet.subsetOf(names.toSet) &&
-      deps.values.flatten.forall(names.contains),
-      "Artifacts.deps must reference only Artifacts.all: " +
-        s"unknown keys ${deps.keySet.diff(names.toSet).mkString(",")} " +
-        s"unknown deps ${deps.values.flatten.toSet.diff(names.toSet).mkString(",")}")
-    // Kahn's-algorithm acyclicity check: a cycle in deps would leave the
-    // completion latch waiting forever — fail loudly at submit time instead
-    locally {
-      var left = names.toSet
-      var progressed = true
-      while (progressed) {
-        val ready = left.filter(n =>
-          deps.getOrElse(n, Seq.empty).forall(d => !left.contains(d)))
-        progressed = ready.nonEmpty
-        left = left.diff(ready)
-      }
-      require(left.isEmpty, s"Artifacts.deps contains a cycle through: ${left.mkString(",")}")
-    }
-    // Force Scala module (class-init) resolution on the caller's thread
-    // BEFORE any pool thread first-touches one: the operator objects
-    // reference each other (Dedup ↔ TextAnalysis, Graph → Dedup, ...),
-    // and two pool threads first-initializing two mutually-referencing
-    // modules deadlock on the JVM class-initialization monitors (observed
-    // r14: the DAG executor's wider initial wave hit it immediately).
-    locally {
-      operators.Dedup.toString(); operators.Graph.toString()
-      operators.Relational.toString(); operators.Similarity.toString()
-      functions.TextAnalysis.toString(); functions.Multimodal.toString()
-      functions.BpeTraining.toString(); streaming.Streams.toString()
-      ()
-    }
     val builders = all.toMap
     val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val times = new java.util.concurrent.ConcurrentHashMap[String, Double]
     // remaining-dependency counts; an artifact is READY at zero
     val remaining = new java.util.concurrent.ConcurrentHashMap[String,
       java.util.concurrent.atomic.AtomicInteger]
-    val dependents = names.map(n => n ->
-      deps.collect { case (m, ds) if ds.contains(n) => m }.toSeq).toMap
+    val dependents = names.map(n => n -> names.filter(deps(_).contains(n))).toMap
     names.foreach { n =>
-      remaining.put(n, new java.util.concurrent.atomic.AtomicInteger(
-        deps.getOrElse(n, Seq.empty).size))
+      remaining.put(n, new java.util.concurrent.atomic.AtomicInteger(deps(n).size))
     }
     val done = new java.util.concurrent.CountDownLatch(names.size)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -249,4 +137,38 @@ object Artifacts {
     (all.map { case (n, _) => n -> times.getOrDefault(n, -1.0) },
       failed.iterator().asScala.toSeq, wall)
   }
+}
+
+/** One memoized per-(session, corpus) artifact: its name, the artifacts
+  * its build reads directly, and the build. `apply` runs the build once
+  * per (session, corpus) — concurrent first callers block until it
+  * completes — and returns the memoized value ever after.
+  *
+  * `deps` is checked: while a build runs, its artifact is the thread's
+  * current one, and `apply` on an artifact that the current one's `deps`
+  * does not list throws, on a memo hit as on a miss, so an undeclared
+  * read fails whichever build happened to run first. */
+final class Artifact[V](val name: String, val deps: Seq[String])(
+    build: (SparkSession, String) => V) {
+  private val memo = new SessionMemo[String, V]
+
+  def apply(s: SparkSession, d: String): V = {
+    val reader = Artifact.building.get
+    if (reader != null && !reader.deps.contains(name))
+      throw new IllegalStateException(
+        s"artifact ${reader.name} reads $name, which its deps do not list")
+    memo.computeIfAbsent(s, d, _ => {
+      Artifact.building.set(this)
+      try build(s, d) finally Artifact.building.set(reader)
+    })
+  }
+}
+
+object Artifact {
+  def apply[V](name: String, deps: String*)(
+      build: (SparkSession, String) => V): Artifact[V] =
+    new Artifact(name, deps)(build)
+
+  /** The artifact whose build runs on this thread, if any. */
+  private val building = new ThreadLocal[Artifact[_]]
 }

@@ -1,5 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
 object Bench {
 
   /** (1-min, 5-min) load averages — ambient host pressure. Benches have
@@ -67,8 +72,8 @@ object Bench {
     // untimed warmup: first action pays ~6s of JVM/codegen/shuffle-machinery
     // startup that would otherwise be billed to an arbitrary query
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    // Artifact pre-build phase, staged-parallel (Artifacts.stages), each
-    // build timed under its own key: per-entry numbers below measure
+    // Artifact pre-build phase, dependency-DAG-parallel (Artifacts.prebuild),
+    // each build timed under its own key: per-entry numbers below measure
     // queries, not whichever entry happened to first-touch a shared
     // layout/signature/label/decode artifact (the attribution failure
     // that inflated or lost four driver benches). The phase's cost in
@@ -153,10 +158,13 @@ object Bench {
     val artifactsSum = r3(artifactTimes.map(_._2).filter(_ >= 0).sum)
     val total = r3(queriesTotal + artifactsTotal)
     val sf = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
-    val errJson = (errors ++ artifactFailures.map("artifact:" + _))
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    def obj(qs: Iterable[(String, Double)]): String =
-      qs.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+    // insertion-ordered, so every line keeps the key order readers know
+    def obj(kvs: Iterable[(String, Any)]): java.util.Map[String, Any] = {
+      val m = new java.util.LinkedHashMap[String, Any]
+      kvs.foreach { case (k, v) => m.put(k, v) }
+      m
+    }
+    def secs(qs: Iterable[(String, Double)]) = obj(qs.map { case (k, v) => k -> r3(v) })
     // the compact summary line must stay SMALL (it is what survives the
     // driver's bounded tail capture — round 1 lost a 3.5 KB line to it),
     // so only the FULL line carries the per-artifact detail; the summary
@@ -169,24 +177,26 @@ object Bench {
     val diskBusy =
       if (ioMsStart < 0 || ioMsEnd < 0 || wallSec <= 0) -1.0
       else (ioMsEnd - ioMsStart) / (wallSec * 1000.0)
-    val loadJson =
-      s""""load":{"start":[$load1Start,$load5Start],""" +
-        s""""end":[$load1End,$load5End],"disk_busy":${r3(diskBusy)},""" +
-        s""""wall":${r3(wallSec)},""" +
-        s""""warm_mb":${r3(warmBytes / 1048576.0)},"warm_sec":${r3(warmSec)}}"""
-    val retimedJson = retimed.map { case (n, first, l1, retry, rl1, second) =>
-      s""""$n":{"first":${r3(first)},"first_load1":${r3(l1)},""" +
-        s""""retry":${r3(retry)},"retry_load1":${r3(rl1)}""" +
-        second.map { case (r2, r2l) =>
-          s""","retry2":${r3(r2)},"retry2_load1":${r3(r2l)}"""
-        }.getOrElse("") + "}"
-    }.mkString("{", ",", "}")
+    val load = obj(Seq("start" -> Seq(load1Start, load5Start).asJava,
+      "end" -> Seq(load1End, load5End).asJava, "disk_busy" -> r3(diskBusy),
+      "wall" -> r3(wallSec), "warm_mb" -> r3(warmBytes / 1048576.0),
+      "warm_sec" -> r3(warmSec)))
+    val retimedJson = obj(retimed.map { case (n, first, l1, retry, rl1, second) =>
+      n -> obj(Seq("first" -> r3(first), "first_load1" -> r3(l1),
+        "retry" -> r3(retry), "retry_load1" -> r3(rl1)) ++
+        second.toSeq.flatMap { case (r2, r2l) =>
+          Seq("retry2" -> r3(r2), "retry2_load1" -> r3(r2l))
+        })
+    })
+    val mapper = new ObjectMapper()
     def json(qs: Iterable[(String, Double)], arts: Iterable[(String, Double)]): String =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries_total":$queriesTotal,""" +
-        s""""artifacts_total":$artifactsTotal,"artifacts_sum":$artifactsSum,""" +
-        s"""$loadJson,"retimed":$retimedJson,"retimed_wall":${r3(retimedWall)},""" +
-        s""""artifacts":${obj(arts)},""" +
-        s""""queries":${obj(qs)},"sf":$sf,"errors":$errJson}"""
+      mapper.writeValueAsString(obj(Seq("metric" -> "total", "value" -> total,
+        "unit" -> "sec", "queries_total" -> queriesTotal,
+        "artifacts_total" -> artifactsTotal, "artifacts_sum" -> artifactsSum,
+        "load" -> load, "retimed" -> retimedJson, "retimed_wall" -> r3(retimedWall),
+        "artifacts" -> secs(arts), "queries" -> secs(qs),
+        "sf" -> new java.math.BigDecimal(sf),
+        "errors" -> (errors ++ artifactFailures.map("artifact:" + _)).asJava)))
     // Full per-query detail: to a file AND printed first. The final stdout
     // line is a compact summary (total + 10 slowest) that survives the
     // driver's bounded tail capture — round 1's single 3.5 KB line was

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Per-JVM scratch root for materialized intermediates (memoized layouts,
   * edge/label checkpoints, signature tables, the media decode table).
   *
@@ -31,10 +33,8 @@ package graft
   * hooks — previous runs leaked thousands of
   * `/tmp/graft_*_<pid>_<nanos>` dirs with nothing to reclaim them. Roots
   * embed the pid+nanotime run tag, so concurrent JVMs (a gate run next to
-  * a bench run) can never collide; per-SESSION uniqueness within the JVM
-  * is the caller's job (callers append a session tag — the memo maps are
-  * (session, dir)-keyed and a second session must not overwrite parquet a
-  * prior session's memoized frames still scan). */
+  * a bench run) can never collide, and every [[path]] carries a
+  * per-session tag, so two sessions in one JVM cannot either. */
 object Scratch {
   private val runTag =
     s"${ProcessHandle.current().pid()}_${java.lang.Long.toHexString(System.nanoTime())}"
@@ -77,10 +77,29 @@ object Scratch {
     f.delete(); ()
   }
 
-  /** A scratch path unique to (kind, corpus dir, caller-supplied session
-    * tag) within this JVM's run-tagged roots. */
-  def path(kind: String, d: String, sessionTag: String): String =
-    s"$root/${kind}_${d.replaceAll("[^0-9a-zA-Z]", "_")}_s$sessionTag"
+  /** A scratch path unique to (kind, corpus dir, session) within this
+    * JVM's run-tagged roots. A fixed shared path races when two JVMs run
+    * over the same corpus (one `mode(overwrite)` deletes files the other's
+    * memoized read-back frame is mid-scan on), and a plain character-class
+    * sanitizer can collide distinct dirs (`/a/b` vs `/a_b`); the run tag
+    * and the session tag rule both out. */
+  def path(kind: String, d: String, s: SparkSession): String =
+    s"$root/${kind}_${d.replaceAll("[^0-9a-zA-Z]", "_")}_s${sessionTag(s)}"
+
+  /** Per-session name component: the artifact memos are (session, dir)-
+    * keyed, so without it a SECOND session in the same JVM would
+    * `overwrite` the very parquet files the first session's memoized
+    * read-back frames are scanning. Tags are issued from a monotone
+    * counter per session object (NOT identityHashCode, which the JVM does
+    * not guarantee unique — two live sessions colliding would silently
+    * share scratch paths), and are never reused, so evicting a dead
+    * session's entry (the [[SessionMemo]] context-end lifecycle) cannot
+    * recycle its scratch paths. */
+  private val sessionTagSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val sessionTags = new SessionMemo[Unit, String]
+  private[graft] def sessionTag(s: SparkSession): String =
+    sessionTags.computeIfAbsent(s, (),
+      _ => java.lang.Long.toHexString(sessionTagSeq.incrementAndGet()))
 
   /** Placement for `spark.local.dir` — Spark's shuffle blocks, spill
     * files, and broadcast disk store. Same policy as the artifact root

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
-/** The ONE shared per-(session, key) memo behind every staged artifact
-  * (shingle tables, lake layouts, token streams, decode passes, …).
+/** The ONE per-(session, key) memo: each [[Artifact]] holds one, and so do
+  * the few per-session caches that are not artifacts (parquet schemas,
+  * guard counts, per-config encodes, ANN index loads).
   *
   * Semantics preserved from the per-file ConcurrentHashMaps this replaces:
   * concurrent callers of one key block inside `computeIfAbsent` until the

@@ -407,13 +407,10 @@ object BpeTraining {
     * while leaving candidates at every rank (verified at all three SFs). */
   val DefaultRanks = 64
 
-  private val memo =
-    new graft.SessionMemo[String, Seq[(String, String, Long)]]
-
   /** Rank-ordered (left, right, winning weighted count), trained once per
     * (session, corpus). */
-  def trainedMerges(s: SparkSession, d: String): Seq[(String, String, Long)] =
-    memo.computeIfAbsent(s, d, _ => train(s, d, DefaultRanks))
+  val trainedMerges: graft.Artifact[Seq[(String, String, Long)]] =
+    graft.Artifact("bpe_merges")(train(_, _, DefaultRanks))
 
   /** The trained table as an apply spec ([[BpeStats.specOf]]). */
   def trainedSpec(s: SparkSession, d: String): String =

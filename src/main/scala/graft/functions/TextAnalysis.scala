@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Entries, Entry, Tables}
+import graft.{Artifact, Entries, Entry, Scratch, Tables}
 
 /** Text-analysis operators for a training-data pipeline (SURVEY.md §7.3 M5)
   * over the `documents` table: token counting, language-ID heuristic,
@@ -29,17 +29,14 @@ object TextAnalysis extends Entries {
     * cost of each. Eviction-proof the d02 way (parquet by name, never
     * `.cache()`); registered in [[graft.Artifacts]] so the bench charges
     * the pass to its own key instead of whichever consumer runs first. */
-  private val xTokensCache =
-    new graft.SessionMemo[String, DataFrame]
-
-  private[graft] def xTokens(s: SparkSession, d: String): DataFrame =
-    xTokensCache.computeIfAbsent(s, d, _ => {
-      val out = graft.operators.Dedup.uniquePath("x_tokens", d, s)
+  private[graft] val xTokens: Artifact[DataFrame] =
+    Artifact("x_tokens") { (s, d) =>
+      val out = Scratch.path("x_tokens", d, s)
       Tables.documents(s, d).select(col("doc_id"), col("lang"),
           expr("filter(split(lower(text), '\\\\s+'), t -> t != '')").as("ws"))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
-    })
+    }
 
   // === x01 — token counting ==================================================
 
@@ -1519,16 +1516,13 @@ object TextAnalysis extends Entries {
     * into every element_at, re-running the boundary kernel ~8× per row on
     * TWO separate scans (read in the PlanAudit). The write runs the
     * kernel exactly once per document; both consumers scan the result. */
-  private val x25Cache =
-    new graft.SessionMemo[String, DataFrame]
-
-  private[graft] def x25Chunks(s: SparkSession, d: String): DataFrame =
-    x25Cache.computeIfAbsent(s, d, _ => {
-      val out = graft.operators.Dedup.uniquePath("x25_chunks", d, s)
+  private[graft] val x25Chunks: Artifact[DataFrame] =
+    Artifact("x25_chunks") { (s, d) =>
+      val out = Scratch.path("x25_chunks", d, s)
       cdcChunks(s, Tables.documents(s, d))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
-    })
+    }
 
   def x25CdcChunk(s: SparkSession, d: String): DataFrame = {
     val withChunks = x25Chunks(s, d)
@@ -1622,12 +1616,9 @@ object TextAnalysis extends Entries {
     * the x15-cache concern, made eviction-proof the d02 way. Derived from
     * [[xTokens]], so the corpus is tokenized exactly once per (session,
     * corpus) across the whole x-family. */
-  private val x26BiCache =
-    new graft.SessionMemo[String, DataFrame]
-
-  private[graft] def x26Bigrams(s: SparkSession, d: String): DataFrame =
-    x26BiCache.computeIfAbsent(s, d, _ => {
-      val out = graft.operators.Dedup.uniquePath("x26_bigrams", d, s)
+  private[graft] val x26Bigrams: Artifact[DataFrame] =
+    Artifact("x26_bigrams", "x_tokens") { (s, d) =>
+      val out = Scratch.path("x26_bigrams", d, s)
       xTokens(s, d)
         .select(col("doc_id"), col("lang"), explode(expr(
           """zip_with(slice(ws, 1, greatest(size(ws) - 1, 0)),
@@ -1637,7 +1628,7 @@ object TextAnalysis extends Entries {
           col("b.w1").as("w1"), col("b.w2").as("w2"))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
-    })
+    }
 
   def x26DsirWeight(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -1969,11 +1960,9 @@ object TextAnalysis extends Entries {
     * h-order — the one figure that breaks if the permutation, the shard
     * routing, or the within-shard ORDER drifts. The oracle recomputes the
     * whole pipeline from the raw table. */
-  private val x31Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def x31Export(s: SparkSession, d: String): String =
-    x31Cache.computeIfAbsent(s, d, _ => {
-      val out = graft.operators.Dedup.uniquePath("x31_shards", d, s)
+  private[graft] val x31Export: Artifact[String] =
+    Artifact("x31_shards") { (s, d) =>
+      val out = Scratch.path("x31_shards", d, s)
       Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"))
         .withColumn("h", expr(
@@ -1991,7 +1980,7 @@ object TextAnalysis extends Entries {
       require(dirs == ExportShards,
         s"x31: export published $dirs shard directories, want $ExportShards")
       out
-    })
+    }
 
   def x31ShardExport(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -2203,6 +2192,11 @@ object TextAnalysis extends Entries {
        |$bpeTrainCtes
        |SELECT r AS rank, a AS lhs, b AS rhs, a || b AS product, n
        |FROM bpem ORDER BY rank""".stripMargin
+
+  /** This module's rows of [[graft.Artifacts.all]], in prebuild order. */
+  val artifacts: Seq[Artifact[_]] = Seq(
+    xTokens, x25Chunks, x26Bigrams, x31Export,
+    BpeTraining.trainedMerges)
 
   val entries: Seq[Entry] = Seq(
     Entry("x33_bpe_train", x33BpeTrain _, x33Sql),

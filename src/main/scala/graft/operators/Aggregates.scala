@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
-import graft.{Entries, Entry}
+import graft.{Entries, Entry, Scratch}
 import graft.Tables._
 import graft.Ops._
 
@@ -613,7 +613,7 @@ object Aggregates extends Entries {
     // re-run the full distinct over events (observed 17.6 s vs 1.6 s idle).
     // Materialize the key-cardinality-sized set to parquet instead — the
     // write is noise, and every consumer is one scan of a tiny table.
-    val usersPath = Dedup.uniquePath("a20users", d, s)
+    val usersPath = Scratch.path("a20users", d, s)
     ev.select(col("user_id")).distinct().write.mode("overwrite").parquet(usersPath)
     val users = s.read.parquet(usersPath)
     val threshold = (12L * p1.getLong(0)) / (10L * users.count())

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Entries, Entry, Tables}
+import graft.{Artifact, Entries, Entry, Scratch, Tables}
 
 /** Deduplication operators for a training-data pipeline (SURVEY.md §7.3 M5)
   * over the `documents` / `embeddings` tables: exact, n-gram Jaccard,
@@ -51,12 +51,9 @@ object Dedup extends Entries {
     *    The parquet read-back's lineage is a plain scan. Signatures
     *    computed once, persisted, then joined is also precisely the
     *    100 TB-dedup shape. */
-  private val shingleCache =
-    new graft.SessionMemo[String, DataFrame]
-
-  private[graft] def shingled(s: SparkSession, d: String): DataFrame =
-    shingleCache.computeIfAbsent(s, d, _ => {
-      val out = uniquePath("shingles", d, s)
+  private[graft] val shingled: Artifact[DataFrame] =
+    Artifact("shingles") { (s, d) =>
+      val out = Scratch.path("shingles", d, s)
       Tables.documents(s, d)
         .repartition(32, col("doc_id"))
         .withColumn("shingles", expr("word_shingles(text, 3)"))
@@ -68,8 +65,8 @@ object Dedup extends Entries {
         .withColumn("hs", expr("sorted_digests(shingles)"))
         .select(col("doc_id"), col("shingles"), col("hs"))
         .write.mode("overwrite").parquet(out)
-      s.read.parquet(out)
-    }).withColumn("n_sh", size(col("shingles")))
+      s.read.parquet(out).withColumn("n_sh", size(col("shingles")))
+    }
 
   /** Rare-first RANKED POSTINGS (doc_id, h, rk, n_h): every (doc, digest)
     * posting with its rank in the GLOBAL rare-first order (document
@@ -87,13 +84,10 @@ object Dedup extends Entries {
     * is already knowable per row, so the former second window pass
     * (an unordered COUNT over the doc partition, a full extra sort) is
     * gone. One window, one sort, one artifact. */
-  private val postingsCache =
-    new graft.SessionMemo[String, DataFrame]
-
-  private[graft] def rankedPostings(s: SparkSession, d: String): DataFrame =
-    postingsCache.computeIfAbsent(s, d, _ => {
+  private[graft] val rankedPostings: Artifact[DataFrame] =
+    Artifact("ranked_postings", "shingles") { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val out = uniquePath("postings", d, s)
+      val out = Scratch.path("postings", d, s)
       shingled(s, d)
         .select(col("doc_id"), size(col("hs")).as("n_h"),
           explode(col("hs")).as("h"))
@@ -108,40 +102,12 @@ object Dedup extends Entries {
         .select(col("doc_id"), col("h"), col("rk"), col("n_h"))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
-    })
+    }
 
   /** Exact Jaccard over two shingle-array columns — integer set sizes feeding
     * one double division, bit-identical across engines. */
   private def jaccard(inter: Column, na: Column, nb: Column): Column =
     inter.cast(DoubleType) / (na + nb - inter).cast(DoubleType)
-
-  /** Per-JVM unique scratch path for materialized tables. A fixed shared
-    * path races when two JVMs run over the same corpus (a bench and a
-    * check.py gate concurrently: one `mode(overwrite)` deletes files the
-    * other's memoized read-back frame is mid-scan on), and a plain
-    * character-class sanitizer can collide distinct dirs (`/a/b` vs
-    * `/a_b`). [[graft.Scratch]]'s pid+nonce root makes both impossible
-    * (and prefers RAM-backed tmpfs with exit-time cleanup); the memo maps
-    * are (session, dir)-keyed, so within one JVM every consumer still
-    * shares a single materialization. */
-  private[graft] def uniquePath(kind: String, d: String, s: SparkSession): String =
-    graft.Scratch.path(kind, d, sessionTag(s))
-
-  /** Per-session path component: the memo maps are (session, dir)-keyed,
-    * so without it a SECOND session in the same JVM would `overwrite` the
-    * very parquet files the first session's memoized read-back frames are
-    * scanning. Tags are issued from a monotone counter per session object
-    * (NOT identityHashCode, which the JVM does not guarantee unique — two
-    * live sessions colliding would silently share scratch paths and
-    * re-introduce exactly the overwrite-while-scanning race this tag
-    * exists to prevent). Tags are never reused (monotone counter), so
-    * evicting a dead session's entry (the [[graft.SessionMemo]]
-    * context-end lifecycle) cannot recycle its scratch paths. */
-  private val sessionTagSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val sessionTags = new graft.SessionMemo[Unit, String]
-  private[graft] def sessionTag(s: SparkSession): String =
-    sessionTags.computeIfAbsent(s, (),
-      _ => java.lang.Long.toHexString(sessionTagSeq.incrementAndGet()))
 
   // === d01 — exact dedup =====================================================
 
@@ -192,7 +158,7 @@ object Dedup extends Entries {
 
   /** The verified near-dup pairs table (ia < ib, exact Jaccard ≥ 0.5),
     * MATERIALIZED to parquet once per (session, corpus) and memoized as the
-    * read-back — the same eviction-proofing [[labelCache]] applies to the
+    * read-back — the same eviction-proofing [[clusterLabels]] applies to the
     * converged labels. Five consumers re-read this table (d03's equivalence
     * spec, d07's edges, d09, x06, x18 via the labels); a `.cache()`d frame
     * instead carries the full shingle-explode + prefix-self-join lineage,
@@ -200,18 +166,15 @@ object Dedup extends Entries {
     * pay the quadratic-ish recompute (observed: 4.8 s idle → 53.8 s under
     * the driver's loaded bench window). The pairs table is pair-count-sized
     * — the write is noise; the read is one scan. */
-  private val pairsCache =
-    new graft.SessionMemo[String, DataFrame]
-
-  private[graft] def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    pairsCache.computeIfAbsent(s, d, _ => {
-      val out = uniquePath("pairs", d, s)
+  private[graft] val verifiedPairs: Artifact[DataFrame] =
+    Artifact("verified_pairs", "ranked_postings", "shingles") { (s, d) =>
+      val out = Scratch.path("pairs", d, s)
       val (pairs, tmpCaches) = computeVerifiedPairs(s, d)
       pairs.write.mode("overwrite").parquet(out)
       // the builder's internal caches were consumed by the write — release
       tmpCaches.foreach(_.unpersist(false))
       s.read.parquet(out)
-    })
+    }
 
   /** The index/candidate stages run on 8-byte `xxhash64(shingle)` digests,
     * not the ~30-byte 3-gram strings — DF counting, prefix ranking and the
@@ -223,7 +186,7 @@ object Dedup extends Entries {
     * OperatorInvariantSpec's collision audit (distinct digests == distinct
     * shingles) pins the gate corpora collision-free — where the bound is
     * therefore exactly the classic lossless one. */
-  /** Returns (pairs, the builder's internal caches) so the memo wrapper
+  /** Returns (pairs, the builder's internal caches) so the artifact build
     * can release them once the pairs parquet lands. */
   private def computeVerifiedPairs(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) = {
     val sh = shingled(s, d)
@@ -292,18 +255,15 @@ object Dedup extends Entries {
     * is the LRU-eviction trap that re-runs the whole shingle+minhash
     * lineage under the driver's loaded window (round 5 measured d03 at
     * 6.3× idle from exactly this first-touch amplification). */
-  private val minhashSigCache =
-    new graft.SessionMemo[String, DataFrame]
-
-  private[graft] def minhashSignatures(s: SparkSession, d: String): DataFrame =
-    minhashSigCache.computeIfAbsent(s, d, _ => {
-      val out = uniquePath("minhash_sig", d, s)
+  private[graft] val minhashSignatures: Artifact[DataFrame] =
+    Artifact("minhash_signatures", "shingles") { (s, d) =>
+      val out = Scratch.path("minhash_sig", d, s)
       shingled(s, d)
         .withColumn("sig", expr(s"minhash_sig(shingles, $MinhashK)"))
         .select(col("doc_id"), col("sig"))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
-    })
+    }
 
   def d03MinhashLsh(s: SparkSession, d: String): DataFrame = {
     val sh = shingled(s, d)
@@ -385,18 +345,15 @@ object Dedup extends Entries {
   /** SimHash signature table — same memoized-parquet discipline (and
     * rationale) as [[minhashSignatures]]; round 5 measured d04 at 4.7×
     * idle from the cached lineage's first-touch under load. */
-  private val simhashSigCache =
-    new graft.SessionMemo[String, DataFrame]
-
-  private[graft] def simhashSignatures(s: SparkSession, d: String): DataFrame =
-    simhashSigCache.computeIfAbsent(s, d, _ => {
-      val out = uniquePath("simhash_sig", d, s)
+  private[graft] val simhashSignatures: Artifact[DataFrame] =
+    Artifact("simhash_signatures", "shingles") { (s, d) =>
+      val out = Scratch.path("simhash_sig", d, s)
       shingled(s, d)
         .withColumn("simhash", expr("simhash64(shingles)"))
         .select(col("doc_id"), col("simhash"))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
-    })
+    }
 
   private[graft] def d04SimhashPairs(s: SparkSession, d: String): DataFrame = {
     val sim = simhashSignatures(s, d)
@@ -678,14 +635,14 @@ object Dedup extends Entries {
           .as("doc_ids"))
       .orderBy(col("canonical_id"))
 
-  /** Converged label tables memoized per (session, corpus dir). The
-    * propagation loop in [[computeClusterLabels]] caches and unpersists
-    * intermediate generations, so two CONCURRENT invocations would race on
-    * the shared plan-equality cache (one loop unpersisting a generation the
-    * other is still joining against). `computeIfAbsent` runs the loop once
-    * per corpus — concurrent first-callers serialize on the map entry, and
-    * every consumer (d07's rollup, d09's argmax, x18's split) shares the
-    * SAME converged DataFrame.
+  /** The min-label propagation core of d07, exposed as the (v, lbl) label
+    * table so every cluster consumer (d07's rollup, d09's argmax, x18's
+    * split) shares one implementation and the SAME converged DataFrame.
+    * The loop caches and unpersists intermediate generations and
+    * `mode(overwrite)`s deterministic paths, so two CONCURRENT runs would
+    * race (one unpersisting or overwriting a generation the other is still
+    * joining against); the artifact memo runs it once per corpus, and
+    * concurrent first callers block until it completes.
     *
     * The converged table is MATERIALIZED to parquet and the memo holds the
     * read-back: a `.cache()`d frame still carries the full iterative
@@ -695,38 +652,21 @@ object Dedup extends Entries {
     * 5 s consumer ballooning to 28 s mid-bench). A parquet round-trip
     * bounds the lineage to one scan forever; the table is pair-member-
     * sized, so the write is noise. */
-  private val labelCache =
-    new graft.SessionMemo[(String, String), DataFrame]
-
-  /** The min-label propagation core of d07, exposed as the (v, lbl) label
-    * table so cluster consumers share one implementation (and one cached
-    * result — see [[labelCache]]). */
-  private[graft] def clusterLabels(s: SparkSession, d: String): DataFrame = {
-    lazy val pairs = verifiedPairs(s, d).select(col("ia"), col("ib"))
-    labelsFromEdges(s,
-      pairs.union(pairs.select(col("ib"), col("ia"))).toDF("src", "dst"),
-      "labels", d)
-  }
+  private[graft] val clusterLabels: Artifact[DataFrame] =
+    Artifact("dedup_labels", "verified_pairs") { (s, d) =>
+      val pairs = verifiedPairs(s, d).select(col("ia"), col("ib"))
+      computeLabelsFromEdges(s,
+        pairs.union(pairs.select(col("ib"), col("ia"))).toDF("src", "dst"),
+        "labels", d)
+    }
 
   /** The pointer-jumping min-label loop over an arbitrary DOUBLED edge
-    * list — d07's core, exposed so other cluster builders (m11's
-    * cross-modal graph) share one implementation. Returns the converged
-    * (v, lbl) table, parquet-materialized (see [[labelCache]] doc).
-    *
-    * MEMOIZED per (session, outKind, corpus): every caller's edge list is
-    * a pure function of the corpus, so the converged labels are too, and
-    * `computeIfAbsent` both avoids re-running the loop AND closes the
-    * overwrite race — without it, two concurrent invocations of the same
-    * entry (m11 was the unmemoized one) would each `mode(overwrite)` the
-    * same deterministic edges/labels paths while the other's loop is
-    * mid-scan on those very files. Concurrent first-callers serialize on
-    * the map entry; everyone else gets the materialized read-back. */
-  private[graft] def labelsFromEdges(s: SparkSession, edgeList: => DataFrame,
-      outKind: String, d: String): DataFrame =
-    labelCache.computeIfAbsent(s, (outKind, d),
-      _ => computeLabelsFromEdges(s, edgeList, outKind, d))
-
-  private def computeLabelsFromEdges(s: SparkSession, edgeList: DataFrame,
+    * list — d07's core, shared with m11's cross-modal graph. Returns the
+    * converged (v, lbl) table, parquet-materialized (see
+    * [[clusterLabels]]). Not memoized itself: its callers are artifacts
+    * ([[clusterLabels]], Multimodal's `m11Labels`), whose memos run it
+    * once per (session, corpus). */
+  private[graft] def computeLabelsFromEdges(s: SparkSession, edgeList: DataFrame,
       outKind: String, d: String): DataFrame = {
     // The edge input is parquet-materialized HERE, inside the helper, not
     // left to each caller's discipline: a caller whose edge list carries
@@ -736,7 +676,7 @@ object Dedup extends Entries {
     // driver (the r6 bench measured m11 at 29× its idle time through
     // exactly this). After the write, every round's lineage roots at a
     // plain columnar scan of an id-pair file, whatever the caller built.
-    val edgesPath = uniquePath(outKind + "_edges", d, s)
+    val edgesPath = Scratch.path(outKind + "_edges", d, s)
     edgeList.write.mode("overwrite").parquet(edgesPath)
     val edges = s.read.parquet(edgesPath)
     // Every vertex appears as a src (the edge list is doubled), so the
@@ -798,7 +738,7 @@ object Dedup extends Entries {
     while (changed > 0 && rounds < 64) {
       val mid = round(labels.select(col("v"), col("lbl"))).cache()
       val next = round(mid.select(col("v"), col("lbl")))
-      val genPath = uniquePath(s"${outKind}_gen${rounds + 2}", d, s)
+      val genPath = Scratch.path(s"${outKind}_gen${rounds + 2}", d, s)
       next.write.mode("overwrite").parquet(genPath)
       mid.unpersist()
       val gen = s.read.parquet(genPath)
@@ -810,8 +750,8 @@ object Dedup extends Entries {
       s"labelsFromEdges($outKind) exited after $rounds rounds with " +
         s"$changed labels still moving — component labels NOT converged")
     // the returned frame must root at the CANONICAL out path, not the last
-    // generation file (see labelCache doc) — one tiny parquet round-trip
-    val out = uniquePath(outKind, d, s)
+    // generation file (see clusterLabels doc) — one tiny parquet round-trip
+    val out = Scratch.path(outKind, d, s)
     labels.write.mode("overwrite").parquet(out)
     s.read.parquet(out)
   }
@@ -1592,19 +1532,18 @@ object Dedup extends Entries {
     * corpus elect the identical `(ag, aoff)` — the property that lets
     * site counts group by `(ag, aoff, span_len, wh)` without
     * double-counting across targets. */
-  private val spanReportCache = new graft.SessionMemo[String, DataFrame]
-  private[graft] def dupSpanReport(s: SparkSession, d: String): DataFrame =
-    spanReportCache.computeIfAbsent(s, d, _ => {
-      val out = uniquePath("d17_spans", d, s)
+  private[graft] val dupSpanReport: Artifact[DataFrame] =
+    Artifact("d17_spans", "x_tokens") { (s, d) =>
+      val out = Scratch.path("d17_spans", d, s)
       val (report, tmpCaches) = buildSpanReport(s, d)
       report.write.mode("overwrite").parquet(out)
       // every consumer of the builder's internal caches ran inside the
       // write above — release them deterministically (guide §5)
       tmpCaches.foreach(_.unpersist(false))
       s.read.parquet(out)
-    })
+    }
 
-  /** Returns (report, the builder's internal caches) so the memo wrapper
+  /** Returns (report, the builder's internal caches) so the artifact build
     * can release them once the report parquet lands. */
   private def buildSpanReport(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) = {
     import org.apache.spark.sql.expressions.Window
@@ -1780,6 +1719,11 @@ object Dedup extends Entries {
       |SELECT c.doc_id, c.start AS start_word, c.span_len, wc.n_occ
       |FROM cand c JOIN wc USING (span_len, h)
       |ORDER BY c.doc_id, c.start""".stripMargin
+
+  /** This module's rows of [[graft.Artifacts.all]], in prebuild order. */
+  val artifacts: Seq[Artifact[_]] = Seq(
+    shingled, rankedPostings, verifiedPairs,
+    minhashSignatures, simhashSignatures, clusterLabels, dupSpanReport)
 
   val entries: Seq[Entry] = Seq(
     Entry("d18_dup_span_report", d18DupSpanReport _, d18Sql),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Entries, Entry, Tables}
+import graft.{Artifact, Entries, Entry, Scratch, Tables}
 
 /** Graph analytics over the part co-purchase graph (SURVEY.md §7.3 M5) —
   * the corpus-link workloads a training-data pipeline runs beyond d07's
@@ -39,16 +39,13 @@ import graft.{Entries, Entry, Tables}
   */
 object Graph extends Entries {
 
-  private val edgeCache =
-    new graft.SessionMemo[String, DataFrame]
-
   /** Distinct canonical co-purchase edges (x < y), parquet-materialized per
     * (session, corpus) and memoized — consumed by g01 once and by every
     * g02 iteration, so the build must never re-run under memory pressure
     * (the d02/d07/a20 eviction lesson). */
-  private[graft] def copurchaseEdges(s: SparkSession, d: String): DataFrame =
-    edgeCache.computeIfAbsent(s, d, _ => {
-      val out = Dedup.uniquePath("copurchase_edges", d, s)
+  private[graft] val copurchaseEdges: Artifact[DataFrame] =
+    Artifact("copurchase_edges") { (s, d) =>
+      val out = Scratch.path("copurchase_edges", d, s)
       // basket-local pair expansion instead of a lineitem self-join: one
       // shuffle on the order key, then the ≤ C(basket, 2) ordered pairs
       // come out of the packed-long codegen kernel
@@ -67,7 +64,7 @@ object Graph extends Entries {
           col("pc").bitwiseAND(lit(0xFFFFFFFFL)).as("y"))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
-    })
+    }
 
   /** Undirected degree per node — one explode-both-ends aggregation. */
   private def degrees(e: DataFrame): DataFrame =
@@ -111,15 +108,12 @@ object Graph extends Entries {
     * two consumers (g01's per-node rollup, g04's per-edge rollup) would
     * otherwise each pay the full enumeration, and a `.cache()` here is
     * the same LRU-eviction trap the shingle/pairs tables closed. */
-  private val triangleCache =
-    new graft.SessionMemo[String, DataFrame]
-
-  private[graft] def triangleRows(s: SparkSession, d: String): DataFrame =
-    triangleCache.computeIfAbsent(s, d, _ => {
-      val out = Dedup.uniquePath("g_triangles", d, s)
+  private[graft] val triangleRows: Artifact[DataFrame] =
+    Artifact("triangle_rows", "copurchase_edges") { (s, d) =>
+      val out = Scratch.path("g_triangles", d, s)
       computeTriangleRows(s, d).write.mode("overwrite").parquet(out)
       s.read.parquet(out)
-    })
+    }
 
   private[graft] def computeTriangleRows(s: SparkSession, d: String): DataFrame = {
     val e = copurchaseEdges(s, d)
@@ -131,7 +125,7 @@ object Graph extends Entries {
       .join(deg.select(col("v").as("y"), col("dg").as("dy")), Seq("y"))
     val xOrd = struct(col("dx").as("d"), col("x").as("i"))
     val yOrd = struct(col("dy").as("d"), col("y").as("i"))
-    val adjacencyPath = Dedup.uniquePath("g01_adjacency", d, s)
+    val adjacencyPath = Scratch.path("g01_adjacency", d, s)
     withDeg.select(
         when(xOrd < yOrd, col("x")).otherwise(col("y")).as("s"),
         when(xOrd < yOrd, col("y")).otherwise(col("x")).as("t"))
@@ -217,13 +211,10 @@ object Graph extends Entries {
     * Each row carries its chunk ordinal `ci`; chunks slice the SORTED
     * neighbor list in order, so `ci = 0` holds a node's smallest-id
     * neighbors — g09's capped witness lists read straight off it. */
-  private val adjCache =
-    new graft.SessionMemo[String, DataFrame]
-
-  private[graft] def chunkedAdjacency(s: SparkSession, d: String): DataFrame =
-    adjCache.computeIfAbsent(s, d, _ => {
+  private[graft] val chunkedAdjacency: Artifact[DataFrame] =
+    Artifact("chunked_adjacency", "copurchase_edges") { (s, d) =>
       val e = copurchaseEdges(s, d)
-      val adjPath = Dedup.uniquePath("pr_adjacency", d, s)
+      val adjPath = Scratch.path("pr_adjacency", d, s)
       e.select(col("x").as("src"), col("y").as("dst"))
         .unionAll(e.select(col("y").as("src"), col("x").as("dst")))
         .groupBy(col("src"))
@@ -234,7 +225,7 @@ object Graph extends Entries {
           .as(Seq("ci", "chunk")))
         .write.mode("overwrite").parquet(adjPath)
       s.read.parquet(adjPath)
-    })
+    }
 
   def g02Pagerank(s: SparkSession, d: String): DataFrame = {
     val adj = chunkedAdjacency(s, d)
@@ -704,11 +695,8 @@ object Graph extends Entries {
     * g08 formats it, g10 evaluates it (modularity); the final round's
     * parquet checkpoint IS the artifact, so the memo just holds the
     * read-back. */
-  private val lpaCache =
-    new graft.SessionMemo[String, DataFrame]
-
-  private[graft] def lpaLabels(s: SparkSession, d: String): DataFrame =
-    lpaCache.computeIfAbsent(s, d, _ => {
+  private[graft] val lpaLabels: Artifact[DataFrame] =
+    Artifact("lpa_labels", "chunked_adjacency") { (s, d) =>
       val adj = chunkedAdjacency(s, d)
       var labels = adj.select(col("v")).distinct()
         .select(col("v"), col("v").as("lbl"))
@@ -738,7 +726,7 @@ object Graph extends Entries {
           prev = Some(ck)
           labels = ck
         } else {
-          val roundPath = Dedup.uniquePath(s"g08_round$r", d, s)
+          val roundPath = Scratch.path(s"g08_round$r", d, s)
           next.write.mode("overwrite").parquet(roundPath)
           prev.foreach(_.unpersist(false))
           prev = None
@@ -746,7 +734,7 @@ object Graph extends Entries {
         }
       }
       labels
-    })
+    }
 
   def g08LabelProp(s: SparkSession, d: String): DataFrame =
     lpaLabels(s, d).select(col("v").as("node_id"), col("lbl").as("community"))
@@ -1017,6 +1005,10 @@ object Graph extends Entries {
        |  FROM j)
        |SELECT rank, a, b, common, union_size, jaccard FROM r
        |WHERE rank <= $JacTopK ORDER BY rank""".stripMargin
+
+  /** This module's rows of [[graft.Artifacts.all]], in prebuild order. */
+  val artifacts: Seq[Artifact[_]] = Seq(
+    copurchaseEdges, triangleRows, chunkedAdjacency, lpaLabels)
 
   val entries: Seq[Entry] = Seq(
     Entry("g01_triangle_count", g01TriangleCount _, g01Sql),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
-import graft.{Entries, Entry}
+import graft.{Artifact, Entries, Entry, Scratch}
 import graft.Tables._
 import graft.Ops._
 
@@ -87,15 +87,6 @@ object Relational extends Entries {
     * trip (write → read → aggregate) is verified against the un-partitioned
     * oracle, proving the layout is lossless. */
 
-  /** Per-JVM unique scratch path for layout round-trip entries: a fixed
-    * shared path races when two JVMs run over the same corpus (one
-    * `mode(overwrite)` deletes files the other is mid-scan on), and a
-    * character-class sanitizer can collide distinct dirs. [[graft.Scratch]]'s
-    * pid+nonce root (RAM-backed when shm has headroom, cleaned at exit)
-    * makes both impossible. */
-  private[graft] def scratch(kind: String, d: String, s: SparkSession): String =
-    graft.Scratch.path(kind, d, Dedup.sessionTag(s))
-
   /** The lineitem-partitioned-by-year layout that s09 (static pruning) and
     * j16 (dynamic pruning) both read. It is a deterministic pure function of
     * the corpus, so it is written ONCE per (session, corpus) and memoized —
@@ -104,16 +95,14 @@ object Relational extends Entries {
     * because the layout was rewritten on every invocation under contended
     * I/O; the layout write is corpus prep, not part of either operator's
     * measured semantics (PlanSpec asserts the pruning on the read plans). */
-  private val yearLayoutCache =
-    new graft.SessionMemo[String, String]
-  private[graft] def yearLayout(s: SparkSession, d: String): String =
-    yearLayoutCache.computeIfAbsent(s, d, _ => {
-      val out = scratch("l_year_layout", d, s)
+  private[graft] val yearLayout: Artifact[String] =
+    Artifact("year_layout") { (s, d) =>
+      val out = Scratch.path("l_year_layout", d, s)
       lineitem(s, d)
         .withColumn("l_year", year(col("l_shipdate")))
         .write.mode("overwrite").partitionBy("l_year").parquet(out)
       out
-    })
+    }
 
   def s09PartitionedWritePrune(s: SparkSession, d: String): DataFrame =
     prunedScan(s, yearLayout(s, d))
@@ -152,23 +141,21 @@ object Relational extends Entries {
     * at the r9 driver) and modeled the economics wrong: the whole point of
     * bucketing is that the write is paid once and amortized over every
     * downstream join. */
-  private val s10Cache =
-    new graft.SessionMemo[String, (String, String)]
-  private[graft] def s10Tables(s: SparkSession, d: String): (String, String) =
-    s10Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s10Tables: Artifact[(String, String)] =
+    Artifact("s10_buckets") { (s, d) =>
       val tag = d.replaceAll("[^0-9a-zA-Z]", "_")
       val lt = s"graft_s10_lineitem_$tag"
       val ot = s"graft_s10_orders_$tag"
       lineitem(s, d).select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", scratch("s10_lineitem", d, s)).saveAsTable(lt)
+        .option("path", Scratch.path("s10_lineitem", d, s)).saveAsTable(lt)
       orders(s, d).select(col("o_orderkey"), col("o_orderdate"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", scratch("s10_orders", d, s)).saveAsTable(ot)
+        .option("path", Scratch.path("s10_orders", d, s)).saveAsTable(ot)
       (lt, ot)
-    })
+    }
 
   def s10BucketedJoin(s: SparkSession, d: String): DataFrame = {
     val (lt, ot) = s10Tables(s, d)
@@ -300,17 +287,15 @@ object Relational extends Entries {
     * operator's measured semantics is the compacted read-back
     * ([[compactedScan]]); CompactionSpec still counts files at both
     * paths. Returns the compacted path. */
-  private val s14Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s14Layout(s: SparkSession, d: String): String =
-    s14Cache.computeIfAbsent(s, d, _ => {
-      val frag = scratch("s14_fragmented", d, s)
-      val comp = scratch("s14_compacted", d, s)
+  private[graft] val s14Layout: Artifact[String] =
+    Artifact("s14_fragments") { (s, d) =>
+      val frag = Scratch.path("s14_fragmented", d, s)
+      val comp = Scratch.path("s14_compacted", d, s)
       events(s, d).repartition(64)
         .write.mode("overwrite").parquet(frag)
       s.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(comp)
       comp
-    })
+    }
 
   /** The read-back half of S14 (separate so CompactionSpec can count files
     * and re-aggregate after the rewrite happened). */
@@ -344,7 +329,7 @@ object Relational extends Entries {
     * semantics). The entry exercises the merge path; the aggregate is
     * verified against the original table re-deriving shard membership. */
   def s15SchemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val dir = scratch("s15", d, s)
+    val dir = Scratch.path("s15", d, s)
     val docs = documents(s, d)
     docs.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("n_chars"))
@@ -378,7 +363,7 @@ object Relational extends Entries {
     * as any columnar scan: splittable stripes, predicate pushdown and
     * column pruning apply as with parquet. */
   def s16OrcInterchange(s: SparkSession, d: String): DataFrame = {
-    val out = scratch("s16", d, s)
+    val out = Scratch.path("s16", d, s)
     events(s, d).write.mode("overwrite").orc(out)
     s.read.orc(out)
       .groupBy(col("event_type"))
@@ -459,7 +444,7 @@ object Relational extends Entries {
     * accumulation order wouldn't be deterministic — the [[graft.Ops.dsum]]
     * discipline applies across engines too). */
   def s18JdbcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val url = s"jdbc:derby:${scratch("s18_derby", d, s)};create=true"
+    val url = s"jdbc:derby:${Scratch.path("s18_derby", d, s)};create=true"
     val props = new java.util.Properties
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
     customer(s, d)
@@ -1539,7 +1524,7 @@ object Relational extends Entries {
     * table). At 100 TB the manifest is a metadata table and versions
     * share unchanged files — storage ∝ deltas, never ∝ versions. */
   def s19TimeTravel(s: SparkSession, d: String): DataFrame = {
-    val base = scratch("s19", d, s)
+    val base = Scratch.path("s19", d, s)
     val v1Dir = s"$base/files_v1"; val v2Dir = s"$base/files_v2"
     val split = lit("1997-01-01").cast(DateType)
     val src = orders(s, d)
@@ -1585,7 +1570,7 @@ object Relational extends Entries {
     * difference — version-count-sized) plus parallel deletes; nothing
     * scans data. The live read touches only the compacted file set. */
   def s22VacuumRetention(s: SparkSession, d: String): DataFrame = {
-    val base = scratch("s22", d, s)
+    val base = Scratch.path("s22", d, s)
     val aDir = s"$base/files_a"; val bDir = s"$base/files_b"
     val cDir = s"$base/files_c"
     val split = lit("1995-01-01").cast(DateType)
@@ -1669,35 +1654,31 @@ object Relational extends Entries {
     * ZORDER` runs once, not per query), the measured semantics is the
     * partition-pruned READ, and the ~256-partition write re-running per
     * invocation was a 2.6× I/O amplification surface at a loaded driver. */
-  private val s20Cache =
-    new graft.SessionMemo[String, (String, Seq[Long])]
-  private[graft] def s20Prepare(s: SparkSession, d: String): (String, Seq[Long]) =
-    s20Cache.computeIfAbsent(s, d, _ => s20PrepareUncached(s, d))
-
-  private def s20PrepareUncached(s: SparkSession, d: String): (String, Seq[Long]) = {
-    val out = scratch("s20", d, s)
-    val ev = events(s, d)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
-        expr("unix_millis(ts) div 86400000").as("dayn"))
-    val b = ev.agg(min(col("user_id")), max(col("user_id")),
-      min(col("dayn")), max(col("dayn"))).head()
-    val (minU, maxU, minD, maxD) =
-      (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
-    def bucketSql(c: String, lo: Long, hi: Long): String =
-      s"((($c) - $lo) * $ZGrid div ${hi - lo + 1})"
-    // Shuffle on zb before the partitioned write: without it every one of
-    // the 32 scan tasks appends to all ~256 zb dirs (≤8k tiny files, and
-    // 8k file-commit round-trips dominated the 5.3 s runtime); with it each
-    // zb lands in one task → one file per partition, and the shuffle IS the
-    // one-pass clustering shuffle the 100 TB story already budgets.
-    ev.withColumn("zb",
-        expr(mortonSql(bucketSql("user_id", minU, maxU),
-          bucketSql("dayn", minD, maxD))))
-      .repartition(col("zb"))
-      .write.mode("overwrite").partitionBy("zb").parquet(out)
-    val box = for { u <- 4L to 7L; v <- 4L to 7L } yield mortonInt(u, v)
-    (out, box)
-  }
+  private[graft] val s20Prepare: Artifact[(String, Seq[Long])] =
+    Artifact("s20_chunks") { (s, d) =>
+      val out = Scratch.path("s20", d, s)
+      val ev = events(s, d)
+        .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
+          expr("unix_millis(ts) div 86400000").as("dayn"))
+      val b = ev.agg(min(col("user_id")), max(col("user_id")),
+        min(col("dayn")), max(col("dayn"))).head()
+      val (minU, maxU, minD, maxD) =
+        (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
+      def bucketSql(c: String, lo: Long, hi: Long): String =
+        s"((($c) - $lo) * $ZGrid div ${hi - lo + 1})"
+      // Shuffle on zb before the partitioned write: without it every one of
+      // the 32 scan tasks appends to all ~256 zb dirs (≤8k tiny files, and
+      // 8k file-commit round-trips dominated the 5.3 s runtime); with it each
+      // zb lands in one task → one file per partition, and the shuffle IS the
+      // one-pass clustering shuffle the 100 TB story already budgets.
+      ev.withColumn("zb",
+          expr(mortonSql(bucketSql("user_id", minU, maxU),
+            bucketSql("dayn", minD, maxD))))
+        .repartition(col("zb"))
+        .write.mode("overwrite").partitionBy("zb").parquet(out)
+      val box = for { u <- 4L to 7L; v <- 4L to 7L } yield mortonInt(u, v)
+      (out, box)
+    }
 
   def s20ZorderLayout(s: SparkSession, d: String): DataFrame = {
     val (out, box) = s20Prepare(s, d)
@@ -2232,11 +2213,9 @@ object Relational extends Entries {
     * and re-created a local DataFrame; the rows were bounded (≤7 groups)
     * but the shape was the one anti-pattern the engine bans, and this form
     * is what survives when the aggregate under test ISN'T 7 rows. */
-  private val j21Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def j21Materialize(s: SparkSession, d: String): String =
-    j21Cache.computeIfAbsent(s, d, _ => {
-      val out = scratch("j21_skew", d, s)
+  private[graft] val j21Materialize: Artifact[String] =
+    Artifact("j21_skew") { (s, d) =>
+      val out = Scratch.path("j21_skew", d, s)
       val confs = Map(
         "spark.sql.adaptive.enabled"                                  -> "true",
         "spark.sql.adaptive.skewJoin.enabled"                         -> "true",
@@ -2273,7 +2252,7 @@ object Relational extends Entries {
             "thresholds or the amplification, do not ship a silent straggler")
       }
       out
-    })
+    }
 
   /** The natural (unsalted, unhinted-except-merge) join j21 executes; kept
     * separate so the invariant spec can run the IDENTICAL plan with skew
@@ -2334,14 +2313,12 @@ object Relational extends Entries {
     * from the executed plan string. Oracle: same filter + aggregate over
     * the original parquet in DuckDB — the JSONL round trip must be
     * lossless for every value that survives the filter. */
-  private val s24Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s24Layout(s: SparkSession, d: String): String =
-    s24Cache.computeIfAbsent(s, d, _ => {
-      val out = scratch("s24_jsonl", d, s)
+  private[graft] val s24Layout: Artifact[String] =
+    Artifact("s24_layout") { (s, d) =>
+      val out = Scratch.path("s24_jsonl", d, s)
       documents(s, d).toJSON.repartition(4).write.mode("overwrite").text(out)
       out
-    })
+    }
 
   private[graft] val s24Schema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType),
@@ -2377,19 +2354,17 @@ object Relational extends Entries {
     * so the write→read round trip must be lossless. DataSourceV2Spec
     * drives append, overwrite, commit hygiene (no temps survive, only
     * part files), and the abort path under a mid-task failure. */
-  private val s25Cache =
-    new graft.SessionMemo[String, String]
   private[graft] val s25Schema = StructType(Seq(
     StructField("doc_id", LongType), StructField("lang", StringType),
     StructField("source", StringType), StructField("n_chars", LongType)))
-  private[graft] def s25Layout(s: SparkSession, d: String): String =
-    s25Cache.computeIfAbsent(s, d, _ => {
-      val out = scratch("s25_v2_write", d, s)
+  private[graft] val s25Layout: Artifact[String] =
+    Artifact("s25_layout") { (s, d) =>
+      val out = Scratch.path("s25_v2_write", d, s)
       documents(s, d).filter(col("lang") =!= "zh")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .write.format("graft-jsonl").mode("overwrite").save(out)
       out
-    })
+    }
 
   def s25JsonlV2Write(s: SparkSession, d: String): DataFrame =
     s.read.format("graft-jsonl").schema(s25Schema).load(s25Layout(s, d))
@@ -2445,17 +2420,15 @@ object Relational extends Entries {
     * optimization, never a semantics change. Reference analog: the count
     * scan (`MeshJoin.java:423-431`) writ large — catalog-speed sanity
     * numbers instead of a full pass. */
-  private val s27Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s27Layout(s: SparkSession, d: String): String =
-    s27Cache.computeIfAbsent(s, d, _ => {
-      val out = scratch("s27_part_write", d, s)
+  private[graft] val s27Layout: Artifact[String] =
+    Artifact("s27_layout") { (s, d) =>
+      val out = Scratch.path("s27_part_write", d, s)
       documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .write.format("graft-jsonl").option("partitionBy", "lang")
         .mode("overwrite").save(out)
       out
-    })
+    }
 
   def s27GroupedMetadataAgg(s: SparkSession, d: String): DataFrame =
     s.read.format("graft-jsonl").schema(s25Schema).load(s27Layout(s, d))
@@ -2518,21 +2491,19 @@ object Relational extends Entries {
     * broadcast at test scale; at target scale neither side broadcasts.
     * PlanSpec pins zero hash exchanges AND that dropping either side's
     * sidecars (the proof of the layout) restores the shuffle. */
-  private val s29Cache =
-    new graft.SessionMemo[String, String]
   private[graft] val s29Schema = StructType(Seq(
     StructField("doc_id", LongType), StructField("lang", StringType),
     StructField("est_tokens", LongType)))
-  private[graft] def s29Layout(s: SparkSession, d: String): String =
-    s29Cache.computeIfAbsent(s, d, _ => {
-      val out = scratch("s29_scores_write", d, s)
+  private[graft] val s29Layout: Artifact[String] =
+    Artifact("s29_layout") { (s, d) =>
+      val out = Scratch.path("s29_scores_write", d, s)
       documents(s, d)
         .select(col("doc_id"), col("lang"),
           expr("n_chars DIV 5 + doc_id % 7").as("est_tokens"))
         .write.format("graft-jsonl").option("partitionBy", "lang")
         .mode("overwrite").save(out)
       out
-    })
+    }
 
   def s29StoragePartitionedJoin(s: SparkSession, d: String): DataFrame = {
     val docs = s.read.format("graft-jsonl").schema(s25Schema)
@@ -2580,13 +2551,11 @@ object Relational extends Entries {
     * time and every subsequent fact↔fact join is exchange-free — the
     * Hive/Iceberg bucketed-join discipline, with the bucket PROOF
     * carried by the source's own sidecars rather than catalog trust. */
-  private val s30Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s30Lake(s: SparkSession, d: String): String =
-    s30Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s30Lake: Artifact[String] =
+    Artifact("s30_lake") { (s, d) =>
       val cat = "graft_lake_" + d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-        Dedup.sessionTag(s)
-      val wh = scratch("s30_lake", d, s)
+        Scratch.sessionTag(s)
+      val wh = Scratch.path("s30_lake", d, s)
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.JsonlCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -2603,7 +2572,7 @@ object Relational extends Entries {
         .select(col("doc_id"), expr("n_chars DIV 5 + doc_id % 7").as("est_tokens"))
         .writeTo(s"$cat.lake.tokens").append()
       cat
-    })
+    }
 
   def s30BucketedJoin(s: SparkSession, d: String): DataFrame = {
     val cat = s30Lake(s, d)
@@ -2650,12 +2619,9 @@ object Relational extends Entries {
     * nothing in a table directory references its own path. At 100 TB
     * this is exactly Delta/Iceberg deep CLONE: N engine writes of one
     * identical base collapse to one write plus N server-side copies. */
-  private val lakeBaseCache =
-    new graft.SessionMemo[(String, String), String]
-
   /** The 4-column `(doc_id, lang, source, n_chars)` lang-routed base. */
-  private[graft] def lakeDocsBase4(s: SparkSession, d: String): String =
-    lakeBaseCache.computeIfAbsent(s, (d, "docs_base4"), _ => {
+  private[graft] val lakeDocsBase4: Artifact[String] =
+    Artifact("lake_base4", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       s.sql(s"""CREATE TABLE IF NOT EXISTS $cat.lake.docs_base4
                |  (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)
@@ -2664,11 +2630,11 @@ object Relational extends Entries {
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .writeTo(s"$cat.lake.docs_base4").append()
       lakeTableDir(s, cat, "docs_base4")
-    })
+    }
 
   /** The 3-column `(doc_id, lang, n_chars)` lang-routed base. */
-  private[graft] def lakeDocsBase3(s: SparkSession, d: String): String =
-    lakeBaseCache.computeIfAbsent(s, (d, "docs_base3"), _ => {
+  private[graft] val lakeDocsBase3: Artifact[String] =
+    Artifact("lake_base3", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       s.sql(s"""CREATE TABLE IF NOT EXISTS $cat.lake.docs_base3
                |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -2677,7 +2643,7 @@ object Relational extends Entries {
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .writeTo(s"$cat.lake.docs_base3").append()
       lakeTableDir(s, cat, "docs_base3")
-    })
+    }
 
   private def lakeTableDir(s: SparkSession, cat: String, table: String): String =
     s.conf.get(s"spark.sql.catalog.$cat.warehouse") + "/lake/" + table
@@ -2709,17 +2675,15 @@ object Relational extends Entries {
     * files' integrity are all checked by the row hash. CatalogSpec
     * additionally proves the no-read property by pre-corrupting the
     * dropped file and pins the refusal of row-level predicates. */
-  private val s31Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s31Table(s: SparkSession, d: String): String =
-    s31Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s31Table: Artifact[String] =
+    Artifact("s31_table", "lake_base4", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       lakeDocsBase4(s, d)
       s.sql(s"CALL $cat.system.clone(source => 'lake.docs_base4', " +
         s"target => 'lake.docs_del')").collect()
       s.sql(s"DELETE FROM $cat.lake.docs_del WHERE lang = 'zh'")
       s"$cat.lake.docs_del"
-    })
+    }
 
   def s31CatalogDelete(s: SparkSession, d: String): DataFrame =
     s.table(s31Table(s, d))
@@ -2748,10 +2712,8 @@ object Relational extends Entries {
     * exactly the scanned files — through the same routed writer, so the
     * partition layout and its sidecar contracts survive the rewrite. The
     * oracle recomputes the merged state from the original parquet. */
-  private val s32Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s32Table(s: SparkSession, d: String): String =
-    s32Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s32Table: Artifact[String] =
+    Artifact("s32_table", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       s.sql(s"""CREATE TABLE IF NOT EXISTS $cat.lake.docs_upsert
                |  (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)
@@ -2769,7 +2731,7 @@ object Relational extends Entries {
            |WHEN MATCHED THEN UPDATE SET *
            |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
       s"$cat.lake.docs_upsert"
-    })
+    }
 
   def s32MergeUpsert(s: SparkSession, d: String): DataFrame =
     s.table(s32Table(s, d))
@@ -2796,10 +2758,8 @@ object Relational extends Entries {
     * post-update state from the original parquet with a CASE — so the
     * condition's group pruning, the carryover rows of the rewritten
     * files, and the untouched partitions all land in the row hash. */
-  private val s33Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s33Table(s: SparkSession, d: String): String =
-    s33Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s33Table: Artifact[String] =
+    Artifact("s33_table", "lake_base4", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       lakeDocsBase4(s, d)
       s.sql(s"CALL $cat.system.clone(source => 'lake.docs_base4', " +
@@ -2807,7 +2767,7 @@ object Relational extends Entries {
       s.sql(s"""UPDATE $cat.lake.docs_update
                |SET n_chars = n_chars * 3 + 1 WHERE lang = 'en'""".stripMargin)
       s"$cat.lake.docs_update"
-    })
+    }
 
   def s33CowUpdate(s: SparkSession, d: String): DataFrame =
     s.table(s33Table(s, d))
@@ -2841,10 +2801,8 @@ object Relational extends Entries {
     * exactly the hundred offsets. CatalogSpec pins the no-rewrite
     * property (byte-identical data files), the metadata-agg veto, and
     * the stream face's per-split vector merge. */
-  private val s34Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s34Table(s: SparkSession, d: String): String =
-    s34Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s34Table: Artifact[String] =
+    Artifact("s34_table", "lake_base4", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       s.sql(s"""CREATE TABLE IF NOT EXISTS $cat.lake.docs_mor
                |  (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)
@@ -2857,7 +2815,7 @@ object Relational extends Entries {
       s.sql(s"""DELETE FROM $cat.lake.docs_mor
                |WHERE lang = 'en' AND n_chars > 400""".stripMargin)
       s"$cat.lake.docs_mor"
-    })
+    }
 
   def s34MorDelete(s: SparkSession, d: String): DataFrame =
     s.table(s34Table(s, d))
@@ -2888,10 +2846,8 @@ object Relational extends Entries {
     * later join pays neither shuffle nor sort — the sorted-bucket
     * discipline of Hive/Iceberg, with the sort proof carried per file by
     * the source itself instead of catalog trust. */
-  private val s35Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s35Lake(s: SparkSession, d: String): String =
-    s35Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s35Lake: Artifact[String] =
+    Artifact("s35_lake", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       s.sql(s"""CREATE TABLE IF NOT EXISTS $cat.lake.docs_sorted
                |  (doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -2907,7 +2863,7 @@ object Relational extends Entries {
         .select(col("doc_id"), expr("n_chars DIV 5 + doc_id % 7").as("est_tokens"))
         .writeTo(s"$cat.lake.tokens_sorted").option("sortedBy", "doc_id").append()
       cat
-    })
+    }
 
   def s35SortedJoin(s: SparkSession, d: String): DataFrame = {
     val cat = s35Lake(s, d)
@@ -2956,10 +2912,8 @@ object Relational extends Entries {
     * files whose dead fraction crossed the threshold. CatalogSpec pins
     * threshold selectivity (below-threshold files keep bytes AND
     * vectors), the full-compaction sweep, and the refusal paths. */
-  private val s36Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s36Table(s: SparkSession, d: String): String =
-    s36Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s36Table: Artifact[String] =
+    Artifact("s36_table", "lake_base4", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       s.sql(s"""CREATE TABLE IF NOT EXISTS $cat.lake.docs_compacted
                |  (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)
@@ -2976,7 +2930,7 @@ object Relational extends Entries {
         s"s36: full compaction must rewrite files and sweep every vector, " +
           s"got ${rep.mkString}")
       s"$cat.lake.docs_compacted"
-    })
+    }
 
   def s36CompactedAgg(s: SparkSession, d: String): DataFrame = {
     val df = s.table(s36Table(s, d))
@@ -3016,10 +2970,8 @@ object Relational extends Entries {
     * later range query on any indexed dimension reads the few files
     * whose rectangle intersects it (Delta/Iceberg's layout game, carried
     * by the source's own sidecars). */
-  private val s37Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s37Table(s: SparkSession, d: String): String =
-    s37Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s37Table: Artifact[String] =
+    Artifact("s37_table", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       s.sql(s"""CREATE TABLE IF NOT EXISTS $cat.lake.docs_z
                |  (doc_id BIGINT, source STRING, n_chars BIGINT)""".stripMargin)
@@ -3038,7 +2990,7 @@ object Relational extends Entries {
           rep.head.getLong(1) <= 12L,
         s"s37: zorder must publish 2..12 z files, got ${rep.mkString}")
       s"$cat.lake.docs_z"
-    })
+    }
 
   def s37ZorderScan(s: SparkSession, d: String): DataFrame = {
     val t = s.table(s37Table(s, d))
@@ -3085,10 +3037,8 @@ object Relational extends Entries {
     * entry's aggregate then `require`s the merged sidecar still answers
     * from metadata — the proofs survived the merge bit for bit — and the
     * oracle recomputes the post-UPDATE state from the original parquet. */
-  private val s38Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s38Table(s: SparkSession, d: String): String =
-    s38Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s38Table: Artifact[String] =
+    Artifact("s38_table", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       s.sql(s"""CREATE TABLE IF NOT EXISTS $cat.lake.docs_vacuum
                |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -3116,7 +3066,7 @@ object Relational extends Entries {
         s"s38: vacuum must reclaim the temp, merge to one sidecar and drop " +
           s"dead entries, got ${rep.mkString}")
       s"$cat.lake.docs_vacuum"
-    })
+    }
 
   def s38VacuumedAgg(s: SparkSession, d: String): DataFrame = {
     val df = s.table(s38Table(s, d))
@@ -3154,18 +3104,16 @@ object Relational extends Entries {
     * and re-reads — skipped files are provably never opened. At 100 TB
     * this is the id-lookup path: a needle query over an unclustered
     * corpus reads kilobytes of sidecar instead of terabytes of text. */
-  private val s39Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s39Layout(s: SparkSession, d: String): String =
-    s39Cache.computeIfAbsent(s, d, _ => {
-      val out = scratch("s39_bloom_write", d, s)
+  private[graft] val s39Layout: Artifact[String] =
+    Artifact("s39_layout") { (s, d) =>
+      val out = Scratch.path("s39_bloom_write", d, s)
       documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .repartition(8, col("doc_id"))
         .write.format("graft-jsonl").option("bloomFor", "doc_id,source")
         .mode("overwrite").save(out)
       out
-    })
+    }
 
   def s39BloomLookup(s: SparkSession, d: String): DataFrame = {
     def read() = s.read.format("graft-jsonl").schema(s25Schema)
@@ -3198,17 +3146,15 @@ object Relational extends Entries {
     * CatalogSpec proves the zero-read property by corrupting every data
     * file first. At 100 TB this is the catalog browse operation every
     * warehouse runs constantly, answered without touching the corpus. */
-  private val s40Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s40Table(s: SparkSession, d: String): String =
-    s40Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s40Table: Artifact[String] =
+    Artifact("s40_table", "s30_lake", "lake_base3") { (s, d) =>
       val cat = s30Lake(s, d)
       lakeDocsBase3(s, d)
       s.sql(s"CALL $cat.system.clone(source => 'lake.docs_base3', " +
         s"target => 'lake.docs_parts')").collect()
       s.sql(s"DELETE FROM $cat.lake.docs_parts WHERE lang = 'zh'")
       s"$cat.lake.docs_parts"
-    })
+    }
 
   def s40ShowPartitions(s: SparkSession, d: String): DataFrame =
     s.sql(s"SHOW PARTITIONS ${s40Table(s, d)}").orderBy(col("partition"))
@@ -3228,17 +3174,15 @@ object Relational extends Entries {
     * recomputes with the partition inverted. At 100 TB: dropping a bad
     * ingest day/language is a handful of driver-side renames, not a
     * terabyte rewrite. */
-  private val s41Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s41Table(s: SparkSession, d: String): String =
-    s41Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s41Table: Artifact[String] =
+    Artifact("s41_table", "s30_lake", "lake_base3") { (s, d) =>
       val cat = s30Lake(s, d)
       lakeDocsBase3(s, d)
       s.sql(s"CALL $cat.system.clone(source => 'lake.docs_base3', " +
         s"target => 'lake.docs_trunc')").collect()
       s.sql(s"TRUNCATE TABLE $cat.lake.docs_trunc PARTITION (lang = 'es')")
       s"$cat.lake.docs_trunc"
-    })
+    }
 
   def s41TruncatePartition(s: SparkSession, d: String): DataFrame = {
     val df = s.table(s41Table(s, d))
@@ -3279,10 +3223,8 @@ object Relational extends Entries {
     * metadata-aggregation veto while vectors live and the exact
     * byte-snapshot. The oracle recomputes the merged state from the
     * original parquet. */
-  private val s42Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s42Table(s: SparkSession, d: String): String =
-    s42Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s42Table: Artifact[String] =
+    Artifact("s42_table", "lake_base3", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       s.sql(s"""CREATE TABLE IF NOT EXISTS $cat.lake.docs_morup
                |  (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)
@@ -3318,7 +3260,7 @@ object Relational extends Entries {
         "s42: the MERGE published no delete vectors — matched rows' old " +
           "images were not retired")
       s"$cat.lake.docs_morup"
-    })
+    }
 
   def s42MorUpsert(s: SparkSession, d: String): DataFrame =
     s.table(s42Table(s, d))
@@ -3357,10 +3299,8 @@ object Relational extends Entries {
     * 100 TB this is Delta/Iceberg time travel: versions share unchanged
     * files, storage ∝ deltas, reproducing last week's training run is a
     * metadata lookup. */
-  private val s43Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s43Table(s: SparkSession, d: String): String =
-    s43Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s43Table: Artifact[String] =
+    Artifact("s43_table", "lake_base3", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       s.sql(s"""CREATE TABLE IF NOT EXISTS $cat.lake.docs_tt
                |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -3378,7 +3318,7 @@ object Relational extends Entries {
       require(v1 == 1L && v2 == 2L,
         s"s43: expected snapshot versions 1 and 2, got $v1 and $v2")
       s"$cat.lake.docs_tt"
-    })
+    }
 
   def s43CatalogTimeTravel(s: SparkSession, d: String): DataFrame = {
     val t = s43Table(s, d)
@@ -3415,10 +3355,8 @@ object Relational extends Entries {
     * oracle recomputes both legs from the original parquet. At 100 TB
     * this is how downstream pipelines stay incremental: re-embed the
     * feed, not the lake. */
-  private val s44Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s44Table(s: SparkSession, d: String): String =
-    s44Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s44Table: Artifact[String] =
+    Artifact("s44_table", "lake_base3", "lake_base4", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       s.sql(s"""CREATE TABLE IF NOT EXISTS $cat.lake.docs_cdc
                |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -3438,7 +3376,7 @@ object Relational extends Entries {
       require(v1 == 1L && v2 == 2L,
         s"s44: expected snapshot versions 1 and 2, got $v1 and $v2")
       lakeTableDir(s, cat, "docs_cdc")
-    })
+    }
 
   def s44ChangesFeed(s: SparkSession, d: String): DataFrame =
     graft.sources.JsonlChanges.between(s, s44Table(s, d), 1, 2)
@@ -3479,17 +3417,16 @@ object Relational extends Entries {
     * strategy FLIP on sketch evidence (drop the sidecars, the hint is
     * gone and the join re-plans as SMJ). Correctness here is oracled
     * like any entry; the flip itself is DataSourceV2Spec's to pin. */
-  private val s45Cache = new graft.SessionMemo[String, String]
-  private[graft] def s45Layout(s: SparkSession, d: String): String =
-    s45Cache.computeIfAbsent(s, d, _ => {
-      val out = scratch("s45_ndv", d, s)
+  private[graft] val s45Layout: Artifact[String] =
+    Artifact("s45_ndv") { (s, d) =>
+      val out = Scratch.path("s45_ndv", d, s)
       documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .repartition(8) // several files → the plan-time merge is real
         .write.format("graft-jsonl").mode("overwrite")
         .option("ndvFor", "lang,source").save(out)
       out
-    })
+    }
 
   def s45NdvBroadcastAgg(s: SparkSession, d: String): DataFrame = {
     val lake = s.read.format("graft-jsonl").schema(s25Schema)
@@ -3517,18 +3454,16 @@ object Relational extends Entries {
 
   // === s46 — NDV-driven multi-way join reordering ==========================
 
-  private val s46Cache = new graft.SessionMemo[String, (String, String)]
-
   /** Two sketch-carrying jsonl lookup layouts joined against the s45
     * corpus layout: `weights` (5 langs × 50 slots — the MID-SIZED dim)
     * and `boost` (one row per source — the SMALL dim). Both publish
     * `_ndv` sketches on their join key and exact per-file row counts, the
     * evidence [[graft.plans.NdvJoinReorderRule]] needs to PROVE the
     * corpus⋈boost intermediate smaller than corpus⋈weights. */
-  private[graft] def s46Layout(s: SparkSession, d: String): (String, String) =
-    s46Cache.computeIfAbsent(s, d, _ => {
-      val bOut = scratch("s46_weights", d, s)
-      val cOut = scratch("s46_boost", d, s)
+  private[graft] val s46Layout: Artifact[(String, String)] =
+    Artifact("s46_layout") { (s, d) =>
+      val bOut = Scratch.path("s46_weights", d, s)
+      val cOut = Scratch.path("s46_boost", d, s)
       documents(s, d).select(col("lang")).distinct()
         .select(col("lang"), explode(expr("sequence(0, 49)")).as("slot"))
         .select(col("lang"), col("slot").cast(LongType).as("slot"))
@@ -3540,7 +3475,7 @@ object Relational extends Entries {
         .write.format("graft-jsonl").mode("overwrite")
         .option("ndvFor", "source").save(cOut)
       (bOut, cOut)
-    })
+    }
 
   private val s46WeightsSchema = StructType(Seq(
     StructField("lang", StringType), StructField("slot", LongType),
@@ -3599,8 +3534,6 @@ object Relational extends Entries {
 
   // === s47 — atomic multi-table commit (CALL system.transact) =============
 
-  private val s47Cache = new graft.SessionMemo[String, String]
-
   /** Stage the reference's star shape (orders fact + customer dim,
     * `metro.sql:42-59`) through FOUR atomic multi-table transactions —
     * each batch carries the customers with `c_custkey % 4 = i` and
@@ -3608,8 +3541,8 @@ object Relational extends Entries {
     * fact rows never exist without their dim row, the all-or-nothing
     * property [[graft.sources.JsonlTransact]] guarantees (and CatalogSpec
     * crash-injects). Returns the catalog name. */
-  private[graft] def s47Tables(s: SparkSession, d: String): String =
-    s47Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val s47Tables: Artifact[String] =
+    Artifact("s47_tables", "s30_lake") { (s, d) =>
       val cat = s30Lake(s, d)
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.txn")
       s.sql(s"""CREATE TABLE IF NOT EXISTS $cat.txn.fact47
@@ -3632,7 +3565,7 @@ object Relational extends Entries {
           s"s47: transact batch $i must commit both tables, got ${rep.mkString}")
       }
       cat
-    })
+    }
 
   /** S47 (extension): the star the transactions built, read back through
     * the catalog and FK-verified IN the result: every fact row must find
@@ -3746,16 +3679,14 @@ object Relational extends Entries {
     * overwrite that restates one year on top of it. The restatement is
     * idempotent (it replaces partition 1995 with the same content), so
     * re-invocations over the memoized layout land in the same state. */
-  private val s21LayoutCache =
-    new graft.SessionMemo[String, String]
-  private[graft] def s21Layout(s: SparkSession, d: String): String =
-    s21LayoutCache.computeIfAbsent(s, d, _ => {
-      val out = scratch("s21", d, s)
+  private[graft] val s21Layout: Artifact[String] =
+    Artifact("s21_layout") { (s, d) =>
+      val out = Scratch.path("s21", d, s)
       lineitem(s, d).withColumn("l_year", year(col("l_shipdate")))
         .withColumn("batch", lit("initial"))
         .write.mode("overwrite").partitionBy("l_year").parquet(out)
       out
-    })
+    }
 
   def s21DynamicOverwrite(s: SparkSession, d: String): DataFrame = {
     val out = s21Layout(s, d)
@@ -3781,6 +3712,14 @@ object Relational extends Entries {
       |                     ELSE l_quantity END AS DECIMAL(18,2))) AS DOUBLE)
       |    AS sum_qty
       |FROM lineitem GROUP BY 1, 2 ORDER BY l_year, batch""".stripMargin
+
+  /** This module's rows of [[graft.Artifacts.all]], in prebuild order. */
+  val artifacts: Seq[Artifact[_]] = Seq(
+    yearLayout, s10Tables, s14Layout, s20Prepare, s21Layout, j21Materialize,
+    s24Layout, s25Layout, s27Layout, s29Layout, s30Lake, lakeDocsBase4, lakeDocsBase3,
+    s31Table, s32Table, s33Table, s34Table, s35Lake, s36Table, s37Table, s38Table,
+    s39Layout, s40Table, s41Table, s42Table, s43Table, s44Table, s45Layout, s46Layout,
+    s47Tables)
 
   val entries: Seq[Entry] = Seq(
     Entry("s04_upsert_last_write_wins", s04UpsertLww _, s04Sql),

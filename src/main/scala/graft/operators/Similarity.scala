@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
-import graft.{Entries, Entry, Tables}
+import graft.{Artifact, Entries, Entry, Scratch, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (SURVEY.md §7.3 M5): brute-force cosine top-k as the exact baseline, a
@@ -562,7 +562,7 @@ object Similarity extends Entries {
     memo.computeIfAbsent(s, d, _ => {
       val sv = pqSubvectors(pqCorpus(raw, normalize), cfg)
       val cents = pqBooks(s, d, sv, cfg, normalize).toDF("sub", "code", "cv")
-      val out = graft.operators.Dedup.uniquePath(
+      val out = Scratch.path(
         s"pq_codes_${tag}_m${cfg.m}k${cfg.kcent}_$normalize", d, s)
       sv.join(broadcast(cents), Seq("sub"))
         .withColumn("dist", expr(l2Expr))
@@ -1152,7 +1152,7 @@ object Similarity extends Entries {
     // artifact: the unmemoized form re-tokenized and re-wrote the parquet
     // on every invocation (0.9 s of each bench retry was this write).
     val tf = n11TfCache.computeIfAbsent(s, d, _ => {
-      val tfPath = Dedup.uniquePath("n11_tf", d, s)
+      val tfPath = Scratch.path("n11_tf", d, s)
       Tables.documents(s, d).select(col("doc_id"),
           explode(expr("filter(split(lower(text), '\\\\s+'), t -> t != '')")).as("t"))
         .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
@@ -1480,6 +1480,13 @@ object Similarity extends Entries {
       .filter(col("qid") =!= col("ib"))
     topK(scored)
   }
+
+  /** This module's rows of [[graft.Artifacts.all]], in prebuild order. */
+  val artifacts: Seq[Artifact[_]] = Seq(
+    Artifact("ann_ivf", "s30_lake")(forceIvfIndex),
+    Artifact("ann_ivf_coarse", "s30_lake")(forceIvfCoarseIndex),
+    Artifact("ann_pq_raw", "s30_lake")(forcePqRawIndex),
+    Artifact("ann_pq_fine", "s30_lake")(forcePqFineIndex))
 
   val entries: Seq[Entry] = Seq(
     // the columnar kernel is an execution change only — n01's oracle

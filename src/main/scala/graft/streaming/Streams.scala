@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 import org.apache.spark.sql.types._
 
-import graft.{Entries, Entry, Tables}
+import graft.{Artifact, Entries, Entry, Scratch, Tables}
 
 /** Streaming surface (SURVEY.md §2.9).
   *
@@ -1401,14 +1401,12 @@ object Streams extends Entries {
     * the DuckDB oracle), and StreamingSpec drops the SAME waves one at a
     * time into a fresh directory, advancing the query between drops, and
     * proves the streamed aggregate state equals this batch result. */
-  private val st24Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def st24Waves(s: SparkSession, d: String): String =
-    st24Cache.computeIfAbsent(s, d, _ => {
-      val root = graft.operators.Relational.scratch("st24_waves", d, s)
+  private[graft] val st24Waves: Artifact[String] =
+    Artifact("st24_waves") { (s, d) =>
+      val root = Scratch.path("st24_waves", d, s)
       stageWaves(s, d, root)
       root
-    })
+    }
 
   /** Write documents as wave JSONL files under `root` (names sort in drop
     * order — the contract [[graft.sources.JsonlV2]]'s stream offsets rely
@@ -1464,15 +1462,13 @@ object Streams extends Entries {
     * recomputes from the original parquet — so ingest, transform,
     * streaming commit, sidecar stats and read-back must ALL be lossless
     * end to end. */
-  private val st25Cache =
-    new graft.SessionMemo[String, String]
   private[graft] val st25Schema = StructType(Seq(
     StructField("doc_id", LongType), StructField("lang", StringType),
     StructField("n_chars", LongType)))
-  private[graft] def st25Out(s: SparkSession, d: String): String =
-    st25Cache.computeIfAbsent(s, d, _ => {
-      val out = graft.operators.Relational.scratch("st25_out", d, s)
-      val ckpt = graft.operators.Relational.scratch("st25_ckpt", d, s)
+  private[graft] val st25Out: Artifact[String] =
+    Artifact("st25_out", "st24_waves") { (s, d) =>
+      val out = Scratch.path("st25_out", d, s)
+      val ckpt = Scratch.path("st25_ckpt", d, s)
       val q = jsonlDocStream(s, st24Waves(s, d))
         .filter(col("n_chars") >= 100)
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -1482,7 +1478,7 @@ object Streams extends Entries {
         .start(out)
       q.processAllAvailable(); q.stop()
       out
-    })
+    }
 
   def st25JsonlSink(s: SparkSession, d: String): DataFrame =
     s.read.format("graft-jsonl").schema(st25Schema).load(st25Out(s, d))
@@ -1509,17 +1505,15 @@ object Streams extends Entries {
     * file skipping (3 of 5 lang files never read — DataSourceV2Spec
     * proves the skip by corrupting excluded files) and the sink commit
     * must all be lossless. */
-  private val st26Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def st26Out(s: SparkSession, d: String): String =
-    st26Cache.computeIfAbsent(s, d, _ => {
-      val drop = graft.operators.Relational.scratch("st26_drop", d, s)
+  private[graft] val st26Out: Artifact[String] =
+    Artifact("st26_out") { (s, d) =>
+      val drop = Scratch.path("st26_drop", d, s)
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .write.format("graft-jsonl").option("partitionBy", "lang")
         .mode("overwrite").save(drop)
-      val out = graft.operators.Relational.scratch("st26_out", d, s)
-      val ckpt = graft.operators.Relational.scratch("st26_ckpt", d, s)
+      val out = Scratch.path("st26_out", d, s)
+      val ckpt = Scratch.path("st26_ckpt", d, s)
       val q = s.readStream.format("graft-jsonl")
         .schema(graft.operators.Relational.s25Schema)
         .option("where", "lang = 'en' OR lang = 'fr'")
@@ -1530,7 +1524,7 @@ object Streams extends Entries {
         .start(out)
       q.processAllAvailable(); q.stop()
       out
-    })
+    }
 
   def st26WhereStream(s: SparkSession, d: String): DataFrame =
     s.read.format("graft-jsonl").schema(graft.operators.Relational.s25Schema)
@@ -1554,12 +1548,10 @@ object Streams extends Entries {
     * `require`s the bloom skip. At 100 TB this kills the "streaming
     * lands raw, a batch job re-lays it out" stage entirely: data is
     * catalog-queryable at full speed the moment its epoch commits. */
-  private val st27Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def st27Out(s: SparkSession, d: String): String =
-    st27Cache.computeIfAbsent(s, d, _ => {
-      val out = graft.operators.Relational.scratch("st27_out", d, s)
-      val ckpt = graft.operators.Relational.scratch("st27_ckpt", d, s)
+  private[graft] val st27Out: Artifact[String] =
+    Artifact("st27_out", "st24_waves") { (s, d) =>
+      val out = Scratch.path("st27_out", d, s)
+      val ckpt = Scratch.path("st27_ckpt", d, s)
       val q = jsonlDocStream(s, st24Waves(s, d))
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .writeStream.format("graft-jsonl")
@@ -1570,7 +1562,7 @@ object Streams extends Entries {
         .start(out)
       q.processAllAvailable(); q.stop()
       out
-    })
+    }
 
   def st27StreamedLake(s: SparkSession, d: String): DataFrame = {
     def read() = s.read.format("graft-jsonl")
@@ -1648,10 +1640,8 @@ object Streams extends Entries {
     ()
   }
 
-  private val st28Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def st28Table(s: SparkSession, d: String): String =
-    st28Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val st28Table: Artifact[String] =
+    Artifact("st28_table", "s30_lake", "st24_waves") { (s, d) =>
       val cat = graft.operators.Relational.s30Lake(s, d)
       val tbl = s"$cat.lake.docs_stream_merge"
       s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl
@@ -1662,8 +1652,8 @@ object Streams extends Entries {
         .select(col("doc_id"), col("lang"), col("source"),
           lit(-1L).as("n_chars"))
         .writeTo(tbl).append()
-      val ckpt = graft.operators.Relational.scratch("st28_ckpt", d, s)
-      val fence = graft.operators.Relational.scratch("st28_fence", d, s)
+      val ckpt = Scratch.path("st28_ckpt", d, s)
+      val fence = Scratch.path("st28_fence", d, s)
       val q = jsonlDocStream(s, st24Waves(s, d))
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .writeStream
@@ -1674,7 +1664,7 @@ object Streams extends Entries {
         .start()
       q.processAllAvailable(); q.stop()
       tbl
-    })
+    }
 
   def st28StreamMerge(s: SparkSession, d: String): DataFrame = {
     val df = s.table(st28Table(s, d))
@@ -1709,13 +1699,11 @@ object Streams extends Entries {
     * snapshot, re-process the delta, never the lake. StreamingSpec
     * additionally pins row-level equality with the batch feed and that
     * a later snapshot's trigger picks up only ITS delta. */
-  private val st29Cache =
-    new graft.SessionMemo[String, String]
-  private[graft] def st29Out(s: SparkSession, d: String): String =
-    st29Cache.computeIfAbsent(s, d, _ => {
+  private[graft] val st29Out: Artifact[String] =
+    Artifact("st29_out", "s44_table") { (s, d) =>
       val dir = graft.operators.Relational.s44Table(s, d)
-      val out = graft.operators.Relational.scratch("st29_out", d, s)
-      val ckpt = graft.operators.Relational.scratch("st29_ckpt", d, s)
+      val out = Scratch.path("st29_out", d, s)
+      val ckpt = Scratch.path("st29_ckpt", d, s)
       val q = s.readStream.format("graft-jsonl")
         .schema(StructType(Seq(
           StructField("doc_id", LongType), StructField("lang", StringType),
@@ -1729,7 +1717,7 @@ object Streams extends Entries {
         .start(out)
       q.processAllAvailable(); q.stop()
       out
-    })
+    }
 
   def st29ChangesStream(s: SparkSession, d: String): DataFrame =
     s.read.parquet(st29Out(s, d))
@@ -1763,6 +1751,10 @@ object Streams extends Entries {
     q.stop()
     s.table(name)
   }
+
+  /** This module's rows of [[graft.Artifacts.all]], in prebuild order. */
+  val artifacts: Seq[Artifact[_]] = Seq(
+    st24Waves, st25Out, st26Out, st27Out, st28Table, st29Out)
 
   val entries: Seq[Entry] = Seq(
     Entry("st01_tumbling_window", st01Tumbling _, st01Sql),

@@ -265,13 +265,13 @@ class OperatorInvariantSpec extends SparkSpec {
     val fwd = spark.range(0, n - 1)
       .select(col("id").as("src"), (col("id") + 1).as("dst"))
     val doubled = fwd.union(fwd.select(col("dst"), col("src"))).toDF("src", "dst")
-    val labels = Dedup.labelsFromEdges(spark, doubled, "test_chain600", d)
+    val labels = Dedup.computeLabelsFromEdges(spark, doubled, "test_chain600", d)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size === n.toInt, "every chain vertex gets a label")
     assert(got.values.forall(_ == 0L),
       "the chain is ONE component; every label must collapse to vertex 0")
-    assert(Dedup.labelsFromEdges(spark, doubled, "test_chain600", d)
-      eq labels, "labelsFromEdges memoization lost for repeat invocation")
+    assert(Dedup.clusterLabels(spark, d) eq Dedup.clusterLabels(spark, d),
+      "dedup_labels memoization lost for repeat invocation")
   }
 
   test("x18 invariant: near-dup clusters never straddle splits (the " +
@@ -599,8 +599,8 @@ class OperatorInvariantSpec extends SparkSpec {
       new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
     val compacted = Relational.queries("s14_compaction")(spark, d)
       .collect().map(_.toSeq)
-    val nFrag = parquetFiles(Relational.scratch("s14_fragmented", d, spark))
-    val nComp = parquetFiles(Relational.scratch("s14_compacted", d, spark))
+    val nFrag = parquetFiles(Scratch.path("s14_fragmented", d, spark))
+    val nComp = parquetFiles(Scratch.path("s14_compacted", d, spark))
     // repartition(64) emits a file per NON-EMPTY partition; assert genuine
     // fragmentation rather than exactly 64 (a sparse fixture may leave
     // round-robin partitions empty)
@@ -756,7 +756,7 @@ class OperatorInvariantSpec extends SparkSpec {
     val props = new java.util.Properties
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
     val back = spark.read.jdbc(
-      s"jdbc:derby:${Relational.scratch("s18_derby", d, spark)}", "customer_dim",
+      s"jdbc:derby:${Scratch.path("s18_derby", d, spark)}", "customer_dim",
       (0 until 4).map(i => s"""MOD("c_custkey", 4) = $i""").toArray, props)
     assert(back.rdd.getNumPartitions === 4, "one task per shard predicate")
     // losslessness: row-identical to the parquet source (not just agg-equal)
@@ -876,7 +876,7 @@ class OperatorInvariantSpec extends SparkSpec {
     assert(out(2)._1 === nAll, "v2 must see the full appended table")
     // snapshot isolation: v1's file set survives a concurrent DELTA append
     // (writer #2 re-lands the v2 file set; v1's files must not be touched)
-    val base = Relational.scratch("s19", d, spark)
+    val base = Scratch.path("s19", d, spark)
     val v1Dir = new java.io.File(s"$base/files_v1")
     val before = v1Dir.list().sorted.toSeq
     assert(before.nonEmpty, "entry must have materialized v1")
@@ -1037,7 +1037,7 @@ class OperatorInvariantSpec extends SparkSpec {
     // the untouched years must keep identical (name, size, mtime) file
     // sets while 1995's files are rewritten
     Relational.queries("s21_dynamic_overwrite")(spark, d).collect()
-    val base = new java.io.File(Relational.scratch("s21", d, spark))
+    val base = new java.io.File(Scratch.path("s21", d, spark))
     def layout(): Map[String, Seq[(String, Long, Long)]] =
       base.listFiles().filter(_.getName.startsWith("l_year=")).map { dir =>
         dir.getName -> dir.listFiles().filter(_.getName.endsWith(".parquet"))
@@ -1283,12 +1283,12 @@ class OperatorInvariantSpec extends SparkSpec {
         s"text group $group split across m11 clusters")
     }
     // transitive cross-modal composition on a synthetic graph: A≡t B≡v C
-    // must label as one component through the shared labelsFromEdges loop
+    // must label as one component through the shared computeLabelsFromEdges loop
     import spark.implicits._
     val stars = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
     val edges = stars.unionAll(stars.select(col("dst").as("src"), col("src").as("dst")))
     val lbl = graft.operators.Dedup
-      .labelsFromEdges(spark, edges, "m11_spec_labels", d)
+      .computeLabelsFromEdges(spark, edges, "m11_spec_labels", d)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lbl(1L) === 1L && lbl(2L) === 1L && lbl(3L) === 1L)
     assert(lbl(10L) === 10L && lbl(11L) === 10L)

@@ -5,9 +5,10 @@ import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every SparkSession comes from [[GraftSession.local]], every graft SQL
-  * function from the [[graft.functions.GraftExtensions]] table and every
-  * entry from an [[Entry]] table: a builder, a registration or a map
-  * anywhere else is a second copy, free to drift. */
+  * function from the [[graft.functions.GraftExtensions]] table, every
+  * entry from an [[Entry]] table and every artifact is a row of
+  * [[Artifacts.all]]: a builder, a registration or a map anywhere else is
+  * a second copy, free to drift. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private def sources(f: File): Seq[File] =
@@ -57,5 +58,15 @@ class SessionGuardSpec extends AnyFunSuite {
     val hits = sources(root("src/main"))
       .filter(f => codeLines(f).exists(l => needles.exists(l.contains)))
     assert(hits.map(_.getName).isEmpty)
+  }
+
+  test("every Artifact defined in src/main is a row of Artifacts.all") {
+    // one left out would build on the first query that touches it,
+    // charging its cost to that query instead of to the prebuild phase
+    val literal = """Artifact\("(\w+)"""".r
+    val defined = sources(root("src/main"))
+      .flatMap(f => codeLines(f).flatMap(l => literal.findAllMatchIn(l).map(_.group(1))))
+    assert(defined.nonEmpty)
+    assert(defined.filterNot(Artifacts.all.map(_._1).contains) === Nil)
   }
 }
