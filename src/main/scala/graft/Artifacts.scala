@@ -84,57 +84,68 @@ object Artifacts {
   /** Force every artifact, dependency-DAG-driven with bounded
     * parallelism: a worker pool of `parallelism` threads drains a ready
     * queue; an artifact enters the queue when its last dependency
-    * completes (or fails — the run must always sweep everything so one
-    * broken artifact cannot hide which later ones were also broken).
-    * Returns (per-artifact seconds in [[all]]'s pinned order, failed
-    * names, PHASE WALL seconds). Per-artifact seconds are measured under
+    * finishes. An artifact one of whose dependencies failed is not built:
+    * it is reported failed, naming that dependency, and its own
+    * dependents are skipped the same way — a build that threw is not
+    * memoized, so building a dependent would only re-run the failed build
+    * inside it. Every artifact that does not depend on a failure is still
+    * built, so one broken artifact cannot hide which unrelated ones are
+    * also broken. Returns (per-artifact seconds in [[all]]'s pinned
+    * order, −1 for a failed or skipped one; failed and skipped names;
+    * PHASE WALL seconds). Per-artifact seconds are measured under
     * whatever concurrency the DAG admits (they attribute work and catch
     * regressions; their SUM overstates the phase), and the wall is what
     * the phase actually costs the pipeline — Bench reports both. The
     * CALLER owns failing the run (Bench exits rc 1 and lists failures in
     * `errors`). */
   def prebuild(s: SparkSession, d: String, parallelism: Int = 8)
-      : (Seq[(String, Double)], Seq[String], Double) = {
-    val names = all.map(_._1)
-    val builders = all.toMap
+      : (Seq[(String, Double)], Seq[String], Double) =
+    prebuild(table, s, d, parallelism)
+
+  /** [[prebuild]] over any validated table. */
+  private[graft] def prebuild(table: Seq[Artifact[_]], s: SparkSession, d: String,
+      parallelism: Int): (Seq[(String, Double)], Seq[String], Double) = {
     val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val times = new java.util.concurrent.ConcurrentHashMap[String, Double]
     // remaining-dependency counts; an artifact is READY at zero
-    val remaining = new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.atomic.AtomicInteger]
-    val dependents = names.map(n => n -> names.filter(deps(_).contains(n))).toMap
-    names.foreach { n =>
-      remaining.put(n, new java.util.concurrent.atomic.AtomicInteger(deps(n).size))
-    }
-    val done = new java.util.concurrent.CountDownLatch(names.size)
+    val remaining = table.map(a =>
+      a.name -> new java.util.concurrent.atomic.AtomicInteger(a.deps.size)).toMap
+    val dependents = table.map(a => a.name -> table.filter(_.deps.contains(a.name))).toMap
+    val done = new java.util.concurrent.CountDownLatch(table.size)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, parallelism))
+    def fail(name: String): Unit = { failed.add(name); times.put(name, -1.0); () }
     val t0 = System.nanoTime()
-    def submit(name: String): Unit = pool.execute { () =>
-      val b0 = System.nanoTime()
-      try {
-        builders(name)(s, d)
-        times.put(name, (System.nanoTime() - b0) / 1e9); ()
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[artifacts] $name FAILED: ${e.getMessage}")
-          failed.add(name); times.put(name, -1.0); ()
+    def submit(a: Artifact[_]): Unit = pool.execute { () =>
+      // a dep's failure is recorded before its dependents are released,
+      // so every failed dep is visible here
+      a.deps.find(failed.contains) match {
+        case Some(dep) =>
+          System.err.println(s"[artifacts] ${a.name} NOT BUILT: its dep $dep failed")
+          fail(a.name)
+        case None =>
+          val b0 = System.nanoTime()
+          try {
+            a(s, d)
+            times.put(a.name, (System.nanoTime() - b0) / 1e9); ()
+          } catch {
+            case e: Throwable =>
+              System.err.println(s"[artifacts] ${a.name} FAILED: ${e.getMessage}")
+              fail(a.name)
+          }
       }
-      // release dependents regardless of outcome — a dependent of a
-      // failed build either fails loudly itself (its memoized input
-      // rethrows) or succeeds independently; both land in the report
-      dependents(name).foreach { m =>
-        if (remaining.get(m).decrementAndGet() == 0) submit(m)
+      dependents(a.name).foreach { m =>
+        if (remaining(m.name).decrementAndGet() == 0) submit(m)
       }
       done.countDown()
     }
     try {
-      names.filter(n => remaining.get(n).get() == 0).foreach(submit)
+      table.filter(_.deps.isEmpty).foreach(submit)
       done.await()
     } finally pool.shutdown()
     val wall = (System.nanoTime() - t0) / 1e9
     import scala.jdk.CollectionConverters._
-    (all.map { case (n, _) => n -> times.getOrDefault(n, -1.0) },
+    (table.map(a => a.name -> times.getOrDefault(a.name, -1.0)),
       failed.iterator().asScala.toSeq, wall)
   }
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * loop, stays inside whole-stage codegen, and accumulates each term in
   * array order with the exact double-arithmetic shape of the DuckDB oracle
   * (`dot / (sqrt(na) * sqrt(nb))`), so results are bit-identical to the
-  * HOF form it replaces.
+  * HOF form it replaces (KernelPropertySpec pins that).
   */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {

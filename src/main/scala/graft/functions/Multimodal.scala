@@ -237,18 +237,13 @@ object Multimodal extends Entries {
 
   // === m04 — perceptual-hash media dedup =====================================
 
-  /** 64-bit perceptual hash of the decoded asset: the 16×16 raster is
+  /** 64-bit perceptual hash of a decoded asset's raster, called by the
+    * shared one-decode pass [[mediaDecoded]]: the 16×16 raster is
     * averaged into an 8×8 grid and each cell contributes one bit (above
     * the grid mean). Visually identical assets hash identically; small
     * pixel edits flip few bits — the classic pHash construction (DCT
     * omitted: block means are its low-frequency essence and stay
     * deterministic in integer/double arithmetic). */
-  private[graft] def phash64(payload: Array[Byte]): Long =
-    phashOfRaster(javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(encodePng(payload))).getRaster)
-
-  /** pHash core over a decoded raster (see [[phash64]]; factored for the
-    * shared one-decode pass [[mediaDecoded]]). */
   private def phashOfRaster(raster: java.awt.image.Raster): Long = {
     val cells = new Array[Double](64)
     var by = 0
@@ -951,15 +946,10 @@ object Multimodal extends Entries {
 
   // === m12 — ViT-style patch embedding prep ==================================
 
-  /** m12 core: per-patch means off the decoded raster — exact doubles
-    * because each 4×4 patch mean is a /16 power-of-two division of an
-    * integer pixel sum. */
-  private[graft] def patchMeans(payload: Array[Byte]): Array[Double] =
-    patchOfRaster(javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(encodePng(payload))).getRaster)
-
-  /** Patch-mean core over a decoded raster (see [[patchMeans]]; factored
-    * for the shared one-decode pass [[mediaDecoded]]). */
+  /** m12 core, called by the shared one-decode pass [[mediaDecoded]]:
+    * per-patch means off the decoded raster — exact doubles because each
+    * 4×4 patch mean is a /16 power-of-two division of an integer pixel
+    * sum. */
   private def patchOfRaster(raster: java.awt.image.Raster): Array[Double] = {
     Array.tabulate(16) { p =>
       val x0 = (p % 4) * 4

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{Artifact, Entries, Entry, Scratch, Tables}
+import graft.functions.GraftExtensions.{bpeStats, cdcBoundaries, nfcNormalize,
+  rollingHashMin, stopwordHits, wordShingles}
 
 /** Text-analysis operators for a training-data pipeline (SURVEY.md §7.3 M5)
   * over the `documents` table: token counting, language-ID heuristic,
@@ -22,6 +24,9 @@ object TextAnalysis extends Entries {
   /** Whitespace tokens of the lowercased text. */
   private def toks: Column = split(lower(col("text")), "\\s+")
 
+  /** The non-empty whitespace tokens of the lowercased text. */
+  private[graft] def words: Column = filter(toks, _ =!= "")
+
   /** The tokenized corpus `(doc_id, lang, ws)` — ONE interpreted-HOF
     * tokenizer pass over `documents`, parquet-materialized + memoized per
     * (session, corpus): x11/x12/x15 and the [[x26Bigrams]] artifact all
@@ -32,8 +37,7 @@ object TextAnalysis extends Entries {
   private[graft] val xTokens: Artifact[DataFrame] =
     Artifact("x_tokens") { (s, d) =>
       val out = Scratch.path("x_tokens", d, s)
-      Tables.documents(s, d).select(col("doc_id"), col("lang"),
-          expr("filter(split(lower(text), '\\\\s+'), t -> t != '')").as("ws"))
+      Tables.documents(s, d).select(col("doc_id"), col("lang"), words.as("ws"))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
     }
@@ -74,7 +78,7 @@ object TextAnalysis extends Entries {
     * was the slowest query of the round-1 bench. */
   def x02LangId(s: SparkSession, d: String): DataFrame = {
     val withHits = Tables.documents(s, d)
-      .withColumn("h", expr("stopword_hits(text)"))
+      .withColumn("h", stopwordHits(col("text")))
     val Seq(en, de, es, fr, zh) = stopwords.indices.map(i => col("h").getItem(i))
     withHits
       .withColumn("pred_lang",
@@ -208,10 +212,10 @@ object TextAnalysis extends Entries {
         when(length(col("text")) <= 0, 0L)
           .when(length(col("text")) < 16, 1L)
           .otherwise((length(col("text")) - 15).cast(LongType)).as("n_windows"),
-        (expr("rolling_hash_min(text, 16)") === expr(
-          """array_min(transform(
-            |  sequence(0, greatest(CAST(floor((length(text) - 16) / 200) AS INT), 0)),
-            |  i -> rolling_hash_min(substring(text, i * 200 + 1, 215), 16)))""".stripMargin))
+        (rollingHashMin(col("text"), lit(16)) === array_min(transform(
+          sequence(lit(0),
+            greatest(floor((length(col("text")) - 16) / 200).cast(IntegerType), lit(0))),
+          i => rollingHashMin(substring(col("text"), i * 200 + 1, lit(215)), lit(16)))))
           .as("chunk_invariant"))
       .orderBy(col("doc_id"))
   }
@@ -223,7 +227,7 @@ object TextAnalysis extends Entries {
     * against the exact Jaccard pairs in ExtensionSpec. */
   private[graft] def x05Clusters(s: SparkSession, d: String): DataFrame = {
     Tables.documents(s, d)
-      .select(col("doc_id"), expr("rolling_hash_min(text, 16)").as("fp"))
+      .select(col("doc_id"), rollingHashMin(col("text"), lit(16)).as("fp"))
       .groupBy(col("fp"))
       .agg(count(lit(1)).as("n_docs"),
         expr("array_join(transform(sort_array(collect_list(doc_id)), x -> CAST(x AS STRING)), ',')")
@@ -502,9 +506,9 @@ object TextAnalysis extends Entries {
   def x10Repetition(s: SparkSession, d: String): DataFrame = {
     val base = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
-        expr("size(filter(split(lower(text), '\\\\s+'), t -> t != ''))").as("nt"),
-        expr("size(array_distinct(filter(split(lower(text), '\\\\s+'), t -> t != '')))").as("ndt"),
-        expr("size(word_shingles(text, 2))").as("nd2"))
+        size(words).as("nt"),
+        size(array_distinct(words)).as("ndt"),
+        size(wordShingles(col("text"), lit(2))).as("nd2"))
       .select(col("doc_id"), col("source"),
         when(col("nt") > 0,
           lit(1.0) - col("ndt").cast(DoubleType) / col("nt")).otherwise(0.0).as("tok_dup"),
@@ -885,8 +889,7 @@ object TextAnalysis extends Entries {
     * p11 discipline); no shuffle until the output sort. */
   def x16LineFilter(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .select(col("doc_id"),
-        expr("filter(split(lower(text), '\\\\s+'), t -> t != '')").as("ws"))
+      .select(col("doc_id"), words.as("ws"))
       .withColumn("w", (col("doc_id") % 4 + 3).cast(IntegerType))
       .withColumn("nl", expr("CASE WHEN size(ws) = 0 THEN CAST(0 AS BIGINT) " +
         "ELSE (size(ws) + w - 1) div w END"))
@@ -952,8 +955,7 @@ object TextAnalysis extends Entries {
     * until the output sort. */
   def x17ChunkOverlap(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .select(col("doc_id"),
-        expr("filter(split(lower(text), '\\\\s+'), t -> t != '')").as("ws"))
+      .select(col("doc_id"), words.as("ws"))
       .withColumn("n", size(col("ws")))
       .withColumn("nc", expr(
         s"CASE WHEN n = 0 THEN CAST(0 AS BIGINT) ELSE (n + ${ChunkStride - 1}) div $ChunkStride END"))
@@ -1058,8 +1060,7 @@ object TextAnalysis extends Entries {
     * kept-empty docs hash the empty string, not NULL. */
   def x19BoilerplateDf(s: SparkSession, d: String): DataFrame = {
     val docLines = Tables.documents(s, d)
-      .select(col("doc_id"),
-        expr("filter(split(lower(text), '\\\\s+'), t -> t != '')").as("ws"))
+      .select(col("doc_id"), words.as("ws"))
       .withColumn("w", (col("doc_id") % 4 + 3).cast(IntegerType))
       .withColumn("nl", expr("CASE WHEN size(ws) = 0 THEN CAST(0 AS BIGINT) " +
         "ELSE (size(ws) + w - 1) div w END"))
@@ -1151,7 +1152,7 @@ object TextAnalysis extends Entries {
     val splits = x18SplitAssign(s, d).select(col("doc_id"), col("split"))
     val pres = Tables.documents(s, d)
       .repartition(32, col("doc_id"))
-      .select(col("doc_id"), explode(expr("word_shingles(text, 5)")).as("g"))
+      .select(col("doc_id"), explode(wordShingles(col("text"), lit(5))).as("g"))
       .join(splits, Seq("doc_id"))
       .groupBy(col("g"))
       .agg(max(when(col("split") === "train", 1L).otherwise(0L)).as("t"),
@@ -1455,9 +1456,9 @@ object TextAnalysis extends Entries {
       .withColumn("dirty", concat(col("text"), suffix))
       .withColumn("sfx", suffix)
       .select(col("doc_id"),
-        (expr("nfc_normalize(dirty)") =!= col("dirty")).as("changed"),
-        md5(expr("nfc_normalize(dirty)")).as("fp_norm"),
-        md5(expr("nfc_normalize(sfx)")).as("sfx_fp"))
+        (nfcNormalize(col("dirty")) =!= col("dirty")).as("changed"),
+        md5(nfcNormalize(col("dirty"))).as("fp_norm"),
+        md5(nfcNormalize(col("sfx"))).as("sfx_fp"))
       .orderBy(col("doc_id"))
   }
 
@@ -1497,7 +1498,7 @@ object TextAnalysis extends Entries {
   private[graft] def cdcChunks(s: SparkSession, docs: DataFrame): DataFrame = {
     docs
       .select(col("doc_id"), col("text"),
-        expr("cdc_boundaries(text, 8, 64)").as("bs"))
+        cdcBoundaries(col("text"), lit(8), lit(64)).as("bs"))
       .withColumn("bb", expr(
         """concat(array(0), bs,
           |  IF(size(bs) = 0 OR element_at(bs, -1) <> length(text),
@@ -1707,7 +1708,7 @@ object TextAnalysis extends Entries {
     * count; the spectrum rollup moves vocabulary-sized data. */
   def x27DupSpectrum(s: SparkSession, d: String): DataFrame = {
     val grams = Tables.documents(s, d)
-      .select(expr("filter(split(lower(text), '\\\\s+'), t -> t != '')").as("ws"))
+      .select(words.as("ws"))
       .select(explode(expr(
         // sequence(1, 0) descends in Spark — guard short docs explicitly
         """IF(size(ws) < 3, cast(array() as array<string>),
@@ -2041,7 +2042,7 @@ object TextAnalysis extends Entries {
     Tables.documents(s, d)
       // coalesce: the null-propagating kernel would emit NULL stats for a
       // NULL text where the oracle's LEFT JOIN + COALESCE emits zeros
-      .select(col("doc_id"), expr("bpe_stats(coalesce(text, ''))").as("st"))
+      .select(col("doc_id"), bpeStats(coalesce(col("text"), lit(""))).as("st"))
       .select(col("doc_id"),
         col("st").getItem(0).as("n_words"),
         col("st").getItem(1).as("n_chars"),

@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.{Entries, Entry, Scratch}
 import graft.Tables._
 import graft.Ops._
+import graft.functions.GraftExtensions.topkRowsAgg
 
 /** SURVEY.md §2.4 aggregations (A1–A10) + §2.5 window functions (W1–W4),
   * plus the aggregate/window surface the reference lacks (marked extension):
@@ -376,8 +377,8 @@ object Aggregates extends Entries {
       .groupBy(col("n_name"), col("s_suppkey"), col("s_name"))
       .agg(dsum(col("l_extendedprice")).as("total_sales"))
       .groupBy(col("n_name"))
-      .agg(expr("topk_rows_agg(total_sales, concat(lpad(CAST(s_suppkey " +
-        "AS STRING), 12, '0'), '|', s_name), 5)").as("top"),
+      .agg(topkRowsAgg(col("total_sales"), concat(lpad(col("s_suppkey")
+        .cast(StringType), 12, "0"), lit("|"), col("s_name")), lit(5)).as("top"),
         count(lit(1)).as("n_sups"))
       .select(col("n_name"), col("n_sups"),
         posexplode(col("top")).as(Seq("pos", "e")))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{Artifact, Entries, Entry, Scratch, Tables}
+import graft.functions.GraftExtensions.{cosineSim, deletionHashes, hyperplaneSketch,
+  minhashSig, simHash64, sortedDigests, sortedInterCount, winnowFingerprints, wordShingles}
 
 /** Deduplication operators for a training-data pipeline (SURVEY.md §7.3 M5)
   * over the `documents` / `embeddings` tables: exact, n-gram Jaccard,
@@ -56,13 +58,13 @@ object Dedup extends Entries {
       val out = Scratch.path("shingles", d, s)
       Tables.documents(s, d)
         .repartition(32, col("doc_id"))
-        .withColumn("shingles", expr("word_shingles(text, 3)"))
+        .withColumn("shingles", wordShingles(col("text"), lit(3)))
         // ascending 64-bit digests of the same shingles: the index/verify
         // stages run on these (8-byte keys, merge-pass intersection) while
         // anything needing the text keeps `shingles` — one table serves
         // both. sorted_digests ≡ array_sort(transform(_, xxhash64)) but a
         // single primitive kernel pass (KernelPropertySpec pins the ≡)
-        .withColumn("hs", expr("sorted_digests(shingles)"))
+        .withColumn("hs", sortedDigests(col("shingles")))
         .select(col("doc_id"), col("shingles"), col("hs"))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out).withColumn("n_sh", size(col("shingles")))
@@ -206,7 +208,7 @@ object Dedup extends Entries {
     val pairs = cands
       .join(byId.toDF("ia", "hs_a"), "ia")
       .join(byId.toDF("ib", "hs_b"), "ib")
-      .withColumn("inter", expr("sorted_inter_count(hs_a, hs_b)"))
+      .withColumn("inter", sortedInterCount(col("hs_a"), col("hs_b")))
       .select(col("ia"), col("ib"),
         jaccard(col("inter"), size(col("hs_a")), size(col("hs_b"))).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
@@ -259,7 +261,7 @@ object Dedup extends Entries {
     Artifact("minhash_signatures", "shingles") { (s, d) =>
       val out = Scratch.path("minhash_sig", d, s)
       shingled(s, d)
-        .withColumn("sig", expr(s"minhash_sig(shingles, $MinhashK)"))
+        .withColumn("sig", minhashSig(col("shingles"), lit(MinhashK)))
         .select(col("doc_id"), col("sig"))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
@@ -349,7 +351,7 @@ object Dedup extends Entries {
     Artifact("simhash_signatures", "shingles") { (s, d) =>
       val out = Scratch.path("simhash_sig", d, s)
       shingled(s, d)
-        .withColumn("simhash", expr("simhash64(shingles)"))
+        .withColumn("simhash", simHash64(col("shingles")))
         .select(col("doc_id"), col("simhash"))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
@@ -422,19 +424,9 @@ object Dedup extends Entries {
     requireBelowExactBound(n, entry, scalePaths)
   }
 
-  /** Double-precision cosine over the float embedding, accumulated in array
-    * order so Spark and DuckDB produce bit-identical values. This HOF form
-    * is the semantic spec; the hot path uses [[graft.functions.CosineSim]]
-    * (codegen, same accumulation order, bit-identical — see its Scaladoc). */
-  private[operators] val cosExpr: String =
-    """aggregate(zip_with(ea, eb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-      |          CAST(0 AS DOUBLE), (acc, v) -> acc + v)
-      | / (sqrt(aggregate(transform(ea, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-      |          CAST(0 AS DOUBLE), (acc, v) -> acc + v))
-      |    * sqrt(aggregate(transform(eb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-      |          CAST(0 AS DOUBLE), (acc, v) -> acc + v)))""".stripMargin
-
-  /** DuckDB twin of [[cosExpr]] — same index-ordered double accumulation. */
+  /** DuckDB twin of [[graft.functions.CosineSim]]: double-precision cosine
+    * over the float embedding, accumulated in array order, so Spark and
+    * DuckDB produce bit-identical values. */
   private[graft] def cosSqlExpr(a: String, b: String): String =
     s"""list_sum(list_transform(range(1, len($a) + 1),
        |  i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))
@@ -491,7 +483,7 @@ object Dedup extends Entries {
       .withColumn("ga", explode(expr("sequence(0, gb)")))
     left.join(right, Seq("ga", "gb"))
       .filter(col("ga") =!= col("gb") || col("ia") < col("ib"))
-      .withColumn("cosine", expr("cosine_sim(ea, eb)"))
+      .withColumn("cosine", cosineSim(col("ea"), col("eb")))
       .filter(col("cosine") >= threshold)
       .select(least(col("ia"), col("ib")).as("ia"),
         greatest(col("ia"), col("ib")).as("ib"),
@@ -567,7 +559,7 @@ object Dedup extends Entries {
     * [[d06EmbeddingNearDupLsh]]. */
   private[graft] def d06LshPairs(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
-      .withColumn("sigs", expr(s"hyperplane_sketch(embedding, $LshTables, $LshBits)"))
+      .withColumn("sigs", hyperplaneSketch(col("embedding"), lit(LshTables), lit(LshBits)))
       .select(col("vec_id"), col("embedding"), col("sigs"))
       .cache() // sketch table — computed once, consumed by both join sides
     val buckets = e.select(col("vec_id"),
@@ -580,7 +572,7 @@ object Dedup extends Entries {
     cands
       .join(byId.toDF("ia", "ea"), "ia")
       .join(byId.toDF("ib", "eb"), "ib")
-      .withColumn("cosine", expr("cosine_sim(ea, eb)"))
+      .withColumn("cosine", cosineSim(col("ea"), col("eb")))
       .filter(col("cosine") >= 0.45)
       .select(col("ia"), col("ib"), round(col("cosine"), 6).as("cosine"))
       .orderBy(col("ia"), col("ib"))
@@ -811,7 +803,7 @@ object Dedup extends Entries {
   def d08SpanDedup(s: SparkSession, d: String): DataFrame = {
     val grams = Tables.documents(s, d)
       .repartition(32, col("doc_id"))
-      .select(col("doc_id"), explode(expr("word_shingles(text, 5)")).as("g"))
+      .select(col("doc_id"), explode(wordShingles(col("text"), lit(5))).as("g"))
       .cache()
     val gdf = grams.groupBy(col("g")).agg(count(lit(1)).as("gdf"))
     grams.join(gdf, Seq("g"))
@@ -1140,7 +1132,7 @@ object Dedup extends Entries {
     val removed = members.toDF("ia", "ea", "cell")
       .join(members.toDF("ib", "eb", "cell"), Seq("cell"))
       .filter(col("ia") < col("ib"))
-      .filter(expr("cosine_sim(ea, eb)") >= SemTau)
+      .filter(cosineSim(col("ea"), col("eb")) >= SemTau)
       .select(col("ib").as("vec_id")).distinct()
     assigned
       .join(removed.withColumn("removed", lit(true)), Seq("vec_id"), "left")
@@ -1215,7 +1207,7 @@ object Dedup extends Entries {
       .join(byId.toDF("ia", "hs_a"), "ia")
       .join(byId.toDF("ib", "hs_b"), "ib")
       .withColumn("c",
-        expr("sorted_inter_count(hs_a, hs_b)").cast(DoubleType)
+        sortedInterCount(col("hs_a"), col("hs_b")).cast(DoubleType)
           / size(col("hs_a")))
       .filter(col("c") >= ContainTau)
       .select(col("ia").as("contained_id"), col("ib").as("container_id"),
@@ -1298,7 +1290,7 @@ object Dedup extends Entries {
     // uncached each side re-ran the title planting + deletion kernel
     val keyed = t
       .select(col("doc_id"), col("title"),
-        explode(expr("deletion_hashes(title)")).as("hk"))
+        explode(deletionHashes(col("title"))).as("hk"))
       .cache()
     val lhs = keyed.select(col("hk"), col("doc_id").as("ia"), col("title").as("ta"))
     val rhs = keyed.select(col("hk"), col("doc_id").as("ib"), col("title").as("tb"))
@@ -1376,7 +1368,7 @@ object Dedup extends Entries {
     Tables.documents(s, d)
       .filter(length(col("text")) >= WinK)
       .select(col("doc_id"),
-        explode(expr(s"winnow_fingerprints(text, $WinK, $WinW)")).as("sel"))
+        explode(winnowFingerprints(col("text"), lit(WinK), lit(WinW))).as("sel"))
       .select(col("doc_id"),
         expr("cast(substring(sel, 34, 10) as bigint)").as("gram_pos"),
         expr("substring(sel, 1, 32)").as("gram_hash"))

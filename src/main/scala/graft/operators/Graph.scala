@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{Artifact, Entries, Entry, Scratch, Tables}
+import graft.functions.GraftExtensions.{pairCodes, sortedInter}
 
 /** Graph analytics over the part co-purchase graph (SURVEY.md §7.3 M5) —
   * the corpus-link workloads a training-data pipeline runs beyond d07's
@@ -58,7 +59,7 @@ object Graph extends Entries {
         .groupBy(col("o"))
         .agg(sort_array(collect_set(col("k"))).as("ks"))
         .filter(size(col("ks")) >= 2)
-        .select(explode(expr("pair_codes(ks)")).as("pc"))
+        .select(explode(pairCodes(col("ks"))).as("pc"))
         .distinct()
         .select(shiftright(col("pc"), 32).as("x"),
           col("pc").bitwiseAND(lit(0xFFFFFFFFL)).as("y"))
@@ -140,7 +141,7 @@ object Graph extends Entries {
       .select(col("s"), explode(col("nbrs")).as("t"), col("nbrs").as("na"))
       .join(adjacency.select(col("s").as("t"), col("nbrs").as("nb")), Seq("t"))
       .select(col("s").as("u"), col("t").as("v"),
-        explode(expr("sorted_inter(na, nb)")).as("w"))
+        explode(sortedInter(col("na"), col("nb"))).as("w"))
   }
 
   def g01TriangleCount(s: SparkSession, d: String): DataFrame = {
@@ -884,7 +885,7 @@ object Graph extends Entries {
       .filter(col("ci") === 0)
       .select(slice(col("chunk"), 1, NbrCap).as("ns"))
       .filter(size(col("ns")) >= 2)
-      .select(explode(expr("pair_codes(ns)")).as("pc"))
+      .select(explode(pairCodes(col("ns"))).as("pc"))
     val edgeCodes = e.select(
       (shiftleft(col("x"), 32).bitwiseOR(col("y"))).as("pc"))
     pairs

@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.{Artifact, Entries, Entry, Scratch}
 import graft.Tables._
 import graft.Ops._
+import graft.functions.GraftExtensions.{topkAgg, topkRowsAgg}
 
 /** SURVEY.md §2 operator inventory — sources/sinks (S), row transforms (P),
   * joins (J), sorts/limits (O) and set ops — each exposed over the harness
@@ -1378,7 +1379,7 @@ object Relational extends Entries {
   def o04GroupedTopk(s: SparkSession, d: String): DataFrame = {
     orders(s, d)
       .groupBy(col("o_orderpriority"))
-      .agg(expr("topk_agg(o_totalprice, 3)").as("top"))
+      .agg(topkAgg(col("o_totalprice"), lit(3)).as("top"))
       .select(col("o_orderpriority"), posexplode(col("top")).as(Seq("pos", "price")))
       .select(col("o_orderpriority"),
         (col("pos") + 1).cast(IntegerType).as("rank"), col("price"))
@@ -1405,7 +1406,7 @@ object Relational extends Entries {
   def o05GroupedTopkRows(s: SparkSession, d: String): DataFrame = {
     orders(s, d)
       .groupBy(col("o_orderpriority"))
-      .agg(expr("topk_rows_agg(o_totalprice, CAST(o_orderkey AS STRING), 3)").as("top"))
+      .agg(topkRowsAgg(col("o_totalprice"), col("o_orderkey").cast(StringType), lit(3)).as("top"))
       .select(col("o_orderpriority"), posexplode(col("top")).as(Seq("pos", "e")))
       .select(col("o_orderpriority"),
         (col("pos") + 1).cast(IntegerType).as("rank"),
@@ -1440,7 +1441,7 @@ object Relational extends Entries {
   def o06TopkDelta(s: SparkSession, d: String): DataFrame = {
     def topkOf(df: DataFrame): DataFrame = df
       .groupBy(col("o_orderpriority"))
-      .agg(expr("topk_rows_agg(o_totalprice, CAST(o_orderkey AS STRING), 3)").as("top"))
+      .agg(topkRowsAgg(col("o_totalprice"), col("o_orderkey").cast(StringType), lit(3)).as("top"))
       .select(col("o_orderpriority"), explode(col("top")).as("e"))
       .select(col("o_orderpriority"), col("e.v").as("o_totalprice"),
         col("e.payload").as("okey"))
@@ -1451,7 +1452,7 @@ object Relational extends Entries {
       orders(s, d).filter(col("o_orderdate") >= lit(IncrSplit)))
     state.unionByName(delta)
       .groupBy(col("o_orderpriority"))
-      .agg(expr("topk_rows_agg(o_totalprice, okey, 3)").as("top"))
+      .agg(topkRowsAgg(col("o_totalprice"), col("okey"), lit(3)).as("top"))
       .select(col("o_orderpriority"), posexplode(col("top")).as(Seq("pos", "e")))
       .select(col("o_orderpriority"),
         (col("pos") + 1).cast(IntegerType).as("rank"),

@@ -6,6 +6,9 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
 import graft.{Artifact, Entries, Entry, Scratch, Tables}
+import graft.functions.GraftExtensions.{cosineScores, cosineSim, hyperplaneSketch, l2Sq,
+  topkLongAgg}
+import graft.functions.TextAnalysis
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (SURVEY.md §7.3 M5): brute-force cosine top-k as the exact baseline, a
@@ -26,9 +29,10 @@ object Similarity extends Entries {
   private val NQueries = 10 // queries = vec_id < 10
 
   /** Exact cosine via the codegen'd [[graft.functions.CosineSim]] —
-    * bit-identical to the HOF spec form (Dedup.cosExpr). */
+    * bit-identical to the composed `aggregate`/`zip_with` form
+    * (KernelPropertySpec pins that). */
   private def withCosine(df: DataFrame): DataFrame =
-    df.withColumn("cosine", expr("cosine_sim(ea, eb)"))
+    df.withColumn("cosine", cosineSim(col("ea"), col("eb")))
 
   private def topK(pairs: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("ib"))
@@ -87,7 +91,7 @@ object Similarity extends Entries {
     * The sketch table is materialized: computed once, consumed by both
     * sides of the bucket join (see Dedup.shingled on HOF re-evaluation). */
   private def sketched(e: DataFrame): DataFrame =
-    e.withColumn("sigs", expr(s"hyperplane_sketch(embedding, $Tables_, $Bits)"))
+    e.withColumn("sigs", hyperplaneSketch(col("embedding"), lit(Tables_), lit(Bits)))
       .cache()
 
   /** n02 exported in the a12 verdict form: the output rows are the EXACT
@@ -124,7 +128,7 @@ object Similarity extends Entries {
       .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("eb")),
         "neighbor_id")
       .agg(coalesce(sum(when(
-        col("rcos") === round(expr("cosine_sim(ea, eb)"), 6), 0L).otherwise(1L)),
+        col("rcos") === round(cosineSim(col("ea"), col("eb")), 6), 0L).otherwise(1L)),
         lit(0L)).as("n_bad"))
     val verdict = j.agg(
         count(when(col("rcos").isNotNull && col("e").isNotNull, 1)).as("n_hit"),
@@ -203,7 +207,7 @@ object Similarity extends Entries {
     * hotspot. Shared by n03 and d12. */
   private[graft] def ivfAssigned(s: SparkSession, d: String): DataFrame = {
     Tables.embeddings(s, d).join(broadcast(ivfCents(s, d)))
-      .withColumn("cosine", expr("cosine_sim(embedding, centroid)"))
+      .withColumn("cosine", cosineSim(col("embedding"), col("centroid")))
       .groupBy(col("vec_id"))
       .agg(
         min_by(col("cell"), struct(negate(col("cosine")), col("cell"))).as("cell"),
@@ -217,7 +221,7 @@ object Similarity extends Entries {
     val assigned = ivfAssigned(s, d)
     // queries probe their NProbe nearest cells
     val probes = e.filter(col("vec_id") < NQueries).join(broadcast(cents))
-      .withColumn("cosine", expr("cosine_sim(embedding, centroid)"))
+      .withColumn("cosine", cosineSim(col("embedding"), col("centroid")))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("cosine").desc, col("cell"))))
       .filter(col("rn") <= NProbe)
@@ -296,7 +300,7 @@ object Similarity extends Entries {
   /** Squared-L2 between the subvector and centroid columns via the codegen
     * [[graft.functions.L2Sq]] kernel — accumulated in index order, bit-
     * identical to the HOF form it replaced (KernelPropertySpec pins that). */
-  private val l2Expr = "l2_sq(sv, cv)"
+  private def l2Dist: Column = l2Sq(col("sv"), col("cv"))
 
   /** Training sample bound: codebooks learn from the subvectors of
     * vec_id < PqSample only. PQ codebooks are MODEL STATE, not data — the
@@ -332,7 +336,7 @@ object Similarity extends Entries {
     * driver-sorted by (vec_id, sub) so mean accumulation order is fixed,
     * assignment ties break on (dist, code) — the JVM loop accumulates
     * squared diffs in index order, the exact arithmetic of the executor-
-    * side `l2Expr` — and empty clusters carry their previous centroid
+    * side `l2Dist` — and empty clusters carry their previous centroid
     * forward. Ranks approximate L2 (PQ's native metric); recall vs exact
     * L2 is spec-floored. */
   def n04PqTopK(s: SparkSession, d: String): DataFrame = {
@@ -369,7 +373,7 @@ object Similarity extends Entries {
       .select(col("vec_id").as("qid"), col("embedding").as("ea"))
     val pairs = e.select(col("vec_id").as("ib"), col("embedding").as("eb"))
       .join(broadcast(q), col("qid") =!= col("ib"))
-      .withColumn("d2", expr("l2_sq(ea, eb)"))
+      .withColumn("d2", l2Sq(col("ea"), col("eb")))
     pairs
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("d2"), col("ib")))
@@ -565,7 +569,7 @@ object Similarity extends Entries {
       val out = Scratch.path(
         s"pq_codes_${tag}_m${cfg.m}k${cfg.kcent}_$normalize", d, s)
       sv.join(broadcast(cents), Seq("sub"))
-        .withColumn("dist", expr(l2Expr))
+        .withColumn("dist", l2Dist)
         .groupBy(col("vec_id"), col("sub"))
         .agg(min_by(col("code"), struct(col("dist"), col("code"))).as("code"))
         .write.mode("overwrite").parquet(out)
@@ -589,7 +593,7 @@ object Similarity extends Entries {
     val dt = pqSubvectors(e.filter(col("vec_id") < NQueries), cfg)
       .select(col("vec_id").as("qid"), col("sub"), col("sv"))
       .join(broadcast(cents), Seq("sub"))
-      .withColumn("pdist", expr(l2Expr))
+      .withColumn("pdist", l2Dist)
       .select(col("qid"), col("sub"), col("code"), col("pdist"))
     // …then corpus scan = M lookups + adds per vector. With a candidate
     // restriction (the IVF path, n12) only the probed cells' members are
@@ -747,7 +751,7 @@ object Similarity extends Entries {
       .select(col("vec_id").as("qid"), col("embedding").as("ea"))
     val cands = e.select(col("vec_id").as("ib"), col("embedding").as("eb"))
       .join(broadcast(q), col("qid") =!= col("ib"))
-      .withColumn("rel", expr("cosine_sim(ea, eb)"))
+      .withColumn("rel", cosineSim(col("ea"), col("eb")))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("rel").desc, col("ib"))))
       .filter(col("rn") <= MmrR)
@@ -760,7 +764,7 @@ object Similarity extends Entries {
       .join(cands.select(col("qid").as("qb_"), col("ib").as("ib_"),
         col("eb").as("eb_")), col("qa_") === col("qb_"))
       .select(col("qa_").as(q), col("ia_").as(a), col("ib_").as(b),
-        expr("cosine_sim(ea_, eb_)").as(v))
+        cosineSim(col("ea_"), col("eb_")).as(v))
     // argmax by (score desc, ib asc) as a min_by aggregate — no window
     def argmax(df: DataFrame, score: Column) = df
       .withColumn("score", score)
@@ -861,8 +865,7 @@ object Similarity extends Entries {
     * the same fusion — the scoring contract is what this entry pins. */
   def n05HybridTopK(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d).select(col("doc_id"),
-      expr("array_distinct(filter(split(lower(text), '\\\\s+'), t -> t != ''))")
-        .as("t"))
+      array_distinct(TextAnalysis.words).as("t"))
     val corpus = toks
       .join(Tables.embeddings(s, d), col("doc_id") === col("vec_id"))
       .select(col("doc_id").as("ib"), col("t").as("tb"), col("embedding").as("eb"))
@@ -870,7 +873,7 @@ object Similarity extends Entries {
       .select(col("ib").as("qid"), col("tb").as("tq"), col("eb").as("ea"))
     val scored = corpus.join(broadcast(q), col("qid") =!= col("ib"))
       .withColumn("score",
-        expr("cosine_sim(ea, eb)") * 0.5 +
+        cosineSim(col("ea"), col("eb")) * 0.5 +
           size(array_intersect(col("tq"), col("tb"))).cast(DoubleType)
             / size(col("tq")) * 0.5)
     val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("ib"))
@@ -943,7 +946,7 @@ object Similarity extends Entries {
       .withColumn("ga", explode(expr("sequence(0, gb)")))
     val scored = left.join(right, Seq("ga", "gb"))
       .filter(col("ga") =!= col("gb") || col("ia") < col("ib"))
-      .withColumn("cosine", expr("cosine_sim(ea, eb)"))
+      .withColumn("cosine", cosineSim(col("ea"), col("eb")))
       .select(col("ia"), col("ib"), col("cosine"))
     // both directions in ONE pass over the scored pairs — a unionAll of two
     // selects would re-execute the join + cosine subtree per branch
@@ -954,7 +957,7 @@ object Similarity extends Entries {
         col("dir.cosine").as("cosine"))
     directed
       .groupBy(col("vid"))
-      .agg(expr(s"topk_long_agg(cosine, nid, $KnnK)").as("top"))
+      .agg(topkLongAgg(col("cosine"), col("nid"), lit(KnnK)).as("top"))
       .select(col("vid").as("vec_id"), posexplode(col("top")).as(Seq("pos", "e")))
       .select(col("vec_id"),
         (col("pos") + 1).cast(IntegerType).as("rank"),
@@ -1087,7 +1090,7 @@ object Similarity extends Entries {
       .select(col("vec_id").as("qid"), col("embedding").as("ea"))
     e.select(col("vec_id").as("ib"), col("embedding").as("eb"))
       .join(broadcast(q), col("qid") =!= col("ib"))
-      .withColumn("cosine", expr("cosine_sim(ea, eb)"))
+      .withColumn("cosine", cosineSim(col("ea"), col("eb")))
       .filter(col("cosine") >= RangeTau)
       .select(col("qid"), col("ib").as("neighbor_id"),
         round(col("cosine"), 6).as("cosine"))
@@ -1154,7 +1157,7 @@ object Similarity extends Entries {
     val tf = n11TfCache.computeIfAbsent(s, d, _ => {
       val tfPath = Scratch.path("n11_tf", d, s)
       Tables.documents(s, d).select(col("doc_id"),
-          explode(expr("filter(split(lower(text), '\\\\s+'), t -> t != '')")).as("t"))
+          explode(TextAnalysis.words).as("t"))
         .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
         .write.mode("overwrite").parquet(tfPath)
       s.read.parquet(tfPath)
@@ -1318,7 +1321,7 @@ object Similarity extends Entries {
     // removed from the n04 encode pass. Bit-identical: the kernel casts
     // and accumulates in array order exactly like the lambda it replaces.
     val withDist = e.join(broadcast(cents))
-      .withColumn("cdist", expr("l2_sq(embedding, centroid)"))
+      .withColumn("cdist", l2Sq(col("embedding"), col("centroid")))
     val assigned = withDist
       .groupBy(col("vec_id"))
       .agg(min_by(col("cell"), struct(col("cdist"), col("cell"))).as("cell"))
@@ -1363,7 +1366,7 @@ object Similarity extends Entries {
         expr(s"slice(embedding, 1, $MrlPrefix)").as("bp"))
       .join(broadcast(q.select(col("qid"), col("qp"))),
         col("qid") =!= col("ib"))
-      .withColumn("pcos", expr("cosine_sim(qp, bp)"))
+      .withColumn("pcos", cosineSim(col("qp"), col("bp")))
       .withColumn("prank", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("pcos").desc, col("ib"))))
       .filter(col("prank") <= MrlShortlist)
@@ -1471,7 +1474,7 @@ object Similarity extends Entries {
       .collect().sortBy(_.getLong(0)) // bounded: NQueries rows
     val qids = qRows.map(_.getLong(0)).toSeq
     val qmat = qRows.map(_.getSeq[Float](1)).toSeq
-    val scores = call_function("cosine_scores", col("embedding"), typedlit(qmat))
+    val scores = cosineScores(col("embedding"), typedlit(qmat))
     val scored = e
       .select(col("vec_id").as("ib"),
         if (outer) posexplode_outer(scores) else posexplode(scores))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.GroupStateTimeout
 import org.apache.spark.sql.types._
 
 import graft.{Artifact, Entries, Entry, Scratch, Tables}
+import graft.functions.GraftExtensions.cosineSim
 
 /** Streaming surface (SURVEY.md §2.9).
   *
@@ -1069,23 +1070,23 @@ object Streams extends Entries {
     // the corpus is assigned once and never re-joined for the kept flag
     // (a join-back form evaluates the whole centroid+assignment subtree a
     // second time: DataFrames have no common-subplan reuse)
-    val fold =
-      s"""aggregate(
-         |  array_sort(collect_list(struct(vec_id, embedding))),
-         |  CAST(struct(array(), array()) AS STRUCT<
-         |    reps: ARRAY<STRUCT<vec_id: BIGINT, embedding: ARRAY<FLOAT>>>,
-         |    out: ARRAY<STRUCT<vec_id: BIGINT, kept: BOOLEAN>>>),
-         |  (acc, x) -> CASE
-         |    WHEN exists(acc.reps, k -> cosine_sim(k.embedding, x.embedding) >= $tau)
-         |    THEN struct(acc.reps AS reps,
-         |      concat(acc.out, array(struct(x.vec_id AS vec_id, false AS kept))) AS out)
-         |    ELSE struct(concat(acc.reps, array(x)) AS reps,
-         |      concat(acc.out, array(struct(x.vec_id AS vec_id, true AS kept))) AS out)
-         |    END,
-         |  acc -> acc.out)""".stripMargin
+    def verdict(x: Column, kept: Boolean) =
+      array(struct(x("vec_id").as("vec_id"), lit(kept).as("kept")))
+    val fold = aggregate(
+      array_sort(collect_list(struct(col("vec_id"), col("embedding")))),
+      struct(array(), array()).cast(
+        """STRUCT<
+          |  reps: ARRAY<STRUCT<vec_id: BIGINT, embedding: ARRAY<FLOAT>>>,
+          |  out: ARRAY<STRUCT<vec_id: BIGINT, kept: BOOLEAN>>>""".stripMargin),
+      (acc, x) =>
+        when(exists(acc("reps"), k => cosineSim(k("embedding"), x("embedding")) >= tau),
+          struct(acc("reps").as("reps"), concat(acc("out"), verdict(x, false)).as("out")))
+          .otherwise(struct(concat(acc("reps"), array(x)).as("reps"),
+            concat(acc("out"), verdict(x, true)).as("out"))),
+      acc => acc("out"))
     graft.operators.Similarity.ivfAssigned(s, d)
       .groupBy(col("cell"))
-      .agg(expr(fold).as("verdicts"))
+      .agg(fold.as("verdicts"))
       .select(col("cell"), explode(col("verdicts")).as("v"))
       .select(col("v.vec_id").as("vec_id"), col("cell"), col("v.kept").as("kept"))
       .orderBy(col("vec_id"))
@@ -1099,17 +1100,15 @@ object Streams extends Entries {
     val tau = graft.operators.Dedup.SemTau
     // centroids are constant model state → a literal array in the plan
     // (the n04 pattern); argmin by (-cosine, cell) = ivfAssigned's min_by
-    val cents = graft.operators.Similarity.ivfCents(s, d).collect()
+    val cents = array(graft.operators.Similarity.ivfCents(s, d).collect().toSeq
       .map { r =>
-        val cell = r.getInt(0)
-        val c = r.getSeq[Float](1).map(v => s"CAST($v AS FLOAT)").mkString(",")
-        s"struct($cell AS cell, array($c) AS centroid)"
-      }.mkString("array(", ",", ")")
+        struct(lit(r.getInt(0)).as("cell"),
+          array(r.getSeq[Float](1).map(v => lit(v)): _*).as("centroid"))
+      }: _*)
     emb
-      .withColumn("cell", expr(
-        s"""array_min(transform($cents,
-           |  c -> struct(-cosine_sim(embedding, c.centroid) AS negcos,
-           |              c.cell AS cell))).cell""".stripMargin))
+      .withColumn("cell", array_min(transform(cents,
+        c => struct((-cosineSim(col("embedding"), c("centroid"))).as("negcos"),
+          c("cell").as("cell"))))("cell"))
       .select(col("vec_id"), col("embedding"), col("cell"))
       .as[(Long, Seq[Float], Int)]
       .groupByKey(_._3)

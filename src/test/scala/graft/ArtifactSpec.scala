@@ -3,7 +3,8 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 /** [[Artifact]]'s checked deps and its memo, the table checks of
-  * [[Artifacts.validated]], and one full [[Artifacts.prebuild]]. */
+  * [[Artifacts.validated]], [[Artifacts.prebuild]] around a failing
+  * artifact, and one full prebuild. */
 class ArtifactSpec extends SparkSpec {
 
   private def const(name: String, deps: String*): Artifact[Int] =
@@ -52,6 +53,27 @@ class ArtifactSpec extends SparkSpec {
     assert(cycle.contains("toy_b") && cycle.contains("toy_c") && !cycle.contains("toy_a"))
     val ok = Seq(const("toy_a"), const("toy_b", "toy_a"))
     assert(Artifacts.validated(ok) === ok)
+  }
+
+  test("prebuild builds a failed artifact once and skips its dependents, never running them") {
+    val rootBuilds, dependentRuns = new AtomicInteger(0)
+    val root = Artifact[Int]("toy_root") { (_, _) =>
+      rootBuilds.incrementAndGet()
+      throw new IllegalStateException("toy_root is broken")
+    }
+    val direct = Artifact("toy_direct", "toy_root") { (s, d) =>
+      dependentRuns.incrementAndGet(); root(s, d) + 1
+    }
+    val transitive = Artifact("toy_transitive", "toy_direct", "toy_root") { (s, d) =>
+      dependentRuns.incrementAndGet(); direct(s, d) + root(s, d)
+    }
+    val table = Artifacts.validated(Seq(root, direct, transitive, const("toy_free")))
+    val (times, failed, _) = Artifacts.prebuild(table, spark, "toy_failing", 2)
+    assert(rootBuilds.get() === 1)
+    assert(dependentRuns.get() === 0)
+    assert(failed.toSet === Set("toy_root", "toy_direct", "toy_transitive"))
+    assert(times.toMap.view.filterKeys(failed.contains).values.forall(_ === -1.0))
+    assert(times.toMap.apply("toy_free") >= 0)
   }
 
   test("prebuild on a fresh session builds all 58 artifacts with no failure") {

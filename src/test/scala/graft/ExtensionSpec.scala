@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.Literal
 
 import graft.operators.{Dedup, Similarity}
 import graft.functions.{GraftExtensions, Multimodal, RollingHashMin, TextAnalysis}
@@ -295,6 +296,15 @@ class ExtensionSpec extends SparkSpec {
       val e = intercept[AnalysisException](fresh.sql(s"SELECT $call"))
       assert(e.getCondition.startsWith("WRONG_NUM_ARGS"), s"$call: ${e.getMessage}")
     }
+  }
+
+  test("every graft expression's prettyName is its table row's name") {
+    // prettyName is the name's second copy: plans, EXPLAIN and error
+    // messages print it (Spark's two Bloom classes keep their own names)
+    val own = GraftExtensions.kernels.filter(_.cls.getName.startsWith("graft."))
+    assert(own.size === 21)
+    for (k <- own)
+      assert(k.checked(Seq.fill(k.arity)(Literal(1))).prettyName === k.name)
   }
 
   test("topk aggregates are SQL-callable with natural literals " +

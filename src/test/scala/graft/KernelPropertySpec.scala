@@ -399,6 +399,33 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("cosine_sim ≡ the composed aggregate/zip_with HOF form, bit-identical") {
+    // the HOF form is the semantic spec the kernel replaced; the oracles'
+    // cosines replay the same index-ordered double accumulation
+    val spark = SparkSpec.session
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, expr}
+    val rnd = new scala.util.Random(42)
+    val rows = Seq.fill(200)((
+      Seq.fill(16)(rnd.nextFloat() * 10 - 5),
+      Seq.fill(16)(rnd.nextFloat() * 10 - 5)))
+    val df = rows.toDF("ea", "eb")
+      .withColumn("kernel", graft.functions.GraftExtensions.cosineSim(col("ea"), col("eb")))
+      .withColumn("hof", expr(
+        """aggregate(zip_with(ea, eb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
+          |          CAST(0 AS DOUBLE), (acc, v) -> acc + v)
+          | / (sqrt(aggregate(transform(ea, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
+          |          CAST(0 AS DOUBLE), (acc, v) -> acc + v))
+          |    * sqrt(aggregate(transform(eb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
+          |          CAST(0 AS DOUBLE), (acc, v) -> acc + v)))""".stripMargin))
+    val out = df.collect()
+    assert(out.length === 200)
+    out.foreach { r =>
+      assert(java.lang.Double.doubleToLongBits(r.getAs[Double]("kernel")) ===
+        java.lang.Double.doubleToLongBits(r.getAs[Double]("hof")))
+    }
+  }
+
   test("pctChange: NULL exactly when prev is zero (reference MySQL semantics)") {
     // exercised through the expression itself on a literal frame
     val spark = SparkSpec.session

@@ -4,11 +4,14 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.GraftExtensions
+
 /** Every SparkSession comes from [[GraftSession.local]], every graft SQL
   * function from the [[graft.functions.GraftExtensions]] table, every
-  * entry from an [[Entry]] table and every artifact is a row of
-  * [[Artifacts.all]]: a builder, a registration or a map anywhere else is
-  * a second copy, free to drift. */
+  * operator's kernel call from that table's typed functions, every entry
+  * from an [[Entry]] table and every artifact is a row of
+  * [[Artifacts.all]]: a builder, a registration, a map or a name in SQL
+  * text anywhere else is a second copy, free to drift. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private def sources(f: File): Seq[File] =
@@ -36,6 +39,38 @@ class SessionGuardSpec extends AnyFunSuite {
     val hits = Seq(root("src/main"), root("src/test")).flatMap(sources)
       .filter(text(_).contains(needle))
     assert(hits.map(_.getName) === Seq("GraftSession.scala"))
+  }
+
+  /** Each line paired with whether it lies in a `"""` string passed to
+    * `.sql(`, opened on that line or on the one before. */
+  private def inSqlCall(lines: Seq[String]): Seq[(String, Boolean)] = {
+    val q = "\"\"\""
+    var inString, sqlString = false
+    var prev = ""
+    lines.map { l =>
+      val quotes = l.split(q, -1).length - 1
+      if (!inString && quotes > 0)
+        sqlString = (prev.trim + l.substring(0, l.indexOf(q)).trim).endsWith(".sql(")
+      val flagged = (inString || quotes > 0) && sqlString
+      if (quotes % 2 == 1) inString = !inString
+      prev = l
+      l -> flagged
+    }
+  }
+
+  test("operators call graft kernels through typed Column functions, never SQL text") {
+    // SQL text names a kernel only where it is SQL on purpose: a query run
+    // through `.sql(…)` (j13, x22) or DuckDB oracle text (x24's
+    // nfc_normalize is DuckDB's own function)
+    val call = GraftExtensions.kernels.map(_.name).mkString("""\b(""", "|", """)\(""").r
+    val oracles = SparkEntry.oracleSql.values.mkString("\n")
+    val hits = for {
+      f <- sources(root("src/main")) if f.getName != "GraftExtensions.scala"
+      (l, sql) <- inSqlCall(codeLines(f))
+      if call.findFirstIn(l).nonEmpty && !sql &&
+        !oracles.contains(l.trim.stripPrefix("|").trim)
+    } yield s"${f.getName}: ${l.trim}"
+    assert(hits === Nil)
   }
 
   test("SQL functions, rules and strategies reach a session only through GraftExtensions") {
