@@ -64,13 +64,12 @@ class JsonlCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
 
   private[graft] def warehousePath: Path = new Path(warehouse)
 
-  // --- procedures -----------------------------------------------------------
+  /** `<catalog>.<namespace...>.<name>`, the name a DataFrame write uses. */
+  private[sources] def qualifiedName(ident: Identifier): String =
+    (catName +: ident.namespace.toSeq :+ ident.name).mkString(".")
 
-  /** Maintenance procedures (`CALL cat.system.compact_deletes(...)`) —
-    * the DSv2 [[ProcedureCatalog]] face. Table-changing operations that
-    * are not statements over rows (compaction, vacuum) belong here, not
-    * in ad-hoc driver helpers: the SQL face is what a pipeline's
-    * maintenance DAG actually invokes. */
+  // --- procedures ([[JsonlProcedures]]) -------------------------------------
+
   /** Unknown procedures surface as the STANDARD analysis error
     * (`ROUTINE_NOT_FOUND`, SQLSTATE 42883), not a bare RuntimeException:
     * `CALL`/`DESCRIBE PROCEDURE` on a missing name is a user error the
@@ -88,33 +87,15 @@ class JsonlCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
     if (ident.namespace.toSeq != Seq("system"))
       // name the namespace the user actually wrote, not "system"
       noSuchProcedure(ident.namespace.toSeq :+ ident.name)
-    ident.name match {
-      case "clone"           => new CloneProcedure(this)
-      case "compact_deletes" => new CompactDeletesProcedure(this)
-      case "zorder"          => new ZorderProcedure(this)
-      case "vacuum"          => new VacuumProcedure(this)
-      case "snapshot"        => new SnapshotProcedure(this)
-      case "history"         => new HistoryProcedure(this)
-      case "ndv"             => new NdvProcedure(this)
-      case "expire_snapshots" => new ExpireSnapshotsProcedure(this)
-      case "transact"        => new TransactProcedure(this)
-      case "evolve_bucket"   => new EvolveBucketProcedure(this)
-      case other             => noSuchProcedure(Seq("system", other))
+    JsonlProcedures.byName.get(ident.name) match {
+      case Some(p) => new JsonlProcedure(p, this)
+      case None    => noSuchProcedure(Seq("system", ident.name))
     }
   }
 
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
     if (namespace.isEmpty || namespace.toSeq == Seq("system"))
-      Array(Identifier.of(Array("system"), "clone"),
-        Identifier.of(Array("system"), "compact_deletes"),
-        Identifier.of(Array("system"), "zorder"),
-        Identifier.of(Array("system"), "vacuum"),
-        Identifier.of(Array("system"), "snapshot"),
-        Identifier.of(Array("system"), "history"),
-        Identifier.of(Array("system"), "ndv"),
-        Identifier.of(Array("system"), "expire_snapshots"),
-        Identifier.of(Array("system"), "transact"),
-        Identifier.of(Array("system"), "evolve_bucket"))
+      JsonlProcedures.all.map(p => Identifier.of(Array("system"), p.name)).toArray
     else Array.empty
 
   private def manifestOf(ident: Identifier): Path =
@@ -391,7 +372,7 @@ class JsonlCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
     * mutation. Returns (oldN, newN, reported coarse width). */
   private[sources] def evolveBucket(ident: Identifier, newN: Int): (Int, Int, Int) = {
     val dir = dirOf(ident)
-    JsonlOcc.withCommitLock(fs, dir, "evolve_bucket") {
+    JsonlOcc.withCommitLock(fs, dir, "bucket evolution") {
       val (schema, routes, split, mor, morMerge, ndvCols, hist) =
         parseManifest(ident)
       val buckets = routes.collect { case b: BucketRoute => b }

@@ -5,10 +5,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException
+import org.apache.spark.sql.connector.catalog.{Identifier, Table}
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -40,13 +42,6 @@ object JsonlMaintenance {
       rewrittenFiles: Long, skippedFiles: Long, rowsRemoved: Long,
       vectorSidecarsBefore: Long, vectorSidecarsAfter: Long)
 
-  val ReportSchema: StructType = StructType(Seq(
-    StructField("rewritten_files", LongType, nullable = false),
-    StructField("skipped_files", LongType, nullable = false),
-    StructField("rows_removed", LongType, nullable = false),
-    StructField("vector_sidecars_before", LongType, nullable = false),
-    StructField("vector_sidecars_after", LongType, nullable = false)))
-
   private def countVectorSidecars(dir: String): Long = {
     val root = new Path(dir)
     val fs = FileSystem.get(root.toUri, new Configuration())
@@ -55,23 +50,18 @@ object JsonlMaintenance {
       s.isFile && s.getPath.getName.startsWith("_deletes-")).toLong
   }
 
-  /** Compact the delete vectors of `namespace.table` in `catalog`:
-    * rewrite live files whose deleted fraction ≥ `minFraction` (a file
-    * with a vector but no stats row count is always compacted), sweep
-    * vector entries left without a live referent. Single-writer
+  /** Compact the delete vectors of table `ident` (loaded as `tbl`) in
+    * `catalog`: rewrite live files whose deleted fraction ≥ `minFraction`
+    * (a file with a vector but no stats row count is always compacted),
+    * sweep vector entries left without a live referent. Single-writer
     * discipline — the caller owns the table for the duration, like every
     * other mutation of a graft-jsonl directory. */
   def compactDeletes(spark: SparkSession, catalog: JsonlCatalog,
-      tableName: String, minFraction: Double): CompactionReport = {
+      ident: Identifier, tbl: Table, minFraction: Double): CompactionReport = {
     require(minFraction >= 0.0 && minFraction <= 1.0,
       s"graft-jsonl compact_deletes: min_fraction must be in [0, 1], got $minFraction")
-    val parts = tableName.split('.').toSeq
-    require(parts.length >= 2 && parts.forall(_.nonEmpty),
-      s"graft-jsonl compact_deletes: table must be namespace.name, got '$tableName'")
-    val ident = Identifier.of(parts.init.toArray, parts.last)
-    val tbl = catalog.loadTable(ident) // throws NoSuchTableException if absent
     val dir = catalog.dirOf(ident).toString
-    val fullName = (catalog.name() +: parts).mkString(".")
+    val fullName = catalog.qualifiedName(ident)
 
     def nameOf(p: String) = p.substring(p.lastIndexOf('/') + 1)
     val before = countVectorSidecars(dir)
@@ -138,23 +128,13 @@ object JsonlZorder {
 
   case class ZorderReport(filesBefore: Long, filesAfter: Long, columns: String)
 
-  val ReportSchema: StructType = StructType(Seq(
-    StructField("files_before", LongType, nullable = false),
-    StructField("files_after", LongType, nullable = false),
-    StructField("zorder_columns", StringType, nullable = false)))
-
-  def zorder(spark: SparkSession, catalog: JsonlCatalog, tableName: String,
-      columns: Seq[String], targetFiles: Int): ZorderReport = {
+  def zorder(spark: SparkSession, catalog: JsonlCatalog, ident: Identifier,
+      tbl: Table, columns: Seq[String], targetFiles: Int): ZorderReport = {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions._
     require(columns.size >= 2 && columns.size <= 4,
       s"graft-jsonl zorder: need 2-4 columns, got ${columns.mkString(",")}")
     require(targetFiles >= 0, "graft-jsonl zorder: target_files must be >= 0")
-    val parts = tableName.split('.').toSeq
-    require(parts.length >= 2 && parts.forall(_.nonEmpty),
-      s"graft-jsonl zorder: table must be namespace.name, got '$tableName'")
-    val ident = Identifier.of(parts.init.toArray, parts.last)
-    val tbl = catalog.loadTable(ident)
     require(tbl.partitioning().isEmpty,
       s"graft-jsonl zorder: refuse on a partitioned table — identity/bucket " +
         "routing fixes file membership and the z-rewrite would break its proofs")
@@ -164,7 +144,7 @@ object JsonlZorder {
         s"graft-jsonl zorder: column $c must exist with type bigint")
     }
     val dir = catalog.dirOf(ident).toString
-    val fullName = (catalog.name() +: parts).mkString(".")
+    val fullName = catalog.qualifiedName(ident)
 
     def nameOf(p: String) = p.substring(p.lastIndexOf('/') + 1)
     val dataFiles = JsonlV2.listFiles(dir).map(f => nameOf(f._1))
@@ -222,49 +202,6 @@ object JsonlZorder {
       .append()
     ZorderReport(dataFiles.size.toLong,
       JsonlV2.listFiles(dir).size.toLong, columns.mkString(","))
-  }
-}
-
-/** `CALL <catalog>.system.compact_deletes(table => 'ns.t', min_fraction
-  * => 0.3)` — the SQL face of [[JsonlMaintenance.compactDeletes]].
-  * Returns one report row: files rewritten/skipped, rows removed, vector
-  * sidecars before/after. */
-private[sources] class CompactDeletesProcedure(catalog: JsonlCatalog)
-    extends UnboundProcedure {
-
-  override def name(): String = "compact_deletes"
-  override def description(): String =
-    "Rewrite delete-vectored data files without their deleted rows; " +
-      "files below min_fraction dead keep their vectors"
-
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "compact_deletes"
-    override def description(): String = CompactDeletesProcedure.this.description()
-    override def isDeterministic: Boolean = false // mutates the table
-
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("table to compact, as namespace.name within this catalog")
-        .build(),
-      ProcedureParameter.in("min_fraction", DoubleType)
-        .defaultValue("0.0")
-        .comment("compact a file only when deleted rows / total rows >= this")
-        .build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val frac = if (input.isNullAt(1)) 0.0 else input.getDouble(1)
-      val r = JsonlMaintenance.compactDeletes(
-        SparkSession.active, catalog, table, frac)
-      val row: InternalRow = new GenericInternalRow(Array[Any](
-        r.rewrittenFiles, r.skippedFiles, r.rowsRemoved,
-        r.vectorSidecarsBefore, r.vectorSidecarsAfter))
-      java.util.Collections.singletonList[Scan](new LocalScan {
-        override def readSchema(): StructType = JsonlMaintenance.ReportSchema
-        override def rows(): Array[InternalRow] = Array(row)
-        override def description(): String = "compact_deletes report"
-      }).iterator()
-    }
   }
 }
 
@@ -326,18 +263,8 @@ object JsonlVacuum {
     * leftovers. */
   @volatile private[graft] var tempRetentionMs: Long = 3L * 24 * 3600000L
 
-  val ReportSchema: StructType = StructType(Seq(
-    StructField("temps_removed", LongType, nullable = false),
-    StructField("stats_files_before", LongType, nullable = false),
-    StructField("stats_files_after", LongType, nullable = false),
-    StructField("dead_entries_dropped", LongType, nullable = false)))
-
-  def vacuum(catalog: JsonlCatalog, tableName: String): VacuumReport = {
-    val parts = tableName.split('.').toSeq
-    require(parts.length >= 2 && parts.forall(_.nonEmpty),
-      s"graft-jsonl vacuum: table must be namespace.name, got '$tableName'")
-    val ident = Identifier.of(parts.init.toArray, parts.last)
-    catalog.loadTable(ident) // throws NoSuchTableException if absent
+  /** Vacuum the existing table `ident` of `catalog`. */
+  def vacuum(catalog: JsonlCatalog, ident: Identifier): VacuumReport = {
     val root = catalog.dirOf(ident)
     val fs = FileSystem.get(root.toUri, new Configuration())
 
@@ -346,7 +273,7 @@ object JsonlVacuum {
     // commit publishes and drop the new file's just-written stats entries
     // as dead (its proofs silently gone — metadata aggregation and file
     // skipping degrade to full scans forever after)
-    JsonlOcc.withCommitLock(fs, root, "vacuum") {
+    JsonlOcc.withCommitLock(fs, root, "vacuum sweep") {
 
     // 1. orphan temps — age-gated so a concurrent writer's in-flight task
     // files are never mistaken for crash leftovers (see tempRetentionMs)
@@ -427,87 +354,6 @@ object JsonlVacuum {
   }
 }
 
-/** `CALL <catalog>.system.vacuum(table => 'ns.t')` — the SQL face of
-  * [[JsonlVacuum.vacuum]]. */
-private[sources] class VacuumProcedure(catalog: JsonlCatalog)
-    extends UnboundProcedure {
-
-  override def name(): String = "vacuum"
-  override def description(): String =
-    "Sweep orphan temp files, merge stats sidecars to live entries only, " +
-      "drop dead delete-vector entries"
-
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "vacuum"
-    override def description(): String = VacuumProcedure.this.description()
-    override def isDeterministic: Boolean = false // mutates the directory
-
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("table to vacuum, as namespace.name within this catalog")
-        .build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val r = JsonlVacuum.vacuum(catalog, table)
-      val row: InternalRow = new GenericInternalRow(Array[Any](
-        r.tempsRemoved, r.statsFilesBefore, r.statsFilesAfter,
-        r.deadEntriesDropped))
-      java.util.Collections.singletonList[Scan](new LocalScan {
-        override def readSchema(): StructType = JsonlVacuum.ReportSchema
-        override def rows(): Array[InternalRow] = Array(row)
-        override def description(): String = "vacuum report"
-      }).iterator()
-    }
-  }
-}
-
-/** `CALL <catalog>.system.zorder(table => 'ns.t', columns => 'a,b',
-  * target_files => 16)` — the SQL face of [[JsonlZorder.zorder]]. */
-private[sources] class ZorderProcedure(catalog: JsonlCatalog)
-    extends UnboundProcedure {
-
-  override def name(): String = "zorder"
-  override def description(): String =
-    "Rewrite the table z-ordered on the given bigint columns so sidecar " +
-      "min/max skipping prunes on all of them at once"
-
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "zorder"
-    override def description(): String = ZorderProcedure.this.description()
-    override def isDeterministic: Boolean = false // mutates the table
-
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("table to rewrite, as namespace.name within this catalog")
-        .build(),
-      ProcedureParameter.in("columns", StringType)
-        .comment("comma-separated bigint columns, most-selective first")
-        .build(),
-      ProcedureParameter.in("target_files", IntegerType)
-        .defaultValue("0")
-        .comment("files to publish; 0 keeps the current count")
-        .build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val cols = input.getUTF8String(1).toString
-        .split(',').map(_.trim).filter(_.nonEmpty).toSeq
-      val target = if (input.isNullAt(2)) 0 else input.getInt(2)
-      val r = JsonlZorder.zorder(
-        SparkSession.active, catalog, table, cols, target)
-      val row: InternalRow = new GenericInternalRow(Array[Any](
-        r.filesBefore, r.filesAfter,
-        org.apache.spark.unsafe.types.UTF8String.fromString(r.columns)))
-      java.util.Collections.singletonList[Scan](new LocalScan {
-        override def readSchema(): StructType = JsonlZorder.ReportSchema
-        override def rows(): Array[InternalRow] = Array(row)
-        override def description(): String = "zorder report"
-      }).iterator()
-    }
-  }
-}
-
 /** SNAPSHOT VERSIONS — time travel for the governed catalog
   * ([[JsonlCatalog]]'s `VERSION AS OF` face). A snapshot is a
   * `_version-<n>.json` manifest naming the table's LIVE data files and
@@ -528,11 +374,6 @@ private[sources] class ZorderProcedure(catalog: JsonlCatalog)
   * never silently reads less. Publish is temp+rename, single-writer
   * discipline like every other sidecar. */
 private[graft] object JsonlVersions {
-
-  val ReportSchema: StructType = StructType(Seq(
-    StructField("version", LongType),
-    StructField("n_files", LongType),
-    StructField("n_vectors", LongType)))
 
   /** One recorded snapshot: the pinned (files, vectors) listing plus the
     * snapshot-time table schema and publish instant. Schema and instant
@@ -677,50 +518,6 @@ private[graft] object JsonlVersions {
   }
 }
 
-/** `CALL <catalog>.system.snapshot(table => 'ns.t')` — record the table's
-  * current listing as the next time-travel version
-  * ([[JsonlVersions.record]]). Returns one report row:
-  * (version, n_files, n_vectors). */
-private[sources] class SnapshotProcedure(catalog: JsonlCatalog)
-    extends UnboundProcedure {
-
-  override def name(): String = "snapshot"
-  override def description(): String =
-    "Record the table's current file/vector listing as the next " +
-      "VERSION AS OF snapshot"
-
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "snapshot"
-    override def description(): String = SnapshotProcedure.this.description()
-    override def isDeterministic: Boolean = false // allocates a version
-
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("table to snapshot, as namespace.name within this catalog")
-        .build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val parts = input.getUTF8String(0).toString.split('.').toSeq
-      require(parts.size >= 2,
-        "graft-jsonl snapshot: table must be namespace.name")
-      val ident = Identifier.of(parts.init.toArray, parts.last)
-      // throws NoSuchTableException when absent; the schema recorded in
-      // the manifest is what the pinned read will resolve rows against
-      val table = catalog.loadTable(ident)
-      val root = catalog.dirOf(ident)
-      val fs = FileSystem.get(root.toUri, new Configuration())
-      val (v, nf, nv) = JsonlVersions.record(fs, root,
-        Some(table.schema().json))
-      val row: InternalRow = new GenericInternalRow(Array[Any](v, nf, nv))
-      java.util.Collections.singletonList[Scan](new LocalScan {
-        override def readSchema(): StructType = JsonlVersions.ReportSchema
-        override def rows(): Array[InternalRow] = Array(row)
-        override def description(): String = "snapshot report"
-      }).iterator()
-    }
-  }
-}
-
 /** CHANGES FEED between two snapshots — the net-changes face of Delta's
   * Change Data Feed, computed entirely from snapshot manifests and
   * delete-vector arithmetic (no change files are ever written):
@@ -830,389 +627,364 @@ object JsonlChanges {
   }
 }
 
-/** `CALL <catalog>.system.clone(source => 'ns.a', target => 'ns.b')` —
-  * DEEP CLONE: create `target` as a byte-level copy of `source`'s
-  * CURRENT state (Delta's CLONE TABLE, deep flavor). The manifest is
-  * copied verbatim — schema, routing transforms, splitSize,
-  * delete/merge modes all inherited — and the data files, `_stats`
-  * sidecars, and live `_deletes-*` vectors are copied UNDER THEIR OWN
-  * NAMES: files are immutable-by-name and every sidecar keys its proofs
-  * by file name, so the copy IS a valid table state carrying the same
-  * rows, the same pruning/bloom/sort proofs, and the same merge-on-read
-  * vectors. `_version-*` history is NOT copied — the clone starts its
-  * own timeline (snapshot names pin vectors BY NAME, and the clone's
-  * sweeps must never be fenced by the source's pins, nor vice versa).
-  * Divergence after the clone is total by construction: every writer
-  * publishes fresh writeId-tagged names and COW swaps replace whole
-  * files, so no later mutation of either side can reach the other's
-  * bytes. Deep (not shallow) is deliberate: a shallow clone sharing
-  * data files would let either side's vacuum/compaction delete files
-  * the other still lists — the single-writer discipline is per
-  * DIRECTORY and cannot span tables. On an object store the local copy
-  * becomes a server-side COPY per file, O(metadata) each, zero bytes
-  * through the engine. Report row: (n_files, n_vectors, n_bytes). */
-private[sources] class CloneProcedure(catalog: JsonlCatalog)
-    extends UnboundProcedure {
+/** One `CALL <catalog>.system.<name>` procedure: its name, description,
+  * parameters, report schema and body. Each procedure is one row of
+  * [[JsonlProcedures.all]]; [[JsonlCatalog]] serves the whole SQL face
+  * (`CALL`, `SHOW PROCEDURES`, `DESCRIBE PROCEDURE`) from that table. */
+private[graft] final case class Proc(name: String, description: String,
+    params: Seq[ProcedureParameter], report: StructType)(
+    val body: (JsonlCatalog, Args) => Seq[InternalRow])
 
-  override def name(): String = "clone"
-  override def description(): String =
-    "Deep-clone a table's current state (manifest + data + sidecars + " +
-      "live delete vectors; no version history) into a new table"
+/** One call's arguments, positional in the row's parameter order. Every
+  * `namespace.name` argument passes one shape rule: at least two parts,
+  * none empty. An empty part must be refused: `'lake..t'` would name
+  * namespace `[lake, ""]`, whose directory `<wh>/lake//t` Hadoop's `Path`
+  * collapses onto `lake.t` — a call on a table the user never named. */
+private[graft] final class Args(proc: String, names: Seq[String],
+    input: InternalRow, catalog: JsonlCatalog) {
+  def str(i: Int): String = input.getUTF8String(i).toString
+  def int(i: Int, default: Int): Int =
+    if (input.isNullAt(i)) default else input.getInt(i)
+  def double(i: Int, default: Double): Double =
+    if (input.isNullAt(i)) default else input.getDouble(i)
+  /** Comma-separated items, trimmed, empty items dropped. */
+  def list(i: Int): Seq[String] =
+    str(i).split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+  /** A `namespace.name`, shape-checked only (the table may not exist). */
+  def ident(i: Int): Identifier = identOf(names(i), str(i))
+  /** Each item of a comma-separated list of `namespace.name`s. */
+  def idents(i: Int): Seq[Identifier] = list(i).map(identOf(names(i), _))
+  /** An existing table and its load; `NoSuchTableException` when absent. */
+  def table(i: Int): (Identifier, Table) = {
+    val id = ident(i)
+    (id, catalog.loadTable(id))
+  }
+  private def identOf(arg: String, v: String): Identifier = {
+    val parts = v.split("\\.", -1).toSeq
+    require(parts.size >= 2 && parts.forall(_.nonEmpty),
+      s"graft-jsonl $proc: $arg must be namespace.name, got '$v'")
+    Identifier.of(parts.init.toArray, parts.last)
+  }
+}
 
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "clone"
-    override def description(): String = CloneProcedure.this.description()
-    override def isDeterministic: Boolean = false // creates a table
+/** The one DSv2 procedure class: a [[Proc]] row served for one catalog.
+  * Unbound and bound at once, since no row's parameters depend on the
+  * call's input types. Never deterministic: every row mutates or reads
+  * directory state. Its one [[LocalScan]] carries the body's report rows. */
+private[sources] final class JsonlProcedure(p: Proc, catalog: JsonlCatalog)
+    extends UnboundProcedure with BoundProcedure {
+  override def name(): String = p.name
+  override def description(): String = p.description
+  override def bind(inputType: StructType): BoundProcedure = this
+  override def isDeterministic: Boolean = false
+  override def parameters(): Array[ProcedureParameter] = p.params.toArray
 
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("source", StringType)
-        .comment("table to clone, as namespace.name within this catalog")
-        .build(),
-      ProcedureParameter.in("target", StringType)
-        .comment("table to create, as namespace.name within this catalog")
-        .build())
+  override def call(input: InternalRow): java.util.Iterator[Scan] = {
+    val report =
+      p.body(catalog, new Args(p.name, p.params.map(_.name), input, catalog)).toArray
+    java.util.Collections.singletonList[Scan](new LocalScan {
+      override def readSchema(): StructType = p.report
+      override def rows(): Array[InternalRow] = report
+      override def description(): String = s"${p.name} report"
+    }).iterator()
+  }
+}
 
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      def identOf(arg: String, v: String): Identifier = {
-        val parts = v.split('.').toSeq
-        require(parts.size >= 2,
-          s"graft-jsonl clone: $arg must be namespace.name, got '$v'")
-        Identifier.of(parts.init.toArray, parts.last)
-      }
-      val srcIdent = identOf("source", input.getUTF8String(0).toString)
-      val dstIdent = identOf("target", input.getUTF8String(1).toString)
-      catalog.loadTable(srcIdent) // throws NoSuchTableException when absent
-      val src = catalog.dirOf(srcIdent)
-      val dst = catalog.dirOf(dstIdent)
-      val fs = FileSystem.get(src.toUri, new Configuration())
+/** Maintenance procedures (`CALL cat.system.compact_deletes(...)`) — the
+  * DSv2 [[org.apache.spark.sql.connector.catalog.ProcedureCatalog]] face
+  * of [[JsonlCatalog]]. Table-changing operations that are not statements
+  * over rows (compaction, vacuum) belong here, not in ad-hoc driver
+  * helpers: the SQL face is what a pipeline's maintenance DAG actually
+  * invokes. Each procedure is bound once, as one [[Proc]] row of [[all]]:
+  * `loadProcedure` looks its name up here and `listProcedures` lists the
+  * rows in this order. */
+private[graft] object JsonlProcedures {
+
+  private def in(name: String, t: DataType, comment: String): ProcedureParameter =
+    ProcedureParameter.in(name, t).comment(comment).build()
+
+  private def opt(name: String, t: DataType, default: String,
+      comment: String): ProcedureParameter =
+    ProcedureParameter.in(name, t).defaultValue(default).comment(comment).build()
+
+  private def report(nullable: Boolean)(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t, nullable) })
+
+  /** One report row; a String is stored as Spark's UTF8String. */
+  private def row(values: Any*): InternalRow =
+    new GenericInternalRow(values.map {
+      case s: String => UTF8String.fromString(s)
+      case v         => v
+    }.toArray)
+
+  private def fsOf(root: Path): FileSystem =
+    FileSystem.get(root.toUri, new Configuration())
+
+  val all: Seq[Proc] = Seq(
+    /** `CALL <catalog>.system.clone(source => 'ns.a', target => 'ns.b')` —
+      * DEEP CLONE: create `target` as a byte-level copy of `source`'s
+      * CURRENT state (Delta's CLONE TABLE, deep flavor). The manifest is
+      * copied verbatim — schema, routing transforms, splitSize,
+      * delete/merge modes all inherited — and the data files, `_stats`
+      * sidecars, and live `_deletes-*` vectors are copied UNDER THEIR OWN
+      * NAMES: files are immutable-by-name and every sidecar keys its proofs
+      * by file name, so the copy IS a valid table state carrying the same
+      * rows, the same pruning/bloom/sort proofs, and the same merge-on-read
+      * vectors. `_version-*` history is NOT copied — the clone starts its
+      * own timeline (snapshot names pin vectors BY NAME, and the clone's
+      * sweeps must never be fenced by the source's pins, nor vice versa).
+      * Divergence after the clone is total by construction: every writer
+      * publishes fresh writeId-tagged names and COW swaps replace whole
+      * files, so no later mutation of either side can reach the other's
+      * bytes. Deep (not shallow) is deliberate: a shallow clone sharing
+      * data files would let either side's vacuum/compaction delete files
+      * the other still lists — the single-writer discipline is per
+      * DIRECTORY and cannot span tables. On an object store the local copy
+      * becomes a server-side COPY per file, O(metadata) each, zero bytes
+      * through the engine. Report row: (n_files, n_vectors, n_bytes). */
+    Proc("clone",
+      "Deep-clone a table's current state (manifest + data + sidecars + " +
+        "live delete vectors; no version history) into a new table",
+      Seq(in("source", StringType, "table to clone, as namespace.name within this catalog"),
+        in("target", StringType, "table to create, as namespace.name within this catalog")),
+      report(nullable = true)(
+        "n_files" -> LongType, "n_vectors" -> LongType, "n_bytes" -> LongType)
+    ) { (cat, a) =>
+      val (srcIdent, _) = a.table(0)
+      val dstIdent = a.ident(1)
+      val src = cat.dirOf(srcIdent)
+      val dst = cat.dirOf(dstIdent)
+      val fs = fsOf(src)
       if (fs.exists(new Path(dst, JsonlCatalog.Manifest)))
-        throw new org.apache.spark.sql.catalyst.analysis
-          .TableAlreadyExistsException(dstIdent)
+        throw new TableAlreadyExistsException(dstIdent)
       // under the SOURCE table's commit lock: the clone is a point-in-time
       // byte copy, and an unlocked copy racing a committing writer could
       // capture a half-published state (some renamed files without their
       // stats sidecar, a swap's delete without its replacement)
       val (nFiles, nVectors, nBytes) =
-        JsonlOcc.withCommitLock(fs, src, "clone") {
+        JsonlOcc.withCommitLock(fs, src, "clone copy") {
           JsonlV2.copyTableFiles(
             src.toString, dst.toString, n => !n.startsWith("_version-"))
         }
-      val row: InternalRow =
-        new GenericInternalRow(Array[Any](nFiles, nVectors, nBytes))
-      java.util.Collections.singletonList[Scan](new LocalScan {
-        override def readSchema(): StructType = CloneProcedure.ReportSchema
-        override def rows(): Array[InternalRow] = Array(row)
-        override def description(): String = "clone report"
-      }).iterator()
-    }
-  }
-}
+      Seq(row(nFiles, nVectors, nBytes))
+    },
 
-private[sources] object CloneProcedure {
-  val ReportSchema: StructType = StructType(Seq(
-    StructField("n_files", LongType),
-    StructField("n_vectors", LongType),
-    StructField("n_bytes", LongType)))
-}
+    /** `CALL <catalog>.system.compact_deletes(table => 'ns.t', min_fraction
+      * => 0.3)` — the SQL face of [[JsonlMaintenance.compactDeletes]].
+      * Returns one report row: files rewritten/skipped, rows removed, vector
+      * sidecars before/after. */
+    Proc("compact_deletes",
+      "Rewrite delete-vectored data files without their deleted rows; " +
+        "files below min_fraction dead keep their vectors",
+      Seq(in("table", StringType, "table to compact, as namespace.name within this catalog"),
+        opt("min_fraction", DoubleType, "0.0",
+          "compact a file only when deleted rows / total rows >= this")),
+      report(nullable = false)(
+        "rewritten_files" -> LongType, "skipped_files" -> LongType,
+        "rows_removed" -> LongType, "vector_sidecars_before" -> LongType,
+        "vector_sidecars_after" -> LongType)
+    ) { (cat, a) =>
+      val (ident, tbl) = a.table(0)
+      val r = JsonlMaintenance.compactDeletes(
+        SparkSession.active, cat, ident, tbl, a.double(1, 0.0))
+      Seq(row(r.rewrittenFiles, r.skippedFiles, r.rowsRemoved,
+        r.vectorSidecarsBefore, r.vectorSidecarsAfter))
+    },
 
-/** `CALL <catalog>.system.history(table => 'ns.t')` — the table's
-  * snapshot history: one row per recorded version with its file/vector
-  * counts and how many of its files are still live (a version whose
-  * `live_files < n_files` has lost files to compaction/COW/vacuum and a
-  * pinned read of it will fail loudly — the row makes the retention
-  * state INSPECTABLE instead of discovered at plan time). Driver-side
-  * manifest arithmetic, zero data read. */
-private[sources] class HistoryProcedure(catalog: JsonlCatalog)
-    extends UnboundProcedure {
+    /** `CALL <catalog>.system.zorder(table => 'ns.t', columns => 'a,b',
+      * target_files => 16)` — the SQL face of [[JsonlZorder.zorder]]. */
+    Proc("zorder",
+      "Rewrite the table z-ordered on the given bigint columns so sidecar " +
+        "min/max skipping prunes on all of them at once",
+      Seq(in("table", StringType, "table to rewrite, as namespace.name within this catalog"),
+        in("columns", StringType, "comma-separated bigint columns, most-selective first"),
+        opt("target_files", IntegerType, "0", "files to publish; 0 keeps the current count")),
+      report(nullable = false)(
+        "files_before" -> LongType, "files_after" -> LongType,
+        "zorder_columns" -> StringType)
+    ) { (cat, a) =>
+      val (ident, tbl) = a.table(0)
+      val r = JsonlZorder.zorder(
+        SparkSession.active, cat, ident, tbl, a.list(1), a.int(2, 0))
+      Seq(row(r.filesBefore, r.filesAfter, r.columns))
+    },
 
-  override def name(): String = "history"
-  override def description(): String =
-    "List the table's VERSION AS OF snapshots with file/vector counts " +
-      "and their current readability"
+    /** `CALL <catalog>.system.vacuum(table => 'ns.t')` — the SQL face of
+      * [[JsonlVacuum.vacuum]]. */
+    Proc("vacuum",
+      "Sweep orphan temp files, merge stats sidecars to live entries only, " +
+        "drop dead delete-vector entries",
+      Seq(in("table", StringType, "table to vacuum, as namespace.name within this catalog")),
+      report(nullable = false)(
+        "temps_removed" -> LongType, "stats_files_before" -> LongType,
+        "stats_files_after" -> LongType, "dead_entries_dropped" -> LongType)
+    ) { (cat, a) =>
+      val (ident, _) = a.table(0)
+      val r = JsonlVacuum.vacuum(cat, ident)
+      Seq(row(r.tempsRemoved, r.statsFilesBefore, r.statsFilesAfter,
+        r.deadEntriesDropped))
+    },
 
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "history"
-    override def description(): String = HistoryProcedure.this.description()
-    override def isDeterministic: Boolean = false // reads directory state
+    /** `CALL <catalog>.system.snapshot(table => 'ns.t')` — record the table's
+      * current listing as the next time-travel version
+      * ([[JsonlVersions.record]]). Returns one report row:
+      * (version, n_files, n_vectors). */
+    Proc("snapshot",
+      "Record the table's current file/vector listing as the next " +
+        "VERSION AS OF snapshot",
+      Seq(in("table", StringType, "table to snapshot, as namespace.name within this catalog")),
+      report(nullable = true)(
+        "version" -> LongType, "n_files" -> LongType, "n_vectors" -> LongType)
+    ) { (cat, a) =>
+      // the schema recorded in the manifest is what the pinned read will
+      // resolve rows against
+      val (ident, table) = a.table(0)
+      val root = cat.dirOf(ident)
+      val (v, nf, nv) =
+        JsonlVersions.record(fsOf(root), root, Some(table.schema().json))
+      Seq(row(v, nf, nv))
+    },
 
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("table, as namespace.name within this catalog")
-        .build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val parts = input.getUTF8String(0).toString.split('.').toSeq
-      require(parts.size >= 2, "graft-jsonl history: table must be namespace.name")
-      val ident = Identifier.of(parts.init.toArray, parts.last)
-      catalog.loadTable(ident)
-      val root = catalog.dirOf(ident)
-      val fs = FileSystem.get(root.toUri, new Configuration())
+    /** `CALL <catalog>.system.history(table => 'ns.t')` — the table's
+      * snapshot history: one row per recorded version with its file/vector
+      * counts and how many of its files are still live (a version whose
+      * `live_files < n_files` has lost files to compaction/COW/vacuum and a
+      * pinned read of it will fail loudly — the row makes the retention
+      * state INSPECTABLE instead of discovered at plan time). Driver-side
+      * manifest arithmetic, zero data read. */
+    Proc("history",
+      "List the table's VERSION AS OF snapshots with file/vector counts " +
+        "and their current readability",
+      Seq(in("table", StringType, "table, as namespace.name within this catalog")),
+      report(nullable = true)(
+        "version" -> LongType, "n_files" -> LongType, "n_vectors" -> LongType,
+        "live_files" -> LongType)
+    ) { (cat, a) =>
+      val (ident, _) = a.table(0)
+      val root = cat.dirOf(ident)
+      val fs = fsOf(root)
       def nameOf(p: String) = p.substring(p.lastIndexOf('/') + 1)
       val live = JsonlV2.listFiles(root.toString).map(f => nameOf(f._1)).toSet
-      // NOT named `rows`: inside the LocalScan the name would resolve to
-      // the anon class's own rows() override and compile into an infinite
-      // tail-recursive self-call
-      val report: Array[InternalRow] =
-        JsonlVersions.versionsOf(fs, root).map { v =>
-          val pin = JsonlVersions.load(fs, root, v)
-          new GenericInternalRow(Array[Any](v, pin.files.size.toLong,
-            pin.vectors.size.toLong, pin.files.count(live).toLong)): InternalRow
-        }.toArray
-      java.util.Collections.singletonList[Scan](new LocalScan {
-        override def readSchema(): StructType = HistoryProcedure.ReportSchema
-        override def rows(): Array[InternalRow] = report
-        override def description(): String = "history report"
-      }).iterator()
-    }
-  }
-}
+      JsonlVersions.versionsOf(fs, root).map { v =>
+        val pin = JsonlVersions.load(fs, root, v)
+        row(v, pin.files.size.toLong, pin.vectors.size.toLong,
+          pin.files.count(live).toLong)
+      }
+    },
 
-private[sources] object HistoryProcedure {
-  val ReportSchema: StructType = StructType(Seq(
-    StructField("version", LongType),
-    StructField("n_files", LongType),
-    StructField("n_vectors", LongType),
-    StructField("live_files", LongType)))
-}
+    /** `CALL <catalog>.system.ndv(table => 'ns.t')` — the table's sidecar
+      * NDV statistics ([[JsonlNdv]]): one row per column that carries a
+      * sketch anywhere in the table, with the plan-time merged estimate and
+      * max value byte length, or `covered = false` (null estimate) where a
+      * live file lacks the sketch — the same coverage verdict the broadcast
+      * rule consults, made INSPECTABLE. Driver-side sidecar arithmetic,
+      * zero data read. */
+    Proc("ndv",
+      "Report the merged sidecar NDV sketch estimates per column",
+      Seq(in("table", StringType, "table, as namespace.name within this catalog")),
+      report(nullable = true)(
+        "column" -> StringType, "ndv" -> DoubleType, "max_len" -> LongType,
+        "covered" -> BooleanType)
+    ) { (cat, a) =>
+      val (ident, _) = a.table(0)
+      JsonlNdv.allMergedNdvs(cat.dirOf(ident).toString).toSeq.sortBy(_._1)
+        .map { case (col, est) =>
+          row(col, est.map(c => Double.box(c.estimate)).orNull,
+            est.map(c => Long.box(c.maxLen)).orNull, est.isDefined)
+        }
+    },
 
-/** `CALL <catalog>.system.ndv(table => 'ns.t')` — the table's sidecar
-  * NDV statistics ([[JsonlNdv]]): one row per column that carries a
-  * sketch anywhere in the table, with the plan-time merged estimate and
-  * max value byte length, or `covered = false` (null estimate) where a
-  * live file lacks the sketch — the same coverage verdict the broadcast
-  * rule consults, made INSPECTABLE. Driver-side sidecar arithmetic,
-  * zero data read. */
-private[sources] class NdvProcedure(catalog: JsonlCatalog)
-    extends UnboundProcedure {
-
-  override def name(): String = "ndv"
-  override def description(): String =
-    "Report the merged sidecar NDV sketch estimates per column"
-
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "ndv"
-    override def description(): String = NdvProcedure.this.description()
-    override def isDeterministic: Boolean = false // reads directory state
-
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("table, as namespace.name within this catalog")
-        .build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val parts = input.getUTF8String(0).toString.split('.').toSeq
-      require(parts.size >= 2, "graft-jsonl ndv: table must be namespace.name")
-      val ident = Identifier.of(parts.init.toArray, parts.last)
-      catalog.loadTable(ident)
-      val dir = catalog.dirOf(ident).toString
-      val report: Array[InternalRow] = JsonlNdv.allMergedNdvs(dir)
-        .toSeq.sortBy(_._1).map { case (col, est) =>
-          new GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(col),
-            est.map(c => Double.box(c.estimate)).orNull,
-            est.map(c => Long.box(c.maxLen)).orNull,
-            est.isDefined)): InternalRow
-        }.toArray
-      java.util.Collections.singletonList[Scan](new LocalScan {
-        override def readSchema(): StructType = NdvProcedure.ReportSchema
-        override def rows(): Array[InternalRow] = report
-        override def description(): String = "ndv report"
-      }).iterator()
-    }
-  }
-}
-
-private[sources] object NdvProcedure {
-  val ReportSchema: StructType = StructType(Seq(
-    StructField("column", StringType),
-    StructField("ndv", org.apache.spark.sql.types.DoubleType),
-    StructField("max_len", LongType),
-    StructField("covered", org.apache.spark.sql.types.BooleanType)))
-}
-
-/** `CALL <catalog>.system.expire_snapshots(table => 'ns.t', keep_last
-  * => n)` — retention for the time-travel history: drop every
-  * `_version-*.json` manifest except the newest `keep_last` (≥ 1; the
-  * newest snapshot is never expirable through this face). Version
-  * numbers stay MONOTONE — the next snapshot continues from the highest
-  * ever recorded, expired or not, so an expired version number is never
-  * reused to mean different data. Manifest-only: data files are owned by
-  * the live listing and the compaction/vacuum lifecycle, so expiring a
-  * snapshot reclaims metadata and REMOVES THE EXPECTATION that its files
-  * stay readable — the Iceberg expire_snapshots contract, where the
-  * snapshot set is what vacuum-style tools consult before dropping
-  * unreferenced files. Returns (expired, kept). */
-private[sources] class ExpireSnapshotsProcedure(catalog: JsonlCatalog)
-    extends UnboundProcedure {
-
-  override def name(): String = "expire_snapshots"
-  override def description(): String =
-    "Drop all but the newest keep_last VERSION AS OF snapshot manifests"
-
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "expire_snapshots"
-    override def description(): String =
-      ExpireSnapshotsProcedure.this.description()
-    override def isDeterministic: Boolean = false // mutates the directory
-
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("table, as namespace.name within this catalog")
-        .build(),
-      ProcedureParameter.in("keep_last", IntegerType)
-        .comment("how many newest snapshots to keep (>= 1)")
-        .build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val parts = input.getUTF8String(0).toString.split('.').toSeq
-      require(parts.size >= 2,
-        "graft-jsonl expire_snapshots: table must be namespace.name")
-      val keep = input.getInt(1)
+    /** `CALL <catalog>.system.expire_snapshots(table => 'ns.t', keep_last
+      * => n)` — retention for the time-travel history: drop every
+      * `_version-*.json` manifest except the newest `keep_last` (≥ 1; the
+      * newest snapshot is never expirable through this face). Version
+      * numbers stay MONOTONE — the next snapshot continues from the highest
+      * ever recorded, expired or not, so an expired version number is never
+      * reused to mean different data. Manifest-only: data files are owned by
+      * the live listing and the compaction/vacuum lifecycle, so expiring a
+      * snapshot reclaims metadata and REMOVES THE EXPECTATION that its files
+      * stay readable — the Iceberg expire_snapshots contract, where the
+      * snapshot set is what vacuum-style tools consult before dropping
+      * unreferenced files. Returns (expired, kept). */
+    Proc("expire_snapshots",
+      "Drop all but the newest keep_last VERSION AS OF snapshot manifests",
+      Seq(in("table", StringType, "table, as namespace.name within this catalog"),
+        in("keep_last", IntegerType, "how many newest snapshots to keep (>= 1)")),
+      report(nullable = true)("expired" -> LongType, "kept" -> LongType)
+    ) { (cat, a) =>
+      val (ident, _) = a.table(0)
+      val keep = a.int(1, 0)
       require(keep >= 1,
         s"graft-jsonl expire_snapshots: keep_last must be >= 1, got $keep")
-      val ident = Identifier.of(parts.init.toArray, parts.last)
-      catalog.loadTable(ident)
-      val root = catalog.dirOf(ident)
-      val fs = FileSystem.get(root.toUri, new Configuration())
+      val root = cat.dirOf(ident)
+      val fs = fsOf(root)
       // under the commit lock: snapshot record() lists versions for its
       // next number and the sweep consults pinnedVectors — both must see
       // the manifest set whole, never mid-expiry
-      val (versions, expire) = JsonlOcc.withCommitLock(fs, root,
-        "expire_snapshots") {
-        val vs = JsonlVersions.versionsOf(fs, root)
-        val ex = vs.dropRight(keep)
-        ex.foreach { v =>
-          require(fs.delete(new Path(root, s"_version-$v.json"), false),
-            s"graft-jsonl: failed to expire snapshot $v")
+      val (versions, expire) =
+        JsonlOcc.withCommitLock(fs, root, "snapshot expiry") {
+          val vs = JsonlVersions.versionsOf(fs, root)
+          val ex = vs.dropRight(keep)
+          ex.foreach { v =>
+            require(fs.delete(new Path(root, s"_version-$v.json"), false),
+              s"graft-jsonl: failed to expire snapshot $v")
+          }
+          JsonlVersions.evictVersions(root.toString, ex)
+          (vs, ex)
         }
-        JsonlVersions.evictVersions(root.toString, ex)
-        (vs, ex)
-      }
-      val row: InternalRow = new GenericInternalRow(Array[Any](
-        expire.size.toLong, (versions.size - expire.size).toLong))
-      java.util.Collections.singletonList[Scan](new LocalScan {
-        override def readSchema(): StructType =
-          ExpireSnapshotsProcedure.ReportSchema
-        override def rows(): Array[InternalRow] = Array(row)
-        override def description(): String = "expire_snapshots report"
-      }).iterator()
-    }
-  }
-}
+      Seq(row(expire.size.toLong, (versions.size - expire.size).toLong))
+    },
 
-private[sources] object ExpireSnapshotsProcedure {
-  val ReportSchema: StructType = StructType(Seq(
-    StructField("expired", LongType),
-    StructField("kept", LongType)))
-}
-
-/** `CALL <cat>.system.transact(tables => 'ns.a,ns.b', views => 'va,vb')`
-  * — atomically append each named temp view's rows to its corresponding
-  * table, all-or-nothing across the group ([[JsonlTransact]]'s manifest
-  * protocol). The star-load face: fact + dim batches become one visible
-  * commit, the ACID unit the MySQL reference got from FK'd InnoDB
-  * (`metro.sql:42-59`). */
-private[sources] class TransactProcedure(catalog: JsonlCatalog)
-    extends UnboundProcedure {
-
-  override def name(): String = "transact"
-  override def description(): String =
-    "Atomic multi-table append: each view's rows land in its table, " +
-      "all-or-nothing across the group"
-
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "transact"
-    override def description(): String = TransactProcedure.this.description()
-    override def isDeterministic: Boolean = false // commits data
-
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("tables", StringType)
-        .comment("comma-separated target tables, each namespace.name")
-        .build(),
-      ProcedureParameter.in("views", StringType)
-        .comment("comma-separated temp view names, one batch per table, " +
-          "positionally matched")
-        .build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val tables = input.getUTF8String(0).toString.split(',').toSeq
-        .map(_.trim).filter(_.nonEmpty)
-      val views = input.getUTF8String(1).toString.split(',').toSeq
-        .map(_.trim).filter(_.nonEmpty)
+    /** `CALL <cat>.system.transact(tables => 'ns.a,ns.b', views => 'va,vb')`
+      * — atomically append each named temp view's rows to its corresponding
+      * table, all-or-nothing across the group ([[JsonlTransact]]'s manifest
+      * protocol). The star-load face: fact + dim batches become one visible
+      * commit, the ACID unit the MySQL reference got from FK'd InnoDB
+      * (`metro.sql:42-59`). */
+    Proc("transact",
+      "Atomic multi-table append: each view's rows land in its table, " +
+        "all-or-nothing across the group",
+      Seq(in("tables", StringType, "comma-separated target tables, each namespace.name"),
+        in("views", StringType, "comma-separated temp view names, one batch per table, " +
+          "positionally matched")),
+      report(nullable = true)(
+        "txn_id" -> StringType, "n_tables" -> LongType, "n_files" -> LongType)
+    ) { (cat, a) =>
+      val tables = a.idents(0)
+      val views = a.list(1)
       require(tables.nonEmpty && tables.size == views.size,
         s"graft-jsonl transact: ${tables.size} tables vs ${views.size} views")
       val spark = SparkSession.active
-      val batches = tables.zip(views).map { case (t, v) =>
-        val parts = t.split('.').toSeq
-        require(parts.size >= 2,
-          s"graft-jsonl transact: table must be namespace.name, got '$t'")
-        (Identifier.of(parts.init.toArray, parts.last), spark.table(v))
-      }
-      val (txnId, nFiles) = JsonlTransact.transact(catalog, batches)
-      val row: InternalRow = new GenericInternalRow(Array[Any](
-        org.apache.spark.unsafe.types.UTF8String.fromString(txnId),
-        tables.size.toLong, nFiles))
-      java.util.Collections.singletonList[Scan](new LocalScan {
-        override def readSchema(): StructType = TransactProcedure.ReportSchema
-        override def rows(): Array[InternalRow] = Array(row)
-        override def description(): String = "transact report"
-      }).iterator()
-    }
+      val (txnId, nFiles) =
+        JsonlTransact.transact(cat, tables.zip(views.map(spark.table)))
+      Seq(row(txnId, tables.size.toLong, nFiles))
+    },
+
+    /** `CALL <cat>.system.evolve_bucket(table => 'ns.t', buckets => n)` —
+      * lazy bucket-count evolution ([[JsonlCatalog.evolveBucket]]): metadata
+      * only, no 100 TB rewrite; old files keep their claimed bucket ids, new
+      * writes route at the new width, scans report the coarsest common
+      * partitioning. Refuses non-divisor-chain widths loudly. */
+    Proc("evolve_bucket",
+      "Change a table's bucket count by lazy split (metadata-only; " +
+        "new width must be a multiple of the current)",
+      Seq(in("table", StringType, "table, as namespace.name within this catalog"),
+        in("buckets", IntegerType, "new bucket count — a strict multiple of the current")),
+      report(nullable = true)(
+        "old_buckets" -> LongType, "new_buckets" -> LongType,
+        "report_buckets" -> LongType)
+    ) { (cat, a) =>
+      val (ident, _) = a.table(0)
+      val (oldN, newN, coarse) = cat.evolveBucket(ident, a.int(1, 0))
+      Seq(row(oldN.toLong, newN.toLong, coarse.toLong))
+    })
+
+  /** [[all]] keyed by name; a name bound twice fails at load instead of
+    * one row silently shadowing the other. */
+  val byName: Map[String, Proc] = {
+    val dup = all.groupBy(_.name).collect { case (n, ps) if ps.size > 1 => n }
+    require(dup.isEmpty,
+      s"procedure names bound twice: ${dup.toSeq.sorted.mkString(", ")}")
+    all.map(p => p.name -> p).toMap
   }
-}
-
-private[sources] object TransactProcedure {
-  val ReportSchema: StructType = StructType(Seq(
-    StructField("txn_id", StringType),
-    StructField("n_tables", LongType),
-    StructField("n_files", LongType)))
-}
-
-/** `CALL <cat>.system.evolve_bucket(table => 'ns.t', buckets => n)` —
-  * lazy bucket-count evolution ([[JsonlCatalog.evolveBucket]]): metadata
-  * only, no 100 TB rewrite; old files keep their claimed bucket ids, new
-  * writes route at the new width, scans report the coarsest common
-  * partitioning. Refuses non-divisor-chain widths loudly. */
-private[sources] class EvolveBucketProcedure(catalog: JsonlCatalog)
-    extends UnboundProcedure {
-
-  override def name(): String = "evolve_bucket"
-  override def description(): String =
-    "Change a table's bucket count by lazy split (metadata-only; " +
-      "new width must be a multiple of the current)"
-
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "evolve_bucket"
-    override def description(): String = EvolveBucketProcedure.this.description()
-    override def isDeterministic: Boolean = false // rewrites the manifest
-
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("table, as namespace.name within this catalog").build(),
-      ProcedureParameter.in("buckets", IntegerType)
-        .comment("new bucket count — a strict multiple of the current").build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val parts = input.getUTF8String(0).toString.split('.').toSeq
-      require(parts.size >= 2,
-        "graft-jsonl evolve_bucket: table must be namespace.name")
-      val ident = Identifier.of(parts.init.toArray, parts.last)
-      catalog.loadTable(ident) // throws NoSuchTableException when absent
-      val (oldN, newN, coarse) = catalog.evolveBucket(ident, input.getInt(1))
-      val row: InternalRow = new GenericInternalRow(
-        Array[Any](oldN.toLong, newN.toLong, coarse.toLong))
-      java.util.Collections.singletonList[Scan](new LocalScan {
-        override def readSchema(): StructType = EvolveBucketProcedure.ReportSchema
-        override def rows(): Array[InternalRow] = Array(row)
-        override def description(): String = "evolve_bucket report"
-      }).iterator()
-    }
-  }
-}
-
-private[sources] object EvolveBucketProcedure {
-  val ReportSchema: StructType = StructType(Seq(
-    StructField("old_buckets", LongType),
-    StructField("new_buckets", LongType),
-    StructField("report_buckets", LongType)))
 }

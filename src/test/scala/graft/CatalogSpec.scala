@@ -2453,4 +2453,199 @@ class CatalogSpec extends SparkSpec {
       === docs.filter(col("doc_id") >= 400).count(),
       "the appended rows were lost")
   }
+
+  // === the procedure surface =================================================
+
+  test("procedure surface: DESCRIBE PROCEDURE and the CALL report schema of " +
+    "all ten procedures are pinned, and an unknown name or namespace is " +
+    "ROUTINE_NOT_FOUND naming the path as written") {
+    val cat = freshCat("procpin")
+    spark.sql(s"CREATE NAMESPACE $cat.lake")
+    spark.sql(s"CREATE TABLE $cat.lake.t (doc_id BIGINT, source STRING, " +
+      s"n_chars BIGINT)")
+    spark.sql(s"CREATE TABLE $cat.lake.b (doc_id BIGINT, source STRING, " +
+      s"n_chars BIGINT) PARTITIONED BY (bucket(4, doc_id))")
+    docs.writeTo(s"$cat.lake.t").append()
+    docs.writeTo(s"$cat.lake.b").append()
+    docs.createOrReplaceTempView("procpin_v")
+    val calls = Seq(
+      "snapshot" -> "table => 'lake.t'",
+      "history" -> "table => 'lake.t'",
+      "ndv" -> "table => 'lake.t'",
+      "expire_snapshots" -> "table => 'lake.t', keep_last => 1",
+      "compact_deletes" -> "table => 'lake.t'",
+      "zorder" -> "table => 'lake.t', columns => 'doc_id,n_chars'",
+      "vacuum" -> "table => 'lake.t'",
+      "clone" -> "source => 'lake.t', target => 'lake.c'",
+      "transact" -> "tables => 'lake.t', views => 'procpin_v'",
+      "evolve_bucket" -> "table => 'lake.b', buckets => 8")
+    // DESCRIBE PROCEDURE prints only the name and description; the
+    // parameters are read through the DSv2 face the analyzer binds
+    val pc = spark.sessionState.catalogManager.catalog(cat)
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.ProcedureCatalog]
+    val got = calls.map { case (p, args) =>
+      val desc = spark.sql(s"DESCRIBE PROCEDURE $cat.system.$p").collect()
+        .map(_.mkString(" | ")).toSeq
+      val bound = pc.loadProcedure(
+        org.apache.spark.sql.connector.catalog.Identifier.of(Array("system"), p))
+        .bind(new StructType())
+      val params = s"deterministic ${bound.isDeterministic}" +:
+        bound.parameters().toSeq.map(a => s"${a.mode} ${a.name} " +
+          s"${a.dataType.simpleString} default ${Option(a.defaultValue)
+            .map(_.getSql).orNull} -- ${a.comment}")
+      val report = spark.sql(s"CALL $cat.system.$p($args)").schema.fields
+        .map(f => s"${f.name} ${f.dataType.simpleString} ${f.nullable}").toSeq
+      p -> Seq(desc, params, report)
+    }
+    val literal = got.map { case (p, parts) =>
+      s"""    "$p" -> Seq(""" + parts.map(_.map(l => "\"" + l + "\"")
+        .mkString("Seq(", ",\n        ", ")")).mkString(",\n      ") + ")"
+    }.mkString(",\n")
+    assert(got === procedureSurface, "\n" + literal)
+
+    Seq("system.no_such", "other.vacuum").foreach { path =>
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"CALL $cat.$path(table => 'lake.t')").collect()
+      }
+      assert(e.getCondition === "ROUTINE_NOT_FOUND", e.getMessage)
+      val written = (cat +: path.split('.').toSeq).map(p => s"`$p`").mkString(".")
+      assert(e.getMessage.contains(written), e.getMessage)
+    }
+  }
+
+  /** Per procedure, in call order: its DESCRIBE PROCEDURE rows, its
+    * determinism and parameters (mode, name, type, default, comment), and
+    * its CALL report fields (name, type, nullable), as the ten hand-written
+    * procedure classes declared them. */
+  private val procedureSurface: Seq[(String, Seq[Seq[String]])] = Seq(
+    "snapshot" -> Seq(Seq("Procedure:   snapshot",
+        "Description: Record the table's current file/vector listing as the next VERSION AS OF snapshot"),
+      Seq("deterministic false",
+        "IN table string default null -- table to snapshot, as namespace.name within this catalog"),
+      Seq("version bigint true",
+        "n_files bigint true",
+        "n_vectors bigint true")),
+    "history" -> Seq(Seq("Procedure:   history",
+        "Description: List the table's VERSION AS OF snapshots with file/vector counts and their current readability"),
+      Seq("deterministic false",
+        "IN table string default null -- table, as namespace.name within this catalog"),
+      Seq("version bigint true",
+        "n_files bigint true",
+        "n_vectors bigint true",
+        "live_files bigint true")),
+    "ndv" -> Seq(Seq("Procedure:   ndv",
+        "Description: Report the merged sidecar NDV sketch estimates per column"),
+      Seq("deterministic false",
+        "IN table string default null -- table, as namespace.name within this catalog"),
+      Seq("column string true",
+        "ndv double true",
+        "max_len bigint true",
+        "covered boolean true")),
+    "expire_snapshots" -> Seq(Seq("Procedure:   expire_snapshots",
+        "Description: Drop all but the newest keep_last VERSION AS OF snapshot manifests"),
+      Seq("deterministic false",
+        "IN table string default null -- table, as namespace.name within this catalog",
+        "IN keep_last int default null -- how many newest snapshots to keep (>= 1)"),
+      Seq("expired bigint true",
+        "kept bigint true")),
+    "compact_deletes" -> Seq(Seq("Procedure:   compact_deletes",
+        "Description: Rewrite delete-vectored data files without their deleted rows; files below min_fraction dead keep their vectors"),
+      Seq("deterministic false",
+        "IN table string default null -- table to compact, as namespace.name within this catalog",
+        "IN min_fraction double default 0.0 -- compact a file only when deleted rows / total rows >= this"),
+      Seq("rewritten_files bigint false",
+        "skipped_files bigint false",
+        "rows_removed bigint false",
+        "vector_sidecars_before bigint false",
+        "vector_sidecars_after bigint false")),
+    "zorder" -> Seq(Seq("Procedure:   zorder",
+        "Description: Rewrite the table z-ordered on the given bigint columns so sidecar min/max skipping prunes on all of them at once"),
+      Seq("deterministic false",
+        "IN table string default null -- table to rewrite, as namespace.name within this catalog",
+        "IN columns string default null -- comma-separated bigint columns, most-selective first",
+        "IN target_files int default 0 -- files to publish; 0 keeps the current count"),
+      Seq("files_before bigint false",
+        "files_after bigint false",
+        "zorder_columns string false")),
+    "vacuum" -> Seq(Seq("Procedure:   vacuum",
+        "Description: Sweep orphan temp files, merge stats sidecars to live entries only, drop dead delete-vector entries"),
+      Seq("deterministic false",
+        "IN table string default null -- table to vacuum, as namespace.name within this catalog"),
+      Seq("temps_removed bigint false",
+        "stats_files_before bigint false",
+        "stats_files_after bigint false",
+        "dead_entries_dropped bigint false")),
+    "clone" -> Seq(Seq("Procedure:   clone",
+        "Description: Deep-clone a table's current state (manifest + data + sidecars + live delete vectors; no version history) into a new table"),
+      Seq("deterministic false",
+        "IN source string default null -- table to clone, as namespace.name within this catalog",
+        "IN target string default null -- table to create, as namespace.name within this catalog"),
+      Seq("n_files bigint true",
+        "n_vectors bigint true",
+        "n_bytes bigint true")),
+    "transact" -> Seq(Seq("Procedure:   transact",
+        "Description: Atomic multi-table append: each view's rows land in its table, all-or-nothing across the group"),
+      Seq("deterministic false",
+        "IN tables string default null -- comma-separated target tables, each namespace.name",
+        "IN views string default null -- comma-separated temp view names, one batch per table, positionally matched"),
+      Seq("txn_id string true",
+        "n_tables bigint true",
+        "n_files bigint true")),
+    "evolve_bucket" -> Seq(Seq("Procedure:   evolve_bucket",
+        "Description: Change a table's bucket count by lazy split (metadata-only; new width must be a multiple of the current)"),
+      Seq("deterministic false",
+        "IN table string default null -- table, as namespace.name within this catalog",
+        "IN buckets int default null -- new bucket count — a strict multiple of the current"),
+      Seq("old_buckets bigint true",
+        "new_buckets bigint true",
+        "report_buckets bigint true")))
+
+  test("every table-naming procedure argument refuses an empty name part: " +
+    "'lake..t' and 'lake.t.' are IllegalArgumentExceptions naming the " +
+    "argument, never a call on lake.t") {
+    val cat = freshCat("procnames")
+    spark.sql(s"CREATE NAMESPACE $cat.lake")
+    spark.sql(s"CREATE TABLE $cat.lake.t (doc_id BIGINT, source STRING, " +
+      s"n_chars BIGINT) PARTITIONED BY (bucket(4, doc_id))")
+    docs.writeTo(s"$cat.lake.t").append()
+    docs.createOrReplaceTempView("procnames_v")
+    def calls(bad: String) = Seq(
+      ("compact_deletes", "table", s"table => $bad"),
+      ("zorder", "table", s"table => $bad, columns => 'doc_id,n_chars'"),
+      ("vacuum", "table", s"table => $bad"),
+      ("snapshot", "table", s"table => $bad"),
+      ("history", "table", s"table => $bad"),
+      ("ndv", "table", s"table => $bad"),
+      ("expire_snapshots", "table", s"table => $bad, keep_last => 1"),
+      ("evolve_bucket", "table", s"table => $bad, buckets => 8"),
+      ("clone", "source", s"source => $bad, target => 'lake.c'"),
+      ("clone", "target", s"source => 'lake.t', target => $bad"),
+      ("transact", "tables", s"tables => $bad, views => 'procnames_v'"))
+    // the cases are exactly the arguments declared to name a table
+    val pc = spark.sessionState.catalogManager.catalog(cat)
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.ProcedureCatalog]
+    val declared = pc.listProcedures(Array("system")).toSeq.flatMap { id =>
+      pc.loadProcedure(id).bind(new StructType()).parameters().toSeq
+        .filter(_.comment().contains("namespace.name")).map(id.name -> _.name())
+    }
+    assert(declared.sorted === calls("").map(c => (c._1, c._2)).sorted)
+    val dir = new java.io.File(
+      spark.conf.get(s"spark.sql.catalog.$cat.warehouse"), "lake/t")
+    val manifest = java.nio.file.Files.readAllBytes(
+      new java.io.File(dir, "_table.json").toPath).toSeq
+    for (bad <- Seq("lake..t", "lake.t."); (p, arg, args) <- calls(s"'$bad'")) {
+      val e = withClue(s"CALL $p($args): ") {
+        intercept[IllegalArgumentException] {
+          spark.sql(s"CALL $cat.system.$p($args)").collect()
+        }
+      }
+      assert(e.getMessage.contains(
+        s"graft-jsonl $p: $arg must be namespace.name, got '$bad'"), e.getMessage)
+      assert(dir.list().filter(_.startsWith("_version-")).isEmpty,
+        s"$p recorded a version of lake.t")
+    }
+    assert(java.nio.file.Files.readAllBytes(
+      new java.io.File(dir, "_table.json").toPath).toSeq === manifest,
+      "a refused call rewrote lake.t's manifest")
+  }
 }

@@ -9,8 +9,9 @@ import graft.functions.GraftExtensions
 /** Every SparkSession comes from [[GraftSession.local]], every graft SQL
   * function from the [[graft.functions.GraftExtensions]] table, every
   * operator's kernel call from that table's typed functions, every entry
-  * from an [[Entry]] table and every artifact is a row of
-  * [[Artifacts.all]]: a builder, a registration, a map or a name in SQL
+  * from an [[Entry]] table, every artifact is a row of [[Artifacts.all]]
+  * and every `CALL` procedure a row of [[graft.sources.JsonlProcedures.all]]:
+  * a builder, a registration, a map, a procedure class or a name in SQL
   * text anywhere else is a second copy, free to drift. */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -103,5 +104,25 @@ class SessionGuardSpec extends AnyFunSuite {
       .flatMap(f => codeLines(f).flatMap(l => literal.findAllMatchIn(l).map(_.group(1))))
     assert(defined.nonEmpty)
     assert(defined.filterNot(Artifacts.all.map(_._1).contains) === Nil)
+  }
+
+  test("every CALL procedure is a row of JsonlProcedures.all, served by one class") {
+    val main = sources(root("src/main"))
+    // the one generic class implements both DSv2 faces; any other
+    // subclass (named or anonymous) is a hand-written procedure
+    val subclass = """\b(extends|with|new)\s+(Unbound|Bound)Procedure\b""".r
+    val sites = for {
+      f <- main; l <- codeLines(f) if subclass.findFirstIn(l).nonEmpty
+    } yield s"${f.getName}: ${l.trim}"
+    assert(sites.size === 1, sites)
+    // each name is bound by its row alone: no name match or list elsewhere
+    val names = graft.sources.JsonlProcedures.all.map(_.name)
+    val outside = for {
+      f <- main if f.getName != "JsonlMaintenance.scala"
+      l <- codeLines(f); n <- names if l.contains("\"" + n + "\"")
+    } yield s"${f.getName}: ${l.trim}"
+    assert(outside === Nil)
+    val rows = main.flatMap(codeLines).map(_.trim)
+    names.foreach(n => assert(rows.count(_.startsWith("Proc(\"" + n + "\"")) === 1, n))
   }
 }
