@@ -1495,7 +1495,7 @@ object TextAnalysis extends Entries {
     * shuffles. */
   /** (doc_id, chunks): the text split at its content-defined boundaries —
     * exposed for the shift-robustness invariant spec. */
-  private[graft] def cdcChunks(s: SparkSession, docs: DataFrame): DataFrame = {
+  private[graft] def cdcChunks(docs: DataFrame): DataFrame = {
     docs
       .select(col("doc_id"), col("text"),
         cdcBoundaries(col("text"), lit(8), lit(64)).as("bs"))
@@ -1520,7 +1520,7 @@ object TextAnalysis extends Entries {
   private[graft] val x25Chunks: Artifact[DataFrame] =
     Artifact("x25_chunks") { (s, d) =>
       val out = Scratch.path("x25_chunks", d, s)
-      cdcChunks(s, Tables.documents(s, d))
+      cdcChunks(Tables.documents(s, d))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
     }

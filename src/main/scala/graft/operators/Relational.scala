@@ -2790,7 +2790,7 @@ object Relational extends Entries {
     * COW/MOR trade made explicit on the same catalog. The table carries
     * `TBLPROPERTIES ('delete.mode' = 'merge-on-read')`, so the row-level
     * `DELETE … WHERE doc_id % 7 = 3` lands as POSITION-DELETE sidecars
-    * ([[graft.sources.JsonlMorDeleteOperation]], `SupportsDelta` with
+    * ([[graft.sources.JsonlMorOperation]], `SupportsDelta` with
     * `(_file, _pos)` row ids) — zero data files rewritten, O(deleted
     * rows) written — and every subsequent read merges the vectors back
     * out of its byte-range split. The entry aggregates the post-delete
@@ -3210,7 +3210,7 @@ object Relational extends Entries {
     * 'merge-on-read')`, so the same `MERGE INTO … UPDATE SET * / INSERT *`
     * statement s32 runs lands as POSITION-DELETE sidecars for the matched
     * rows' old images plus APPENDED data files for the new images
-    * ([[graft.sources.JsonlMorMergeOperation]]) — ZERO existing data
+    * ([[graft.sources.JsonlMorOperation]]) — ZERO existing data
     * files rewritten, write cost O(matched + inserted), where s32's COW
     * form rewrites every file that holds a match. This is the reference's
     * actual operating mode — a continuous trickle of small upserts

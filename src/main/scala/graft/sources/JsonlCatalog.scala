@@ -283,7 +283,7 @@ class JsonlCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
 
   /** `TBLPROPERTIES ('delete.mode' = 'merge-on-read')` switches the
     * table's row-level DELETE from the copy-on-write group swap to
-    * position-delete sidecars ([[JsonlMorDeleteOperation]]); the default
+    * position-delete sidecars ([[JsonlMorOperation]]); the default
     * (and the explicit 'copy-on-write') keeps the rewrite. Persisted in
     * the manifest like the schema — the mode is a property of the table,
     * not of the session that happens to issue the statement. */
@@ -301,7 +301,7 @@ class JsonlCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
     }
     // `merge.mode = merge-on-read` switches MERGE/UPDATE from the
     // copy-on-write group rewrite to the delta path (position-delete
-    // sidecars + appended data files, [[JsonlMorMergeOperation]]) — the
+    // sidecars + appended data files, [[JsonlMorOperation]]) — the
     // statement shape that survives frequent small upserts over a huge
     // table, which a COW partition rewrite cannot.
     val morMerge = Option(properties.get("merge.mode")) match {

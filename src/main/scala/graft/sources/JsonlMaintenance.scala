@@ -635,13 +635,20 @@ private[graft] final case class Proc(name: String, description: String,
     params: Seq[ProcedureParameter], report: StructType)(
     val body: (JsonlCatalog, Args) => Seq[InternalRow])
 
-/** One call's arguments, positional in the row's parameter order. Every
+/** One call's arguments, positional in the row's parameter order. A
+  * NULL for a parameter with no declared default is refused by name
+  * before the body runs: read as a string it would fail inside the body
+  * as Spark's `INTERNAL_ERROR`, read as an int it would pass for 0. Every
   * `namespace.name` argument passes one shape rule: at least two parts,
   * none empty. An empty part must be refused: `'lake..t'` would name
   * namespace `[lake, ""]`, whose directory `<wh>/lake//t` Hadoop's `Path`
   * collapses onto `lake.t` — a call on a table the user never named. */
-private[graft] final class Args(proc: String, names: Seq[String],
+private[graft] final class Args(proc: String, params: Seq[ProcedureParameter],
     input: InternalRow, catalog: JsonlCatalog) {
+  params.zipWithIndex.foreach { case (p, i) =>
+    require(p.defaultValue() != null || !input.isNullAt(i),
+      s"graft-jsonl $proc: ${p.name} must not be NULL")
+  }
   def str(i: Int): String = input.getUTF8String(i).toString
   def int(i: Int, default: Int): Int =
     if (input.isNullAt(i)) default else input.getInt(i)
@@ -651,9 +658,9 @@ private[graft] final class Args(proc: String, names: Seq[String],
   def list(i: Int): Seq[String] =
     str(i).split(',').toSeq.map(_.trim).filter(_.nonEmpty)
   /** A `namespace.name`, shape-checked only (the table may not exist). */
-  def ident(i: Int): Identifier = identOf(names(i), str(i))
+  def ident(i: Int): Identifier = identOf(params(i).name, str(i))
   /** Each item of a comma-separated list of `namespace.name`s. */
-  def idents(i: Int): Seq[Identifier] = list(i).map(identOf(names(i), _))
+  def idents(i: Int): Seq[Identifier] = list(i).map(identOf(params(i).name, _))
   /** An existing table and its load; `NoSuchTableException` when absent. */
   def table(i: Int): (Identifier, Table) = {
     val id = ident(i)
@@ -681,7 +688,7 @@ private[sources] final class JsonlProcedure(p: Proc, catalog: JsonlCatalog)
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val report =
-      p.body(catalog, new Args(p.name, p.params.map(_.name), input, catalog)).toArray
+      p.body(catalog, new Args(p.name, p.params, input, catalog)).toArray
     java.util.Collections.singletonList[Scan](new LocalScan {
       override def readSchema(): StructType = p.report
       override def rows(): Array[InternalRow] = report

@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 
 /** Optimistic concurrency for graft-jsonl commits.
   *
@@ -99,6 +101,32 @@ private[graft] object JsonlOcc {
       case st if st.isFile && st.getPath.getName.startsWith("_deletes-") =>
         st.getPath.getName
     }.toSet
+
+  /** The plan-time state a swap or delta commit validates against:
+    * `vectors`, the delete-vector sidecars live when the write planned,
+    * and `data`, the live data files, listed only for a MERGE under
+    * [[serializableMerge]]. */
+  final case class PlanBaseline(vectors: Set[String], data: Option[Set[String]])
+
+  /** A row-level operation's [[PlanBaseline]], captured AT OPERATION
+    * CONSTRUCTION (analysis time) — unambiguously BEFORE the operation's
+    * scan loads the vectors it applies. Capturing it any later (the
+    * batch write's constructor, whose ordering vs the scan shifts under
+    * AQE) opens a window where a concurrent delete vector lands after the
+    * scan read its row images but before the baseline listing — "not
+    * new" to validation, absent from the images, silently resurrected on
+    * commit. Early capture makes the baseline a SUBSET of what the scan
+    * applied, so the race can only produce a spurious loud abort, never a
+    * lost delete. The multi-writer fuzz caught the late-capture form.
+    * Compaction lists its vectors the same way, before its rewrite scan,
+    * and hands them to the write as the `compactVectorsAtPlan` option. */
+  def baselineAtPlan(path: String, cmd: Command): PlanBaseline = {
+    val root = new Path(path)
+    val fs = FileSystem.get(root.toUri, new Configuration())
+    PlanBaseline(liveVectorNames(fs, root),
+      if (serializableMerge && cmd == Command.MERGE) Some(liveDataFileNames(fs, root))
+      else None)
+  }
 
   /** Live DATA file names (no `_`/`.` siblings) — the plan-time baseline
     * for [[serializableMerge]]'s added-data-file validation. */
@@ -323,8 +351,8 @@ private[graft] object JsonlOcc {
   }
 
   /** The data-file names a delete-vector sidecar references (its JSON
-    * field names) — one reader shared by commit validation and both
-    * delta commits. */
+    * field names) — one reader shared by commit validation and the
+    * delta commit. */
   def vectorFileNames(fs: FileSystem, p: Path): Set[String] = {
     val in = fs.open(p)
     val tree = try JsonlV2.mapper.readTree(in) finally in.close()

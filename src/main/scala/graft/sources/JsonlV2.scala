@@ -11,8 +11,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -928,17 +930,14 @@ private[graft] class JsonlTable(
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = { () =>
-    import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-    requireUnpinned(s"row-level ${info.command()}")
-    if (morDelete && info.command() == Command.DELETE)
-      new JsonlMorDeleteOperation(path, schemaArg, splitSize, routes)
-    else if (morMerge &&
-        (info.command() == Command.MERGE || info.command() == Command.UPDATE))
-      new JsonlMorMergeOperation(path, schemaArg, splitSize, routes,
-        info.command())
+    val cmd = info.command()
+    requireUnpinned(s"row-level $cmd")
+    // `delete.mode` governs DELETE, `merge.mode` governs MERGE and UPDATE
+    val mergeOnRead = if (cmd == Command.DELETE) morDelete else morMerge
+    if (mergeOnRead)
+      new JsonlMorOperation(path, schemaArg, splitSize, routes, cmd)
     else
-      new JsonlRowLevelOperation(path, schemaArg, splitSize, routes,
-        info.command())
+      new JsonlRowLevelOperation(path, schemaArg, splitSize, routes, cmd)
   }
 
   /** METADATA-ONLY DELETE (`DELETE FROM t WHERE ...`): on a partition-
@@ -1175,42 +1174,35 @@ private[graft] class JsonlTable(
     val compact = Option(info.options.get("compactFiles"))
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
       .filter(_.nonEmpty)
-    // analysis-time vector baseline from the procedure (captured BEFORE
-    // its rewrite scan existed — see JsonlRowLevelOperation's comment);
-    // absent only for legacy callers, which fall back to capture-at-
-    // construction
-    val compactBaseline: Option[Set[String]] =
-      Option(info.options.get("compactVectorsAtPlan"))
-        .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     // write-option routing wins over catalog-declared transforms; both
     // express the same per-value file layout
     val optCols = Option(info.options.get("partitionBy")).toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
     val effRoutes = if (optCols.nonEmpty) optCols.map(IdentityRoute) else routes
     compact match {
-      case Some(names) => new WriteBuilder {
-        override def build(): Write = new Write
-            with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-          override def requiredDistribution()
-              : org.apache.spark.sql.connector.distributions.Distribution =
-            if (effRoutes.isEmpty)
-              org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-            else
-              org.apache.spark.sql.connector.distributions.Distributions.clustered(
-                effRoutes.map(_.toV2: org.apache.spark.sql.connector.expressions.Expression)
-                  .toArray)
-          override def distributionStrictlyRequired(): Boolean = false
-          override def requiredNumPartitions(): Int = 0
-          override def requiredOrdering()
-              : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-            Array.empty
-          override def description(): String =
-            s"GraftJsonl COMPACT write `$path` swap=${names.size} files"
-          override def toBatch: BatchWrite =
-            new JsonlCompactBatchWrite(path, info.schema(), effRoutes, names,
-              compactBaseline)
+      case Some(names) =>
+        // the procedure's vector baseline, listed before its rewrite scan
+        // existed (see JsonlOcc.baselineAtPlan): a baseline listed any
+        // later could miss a vector that landed in between, and the swap
+        // would silently drop its deletes
+        val atPlan = Option(info.options.get("compactVectorsAtPlan")).getOrElse(
+          throw new IllegalArgumentException(
+            s"graft-jsonl: a compactFiles write on $path needs the " +
+              "compactVectorsAtPlan option — the delete-vector sidecars " +
+              "live when the compaction planned, listed before its rewrite " +
+              "scan; without it a vector landing mid-compaction is lost"))
+        val baseline = JsonlOcc.PlanBaseline(
+          atPlan.split(',').map(_.trim).filter(_.nonEmpty).toSet, None)
+        new WriteBuilder {
+          override def build(): Write = new JsonlClusteredWrite(effRoutes) {
+            override def description(): String =
+              s"GraftJsonl COMPACT write `$path` swap=${names.size} files"
+            override def toBatch: BatchWrite =
+              new JsonlSwapBatchWrite(path, info.schema(), effRoutes,
+                "compaction", "compaction", () => names, baseline,
+                sweepVectors = true)
+          }
         }
-      }
       case None =>
         new JsonlWriteBuilder(path, info.schema(), effRoutes,
           Option(info.options.get("sortedBy")).map(_.trim).filter(_.nonEmpty),
@@ -1224,6 +1216,32 @@ private[graft] class JsonlTable(
   }
 }
 
+/** The one clustering policy every lake write requests
+  * ([[org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering]]):
+  * a NON-STRICT clustered distribution on the route columns, any
+  * partition count, no ordering. Without it, dynamic-partition routing
+  * publishes one file per (task × partition value) — a 1000-task write
+  * over 5 values drops 5000 files, the small-files pathology s14 exists
+  * to clean up. Clustered first, each value's rows land in few tasks and
+  * the layout comes out at O(values) files. Non-strict is the
+  * 100 TB-correct half: Spark plans a REBALANCE (AQE-splittable) instead
+  * of a hard repartition, so one hot partition value is split across
+  * tasks rather than pinned to a single writer — files stay single-valued
+  * either way, which is all the sidecar contract needs. The shuffle this
+  * inserts is the one the read side's KeyGroupedPartitioning report then
+  * never pays again. Plain appends, copy-on-write rewrites and compaction
+  * swaps all extend it, so rewritten rows keep the layout a fresh write
+  * produces (same sidecars, same `_pvals`). */
+private[sources] abstract class JsonlClusteredWrite(routes: Seq[RouteExpr])
+    extends Write with RequiresDistributionAndOrdering {
+  override def requiredDistribution(): Distribution =
+    if (routes.isEmpty) Distributions.unspecified()
+    else Distributions.clustered(routes.map(_.toV2: Expression).toArray)
+  override def distributionStrictlyRequired(): Boolean = false
+  override def requiredNumPartitions(): Int = 0
+  override def requiredOrdering(): Array[SortOrder] = Array.empty
+}
+
 /** One UPDATE/DELETE/MERGE rewrite in flight: the shared object through
   * which the operation's scan tells its write WHICH files form the
   * copy-on-write group set. Spark builds both faces from this instance,
@@ -1232,34 +1250,15 @@ private[graft] class JsonlTable(
   * handshake. */
 private[sources] class JsonlRowLevelOperation(
     path: String, schema: StructType, splitSize: Long, routes: Seq[RouteExpr],
-    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command)
-    extends org.apache.spark.sql.connector.write.RowLevelOperation {
+    cmd: Command) extends RowLevelOperation {
 
-  // Validation baselines, captured AT OPERATION CONSTRUCTION (analysis
-  // time) — unambiguously BEFORE the operation's scan loads the vectors
-  // it applies. Capturing them any later (the batch write's constructor,
-  // whose ordering vs the scan shifts under AQE) opens a window where a
-  // concurrent delete vector lands after the scan read its row images
-  // but before the baseline listing — "not new" to validation, absent
-  // from the images, silently resurrected on commit. Early capture makes
-  // the baseline a SUBSET of what the scan applied, so the race can only
-  // produce a spurious loud abort, never a lost delete. The multi-writer
-  // fuzz caught the late-capture form.
-  private[sources] val vectorsAtPlan: Set[String] = JsonlOcc.liveVectorNames(
-    FileSystem.get(new Path(path).toUri, new Configuration()), new Path(path))
-  private[sources] val dataAtPlan: Option[Set[String]] =
-    if (JsonlOcc.serializableMerge &&
-        cmd == org.apache.spark.sql.connector.write.RowLevelOperation.Command.MERGE)
-      Some(JsonlOcc.liveDataFileNames(
-        FileSystem.get(new Path(path).toUri, new Configuration()),
-        new Path(path)))
-    else None
+  private val baseline = JsonlOcc.baselineAtPlan(path, cmd)
 
+  // the names of the files the scan planned: the commit's swap set
   private[sources] val scanned =
     new java.util.concurrent.atomic.AtomicReference[Seq[String]](null)
 
-  override def command()
-      : org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
+  override def command(): Command = cmd
 
   override def description(): String = s"GraftJsonl COW $cmd `$path`"
 
@@ -1270,34 +1269,19 @@ private[sources] class JsonlRowLevelOperation(
     * (data + metadata) — the writer then receives rows projected to the
     * write schema — and so the runtime group filter narrows the scan by
     * file identity instead of row identity. */
-  override def requiredMetadataAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions
-      .column(JsonlV2.FileCol))
+  override def requiredMetadataAttributes(): Array[NamedReference] =
+    Array(Expressions.column(JsonlV2.FileCol))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
-      override def build(): Write = new Write
-          with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-        // rewritten rows keep the routed layout: same clustering request
-        // as a fresh partitioned write, same sidecars, same _pvals
-        override def requiredDistribution()
-            : org.apache.spark.sql.connector.distributions.Distribution =
-          if (routes.isEmpty)
-            org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-          else
-            org.apache.spark.sql.connector.distributions.Distributions.clustered(
-              routes.map(_.toV2: org.apache.spark.sql.connector.expressions.Expression)
-                .toArray)
-        override def distributionStrictlyRequired(): Boolean = false
-        override def requiredNumPartitions(): Int = 0
-        override def requiredOrdering()
-            : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-          Array.empty
+      override def build(): Write = new JsonlClusteredWrite(routes) {
         override def description(): String = s"GraftJsonl COW $cmd write `$path`"
         override def toBatch: BatchWrite =
-          new JsonlCowBatchWrite(path, info.schema(), routes,
-            JsonlRowLevelOperation.this)
+          new JsonlSwapBatchWrite(path, info.schema(), routes, "COW", s"COW $cmd",
+            () => Option(scanned.get).getOrElse(throw new IllegalStateException(
+              "graft-jsonl: COW commit before the operation's scan planned — " +
+                "no group set to swap")),
+            baseline, sweepVectors = false)
       }
     }
 }
@@ -1332,99 +1316,56 @@ private[sources] class JsonlCowScanBuilder(
     // COW scan buys nothing on a rewrite that re-serializes every row)
     new JsonlScan(path, full, required, Array.empty, splitSize, -1, routes,
       pruneOnly = pruneOnly,
-      onPlanned = Some(fs => op.scanned.set(fs)),
+      onPlanned = Some(fs =>
+        op.scanned.set(fs.map(f => f.substring(f.lastIndexOf('/') + 1)))),
       columnarRead = false)
 }
 
-/** The copy-on-write commit: under the table's commit lock, VALIDATE the
-  * planned swap against the live state ([[JsonlOcc.validateSwap]] — a
-  * concurrent committer rewriting the same files, or a concurrent MOR
-  * delete landing on them, is a loud abort, never a lost update), then
-  * delete exactly the files the operation's scan planned and publish the
-  * replacement through the same rename protocol (stats sidecars
-  * included). */
-private[sources] class JsonlCowBatchWrite(
+/** The SWAP commit shared by copy-on-write row-level operations
+  * (`kind = "COW"`) and compaction (`kind = "compaction"`,
+  * [[JsonlMaintenance.compactDeletes]]'s and the zorder rewrite's write
+  * face). Under the table's commit lock it VALIDATES the planned swap
+  * against the live state ([[JsonlOcc.validateSwap]]: a concurrent
+  * committer rewriting the same files, or a MOR delete landing on them
+  * after this write planned, is a loud abort — the rewrite would
+  * otherwise silently drop those row-level deletes), runs the optional
+  * serializable-merge check, deletes exactly the swapped files and
+  * publishes the replacement through the same rename protocol (stats
+  * sidecars included). The swap set is read lazily: a COW operation
+  * knows it only after its scan planned.
+  *
+  * Compaction then SWEEPS the `_deletes-*` sidecars — entries
+  * referencing a file that no longer exists are dropped, a sidecar left
+  * empty is deleted. Vectors for files BELOW the compaction threshold
+  * survive untouched (their files still carry deleted rows), so a
+  * partial compaction stays exactly as correct as no compaction; a full
+  * one leaves zero live vectors and re-arms the metadata-only
+  * aggregation path the vectors had vetoed. */
+private[sources] class JsonlSwapBatchWrite(
     path: String, schema: StructType, routes: Seq[RouteExpr],
-    op: JsonlRowLevelOperation) extends BatchWrite {
+    kind: String, opDesc: String, swapNames: () => Seq[String],
+    baseline: JsonlOcc.PlanBaseline, sweepVectors: Boolean) extends BatchWrite {
 
   private val writeId = java.util.UUID.randomUUID().toString
-  // validation baselines: captured on the OPERATION at analysis time —
-  // see JsonlRowLevelOperation (capturing here, at batch-write
-  // construction, is too late under AQE: the scan may already have
-  // applied a newer vector set)
-  private def vectorsAtPlan = op.vectorsAtPlan
-  private def dataAtPlan = op.dataAtPlan
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new JsonlWriterFactory(path, schema, writeId, routes)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val swap = Option(op.scanned.get).getOrElse(throw new IllegalStateException(
-      "graft-jsonl: COW commit before the operation's scan planned — " +
-        "no group set to swap"))
+    val swap = swapNames()
     val root = new Path(path)
     val fs = FileSystem.get(root.toUri, new Configuration())
-    def nameOf(p: String) = p.substring(p.lastIndexOf('/') + 1)
-    JsonlOcc.withCommitLock(fs, root, s"COW $writeId") {
-      JsonlOcc.validateSwap(fs, root, swap.map(nameOf), vectorsAtPlan,
-        s"COW ${op.command()}")
-      dataAtPlan.foreach(
-        JsonlOcc.validateNoNewDataFiles(fs, root, _, s"COW ${op.command()}"))
-      swap.foreach { f =>
-        require(fs.delete(new Path(f), false),
-          s"graft-jsonl: COW swap failed to delete $f")
-      }
-      JsonlCommit.publish(fs, root, writeId,
-        (pid, seq) => f"part-$pid%05d-$seq%03d-$writeId.jsonl",
-        overwrite = false, messages)
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    JsonlCommit.dropTemps(
-      FileSystem.get(new Path(path).toUri, new Configuration()), messages)
-}
-
-/** The COMPACTION commit ([[JsonlMaintenance.compactDeletes]]'s write
-  * face): swap the named delete-vectored files for their vector-merged
-  * rewrites, then SWEEP the `_deletes-*` sidecars — entries referencing
-  * a file that no longer exists are dropped, a sidecar left empty is
-  * deleted. Vectors for files BELOW the compaction threshold survive
-  * untouched (their files still carry deleted rows), so a partial
-  * compaction stays exactly as correct as no compaction; a full one
-  * leaves zero live vectors and re-arms the metadata-only aggregation
-  * path the vectors had vetoed. Same locked validate-then-swap protocol
-  * as the COW commit ([[JsonlOcc]]): a MERGE that rewrote a candidate
-  * file first, or a MOR delete that landed on one after this compaction
-  * planned its vector merge, is a loud abort — the rewrite would
-  * otherwise silently drop those row-level deletes. */
-private[sources] class JsonlCompactBatchWrite(
-    path: String, schema: StructType, routes: Seq[RouteExpr],
-    swapNames: Seq[String], baselineAtPlan: Option[Set[String]] = None)
-    extends BatchWrite {
-
-  private val writeId = java.util.UUID.randomUUID().toString
-  private val vectorsAtPlan = baselineAtPlan.getOrElse(
-    JsonlOcc.liveVectorNames(
-      FileSystem.get(new Path(path).toUri, new Configuration()),
-      new Path(path)))
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new JsonlWriterFactory(path, schema, writeId, routes)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(path)
-    val fs = FileSystem.get(root.toUri, new Configuration())
-    JsonlOcc.withCommitLock(fs, root, s"compaction $writeId") {
-      JsonlOcc.validateSwap(fs, root, swapNames, vectorsAtPlan, "compaction")
-      swapNames.foreach { n =>
+    JsonlOcc.withCommitLock(fs, root, s"$kind $writeId") {
+      JsonlOcc.validateSwap(fs, root, swap, baseline.vectors, opDesc)
+      baseline.data.foreach(JsonlOcc.validateNoNewDataFiles(fs, root, _, opDesc))
+      swap.foreach { n =>
         require(fs.delete(new Path(root, n), false),
-          s"graft-jsonl: compaction swap failed to delete $n")
+          s"graft-jsonl: $kind swap failed to delete $n")
       }
       JsonlCommit.publish(fs, root, writeId,
         (pid, seq) => f"part-$pid%05d-$seq%03d-$writeId.jsonl",
         overwrite = false, messages)
-      JsonlV2.sweepDeadVectors(fs, root)
+      if (sweepVectors) JsonlV2.sweepDeadVectors(fs, root)
     }
   }
 
@@ -1433,67 +1374,90 @@ private[sources] class JsonlCompactBatchWrite(
       FileSystem.get(new Path(path).toUri, new Configuration()), messages)
 }
 
-/** MERGE-ON-READ DELETE ([[org.apache.spark.sql.connector.write.SupportsDelta]],
-  * table property `delete.mode = merge-on-read`): instead of rewriting
-  * every file that loses a row (the COW swap), the operation writes
-  * POSITION-DELETE sidecars — `_deletes-<writeId>-<pid>.json`, data file
-  * name → sorted deleted line-start byte offsets — and every reader
-  * merges them back out of its split. The COW/MOR trade, made explicit:
+/** MERGE-ON-READ DELETE, UPDATE and MERGE ([[SupportsDelta]], table
+  * properties `delete.mode` / `merge.mode = merge-on-read`): instead of
+  * rewriting every file that holds a matched row (the COW group swap —
+  * read a partition, write a partition, for a ten-row upsert), the
+  * operation emits:
+  *
+  *  - a POSITION-DELETE record per deleted or replaced row, published as
+  *    `_deletes-<writeId>-<pid>.json` sidecars (data file name → sorted
+  *    deleted line-start byte offsets) that every reader merges back out
+  *    of its split;
+  *  - for UPDATE and MERGE, a plain DATA row per new/updated image —
+  *    appended through the SAME routed task writer as any batch insert,
+  *    so new files carry full footer stats, `_pvals` routing proof, and
+  *    count toward every sidecar-driven plan the layout supports. A
+  *    DELETE is the same operation emitting no inserts.
+  *
+  * The COW/MOR trade, made explicit:
   *
   *  - COW pays the rewrite at WRITE time (delete 100 rows from a 1 GB
   *    file → rewrite the gigabyte) and reads stay pure;
-  *  - MOR pays O(deleted rows) at write time — the only statement shape
-  *    that survives frequent small deletes (GDPR erasure, curation
-  *    verdicts trickling in) over 100 TB — and readers binary-search a
-  *    per-split slice of the vector (zero cost on files with no deletes).
+  *  - MOR pays O(deleted + inserted rows) at write time — the only
+  *    statement shape that survives frequent small deletes (GDPR erasure,
+  *    curation verdicts trickling in) and the reference's continuous
+  *    trickle of small upserts (`MeshJoin.java:354-376`) over 100 TB —
+  *    and readers binary-search a per-split slice of the vector (zero
+  *    cost on files with no deletes). The read-side rent lasts until the
+  *    next `compact_deletes`: metadata aggregation VETOES itself on any
+  *    table with live delete vectors (a deleted row may have held the
+  *    min), and `estimateStatistics` subtracts the vectors from the
+  *    sidecar row counts.
   *
-  * The delta contract differs from the COW scan in the one way that
+  * UPDATE is REPRESENTED AS DELETE + INSERT
+  * (`representUpdateAsDeleteAndInsert`): the JSONL format has no in-place
+  * row image, and the split keeps the writer two independent, already-
+  * proven halves (the delete-vector buffer, the routed data writer)
+  * rather than a third path.
+  *
+  * The delta scan contract differs from the COW scan in the one way that
   * matters: a DELTA scan may row-filter (only matched rows become delete
   * records), so the condition pushes down normally and whole files prune
   * against the sidecars. Row identity is `(_file, _pos)` — the two
   * metadata columns the scan materializes from the split itself, no
-  * lookup anywhere. Commits compose by UNION (each publishes fresh
-  * sidecars, readers merge all of them; re-deleting an already-deleted
-  * offset is a no-op by construction), so no read-modify-write and no
-  * lost-update window. Metadata aggregation VETOES itself on any table
-  * with live delete vectors (a deleted row may have held the min), and
-  * `estimateStatistics` subtracts the vectors from the sidecar row
-  * counts. */
-private[sources] class JsonlMorDeleteOperation(
-    path: String, schema: StructType, splitSize: Long, routes: Seq[RouteExpr])
-    extends org.apache.spark.sql.connector.write.SupportsDelta {
-  import org.apache.spark.sql.connector.write.RowLevelOperation.Command
+  * lookup anywhere.
+  *
+  * What differs by command is validation. DELETEs compose by UNION (each
+  * publishes fresh sidecars, readers merge all of them; re-deleting an
+  * already-deleted offset is a no-op by construction), so a DELETE
+  * captures no plan-time baseline, and one that matched nothing takes no
+  * commit lock. UPDATE and MERGE re-emit row images read at scan time,
+  * so they capture the plan-time vector baseline
+  * ([[JsonlOcc.baselineAtPlan]]) and abort when a concurrent delete
+  * landed on a matched file. */
+private[sources] class JsonlMorOperation(
+    path: String, schema: StructType, splitSize: Long, routes: Seq[RouteExpr],
+    cmd: Command) extends SupportsDelta {
 
-  override def command(): Command = Command.DELETE
-  override def description(): String = s"GraftJsonl MOR DELETE `$path`"
+  private val baseline: Option[JsonlOcc.PlanBaseline] =
+    if (cmd == Command.DELETE) None else Some(JsonlOcc.baselineAtPlan(path, cmd))
+
+  override def command(): Command = cmd
+  override def description(): String = s"GraftJsonl MOR $cmd `$path`"
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new JsonlScanBuilder(path, schema, splitSize, routes)
 
-  override def rowId()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(JsonlV2.FileCol, JsonlV2.PosCol)
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
+  override def rowId(): Array[NamedReference] =
+    Array(JsonlV2.FileCol, JsonlV2.PosCol).map(Expressions.column)
 
-  override def requiredMetadataAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    rowId()
+  override def requiredMetadataAttributes(): Array[NamedReference] = rowId()
 
-  override def newWriteBuilder(info: LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriteBuilder =
-    new org.apache.spark.sql.connector.write.DeltaWriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.DeltaWrite =
-        new org.apache.spark.sql.connector.write.DeltaWrite {
-          override def description(): String =
-            s"GraftJsonl MOR DELETE write `$path`"
-          override def toBatch
-              : org.apache.spark.sql.connector.write.DeltaBatchWrite =
-            new JsonlDeltaBatchWrite(path)
-        }
+  override def representUpdateAsDeleteAndInsert(): Boolean = true
+
+  override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
+    new DeltaWriteBuilder {
+      override def build(): DeltaWrite = new DeltaWrite {
+        override def description(): String = s"GraftJsonl MOR $cmd write `$path`"
+        override def toBatch: DeltaBatchWrite =
+          new JsonlMorBatchWrite(path, schema, routes, cmd, baseline)
+      }
     }
 }
 
-private[graft] case class JsonlDeleteCommitMessage(pid: Int, tmpPath: String)
+private[graft] case class JsonlMorCommitMessage(
+    pid: Int, deleteTmp: String, pieces: Seq[JsonlPiece])
     extends WriterCommitMessage
 
 /** The delta commit: each task writer stages its per-file offset map as a
@@ -1502,71 +1466,104 @@ private[graft] case class JsonlDeleteCommitMessage(pid: Int, tmpPath: String)
   * the data commit, O(tasks) driver renames, O(1) driver memory (offsets
   * never ride the commit messages). Speculative duplicates of one
   * partition stage distinct temps and only the admitted attempt is
-  * renamed; abort sweeps the rest. */
-private[sources] class JsonlDeltaBatchWrite(path: String)
-    extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
+  * renamed; abort sweeps the rest.
+  *
+  * Commit publishes DATA FILES FIRST, delete vectors second: a crash
+  * between the two leaves a DUPLICATE row (old + new image both visible)
+  * rather than a LOST row. The duplicate is detectable (two rows share a
+  * doc key) and repairable (re-issue the vector from the staged temp, or
+  * dedup via a compaction-style rewrite); note a plain re-run of the
+  * MERGE does NOT remove it — both images match the source key and are
+  * each re-upserted — whereas the opposite order's failure (vectors live,
+  * new images missing) silently DROPS the matched rows' updates with
+  * nothing left on disk to even detect it. Duplicate-over-loss is the
+  * only defensible choice for a two-step commit. */
+private[sources] class JsonlMorBatchWrite(
+    path: String, schema: StructType, routes: Seq[RouteExpr], cmd: Command,
+    baseline: Option[JsonlOcc.PlanBaseline]) extends DeltaBatchWrite {
 
   private val writeId = java.util.UUID.randomUUID().toString
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriterFactory =
-    new JsonlDeltaWriterFactory(path, writeId)
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
+    new JsonlMorWriterFactory(path, schema, writeId, routes, cmd)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(path)
     val fs = FileSystem.get(root.toUri, new Configuration())
-    messages.foreach {
-      case _: JsonlDeleteCommitMessage => ()
+    val morMessages = messages.map {
+      case m: JsonlMorCommitMessage => m
       case other => throw new IllegalStateException(s"foreign commit message $other")
     }
-    val staged = messages.collect {
-      case m: JsonlDeleteCommitMessage if m.tmpPath.nonEmpty => m
-    }
-    if (staged.nonEmpty) JsonlOcc.withCommitLock(fs, root, s"MOR DELETE $writeId") {
-      // deletes compose by union with every concurrent sidecar, but each
-      // verdict references its file BY NAME: if a concurrent COW/
-      // compaction rewrote that file between scan and commit, the verdict
-      // would silently never apply — validate the names are still live
-      val referenced = staged
-        .flatMap(m => JsonlOcc.vectorFileNames(fs, new Path(m.tmpPath))).toSet
-      JsonlOcc.validateDeltaRefs(fs, root, referenced, None, "MOR DELETE")
-      staged.foreach { m =>
-        val target = new Path(root, s"_deletes-$writeId-${m.pid}.json")
-        require(fs.rename(new Path(m.tmpPath), target),
-          s"graft-jsonl: delete-vector rename ${m.tmpPath} -> $target failed")
+    val staged = morMessages.filter(_.deleteTmp.nonEmpty)
+    val opDesc = if (cmd == Command.DELETE) "MOR DELETE" else "MOR MERGE"
+    // a DELETE that staged no vector has nothing to publish
+    if (cmd != Command.DELETE || staged.nonEmpty)
+      JsonlOcc.withCommitLock(fs, root, s"$opDesc $writeId") {
+        // each verdict references its file BY NAME: if a concurrent COW/
+        // compaction rewrote that file between scan and commit, the
+        // verdict would silently never apply — validate the names are
+        // still live. UPDATE/MERGE also pass the plan-time baseline: their
+        // row images were read at scan time, so a concurrent delete
+        // landing on a matched file since plan time would be resurrected
+        // by the re-emit
+        val referenced = staged
+          .flatMap(m => JsonlOcc.vectorFileNames(fs, new Path(m.deleteTmp))).toSet
+        JsonlOcc.validateDeltaRefs(fs, root, referenced, baseline.map(_.vectors),
+          opDesc)
+        baseline.flatMap(_.data)
+          .foreach(JsonlOcc.validateNoNewDataFiles(fs, root, _, opDesc))
+        // data first, vectors second — see the class doc's crash argument
+        JsonlCommit.publish(fs, root, writeId,
+          (pid, seq) => f"part-$pid%05d-$seq%03d-$writeId.jsonl",
+          overwrite = false,
+          morMessages.map(m => JsonlCommitMessage(m.pid, m.pieces): WriterCommitMessage))
+        staged.foreach { m =>
+          val target = new Path(root, s"_deletes-$writeId-${m.pid}.json")
+          require(fs.rename(new Path(m.deleteTmp), target),
+            s"graft-jsonl: delete-vector rename ${m.deleteTmp} -> $target failed")
+        }
       }
-    }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val fs = FileSystem.get(new Path(path).toUri, new Configuration())
     messages.foreach {
-      case JsonlDeleteCommitMessage(_, tmp) if tmp.nonEmpty =>
-        try fs.delete(new Path(tmp), false)
-        catch { case _: java.io.IOException => () }
+      case JsonlMorCommitMessage(pid, tmp, pieces) =>
+        if (tmp.nonEmpty)
+          try fs.delete(new Path(tmp), false)
+          catch { case _: java.io.IOException => () }
+        JsonlCommit.dropTemps(fs, Array(JsonlCommitMessage(pid, pieces)))
       case _ => ()
     }
   }
 }
 
-private[sources] class JsonlDeltaWriterFactory(path: String, writeId: String)
-    extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new JsonlDeleteWriter(path, writeId, partitionId, taskId)
+/** Ships to tasks, so it must carry only serializable state — a named
+  * top-level factory, not a closure over the (driver-only) batch write. */
+private[sources] class JsonlMorWriterFactory(
+    path: String, schema: StructType, writeId: String, routes: Seq[RouteExpr],
+    cmd: Command) extends DeltaWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
+    new JsonlMorWriter(path, schema, writeId, partitionId, taskId, routes, cmd)
 }
 
-/** One task's delete records: `(file, pos)` row ids buffered per file
-  * (8 bytes per deleted row — bounded by the task's own input) and staged
-  * as one hidden temp sidecar at task commit. `update`/`insert` cannot
-  * arrive on a DELETE command and fail loudly. */
-private[sources] class JsonlDeleteWriter(
-    path: String, writeId: String, partitionId: Int, taskId: Long)
-    extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
+/** One task's delta records, dispatched to two halves. Delete records
+  * buffer their `(file, pos)` row ids per file (8 bytes per deleted row —
+  * bounded by the task's own input) and stage as one hidden temp sidecar
+  * at task commit. Insert records (and the insert half of each update)
+  * stream through the routed data writer with full footer stats; a DELETE
+  * refuses them. `update` cannot arrive — the operation declares
+  * `representUpdateAsDeleteAndInsert`. */
+private[sources] class JsonlMorWriter(
+    path: String, schema: StructType, writeId: String, partitionId: Int,
+    taskId: Long, routes: Seq[RouteExpr], cmd: Command)
+    extends DeltaWriter[InternalRow] {
 
   private val perFile = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Long]]
+  private val inserts = new JsonlDataWriter(path, schema, writeId,
+    partitionId = partitionId, taskId = taskId, routes = routes)
 
-  // rowId projection order is the order JsonlMorDeleteOperation.rowId()
+  // rowId projection order is the order JsonlMorOperation.rowId()
   // declares: (_file string, _pos long)
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
     val file = id.getUTF8String(0).toString
@@ -1574,13 +1571,27 @@ private[sources] class JsonlDeleteWriter(
     perFile.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += id.getLong(1)
   }
 
-  override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit =
-    throw new IllegalStateException("graft-jsonl: update record on a DELETE delta write")
   override def insert(row: InternalRow): Unit =
-    throw new IllegalStateException("graft-jsonl: insert record on a DELETE delta write")
+    if (cmd == Command.DELETE)
+      throw new IllegalStateException("graft-jsonl: insert record on a DELETE delta write")
+    else inserts.write(row)
+
+  override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit =
+    throw new IllegalStateException(
+      s"graft-jsonl: update record on a MOR $cmd write — the operation " +
+        "declared representUpdateAsDeleteAndInsert")
 
   override def commit(): WriterCommitMessage = {
-    if (perFile.isEmpty) return JsonlDeleteCommitMessage(partitionId, "")
+    val pieces = inserts.commit() match {
+      case JsonlCommitMessage(_, ps) => ps
+      case other => throw new IllegalStateException(s"foreign insert commit $other")
+    }
+    JsonlMorCommitMessage(partitionId, stageDeletes(), pieces)
+  }
+
+  /** The temp sidecar's path, or "" when this task deleted nothing. */
+  private def stageDeletes(): String = {
+    if (perFile.isEmpty) return ""
     val tmp = new Path(path, s".tmp-deletes-$writeId-$partitionId-$taskId.json")
     val fs = FileSystem.get(tmp.toUri, new Configuration())
     val out: java.io.OutputStream = fs.create(tmp, true)
@@ -1593,216 +1604,11 @@ private[sources] class JsonlDeleteWriter(
     }
     gen.writeEndObject()
     gen.close(); out.close()
-    JsonlDeleteCommitMessage(partitionId, tmp.toString)
+    tmp.toString
   }
 
-  override def abort(): Unit = ()
-  override def close(): Unit = ()
-}
-
-/** MERGE-ON-READ MERGE/UPDATE ([[org.apache.spark.sql.connector.write.SupportsDelta]],
-  * table property `merge.mode = merge-on-read`): the DELTA-BASED upsert.
-  * Instead of rewriting every file that holds a matched row (the COW
-  * group swap — read a partition, write a partition, for a ten-row
-  * upsert), the operation emits:
-  *
-  *  - a POSITION-DELETE record per replaced row — the same
-  *    `_deletes-<writeId>-<pid>.json` sidecars the MOR DELETE publishes,
-  *    merged out by every reader;
-  *  - a plain DATA row per new/updated image — appended through the SAME
-  *    routed task writer as any batch insert, so new files carry full
-  *    footer stats, `_pvals` routing proof, and count toward every
-  *    sidecar-driven plan the layout supports.
-  *
-  * UPDATE is REPRESENTED AS DELETE + INSERT
-  * (`representUpdateAsDeleteAndInsert`): the JSONL format has no in-place
-  * row image, and the split keeps the writer two independent, already-
-  * proven halves (the delete-vector writer, the routed data writer)
-  * rather than a third path. Write cost is O(matched + inserted rows) —
-  * the only shape that survives the reference's operating mode (a
-  * continuous trickle of small upserts, `MeshJoin.java:354-376`) over
-  * 100 TB, where a COW rewrite pays the whole partition per statement.
-  * The read-side cost is the usual MOR rent: delete vectors until the
-  * next `compact_deletes`, and the metadata-aggregation veto while any
-  * vector is live.
-  *
-  * The scan contract is the DELTA one (row-filtering allowed, pushdown
-  * normal) — only rows that actually match produce delete records, so
-  * condition pushdown and sidecar pruning both apply. Commit publishes
-  * DATA FILES FIRST, delete vectors second: a crash between the two
-  * leaves a DUPLICATE row (old + new image both visible) rather than a
-  * LOST row. The duplicate is detectable (two rows share a doc key) and
-  * repairable (re-issue the vector from the staged temp, or dedup via a
-  * compaction-style rewrite); note a plain re-run of the MERGE does NOT
-  * remove it — both images match the source key and are each re-upserted
-  * — whereas the opposite order's failure (vectors live, new images
-  * missing) silently DROPS the matched rows' updates with nothing left
-  * on disk to even detect it. Duplicate-over-loss is the only defensible
-  * choice for a two-step commit. */
-private[sources] class JsonlMorMergeOperation(
-    path: String, schema: StructType, splitSize: Long, routes: Seq[RouteExpr],
-    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command)
-    extends org.apache.spark.sql.connector.write.SupportsDelta {
-  import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-
-  // analysis-time validation baselines — see JsonlRowLevelOperation's
-  // comment: capturing them at batch-write construction is too late
-  // under AQE (the scan may already have applied a newer vector set)
-  private[sources] val vectorsAtPlan: Set[String] = JsonlOcc.liveVectorNames(
-    FileSystem.get(new Path(path).toUri, new Configuration()), new Path(path))
-  private[sources] val dataAtPlan: Option[Set[String]] =
-    if (JsonlOcc.serializableMerge && cmd == Command.MERGE)
-      Some(JsonlOcc.liveDataFileNames(
-        FileSystem.get(new Path(path).toUri, new Configuration()),
-        new Path(path)))
-    else None
-
-  override def command(): Command = cmd
-  override def description(): String = s"GraftJsonl MOR $cmd `$path`"
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new JsonlScanBuilder(path, schema, splitSize, routes)
-
-  override def rowId()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(JsonlV2.FileCol, JsonlV2.PosCol)
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-
-  override def requiredMetadataAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    rowId()
-
-  override def representUpdateAsDeleteAndInsert(): Boolean = true
-
-  override def newWriteBuilder(info: LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriteBuilder =
-    new org.apache.spark.sql.connector.write.DeltaWriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.DeltaWrite =
-        new org.apache.spark.sql.connector.write.DeltaWrite {
-          override def description(): String =
-            s"GraftJsonl MOR $cmd write `$path`"
-          override def toBatch
-              : org.apache.spark.sql.connector.write.DeltaBatchWrite =
-            new JsonlMorMergeBatchWrite(path, schema, routes,
-              vectorsAtPlan, dataAtPlan)
-        }
-    }
-}
-
-private[graft] case class JsonlMorMergeCommitMessage(
-    pid: Int, deleteTmp: String, pieces: Seq[JsonlPiece])
-    extends WriterCommitMessage
-
-private[sources] class JsonlMorMergeBatchWrite(
-    path: String, schema: StructType, routes: Seq[RouteExpr],
-    vectorsAtPlan: Set[String], dataAtPlan: Option[Set[String]])
-    extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
-
-  private val writeId = java.util.UUID.randomUUID().toString
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriterFactory =
-    new JsonlMorMergeWriterFactory(path, schema, writeId, routes)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(path)
-    val fs = FileSystem.get(root.toUri, new Configuration())
-    // data first, vectors second — see the class doc's crash argument
-    val dataMessages: Array[WriterCommitMessage] = messages.map {
-      case JsonlMorMergeCommitMessage(pid, _, pieces) =>
-        JsonlCommitMessage(pid, pieces)
-      case other => throw new IllegalStateException(s"foreign commit message $other")
-    }
-    JsonlOcc.withCommitLock(fs, root, s"MOR MERGE $writeId") {
-      // stricter than the plain delta validation: the merge's UPDATE row
-      // images were read at scan time, so a concurrent delete landing on
-      // a matched file since plan time would be resurrected by the
-      // re-emit — pass the plan-time sidecar baseline so new vectors on
-      // the matched files abort loudly
-      val referenced = messages.flatMap {
-        case JsonlMorMergeCommitMessage(_, tmp, _) if tmp.nonEmpty =>
-          JsonlOcc.vectorFileNames(fs, new Path(tmp))
-        case _ => Nil
-      }.toSet
-      JsonlOcc.validateDeltaRefs(fs, root, referenced, Some(vectorsAtPlan),
-        "MOR MERGE")
-      dataAtPlan.foreach(
-        JsonlOcc.validateNoNewDataFiles(fs, root, _, "MOR MERGE"))
-      JsonlCommit.publish(fs, root, writeId,
-        (pid, seq) => f"part-$pid%05d-$seq%03d-$writeId.jsonl",
-        overwrite = false, dataMessages)
-      messages.foreach {
-        case JsonlMorMergeCommitMessage(_, "", _) => () // task saw no matches
-        case JsonlMorMergeCommitMessage(pid, tmp, _) =>
-          val target = new Path(root, s"_deletes-$writeId-$pid.json")
-          require(fs.rename(new Path(tmp), target),
-            s"graft-jsonl: delete-vector rename $tmp -> $target failed")
-        case other => throw new IllegalStateException(s"foreign commit message $other")
-      }
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new Path(path).toUri, new Configuration())
-    messages.foreach {
-      case JsonlMorMergeCommitMessage(pid, tmp, pieces) =>
-        if (tmp.nonEmpty)
-          try fs.delete(new Path(tmp), false)
-          catch { case _: java.io.IOException => () }
-        JsonlCommit.dropTemps(fs, Array(JsonlCommitMessage(pid, pieces)))
-      case _ => ()
-    }
-  }
-}
-
-/** Ships to tasks, so it must carry only serializable state — a named
-  * top-level factory, not a closure over the (driver-only) batch write. */
-private[sources] class JsonlMorMergeWriterFactory(
-    path: String, schema: StructType, writeId: String, routes: Seq[RouteExpr])
-    extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new JsonlMorMergeWriter(path, schema, writeId, partitionId, taskId, routes)
-}
-
-/** One task's MERGE records, dispatched to the two proven halves: delete
-  * records buffer into the MOR delete-vector writer, insert records (and
-  * the insert half of each update) stream through the routed data writer
-  * with full footer stats. `update` cannot arrive — the operation
-  * declares `representUpdateAsDeleteAndInsert`. */
-private[sources] class JsonlMorMergeWriter(
-    path: String, schema: StructType, writeId: String, partitionId: Int,
-    taskId: Long, routes: Seq[RouteExpr])
-    extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
-
-  private val deletes = new JsonlDeleteWriter(path, writeId, partitionId, taskId)
-  private val inserts = new JsonlDataWriter(path, schema, writeId,
-    partitionId = partitionId, taskId = taskId, routes = routes)
-
-  override def delete(metadata: InternalRow, id: InternalRow): Unit =
-    deletes.delete(metadata, id)
-
-  override def insert(row: InternalRow): Unit = inserts.write(row)
-
-  override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit =
-    throw new IllegalStateException(
-      "graft-jsonl: update record on a MOR MERGE write — the operation " +
-        "declared representUpdateAsDeleteAndInsert")
-
-  override def commit(): WriterCommitMessage = {
-    val delMsg = deletes.commit() match {
-      case JsonlDeleteCommitMessage(_, tmp) => tmp
-      case other => throw new IllegalStateException(s"foreign delete commit $other")
-    }
-    val insMsg = inserts.commit() match {
-      case JsonlCommitMessage(_, pieces) => pieces
-      case other => throw new IllegalStateException(s"foreign insert commit $other")
-    }
-    JsonlMorMergeCommitMessage(partitionId, delMsg, insMsg)
-  }
-
-  override def abort(): Unit = { deletes.abort(); inserts.abort() }
-  override def close(): Unit = { deletes.close(); inserts.close() }
+  override def abort(): Unit = inserts.abort()
+  override def close(): Unit = inserts.close()
 }
 
 private[sources] class JsonlScanBuilder(path: String, full: StructType, splitSize: Long,
@@ -3032,41 +2838,17 @@ private[sources] class JsonlWriteBuilder(
     dynamicOverwrite = true; this
   }
 
-  /** A partitioned write REQUESTS (non-strictly) a clustered distribution
-    * on its partition columns ([[org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering]]):
-    * without it, dynamic-partition routing publishes one file per (task ×
-    * partition value) — a 1000-task write over 5 values drops 5000 files,
-    * the small-files pathology s14 exists to clean up. Clustered first,
-    * each value's rows land in few tasks and the layout comes out at
-    * O(values) files. Non-strict is the 100 TB-correct half: Spark plans
-    * a REBALANCE (AQE-splittable) instead of a hard repartition, so one
-    * hot partition value is split across tasks rather than pinned to a
-    * single writer — files stay single-valued either way, which is all
-    * the sidecar contract needs. The shuffle this inserts is the one the
-    * read side's KeyGroupedPartitioning report then never pays again. */
-  override def build(): Write = new Write
-      with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-    override def requiredDistribution()
-        : org.apache.spark.sql.connector.distributions.Distribution =
-      if (routes.isEmpty)
-        org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-      else
-        org.apache.spark.sql.connector.distributions.Distributions.clustered(
-          routes.map(_.toV2: org.apache.spark.sql.connector.expressions.Expression)
-            .toArray)
-    override def distributionStrictlyRequired(): Boolean = false
-    override def requiredNumPartitions(): Int = 0
-    override def requiredOrdering()
-        : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+  /** The lake's clustering policy ([[JsonlClusteredWrite]]), plus the
+    * `sortedBy` ordering and the streaming face. */
+  override def build(): Write = new JsonlClusteredWrite(routes) {
+    override def requiredOrdering(): Array[SortOrder] =
       // `sortedBy=col` asks Spark for a per-task asc-nulls-first sort;
       // each routed piece is then a subsequence of a sorted stream — every
       // published file is sorted, and the WRITER verifies it row by row
       // before the sidecar claims `_sorted`
       sortBy.toArray.map { c =>
-        org.apache.spark.sql.connector.expressions.Expressions.sort(
-          org.apache.spark.sql.connector.expressions.Expressions.column(c),
-          org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING,
-          org.apache.spark.sql.connector.expressions.NullOrdering.NULLS_FIRST)
+        Expressions.sort(Expressions.column(c), SortDirection.ASCENDING,
+          NullOrdering.NULLS_FIRST)
       }
     override def description(): String =
       s"GraftJsonl write `$path` truncate=$truncateFirst" +

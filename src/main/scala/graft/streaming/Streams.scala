@@ -1595,7 +1595,7 @@ object Streams extends Entries {
     * streaming pipeline. Each micro-batch `MERGE INTO`s the catalog table;
     * the table carries `merge.mode = merge-on-read`, so every epoch lands
     * as delete vectors + appended routed files
-    * ([[graft.sources.JsonlMorMergeOperation]]) — cost O(batch), never a
+    * ([[graft.sources.JsonlMorOperation]]) — cost O(batch), never a
     * partition rewrite per trigger, the only sustainable shape for a
     * continuous upsert stream over 100 TB.
     *

@@ -696,6 +696,29 @@ class CatalogSpec extends SparkSpec {
     assert(perSource === truth)
   }
 
+  test("a merge-on-read DELETE that matches no row publishes no sidecar and " +
+    "takes no commit lock") {
+    val cat = freshCat("mornone")
+    spark.sql(s"CREATE NAMESPACE $cat.lake")
+    spark.sql(s"CREATE TABLE $cat.lake.t (doc_id BIGINT, source STRING, " +
+      s"n_chars BIGINT) PARTITIONED BY (source) " +
+      s"TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
+    docs.writeTo(s"$cat.lake.t").append()
+    val dir = spark.conf.get(s"spark.sql.catalog.$cat.warehouse") + "/lake/t"
+    val before = fileSnapshot(dir)
+    val locks = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    graft.sources.JsonlOcc.beforeLockHook = Some(d => { locks.add(d); () })
+    // undecidable per file, so no metadata delete: every row is scanned
+    // by the delta plan and none matches
+    try spark.sql(s"DELETE FROM $cat.lake.t WHERE doc_id % 7 = 100")
+    finally graft.sources.JsonlOcc.beforeLockHook = None
+    assert(locks.toArray.toSeq === Nil, "a no-match DELETE took the commit lock")
+    assert(!new java.io.File(dir).list().exists(_.startsWith("_deletes-")),
+      "a no-match DELETE published a delete vector")
+    assert(fileSnapshot(dir) === before)
+    assert(spark.table(s"$cat.lake.t").count() === docs.count())
+  }
+
   test("merge-on-read bookkeeping: metadata aggregation declines on a table " +
     "with live vectors (and still counts right), row identity (_file, _pos) " +
     "is unique, and the default table stays copy-on-write") {
@@ -1816,6 +1839,30 @@ class CatalogSpec extends SparkSpec {
       === docs.filter(expr("NOT (doc_id % 11 = 5)")).count())
   }
 
+  test("a compactFiles write without the compactVectorsAtPlan baseline is " +
+    "refused before it writes: a baseline listed at commit could miss a " +
+    "vector that landed mid-compaction") {
+    val cat = freshCat("nobaseline")
+    spark.sql(s"CREATE NAMESPACE $cat.lake")
+    spark.sql(s"CREATE TABLE $cat.lake.t (doc_id BIGINT, source STRING, " +
+      "n_chars BIGINT) TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
+    docs.coalesce(1).writeTo(s"$cat.lake.t").append()
+    spark.sql(s"DELETE FROM $cat.lake.t WHERE doc_id % 7 = 3")
+    val dir = spark.conf.get(s"spark.sql.catalog.$cat.warehouse") + "/lake/t"
+    val before = fileSnapshot(dir)
+    val vectors = new java.io.File(dir).list().filter(_.startsWith("_deletes-")).sorted.toSeq
+    val names = before.map(_._1).mkString(",")
+    val e = intercept[IllegalArgumentException] {
+      spark.table(s"$cat.lake.t").writeTo(s"$cat.lake.t")
+        .option("compactFiles", names).append()
+    }
+    assert(e.getMessage.contains("needs the compactVectorsAtPlan option"),
+      e.getMessage)
+    assert(fileSnapshot(dir) === before, "the refused swap touched data files")
+    assert(new java.io.File(dir).list().filter(_.startsWith("_deletes-")).sorted.toSeq
+      === vectors, "the refused swap touched delete vectors")
+  }
+
   // === optimistic concurrency (JsonlOcc): two-writer races ===================
   //
   // Deterministic interleavings, not repetition-and-hope: writer B parks on
@@ -1945,6 +1992,43 @@ class CatalogSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
     assert(spark.table(s"$cat.lake.t").collect().map(_.toString).sorted.toSeq
       === want, "the aborted delete half-applied or the compaction lost rows")
+  }
+
+  test("two-writer race, MOR DELETE ∥ MOR DELETE on the same file: both " +
+    "commit and both take effect — deletes compose by union, so a DELETE " +
+    "validates against no plan-time vector baseline") {
+    val cat = freshCat("occdd")
+    spark.sql(s"CREATE NAMESPACE $cat.lake")
+    spark.sql(s"CREATE TABLE $cat.lake.t (doc_id BIGINT, source STRING, " +
+      "n_chars BIGINT) TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
+    docs.coalesce(1).writeTo(s"$cat.lake.t").append()
+    val dir = spark.conf.get(s"spark.sql.catalog.$cat.warehouse") + "/lake/t"
+    val before = fileSnapshot(dir)
+    assert(before.size === 1)
+    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    // park only the first delete to reach the lock: the second must run
+    // through its own commit while the first waits
+    val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+    withOccHook(d => d.startsWith("MOR DELETE") && first.getAndSet(false)) {
+      (parked, release) =>
+        val t = new Thread(() =>
+          try spark.sql(s"DELETE FROM $cat.lake.t WHERE doc_id % 7 = 3")
+          catch { case e: Throwable => err.set(e) })
+        t.start()
+        assert(parked.await(120, TimeUnit.SECONDS), "delete never reached commit")
+        spark.sql(s"DELETE FROM $cat.lake.t WHERE doc_id % 11 = 5")
+        release.countDown()
+        t.join(120000)
+    }
+    assert(err.get == null, s"the parked delete aborted: ${occMessages(err.get)}")
+    assert(fileSnapshot(dir) === before, "a MOR delete rewrote the data file")
+    val writes = new java.io.File(dir).list().filter(_.startsWith("_deletes-"))
+      .map(_.stripPrefix("_deletes-").take(36)).distinct
+    assert(writes.length === 2, s"expected two deletes' vectors, got ${writes.toSeq}")
+    val want = docs.filter(expr("NOT (doc_id % 7 = 3) AND NOT (doc_id % 11 = 5)"))
+      .collect().map(_.toString).sorted.toSeq
+    assert(spark.table(s"$cat.lake.t").collect().map(_.toString).sorted.toSeq
+      === want, "one of the two deletes was lost")
   }
 
   test("two-writer race, append ∥ MERGE: disjoint writers BOTH commit — " +
@@ -2643,6 +2727,51 @@ class CatalogSpec extends SparkSpec {
         s"graft-jsonl $p: $arg must be namespace.name, got '$bad'"), e.getMessage)
       assert(dir.list().filter(_.startsWith("_version-")).isEmpty,
         s"$p recorded a version of lake.t")
+    }
+    assert(java.nio.file.Files.readAllBytes(
+      new java.io.File(dir, "_table.json").toPath).toSeq === manifest,
+      "a refused call rewrote lake.t's manifest")
+  }
+
+  test("every procedure parameter without a default refuses NULL by name " +
+    "before the body runs") {
+    val cat = freshCat("procnulls")
+    spark.sql(s"CREATE NAMESPACE $cat.lake")
+    spark.sql(s"CREATE TABLE $cat.lake.t (doc_id BIGINT, source STRING, " +
+      s"n_chars BIGINT) PARTITIONED BY (bucket(4, doc_id))")
+    docs.writeTo(s"$cat.lake.t").append()
+    docs.createOrReplaceTempView("procnulls_v")
+    // a valid value for each required parameter, by name
+    val valid = Map("table" -> "'lake.t'", "source" -> "'lake.t'",
+      "target" -> "'lake.c'", "columns" -> "'doc_id,n_chars'",
+      "keep_last" -> "1", "buckets" -> "8", "tables" -> "'lake.t'",
+      "views" -> "'procnulls_v'")
+    val pc = spark.sessionState.catalogManager.catalog(cat)
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.ProcedureCatalog]
+    val required = pc.listProcedures(Array("system")).toSeq.map { id =>
+      id.name -> pc.loadProcedure(id).bind(new StructType()).parameters().toSeq
+        .filter(_.defaultValue() == null).map(_.name())
+    }
+    assert(required.flatMap(_._2).toSet.diff(valid.keySet).isEmpty, required)
+    val wh = new java.io.File(spark.conf.get(s"spark.sql.catalog.$cat.warehouse"))
+    val dir = new java.io.File(wh, "lake/t")
+    val manifest = java.nio.file.Files.readAllBytes(
+      new java.io.File(dir, "_table.json").toPath).toSeq
+    val cases = for ((p, params) <- required; arg <- params) yield (p, arg, params)
+    assert(cases.size >= required.size)
+    for ((p, arg, params) <- cases) {
+      val args = params.map(n => s"$n => ${if (n == arg) "NULL" else valid(n)}")
+        .mkString(", ")
+      val e = withClue(s"CALL $p($args): ") {
+        intercept[IllegalArgumentException] {
+          spark.sql(s"CALL $cat.system.$p($args)").collect()
+        }
+      }
+      assert(e.getMessage.contains(s"graft-jsonl $p: $arg must not be NULL"),
+        e.getMessage)
+      assert(dir.list().filter(_.startsWith("_version-")).isEmpty,
+        s"$p recorded a version of lake.t")
+      assert(!new java.io.File(wh, "lake/c").exists(), s"$p created lake.c")
     }
     assert(java.nio.file.Files.readAllBytes(
       new java.io.File(dir, "_table.json").toPath).toSeq === manifest,

@@ -1164,7 +1164,7 @@ class OperatorInvariantSpec extends SparkSpec {
     val both = texts.map { case (id, t) => (id, t) } ++
       texts.map { case (id, t) => (id + 100000L, "EDIT-PREFIX " + t) }
     val df = both.toSeq.toDF("doc_id", "text")
-    val chunks = graft.functions.TextAnalysis.cdcChunks(spark, df)
+    val chunks = graft.functions.TextAnalysis.cdcChunks(df)
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     texts.foreach { case (id, t) =>
       val orig = chunks(id)

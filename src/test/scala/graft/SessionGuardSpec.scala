@@ -10,9 +10,10 @@ import graft.functions.GraftExtensions
   * function from the [[graft.functions.GraftExtensions]] table, every
   * operator's kernel call from that table's typed functions, every entry
   * from an [[Entry]] table, every artifact is a row of [[Artifacts.all]]
-  * and every `CALL` procedure a row of [[graft.sources.JsonlProcedures.all]]:
-  * a builder, a registration, a map, a procedure class or a name in SQL
-  * text anywhere else is a second copy, free to drift. */
+  * and every `CALL` procedure a row of [[graft.sources.JsonlProcedures.all]];
+  * the lake's write face implements each DSv2 write contract once: a
+  * builder, a registration, a map, a procedure or write class or a name in
+  * SQL text anywhere else is a second copy, free to drift. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private def sources(f: File): Seq[File] =
@@ -124,5 +125,20 @@ class SessionGuardSpec extends AnyFunSuite {
     assert(outside === Nil)
     val rows = main.flatMap(codeLines).map(_.trim)
     names.foreach(n => assert(rows.count(_.startsWith("Proc(\"" + n + "\"")) === 1, n))
+  }
+
+  test("the lake's write face implements each DSv2 write contract at one site") {
+    // one clustering policy (JsonlClusteredWrite), one delta operation and
+    // one delta commit serving DELETE, UPDATE and MERGE (JsonlMor*)
+    val contracts = Seq("RequiresDistributionAndOrdering", "SupportsDelta", "DeltaBatchWrite")
+    val site = ("""\b(?:extends|with|new)\s+(?:[\w.]+\.)?(""" +
+      contracts.mkString("|") + """)\b""").r
+    val sites = for {
+      f <- sources(root("src/main")); l <- codeLines(f); m <- site.findAllMatchIn(l)
+    } yield m.group(1) -> s"${f.getName}: ${l.trim}"
+    contracts.foreach { c =>
+      val hits = sites.collect { case (`c`, at) => at }
+      assert(hits.size === 1, s"$c implemented at ${hits.size} sites: $hits")
+    }
   }
 }
