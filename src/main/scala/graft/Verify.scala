@@ -31,6 +31,8 @@ object Verify {
       if (names.isEmpty) all else all.filter { case (n, _) => names.contains(n) }
     new File(outDir).mkdirs()
     queries.foreach { case (name, fn) =>
+      // an earlier run's output must not stand in for a failed entry
+      org.apache.commons.io.FileUtils.deleteDirectory(new File(outDir, name))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

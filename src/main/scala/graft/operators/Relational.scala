@@ -1461,18 +1461,6 @@ object Relational extends Entries {
       .orderBy(col("o_orderpriority"), col("rank"))
   }
 
-  /** The oracle is o05's full-recompute window over ALL history. */
-  val o06Sql: String =
-    """SELECT o_orderpriority, CAST(rnk AS INTEGER) AS rank, o_orderkey,
-      |  o_totalprice AS price
-      |FROM (
-      |  SELECT o_orderpriority, o_orderkey, o_totalprice,
-      |    row_number() OVER (PARTITION BY o_orderpriority
-      |      ORDER BY o_totalprice DESC, CAST(o_orderkey AS VARCHAR) ASC) AS rnk
-      |  FROM orders)
-      |WHERE rnk <= 3
-      |ORDER BY o_orderpriority, rank""".stripMargin
-
   /** O7 (extension): KEYSET PAGINATION — the scale-correct form of the
     * chunked read s07 reproduces from the reference (`MeshJoin.java:304`'s
     * `LIMIT ?,?`). OFFSET paging re-scans and re-sorts the skipped prefix
@@ -3237,9 +3225,7 @@ object Relational extends Entries {
       val dir = s.conf.get(s"spark.sql.catalog.$cat.warehouse") +
         "/lake/docs_morup"
       def dataFiles: Map[String, Long] =
-        graft.sources.JsonlV2.listFiles(dir)
-          .map { case (f, len) => f.substring(f.lastIndexOf('/') + 1) -> len }
-          .toMap
+        graft.sources.JsonlV2.listFiles(dir).map(f => f.name -> f.len).toMap
       val before = dataFiles
       documents(s, d).filter(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("lang"), col("source"),
@@ -3346,8 +3332,8 @@ object Relational extends Entries {
     * the rows that changed between two `CALL system.snapshot` versions,
     * derived entirely from manifest + delete-vector arithmetic — inserts
     * from file-listing diffs (immutable names: new names ARE the new
-    * rows), deletes from vector-offset diffs read positionally off the
-    * `_file`/`_pos` metadata columns, O(changed rows) driver work. The
+    * rows), deletes from vector-offset diffs read by include-only
+    * partitions over the offsets' byte span, O(changed rows). The
     * staged table does the MOR lake's native motion — append evens,
     * snapshot, append odds, MOR-delete `doc_id % 5 = 0`, snapshot — so
     * the feed carries inserts (odds that survived), deletes (evens the
@@ -3380,8 +3366,12 @@ object Relational extends Entries {
     }
 
   def s44ChangesFeed(s: SparkSession, d: String): DataFrame =
-    graft.sources.JsonlChanges.between(s, s44Table(s, d), 1, 2)
-      .groupBy(col("_change_type"), col("lang"))
+    changesRollup(graft.sources.JsonlChanges.between(s, s44Table(s, d), 1, 2))
+
+  /** The per (change type, lang) rollup of s44's feed — st29's too, so
+    * the batch and streaming feeds answer to the one oracle [[s44Sql]]. */
+  private[graft] def changesRollup(feed: DataFrame): DataFrame =
+    feed.groupBy(col("_change_type"), col("lang"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("n_chars")).as("sum_chars"),
         min(col("doc_id")).as("min_doc"),
@@ -3798,7 +3788,8 @@ object Relational extends Entries {
     Entry("o03_multi_sort", o03MultiSort _, o03Sql),
     Entry("o04_grouped_topk", o04GroupedTopk _, o04Sql),
     Entry("o05_grouped_topk_rows", o05GroupedTopkRows _, o05Sql),
-    Entry("o06_topk_delta", o06TopkDelta _, o06Sql),
+    // o05's oracle verbatim: the full-recompute window over ALL history
+    Entry("o06_topk_delta", o06TopkDelta _, o05Sql),
     Entry("o07_keyset_page", o07KeysetPage _, o07Sql),
     Entry("s19_time_travel", s19TimeTravel _, s19Sql),
     Entry("s22_vacuum_retention", s22VacuumRetention _, s22Sql),

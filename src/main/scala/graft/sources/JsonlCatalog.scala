@@ -249,7 +249,7 @@ class JsonlCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
       .map(j => org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])
       .getOrElse(schema)
     new JsonlTable(dir.toString, pinnedSchema, split, routes, mor, morMerge,
-      Some((pin.files, pin.vectors)), bucketHistory = hist)
+      Some(pin), bucketHistory = hist)
   }
 
   /** `SELECT … FROM t TIMESTAMP AS OF ts` — resolve to the NEWEST snapshot

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException
 import org.apache.spark.sql.connector.catalog.{Identifier, Table}
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
-import org.apache.spark.sql.connector.read.{LocalScan, Scan}
+import org.apache.spark.sql.connector.read.{InputPartition, LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -63,9 +63,8 @@ object JsonlMaintenance {
     val dir = catalog.dirOf(ident).toString
     val fullName = catalog.qualifiedName(ident)
 
-    def nameOf(p: String) = p.substring(p.lastIndexOf('/') + 1)
     val before = countVectorSidecars(dir)
-    val live = JsonlV2.listFiles(dir).map(f => nameOf(f._1)).toSet
+    val live = JsonlV2.listFiles(dir).map(_.name).toSet
     val vectors = JsonlV2.loadDeletes(dir).filter { case (n, _) => live(n) }
     val stats = JsonlV2.loadStats(dir)
     val (cands, skipped) = vectors.partition { case (n, offs) =>
@@ -146,8 +145,7 @@ object JsonlZorder {
     val dir = catalog.dirOf(ident).toString
     val fullName = catalog.qualifiedName(ident)
 
-    def nameOf(p: String) = p.substring(p.lastIndexOf('/') + 1)
-    val dataFiles = JsonlV2.listFiles(dir).map(f => nameOf(f._1))
+    val dataFiles = JsonlV2.listFiles(dir).map(_.name)
     if (dataFiles.isEmpty) return ZorderReport(0, 0, columns.mkString(","))
 
     // min/max per column: metadata-answered (zero data read) when the
@@ -375,12 +373,12 @@ object JsonlVacuum {
   * discipline like every other sidecar. */
 private[graft] object JsonlVersions {
 
-  /** One recorded snapshot: the pinned (files, vectors) listing plus the
-    * snapshot-time table schema and publish instant. Schema and instant
-    * are Options because manifests written before they were recorded
-    * carry neither — those fall back to the current schema / the
-    * manifest's filesystem mtime, the pre-existing behavior. */
-  final case class VersionPin(
+  /** One recorded snapshot: its version, the pinned (files, vectors)
+    * listing, and the snapshot-time table schema and publish instant.
+    * Schema and instant are Options because manifests written before
+    * they were recorded carry neither — those fall back to the current
+    * schema / the manifest's filesystem mtime, the pre-existing behavior. */
+  final case class VersionPin(version: Long,
       files: Set[String], vectors: Set[String],
       schemaJson: Option[String], publishedAtMs: Option[Long])
 
@@ -407,8 +405,7 @@ private[graft] object JsonlVersions {
     // state of an in-flight multi-file commit (and two concurrent
     // snapshots must not race to the same version number)
     JsonlOcc.withCommitLock(fs, root, "snapshot record") {
-    def nameOf(p: String) = p.substring(p.lastIndexOf('/') + 1)
-    val files = JsonlV2.listFiles(root.toString).map(f => nameOf(f._1)).sorted
+    val files = JsonlV2.listFiles(root.toString).map(_.name).sorted
     val vectors = fs.listStatus(root).toSeq
       .filter(s => s.isFile && s.getPath.getName.startsWith("_deletes-"))
       .map(_.getPath.getName).sorted
@@ -444,7 +441,7 @@ private[graft] object JsonlVersions {
       val a = tree.get(k)
       (0 until a.size).map(a.get(_).textValue).toSet
     }
-    VersionPin(arr("files"), arr("vectors"),
+    VersionPin(v, arr("files"), arr("vectors"),
       Option(tree.get("schema")).map(_.textValue),
       Option(tree.get("publishedAtMs")).map(_.longValue))
   }
@@ -528,10 +525,10 @@ private[graft] object JsonlVersions {
   *    new rows;
   *  - rows DELETED by merge-on-read vectors: for files both snapshots
   *    list, the offsets in `to`'s vectors but not `from`'s name exactly
-  *    the erased rows — read positionally (the `_file`/`_pos` metadata
-  *    columns) from the `from` pin and semi-joined against the
-  *    driver-computed offset diff (O(changed rows), the CDC contract —
-  *    a feed whose size is the delta, not the table);
+  *    the erased rows — read by include-only partitions, whose reader
+  *    emits only the lines at those offsets, over just the byte span the
+  *    offsets cover (O(changed rows), the CDC contract — a feed whose
+  *    size is the delta, not the table);
   *  - a span in which data FILES left the listing (compaction, COW
   *    rewrite, metadata delete — in this format a file leaves a snapshot
   *    only when its bytes are gone) FAILS LOUDLY, exactly like any
@@ -543,87 +540,99 @@ private[graft] object JsonlVersions {
   *    avoids the restriction by writing change files per commit, this
   *    feed pays nothing until asked.
   *
+  * [[plan]] is the one change-set planner: the batch feed ([[between]],
+  * the `changes` read pinned by `versionAsOf`) and the streaming feed
+  * ([[JsonlChangesStream]]) both plan through it.
+  *
   * Downstream this is the incremental-consumption primitive: a training
   * pipeline re-embeds `insert` rows and retracts `delete` rows instead
-  * of re-reading 100 TB. Schema: the snapshot-time table columns plus
+  * of re-reading 100 TB. Schema: the `to` snapshot's table columns plus
   * `_change_type` ('insert' | 'delete'). */
 object JsonlChanges {
 
-  val ChangeCol: String = JsonlV2.ChangeCol
-
+  /** The batch feed from snapshot `from` to snapshot `to` of the table at
+    * `dir`. The scan is built here, so a refused span (inverted, an
+    * unrecorded version, a lost vector sidecar, a file that left the
+    * listing) fails at the call, not at the first action. */
   def between(s: SparkSession, dir: String, from: Long, to: Long)
       : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(from < to,
-      s"graft-jsonl changes: from ($from) must precede to ($to)")
-    val root = new Path(dir)
-    val fs = FileSystem.get(root.toUri, new Configuration())
-    val pFrom = JsonlVersions.load(fs, root, from)
-    val pTo = JsonlVersions.load(fs, root, to)
-    // both endpoints' vectors must be reproducible, CHECKED HERE: the
-    // deletes leg loads vectors by live-listing intersection, so a lost
-    // sidecar would otherwise silently shrink the diff (missed
-    // retractions) — and a deletes-only span would silently return an
-    // EMPTY feed, never touching the pinned scan whose own guard would
-    // have fired
-    JsonlV2.requireVectorsPresent(dir, pFrom.vectors, s"changes [$from, $to]")
-    JsonlV2.requireVectorsPresent(dir, pTo.vectors, s"changes [$from, $to]")
+    val feed = s.read.format("graft-jsonl")
+      .option("path", dir)
+      .option("changes", "true")
+      .option("versionAsOf", to.toString)
+      .option("startingVersion", from.toString)
+      .load()
+    feed.queryExecution.optimizedPlan
+    feed
+  }
 
-    def read(v: Long, files: Set[String]) =
-      s.read.format("graft-jsonl")
-        .option("path", dir)
-        .option("versionAsOf", v.toString)
-        .option("files", files.mkString(","))
-        .load()
-
-    val inserted = pTo.files -- pFrom.files
-    val removed = pFrom.files -- pTo.files
+  /** The net change set from snapshot `from` to snapshot `to` of the
+    * table at `path`, as input partitions:
+    *
+    *  - files `to` lists and `from` does not: planned whole with `to`'s
+    *    vector slices, tagged 'insert';
+    *  - offsets in `to`'s vectors but not `from`'s on files both list:
+    *    include-only partitions over the offsets' byte span, tagged
+    *    'delete'.
+    *
+    * Refused loudly: an inverted span, a pinned vector sidecar that is
+    * gone, a data file that left the listing inside the span, and a
+    * pinned data file no longer present. */
+  private[sources] def plan(path: String, from: JsonlVersions.VersionPin,
+      to: JsonlVersions.VersionPin, splitSize: Long)
+      : Array[InputPartition] = {
+    val span = s"changes [${from.version}, ${to.version}]"
+    require(from.version < to.version,
+      s"graft-jsonl changes: from (${from.version}) must precede to (${to.version})")
+    // both endpoints' vectors must be reproducible: vectors load by
+    // live-listing intersection, so a lost sidecar would silently shrink
+    // the delete leg (missed retractions; a deletes-only span would read
+    // as an EMPTY feed) and mis-slice the insert partitions
+    JsonlV2.requireVectorsPresent(path, from.vectors, span)
+    JsonlV2.requireVectorsPresent(path, to.vectors, span)
     // a file leaves a listing only when its bytes are gone — loud, fast,
     // with the remedy in the message (the pinned-read contract)
+    val removed = from.files -- to.files
     require(removed.isEmpty,
-      s"graft-jsonl changes [$from, $to] on $dir: ${removed.size} data " +
+      s"graft-jsonl $span on $path: ${removed.size} data " +
         s"file(s) left the listing inside the span " +
         s"(${removed.toSeq.sorted.take(3).mkString(", ")}…) — " +
         "compaction/COW/metadata-delete ran between the snapshots and " +
         "their deletion images cannot be reproduced from bytes that are " +
         "gone; consume spans that contain only appends and merge-on-read " +
-        "deletes, or re-snapshot after maintenance")
-    val common = pFrom.files.intersect(pTo.files)
-    val dFrom = JsonlV2.loadDeletes(dir, pFrom.vectors.contains)
-    val dTo = JsonlV2.loadDeletes(dir, pTo.vectors.contains)
-    val vecDiff: Seq[(String, Long)] = common.toSeq.sorted.flatMap { f =>
-      val before = dFrom.getOrElse(f, Array.emptyLongArray).toSet
-      dTo.getOrElse(f, Array.emptyLongArray).toSeq
-        .filterNot(before).map(f -> _)
+        "deletes, or re-snapshot after maintenance (a stream restarts " +
+        "past the span)")
+    val live = JsonlV2.listFiles(path).map(f => f.name -> f).toMap
+    def lookup(n: String): JsonlV2.DataFile = live.getOrElse(n,
+      throw new IllegalArgumentException(
+        s"graft-jsonl $span on $path: snapshot ${to.version} references " +
+          s"'$n' which is no longer present — the version was invalidated " +
+          "by compaction/COW/vacuum; read (or restart the stream) from a " +
+          "newer snapshot"))
+    val dFrom = JsonlV2.loadDeletes(path, from.vectors.contains)
+    val dTo = JsonlV2.loadDeletes(path, to.vectors.contains)
+    val inserts = (to.files -- from.files).toSeq.sorted.flatMap { n =>
+      val f = lookup(n)
+      JsonlV2.splits(f, 0L, f.len, splitSize, dTo.getOrElse(n, Array.emptyLongArray))
+        .map(_.copy(changeType = "insert"))
     }
-
-    val legs = Seq(
-      if (inserted.isEmpty) None
-      else Some(read(to, inserted).withColumn(ChangeCol, lit("insert"))),
-      if (vecDiff.isEmpty) None
-      else Some {
-        val diffRows: java.util.List[org.apache.spark.sql.Row] =
-          vecDiff.map { case (f, p) =>
-            org.apache.spark.sql.Row(f, p)
-          }.asJava
-        val diffDf = s.createDataFrame(diffRows, StructType(Seq(
-          StructField("df_file", StringType), StructField("df_pos", LongType))))
-        read(from, vecDiff.map(_._1).toSet)
-          .select(col("*"), col(JsonlV2.FileCol), col(JsonlV2.PosCol))
-          .join(broadcast(diffDf),
-            substring_index(col(JsonlV2.FileCol), "/", -1) === col("df_file") &&
-              col(JsonlV2.PosCol) === col("df_pos"),
-            "left_semi")
-          .drop(JsonlV2.FileCol, JsonlV2.PosCol)
-          .withColumn(ChangeCol, lit("delete"))
-      }).flatten
-
-    legs.reduceOption(_.unionByName(_)).getOrElse {
-      // both snapshots identical: an empty feed with the right schema
-      val proto = read(to, pTo.files + "__none__")
-      s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        proto.schema.add(ChangeCol, StringType))
+    val deletes = from.files.intersect(to.files).toSeq.sorted.flatMap { n =>
+      val before = dFrom.getOrElse(n, Array.emptyLongArray).toSet
+      val diff = dTo.getOrElse(n, Array.emptyLongArray).filterNot(before)
+      if (diff.isEmpty) Nil
+      else {
+        val f = lookup(n)
+        // bound the scan to the diff's offset SPAN: read cost is
+        // O(delta span), not O(file), and a wide delta keeps its
+        // parallelism. The range starts one byte BEFORE the first diff
+        // offset, so the split that starts there owns that line.
+        val lo = if (diff.head == 0L) 0L else diff.head - 1
+        JsonlV2.splits(f, lo, math.min(diff.last + 1, f.len), splitSize, diff)
+          .map(p => p.copy(deleted = Array.emptyLongArray, includeOnly = p.deleted,
+            changeType = "delete"))
+      }
     }
+    (inserts ++ deletes).toArray
   }
 }
 
@@ -870,8 +879,7 @@ private[graft] object JsonlProcedures {
       val (ident, _) = a.table(0)
       val root = cat.dirOf(ident)
       val fs = fsOf(root)
-      def nameOf(p: String) = p.substring(p.lastIndexOf('/') + 1)
-      val live = JsonlV2.listFiles(root.toString).map(f => nameOf(f._1)).toSet
+      val live = JsonlV2.listFiles(root.toString).map(_.name).toSet
       JsonlVersions.versionsOf(fs, root).map { v =>
         val pin = JsonlVersions.load(fs, root, v)
         row(v, pin.files.size.toLong, pin.vectors.size.toLong,

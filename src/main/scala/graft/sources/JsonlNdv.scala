@@ -75,8 +75,7 @@ private[graft] object JsonlNdv {
             (st.getPath.getName, st.getModificationTime, st.getLen)
         }.toSeq.sortBy(_._1)
       } catch { case _: java.io.IOException => Nil }
-    val liveSig = JsonlV2.listFiles(dir)
-      .map(f => f._1.substring(f._1.lastIndexOf('/') + 1)).sorted
+    val liveSig = JsonlV2.listFiles(dir).map(_.name).sorted
     (dir, sig, liveSig)
   }
 
@@ -103,8 +102,7 @@ private[graft] object JsonlNdv {
     * query. */
   def coveredRows(dir: String): Option[Long] =
     rowsMemo.computeIfAbsent(sigOf(dir), _ => {
-      val live = JsonlV2.listFiles(dir)
-        .map(f => f._1.substring(f._1.lastIndexOf('/') + 1))
+      val live = JsonlV2.listFiles(dir).map(_.name)
       val stats = JsonlV2.loadStats(dir)
       if (live.nonEmpty && live.forall(stats.contains))
         Some(live.map(n => stats(n).rows).sum)
@@ -115,8 +113,7 @@ private[graft] object JsonlNdv {
     (String, Seq[(String, Long, Long)], Seq[String]), Option[Long]]
 
   private def computeAll(dir: String): Map[String, Option[ColNdv]] = {
-    val live = JsonlV2.listFiles(dir)
-      .map(f => f._1.substring(f._1.lastIndexOf('/') + 1))
+    val live = JsonlV2.listFiles(dir).map(_.name)
     val stats = JsonlV2.loadStats(dir)
     val sketched = live.flatMap(n =>
       stats.get(n).map(_.ndv.keySet).getOrElse(Set.empty)).toSet

@@ -83,22 +83,18 @@ class JsonlV2 extends TableProvider with DataSourceRegister {
     val path = JsonlV2.pathOf(opts)
     val split = opts.getLong("splitSize", 4L * 1024 * 1024)
     // the changes feed's output carries _change_type; the table schema
-    // must already show it (Spark derives the stream's schema from the
+    // must already show it (Spark derives the read's schema from the
     // TABLE, and the scan's readSchema must agree)
-    require(!(opts.getBoolean("changes", false) && opts.containsKey("versionAsOf")),
-      "graft-jsonl: `changes` and `versionAsOf` do not compose — the feed " +
-        "pins BOTH of its endpoints itself; name the baseline snapshot " +
-        "with `startingVersion`")
-    val schema0 =
-      if (opts.getBoolean("changes", false) &&
-        !schema.fieldNames.contains(JsonlV2.ChangeCol))
-        schema.add(JsonlV2.ChangeCol, StringType)
-      else schema
+    def withChangeCol(s: StructType) =
+      if (opts.getBoolean("changes", false) && !s.fieldNames.contains(JsonlV2.ChangeCol))
+        s.add(JsonlV2.ChangeCol, StringType)
+      else s
     // `versionAsOf` READ OPTION — the path-based face of the catalog's
     // VERSION AS OF: pin the read to snapshot n's recorded (files,
     // vectors, schema) exactly, with the same loud invalidation and
-    // write refusal. Format reads and the changes feed
-    // ([[JsonlChanges]]) resolve snapshots without needing a catalog.
+    // write refusal. Format reads and the batch changes feed
+    // ([[JsonlChanges]], whose `to` snapshot is the pin) resolve
+    // snapshots without needing a catalog.
     Option(opts.get("versionAsOf")) match {
       case Some(v) =>
         val root = new Path(path)
@@ -106,11 +102,10 @@ class JsonlV2 extends TableProvider with DataSourceRegister {
         val pin = JsonlVersions.load(fsys, root, v.toLong)
         val pinSchema = pin.schemaJson
           .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-          .getOrElse(schema0)
-        new JsonlTable(path, pinSchema, split, routes,
-          pinned = Some((pin.files, pin.vectors)))
+          .getOrElse(schema)
+        new JsonlTable(path, withChangeCol(pinSchema), split, routes, pinned = Some(pin))
       case None =>
-        new JsonlTable(path, schema0, split, routes)
+        new JsonlTable(path, withChangeCol(schema), split, routes)
     }
   }
 }
@@ -335,9 +330,14 @@ private[graft] object JsonlV2 {
 
   def mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
+  /** One listed data file: its full path (what a reader opens and `_file`
+    * shows), its name (the key of every stats sidecar, delete vector and
+    * snapshot manifest) and its byte length. */
+  final case class DataFile(path: String, name: String, len: Long)
+
   /** List the data files under `path` (a file or a directory), skipping
     * hidden/metadata names the same way FileIndex does. */
-  def listFiles(path: String): Seq[(String, Long)] = {
+  def listFiles(path: String): Seq[DataFile] = {
     val fs = FileSystem.get(new java.net.URI(path).normalize() match {
       case u if u.getScheme == null => new java.net.URI(s"file:$path")
       case u                        => u
@@ -349,12 +349,42 @@ private[graft] object JsonlV2 {
       else Seq(st)
     files
       .filter(f => f.isFile && f.getLen > 0)
-      .map(f => f.getPath.toString -> f.getLen)
-      .filterNot { case (p, _) =>
-        val name = p.substring(p.lastIndexOf('/') + 1)
-        name.startsWith("_") || name.startsWith(".")
-      }
-      .sortBy(_._1)
+      .map(f => DataFile(f.getPath.toString, f.getPath.getName, f.getLen))
+      .filterNot(f => f.name.startsWith("_") || f.name.startsWith("."))
+      .sortBy(_.path)
+  }
+
+  /** The one byte-range split planner: bytes `[lo, hi)` of `file` cut
+    * into `splitSize` ranges, each carrying its slice of the sorted line
+    * offsets `vector`. A split `(start, length)` owns the lines starting
+    * in `(start, start + length]` (a reader not at the file head discards
+    * through its first newline and reads one line past its end), so a
+    * slice is inclusive on both ends. */
+  def splits(file: DataFile, lo: Long, hi: Long, splitSize: Long,
+      vector: Array[Long]): Seq[JsonlPartition] =
+    (lo until hi by splitSize).map { start =>
+      val length = math.min(splitSize, hi - start)
+      JsonlPartition(file.path, start, length,
+        if (vector.isEmpty) vector
+        else vector.filter(o => o >= start && o <= start + length))
+    }
+
+  /** The files a scan plans under `filters`: a filter on `_file` keeps a
+    * file by identity (exact, no sidecar needed — the runtime group
+    * filter of the COW rewrites), every other filter by the file's
+    * sidecar ranges ([[mayMatch]]). A file without a sidecar is never
+    * skipped, and a `_file` shape this does not recognize keeps the file. */
+  def keptFiles(files: Seq[DataFile], stats: Map[String, FileStats],
+      filters: Array[Filter]): Seq[DataFile] = {
+    def identityHit(f: DataFile, flt: Filter): Boolean = flt match {
+      case EqualTo(_, v: String) => f.path == v
+      case In(_, vs)             => vs.contains(f.path)
+      case _                     => true
+    }
+    val (fileFs, dataFs) = filters.partition(_.references.toSeq == Seq(FileCol))
+    files.filter { f =>
+      fileFs.forall(identityHit(f, _)) && stats.get(f.name).forall(mayMatch(dataFs, _))
+    }
   }
 
   /** One column's footer-style statistics: min/max over the NON-NULL
@@ -616,13 +646,13 @@ private[graft] object JsonlV2 {
   def wholeFileVerdicts(path: String, filters: Array[Filter])
       : Option[Seq[(String, Boolean)]] = {
     val stats = loadStats(path)
-    val verdicts = listFiles(path).map { case (f, _) =>
-      stats.get(f.substring(f.lastIndexOf('/') + 1)).flatMap { fs =>
+    val verdicts = listFiles(path).map { f =>
+      stats.get(f.name).flatMap { fs =>
         val const = fs.cols.collect {
           case (c, cs) if cs.constant.isDefined => c -> cs.constant.get
         }
         val vs = filters.toSeq.map(evalConst(_, const))
-        if (vs.exists(_.isEmpty)) None else Some(f -> vs.forall(_.get))
+        if (vs.exists(_.isEmpty)) None else Some(f.path -> vs.forall(_.get))
       }
     }
     if (verdicts.exists(_.isEmpty)) None else Some(verdicts.flatten)
@@ -728,8 +758,8 @@ private[graft] object JsonlV2 {
     import com.fasterxml.jackson.databind.JsonNode
     val files = listFiles(path)
     require(files.nonEmpty, s"graft-jsonl: no data files under $path")
-    val fs = FileSystem.get(new java.net.URI(files.head._1), new Configuration())
-    val in = fs.open(new Path(files.head._1))
+    val fs = FileSystem.get(new java.net.URI(files.head.path), new Configuration())
+    val in = fs.open(new Path(files.head.path))
     val order = mutable.LinkedHashMap.empty[String, DataType]
     try {
       val m = mapper
@@ -837,10 +867,10 @@ private[graft] class JsonlTable(
     path: String, schemaArg: StructType, splitSize: Long,
     routes: Seq[RouteExpr] = Nil, morDelete: Boolean = false,
     morMerge: Boolean = false,
-    // VERSION AS OF pin: (data file names, delete-vector sidecar names)
-    // recorded by the snapshot this read resolves to. A pinned table is
-    // READ-ONLY — every mutation face refuses loudly.
-    pinned: Option[(Set[String], Set[String])] = None,
+    // VERSION AS OF pin: the snapshot this read resolves to (its data
+    // file and delete-vector sidecar names). A pinned table is READ-ONLY
+    // — every mutation face refuses loudly.
+    pinned: Option[JsonlVersions.VersionPin] = None,
     // `ndv.columns` table property: every write publishes per-file HLL
     // sketches of these columns (the write OPTION overrides per write)
     ndvCols: Seq[String] = Nil,
@@ -986,8 +1016,8 @@ private[graft] class JsonlTable(
     m.put("delete.mode", if (morDelete) "merge-on-read" else "copy-on-write")
     m.put("merge.mode", if (morMerge) "merge-on-read" else "copy-on-write")
     if (ndvCols.nonEmpty) m.put("ndv.columns", ndvCols.mkString(","))
-    pinned.foreach { case (fs, vs) =>
-      m.put("pinned", s"version snapshot: ${fs.size} files, ${vs.size} vectors")
+    pinned.foreach { p =>
+      m.put("pinned", s"version snapshot: ${p.files.size} files, ${p.vectors.size} vectors")
     }
     java.util.Collections.unmodifiableMap(m)
   }
@@ -1015,11 +1045,10 @@ private[graft] class JsonlTable(
       s"graft-jsonl $path: SHOW PARTITIONS needs an identity-routed layout " +
         s"(got partitioning ${routes.mkString(", ")})")
     val stats = JsonlV2.loadStats(path)
-    JsonlV2.listFiles(path).map { case (f, _) =>
-      val name = f.substring(f.lastIndexOf('/') + 1)
-      val pv = stats.get(name).flatMap(_.pvals)
+    JsonlV2.listFiles(path).map { f =>
+      val pv = stats.get(f.name).flatMap(_.pvals)
       require(pv.isDefined && pv.get.length == routes.length,
-        s"graft-jsonl $path: data file $name carries no routing proof — " +
+        s"graft-jsonl $path: data file ${f.name} carries no routing proof — " +
           "the partition listing would lie; re-route the file or drop it")
       pv.get
     }.distinct
@@ -1088,18 +1117,17 @@ private[graft] class JsonlTable(
     }
     val stats = JsonlV2.loadStats(path)
     val fs = FileSystem.get(new Path(path).toUri, new Configuration())
-    val hits = JsonlV2.listFiles(path).filter { case (f, _) =>
-      val name = f.substring(f.lastIndexOf('/') + 1)
-      val pv = stats.get(name).flatMap(_.pvals)
+    val hits = JsonlV2.listFiles(path).filter { f =>
+      val pv = stats.get(f.name).flatMap(_.pvals)
       require(pv.isDefined && pv.get.length == routes.length,
-        s"graft-jsonl $path: data file $name carries no routing proof — " +
+        s"graft-jsonl $path: data file ${f.name} carries no routing proof — " +
           "TRUNCATE PARTITION would be undecidable for it")
       pv.get == target
     }
     JsonlOcc.withCommitLock(fs, new Path(path), "TRUNCATE PARTITION") {
-      hits.foreach { case (f, _) =>
-        require(fs.delete(new Path(f), false),
-          s"graft-jsonl: TRUNCATE PARTITION failed to delete $f")
+      hits.foreach { f =>
+        require(fs.delete(new Path(f.path), false),
+          s"graft-jsonl: TRUNCATE PARTITION failed to delete ${f.path}")
       }
     }
     true
@@ -1110,28 +1138,26 @@ private[graft] class JsonlTable(
       TableCapability.OVERWRITE_DYNAMIC, TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.STREAMING_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // `changes` READ OPTION (streaming): the CDC feed — offsets are
-    // snapshot versions, batches are net change sets, output schema is
-    // the table plus `_change_type`. `startingVersion` names the
-    // BASELINE snapshot to diff from (default: newest at stream start).
-    // The batch face of the same feed is [[JsonlChanges.between]].
+    // `changes` READ OPTION: the CDC feed — net change sets between
+    // snapshots, output schema the table plus `_change_type`.
+    // `startingVersion` names the BASELINE snapshot to diff from. Pinned
+    // by `versionAsOf` it is the batch feed ([[JsonlChanges.between]]),
+    // the pin naming the `to` snapshot; unpinned it is the stream, whose
+    // offsets are snapshot versions (baseline default: newest at stream
+    // start).
     if (options.getBoolean("changes", false)) {
       // loud-refusal discipline: the feed is the FULL net change set
       // between snapshots — silently ignoring a `where`/`files`
-      // restriction (or a snapshot pin) would hand back an unfiltered
-      // feed the caller believes is scoped
+      // restriction would hand back an unfiltered feed the caller
+      // believes is scoped
       require(!options.containsKey("where") && !options.containsKey("files"),
         "graft-jsonl: `changes` does not compose with `where`/`files` — " +
           "the feed is the full net change set between snapshots; filter " +
           "the returned stream instead")
-      require(pinned.isEmpty,
-        "graft-jsonl: `changes` does not compose with a VERSION AS OF " +
-          "pin — the feed names BOTH of its endpoints itself; use " +
-          "`startingVersion` for the baseline snapshot")
       val sv = Option(options.get("startingVersion")).map(_.toLong)
       return new ScanBuilder {
         override def build(): Scan =
-          new JsonlChangesScan(path, schemaArg, splitSize, sv)
+          new JsonlChangesScan(path, schemaArg, splitSize, sv, pinned)
       }
     }
     val pre = Option(options.get("where"))
@@ -1146,12 +1172,12 @@ private[graft] class JsonlTable(
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty)
     pinned match {
-      case Some((vFiles, vVectors)) =>
+      case Some(pin) =>
         // a version pin IS a whitelist pair: the snapshot's data files
         // intersected with any `files` option, plus exactly its vectors
-        val eff = whitelist.fold(vFiles)(_.intersect(vFiles))
+        val eff = whitelist.fold(pin.files)(_.intersect(pin.files))
         new JsonlScanBuilder(path, schemaArg, splitSize, reportRoutes, pre,
-          Some(eff), Some(vVectors))
+          Some(eff), Some(pin.vectors))
       case None =>
         new JsonlScanBuilder(path, schemaArg, splitSize, reportRoutes, pre,
           whitelist)
@@ -1316,8 +1342,7 @@ private[sources] class JsonlCowScanBuilder(
     // COW scan buys nothing on a rewrite that re-serializes every row)
     new JsonlScan(path, full, required, Array.empty, splitSize, -1, routes,
       pruneOnly = pruneOnly,
-      onPlanned = Some(fs =>
-        op.scanned.set(fs.map(f => f.substring(f.lastIndexOf('/') + 1)))),
+      onPlanned = Some(op.scanned.set),
       columnarRead = false)
 }
 
@@ -1559,6 +1584,7 @@ private[sources] class JsonlMorWriter(
     taskId: Long, routes: Seq[RouteExpr], cmd: Command)
     extends DeltaWriter[InternalRow] {
 
+  // data file path (the row id's `_file`) → deleted line offsets
   private val perFile = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Long]]
   private val inserts = new JsonlDataWriter(path, schema, writeId,
     partitionId = partitionId, taskId = taskId, routes = routes)
@@ -1566,9 +1592,8 @@ private[sources] class JsonlMorWriter(
   // rowId projection order is the order JsonlMorOperation.rowId()
   // declares: (_file string, _pos long)
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
-    val file = id.getUTF8String(0).toString
-    val name = file.substring(file.lastIndexOf('/') + 1)
-    perFile.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += id.getLong(1)
+    perFile.getOrElseUpdate(id.getUTF8String(0).toString, mutable.ArrayBuffer.empty) +=
+      id.getLong(1)
   }
 
   override def insert(row: InternalRow): Unit =
@@ -1597,8 +1622,8 @@ private[sources] class JsonlMorWriter(
     val out: java.io.OutputStream = fs.create(tmp, true)
     val gen = new com.fasterxml.jackson.core.JsonFactory().createGenerator(out)
     gen.writeStartObject()
-    perFile.foreach { case (name, offs) =>
-      gen.writeArrayFieldStart(name)
+    perFile.foreach { case (file, offs) =>
+      gen.writeArrayFieldStart(new Path(file).getName)
       offs.sorted.foreach(gen.writeNumber)
       gen.writeEndArray()
     }
@@ -1652,9 +1677,7 @@ private[sources] class JsonlScanBuilder(path: String, full: StructType, splitSiz
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
     import JsonlV2.{FileStats, cmpVals}
     if (limit >= 0) return None
-    val files = JsonlV2.listFiles(path).filter { case (f, _) =>
-      fileWhitelist.forall(_.contains(f.substring(f.lastIndexOf('/') + 1)))
-    }
+    val files = JsonlV2.listFiles(path).filter(f => fileWhitelist.forall(_.contains(f.name)))
     // merge-on-read delete vectors invalidate every sidecar figure a
     // metadata answer would use (a deleted row may have held the min/max,
     // carried the sum, or counted) — one vector against a LIVE file and
@@ -1662,18 +1685,14 @@ private[sources] class JsonlScanBuilder(path: String, full: StructType, splitSiz
     // check is live-intersected, not mere sidecar presence: entries for
     // files a compaction already rewrote are stale-harmless everywhere
     // else and must not veto the rewrite forever.
-    val liveNames = files.map { case (f, _) =>
-      f.substring(f.lastIndexOf('/') + 1)
-    }.toSet
+    val liveNames = files.map(_.name).toSet
     if (JsonlV2.loadDeletes(path).keys.exists(liveNames.contains)) return None
     // a version-pinned read answers from its snapshot's files and vectors
     // only; the sidecar arithmetic above reasons about the LIVE table, so
     // the metadata path stands down and the pinned scan reads data
     if (vectorWhitelist.isDefined) return None
     val stats = JsonlV2.loadStats(path)
-    val covered = files.map { case (f, _) =>
-      stats.get(f.substring(f.lastIndexOf('/') + 1))
-    }
+    val covered = files.map(f => stats.get(f.name))
     if (files.isEmpty || covered.exists(_.isEmpty)) return None
     val fileStats: Seq[FileStats] = covered.flatten
 
@@ -1874,7 +1893,7 @@ private[sources] class JsonlScan(
     path: String, full: StructType, required: StructType, pushed: Array[Filter],
     splitSize: Long, limit: Int = -1, routes: Seq[RouteExpr] = Nil,
     pruneOnly: Array[Filter] = Array.empty,
-    onPlanned: Option[Seq[String] => Unit] = None,
+    onPlanned: Option[Seq[String] => Unit] = None, // the planned file names
     fileWhitelist: Option[Set[String]] = None,
     vectorWhitelist: Option[Set[String]] = None,
     columnarRead: Boolean = true)
@@ -1883,9 +1902,7 @@ private[sources] class JsonlScan(
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
 
   private lazy val files = {
-    val kept = JsonlV2.listFiles(path).filter { case (f, _) =>
-      fileWhitelist.forall(_.contains(f.substring(f.lastIndexOf('/') + 1)))
-    }
+    val kept = JsonlV2.listFiles(path).filter(f => fileWhitelist.forall(_.contains(f.name)))
     // a VERSION AS OF pin (vectorWhitelist is only ever set by the pinned
     // table) must read its snapshot EXACTLY or fail loudly: a recorded
     // file that compaction/COW/vacuum has since removed would otherwise
@@ -1894,10 +1911,7 @@ private[sources] class JsonlScan(
     // option keeps its ignore-unknown-names semantics: its whitelists
     // come from the live listing by construction.)
     if (vectorWhitelist.isDefined) fileWhitelist.foreach { want =>
-      val have = kept.map { case (f, _) =>
-        f.substring(f.lastIndexOf('/') + 1)
-      }.toSet
-      val missing = want -- have
+      val missing = want -- kept.map(_.name)
       require(missing.isEmpty,
         s"graft-jsonl $path: VERSION AS OF snapshot references " +
           s"${missing.size} file(s) no longer present " +
@@ -1947,26 +1961,7 @@ private[sources] class JsonlScan(
   /** Files whose footer-style sidecar ranges exclude every pushed OR
     * runtime comparison are skipped WHOLE at planning time — the min/max
     * layout game parquet plays, on text. */
-  /** A filter on `_file` prunes by FILE IDENTITY — exact, no sidecar
-    * needed (the runtime group-filter shape of the COW rewrites); any
-    * shape this does not recognize keeps the file (never prunes). */
-  private def fileIdentityHit(f: String, flt: Filter): Boolean = flt match {
-    case EqualTo(a, v: String) if a == JsonlV2.FileCol => f == v
-    case In(a, vs) if a == JsonlV2.FileCol => vs.exists(v => v == f)
-    case IsNotNull(a) if a == JsonlV2.FileCol => true
-    case _ => true
-  }
-
-  private def keptFiles = {
-    val all = pushed ++ pruneOnly ++ runtime
-    val (fileFs, dataFs) =
-      all.partition(_.references.toSeq == Seq(JsonlV2.FileCol))
-    files.filter { case (f, _) =>
-      val name = f.substring(f.lastIndexOf('/') + 1)
-      fileFs.forall(fileIdentityHit(f, _)) &&
-        stats.get(name).forall(JsonlV2.mayMatch(dataFs, _))
-    }
-  }
+  private def keptFiles = JsonlV2.keptFiles(files, stats, pushed ++ pruneOnly ++ runtime)
 
   override def readSchema(): StructType = required
 
@@ -1993,15 +1988,14 @@ private[sources] class JsonlScan(
     * grouping claim must hold for every row or not be made. */
   private def constantCols: Seq[String] = {
     val kept = keptFiles
-    def statsOf(f: String) = stats.get(f.substring(f.lastIndexOf('/') + 1))
-    if (kept.isEmpty || kept.exists(k => statsOf(k._1).isEmpty)) Nil
+    if (kept.isEmpty || kept.exists(k => !stats.contains(k.name))) Nil
     else required.fields.map(_.name).filter { c =>
-      kept.forall(k => statsOf(k._1).get.cols.get(c).exists(_.constant.isDefined))
+      kept.forall(k => stats(k.name).cols.get(c).exists(_.constant.isDefined))
     }.toSeq
   }
 
-  private def keyOf(file: String, cols: Seq[String]): Seq[Any] = {
-    val fs = stats(file.substring(file.lastIndexOf('/') + 1))
+  private def keyOf(file: JsonlV2.DataFile, cols: Seq[String]): Seq[Any] = {
+    val fs = stats(file.name)
     cols.map(c => fs.cols(c).constant.get)
   }
 
@@ -2016,9 +2010,8 @@ private[sources] class JsonlScan(
     if (!routes.forall(r => required.fields.exists(_.name == r.col))) return None
     val kept = keptFiles
     if (kept.isEmpty) return None
-    val entries = kept.map { case (f, _) =>
-      val name = f.substring(f.lastIndexOf('/') + 1)
-      stats.get(name).flatMap(_.pvals).filter(_.size == routes.size).map(name -> _)
+    val entries = kept.map { f =>
+      stats.get(f.name).flatMap(_.pvals).filter(_.size == routes.size).map(f.name -> _)
     }
     if (entries.exists(_.isEmpty)) None
     else Some(entries.flatten.toMap.map { case (name, pv) =>
@@ -2076,7 +2069,7 @@ private[sources] class JsonlScan(
         if (cols.isEmpty)
           new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
         else {
-          val nKeys = keptFiles.map(k => keyOf(k._1, cols)).distinct.size
+          val nKeys = keptFiles.map(keyOf(_, cols)).distinct.size
           new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
             cols.map(c => org.apache.spark.sql.connector.expressions.Expressions
               .identity(c): org.apache.spark.sql.connector.expressions.Expression)
@@ -2109,18 +2102,17 @@ private[sources] class JsonlScan(
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     val kept = keptFiles
     if (kept.isEmpty) return Array.empty
-    def statsOf(f: String) = stats.get(f.substring(f.lastIndexOf('/') + 1))
-    val claims = kept.map(k => statsOf(k._1).map(_.sorted).getOrElse(Nil))
+    val claims = kept.map(k => stats.get(k.name).map(_.sorted).getOrElse(Nil))
     if (claims.exists(_.isEmpty)) return Array.empty
     val col = claims.head.head
     if (!claims.forall(_.head == col)) return Array.empty
     if (!required.fields.exists(_.name == col)) return Array.empty
     val keyGrouped = routeKeys.isDefined || constantCols.nonEmpty
     if (keyGrouped) {
-      if (kept.exists(_._2 > splitSize)) return Array.empty
+      if (kept.exists(_.len > splitSize)) return Array.empty
       val keys = routeKeys match {
-        case Some(m) => kept.map(k => m(k._1.substring(k._1.lastIndexOf('/') + 1)))
-        case None    => kept.map(k => keyOf(k._1, constantCols))
+        case Some(m) => kept.map(k => m(k.name))
+        case None    => kept.map(keyOf(_, constantCols))
       }
       if (keys.distinct.size != keys.size) return Array.empty
     }
@@ -2134,11 +2126,10 @@ private[sources] class JsonlScan(
     val declared = routeKeys
     val cols = if (declared.isDefined) Nil else constantCols
     val kept = keptFiles
-    onPlanned.foreach(_(kept.map(_._1)))
-    kept.flatMap { case (f, len) =>
-      val name = f.substring(f.lastIndexOf('/') + 1)
+    onPlanned.foreach(_(kept.map(_.name)))
+    kept.flatMap { f =>
       val key = declared match {
-        case Some(m) => keyRowOf(m(name))
+        case Some(m) => keyRowOf(m(f.name))
         case None if cols.nonEmpty =>
           new GenericInternalRow(keyOf(f, cols).map {
             case s: String => UTF8String.fromString(s)
@@ -2149,15 +2140,9 @@ private[sources] class JsonlScan(
       }
       // each split carries only ITS slice of the file's delete vector —
       // proportional shipping, nothing global rides the tasks
-      val dv = deletes.getOrElse(name, Array.emptyLongArray)
-      (0L until len by splitSize).map { start =>
-        val length = math.min(splitSize, len - start)
-        val slice =
-          if (dv.isEmpty) dv
-          else dv.filter(o => o >= start && o <= start + length)
-        if (key == null) JsonlPartition(f, start, length, slice)
-        else JsonlKeyedPartition(f, start, length, key, slice)
-      }
+      val parts = JsonlV2.splits(f, 0L, f.len, splitSize,
+        deletes.getOrElse(f.name, Array.emptyLongArray))
+      if (key == null) parts else parts.map(JsonlKeyedPartition(_, key))
     }.toArray
   }
 
@@ -2179,14 +2164,13 @@ private[sources] class JsonlScan(
   override def estimateStatistics(): Statistics = new Statistics {
     private val kept = keptFiles
     override def sizeInBytes(): OptionalLong =
-      OptionalLong.of(kept.map(_._2).sum)
+      OptionalLong.of(kept.map(_.len).sum)
     override def numRows(): OptionalLong = {
-      val counts = kept.map { case (f, _) =>
-        val name = f.substring(f.lastIndexOf('/') + 1)
+      val counts = kept.map { f =>
         // merge-on-read: subtract the file's delete vector (each entry is
         // a real deleted line) so the estimate stays exact
-        stats.get(name)
-          .map(_.rows - deletes.getOrElse(name, Array.emptyLongArray).length)
+        stats.get(f.name)
+          .map(_.rows - deletes.getOrElse(f.name, Array.emptyLongArray).length)
       }
       if (counts.exists(_.isEmpty)) OptionalLong.empty()
       else OptionalLong.of(counts.flatten.sum)
@@ -2207,9 +2191,7 @@ private[sources] case class JsonlPartition(file: String, start: Long, length: Lo
   * [[org.apache.spark.sql.connector.read.HasPartitionKey]] face Spark's
   * key-grouped clustering consumes. The reader ignores the key (same
   * read path); only the planner uses it. */
-private[sources] case class JsonlKeyedPartition(
-    file: String, start: Long, length: Long, key: InternalRow,
-    deleted: Array[Long] = Array.emptyLongArray)
+private[sources] case class JsonlKeyedPartition(split: JsonlPartition, key: InternalRow)
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = key
 }
@@ -2245,12 +2227,11 @@ private[sources] class JsonlMicroBatchStream(
   import org.apache.spark.sql.connector.read.streaming.Offset
 
   private def listing = JsonlV2.listFiles(path)
-  private def nameOf(p: String): String = p.substring(p.lastIndexOf('/') + 1)
 
   override def initialOffset(): Offset = JsonlOffset(0, "")
   override def latestOffset(): Offset = {
     val l = listing
-    JsonlOffset(l.size, if (l.isEmpty) "" else nameOf(l.last._1))
+    JsonlOffset(l.size, if (l.isEmpty) "" else l.last.name)
   }
   override def deserializeOffset(json: String): Offset = {
     val node = JsonlV2.mapper.readTree(json)
@@ -2261,9 +2242,9 @@ private[sources] class JsonlMicroBatchStream(
 
   /** The consumed prefix must be EXACTLY the first `files` names of the
     * current listing — checked via the recorded boundary name. */
-  private def checkBoundary(snapshot: Seq[(String, Long)], o: JsonlOffset): Unit =
+  private def checkBoundary(snapshot: Seq[JsonlV2.DataFile], o: JsonlOffset): Unit =
     if (o.files > 0 && o.last.nonEmpty) {
-      val at = nameOf(snapshot(o.files - 1)._1)
+      val at = snapshot(o.files - 1).name
       require(at == o.last,
         s"graft-jsonl stream: file '$at' now sits at consumed position " +
           s"${o.files - 1} where '${o.last}' was committed — a producer " +
@@ -2284,29 +2265,19 @@ private[sources] class JsonlMicroBatchStream(
     checkBoundary(snapshot, to)
     // STREAMING file skipping: a new file whose sidecar ranges exclude
     // every pushed comparison is consumed (the offset advances past it)
-    // but never planned — the same whole-file min/max game the batch scan
-    // plays, applied per micro-batch. A 100 TB drop streamed under a
-    // lang/source predicate reads only the epoch files that can match;
-    // files without sidecars are never skipped.
-    val stats = JsonlV2.loadStats(path)
+    // but never planned — the batch scan's whole-file skip
+    // (JsonlV2.keptFiles), applied per micro-batch. A 100 TB drop
+    // streamed under a lang/source predicate reads only the epoch files
+    // that can match; files without sidecars are never skipped.
     // merge-on-read vectors apply per micro-batch exactly as in batch:
     // the slice shipped with each split reflects the deletes committed
     // by PLAN time (a delete landing after a file was consumed only
     // affects later readers — the usual MOR stream semantics)
     val deletes = JsonlV2.loadDeletes(path)
-    snapshot.slice(from.files, to.files)
-      .filter { case (f, _) =>
-        stats.get(nameOf(f)).forall(JsonlV2.mayMatch(pushed, _))
-      }
-      .flatMap { case (f, len) =>
-        val dv = deletes.getOrElse(nameOf(f), Array.emptyLongArray)
-        (0L until len by splitSize).map { s0 =>
-          val length = math.min(splitSize, len - s0)
-          val slice =
-            if (dv.isEmpty) dv else dv.filter(o => o >= s0 && o <= s0 + length)
-          JsonlPartition(f, s0, length, slice)
-        }
-      }.toArray
+    JsonlV2.keptFiles(snapshot.slice(from.files, to.files), JsonlV2.loadStats(path), pushed)
+      .flatMap(f => JsonlV2.splits(f, 0L, f.len, splitSize,
+        deletes.getOrElse(f.name, Array.emptyLongArray)))
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -2316,42 +2287,54 @@ private[sources] class JsonlMicroBatchStream(
   override def stop(): Unit = ()
 }
 
-/** STREAMING CHANGES FEED — [[JsonlChanges]]'s micro-batch face: offsets
-  * are SNAPSHOT VERSIONS, and each batch is the net change set between
-  * two `CALL system.snapshot` versions, planned from manifest +
-  * delete-vector arithmetic exactly as the batch feed —
+/** The CHANGES FEED scan ([[JsonlChanges]]). Both faces plan through the
+  * one change-set planner, [[JsonlChanges.plan]]:
   *
-  *  - files listed by `end` and not by `start`: planned whole (split by
-  *    splitSize) with `end`'s vector slice, tagged 'insert';
-  *  - offsets in `end`'s vectors but not `start`'s on surviving files:
-  *    one include-only partition per file, tagged 'delete' — the reader
-  *    emits ONLY those lines;
-  *  - files that LEFT the listing inside a batch's span: loud refusal,
-  *    same contract and message shape as the batch feed.
+  *  - BATCH, on a `versionAsOf` pin: the net change set from the
+  *    `startingVersion` snapshot to the pinned one, planned when the scan
+  *    is built, so a refused span fails before any action;
+  *  - STREAMING, unpinned ([[JsonlChangesStream]]): offsets are SNAPSHOT
+  *    VERSIONS, each batch the net change set between two of them.
   *
-  * `initialOffset` is the newest version at stream start (consume future
-  * changes only) unless `startingVersion` names the BASELINE snapshot to
-  * diff from — the first batch then carries every change after it.
-  * Snapshots are the producer's commit points: a trigger fires per new
-  * version, so "snapshot after every ingest batch" gives per-batch CDC.
-  * Restart replays from the checkpointed version offset — version
-  * manifests are immutable, so a replayed batch plans the identical
-  * partition set (idempotent by construction). */
+  * An unpinned batch read and a pinned stream are refused. */
 private[sources] class JsonlChangesScan(
     path: String, tableSchema: StructType, splitSize: Long,
-    startingVersion: Option[Long])
-    extends Scan {
+    startingVersion: Option[Long], pinned: Option[JsonlVersions.VersionPin])
+    extends Scan with Batch {
   override def readSchema(): StructType =
     if (tableSchema.fieldNames.contains(JsonlV2.ChangeCol)) tableSchema
     else tableSchema.add(JsonlV2.ChangeCol, StringType)
   override def description(): String = s"graft-jsonl changes feed $path"
-  override def toBatch: Batch = throw new UnsupportedOperationException(
-    s"graft-jsonl $path: the `changes` option is the STREAMING face " +
-      "(spark.readStream); for a one-shot batch changes read use " +
-      "graft.sources.JsonlChanges.between(spark, dir, from, to)")
+
+  private val batchPlan: Option[Array[InputPartition]] = pinned.map { to =>
+    val from = startingVersion.getOrElse(throw new IllegalArgumentException(
+      s"graft-jsonl $path: a batch `changes` read pinned to version " +
+        s"${to.version} names its baseline snapshot with `startingVersion`"))
+    val root = new Path(path)
+    JsonlChanges.plan(path,
+      JsonlVersions.load(FileSystem.get(root.toUri, new Configuration()), root, from),
+      to, splitSize)
+  }
+
+  override def toBatch: Batch = batchPlan.map(_ => this).getOrElse(
+    throw new UnsupportedOperationException(
+      s"graft-jsonl $path: an unpinned `changes` read is the STREAMING face " +
+        "(spark.readStream); a batch changes read pins its `to` snapshot " +
+        "with `versionAsOf` and names its `from` snapshot with " +
+        "`startingVersion` — graft.sources.JsonlChanges.between(spark, dir, " +
+        "from, to) does both"))
+  override def planInputPartitions(): Array[InputPartition] = batchPlan.get
+  override def createReaderFactory(): PartitionReaderFactory =
+    new JsonlReaderFactory(readSchema(), readSchema(), Array.empty)
+
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    require(pinned.isEmpty,
+      "graft-jsonl: a `changes` stream does not compose with a VERSION AS " +
+        "OF pin — the stream names BOTH of its endpoints itself; use " +
+        "`startingVersion` for the baseline snapshot")
     new JsonlChangesStream(path, readSchema(), splitSize, startingVersion)
+  }
 }
 
 private[sources] case class JsonlVersionOffset(version: Long)
@@ -2359,6 +2342,16 @@ private[sources] case class JsonlVersionOffset(version: Long)
   override def json(): String = s"""{"version":$version}"""
 }
 
+/** The changes feed's micro-batch face. `initialOffset` is the newest
+  * version at stream start (consume future changes only) unless
+  * `startingVersion` names the BASELINE snapshot to diff from — the first
+  * batch then carries every change after it. Before the first snapshot
+  * the baseline is version 0, the empty table. Snapshots are the
+  * producer's commit points: a trigger fires per new version, so
+  * "snapshot after every ingest batch" gives per-batch CDC. Restart
+  * replays from the checkpointed version offset — version manifests are
+  * immutable, so a replayed batch plans the identical partition set
+  * (idempotent by construction). */
 private[sources] class JsonlChangesStream(
     path: String, outSchema: StructType, splitSize: Long,
     startingVersion: Option[Long])
@@ -2386,65 +2379,10 @@ private[sources] class JsonlChangesStream(
     val v0 = start.asInstanceOf[JsonlVersionOffset].version
     val v1 = end.asInstanceOf[JsonlVersionOffset].version
     if (v0 >= v1) return Array.empty
-    val pFrom =
-      if (v0 == 0L) JsonlVersions.VersionPin(Set.empty, Set.empty, None, None)
+    val from =
+      if (v0 == 0L) JsonlVersions.VersionPin(0L, Set.empty, Set.empty, None, None)
       else JsonlVersions.load(fs, root, v0)
-    val pTo = JsonlVersions.load(fs, root, v1)
-    // same guard as the batch feed: vectors load by live-listing
-    // intersection, so a lost sidecar would silently shrink the delete
-    // leg and mis-slice the insert partitions — refuse instead
-    JsonlV2.requireVectorsPresent(path, pFrom.vectors, s"changes stream [$v0, $v1]")
-    JsonlV2.requireVectorsPresent(path, pTo.vectors, s"changes stream [$v0, $v1]")
-    val removed = pFrom.files -- pTo.files
-    require(removed.isEmpty,
-      s"graft-jsonl changes stream [$v0, $v1] on $path: ${removed.size} " +
-        s"data file(s) left the listing inside the span " +
-        s"(${removed.toSeq.sorted.take(3).mkString(", ")}…) — " +
-        "compaction/COW/metadata-delete ran between the snapshots; " +
-        "re-snapshot after maintenance and restart past the span")
-    def nameOf(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-    val live = JsonlV2.listFiles(path).map { case (f, len) => nameOf(f) -> (f, len) }.toMap
-    def lookup(n: String): (String, Long) = live.getOrElse(n, throw new IllegalArgumentException(
-      s"graft-jsonl changes stream $path: snapshot $v1 references " +
-        s"'$n' which is no longer present — the version was invalidated; " +
-        "restart from a newer snapshot"))
-    val dTo = JsonlV2.loadDeletes(path, pTo.vectors.contains)
-    val dFrom = JsonlV2.loadDeletes(path, pFrom.vectors.contains)
-    val inserts = (pTo.files -- pFrom.files).toSeq.sorted.flatMap { n =>
-      val (f, len) = lookup(n)
-      val dv = dTo.getOrElse(n, Array.emptyLongArray)
-      (0L until len by splitSize).map { s0 =>
-        val length = math.min(splitSize, len - s0)
-        val slice = if (dv.isEmpty) dv else dv.filter(o => o >= s0 && o <= s0 + length)
-        JsonlPartition(f, s0, length, slice, changeType = "insert")
-      }
-    }
-    val deletes = pFrom.files.intersect(pTo.files).toSeq.sorted.flatMap { n =>
-      val before = dFrom.getOrElse(n, Array.emptyLongArray).toSet
-      val diff = dTo.getOrElse(n, Array.emptyLongArray).filterNot(before).sorted
-      if (diff.isEmpty) Nil
-      else {
-        val (f, len) = lookup(n)
-        // bound the scan to the diff's offset SPAN and split it by
-        // splitSize: read cost is O(delta span), not O(file), and a wide
-        // delta keeps its parallelism — the one-partition 0..len scan
-        // made a single newly-deleted row cost a whole-file read.
-        // Ownership convention (the insert path's): a split (s0, length)
-        // owns lines starting in (s0, s0+length] (a reader not at the
-        // file head discards through its first newline), so the range
-        // starts one byte BEFORE the first diff offset and slices are
-        // boundary-inclusive on both ends like the insert slices.
-        val lo = if (diff.head == 0L) 0L else diff.head - 1
-        val hi = math.min(diff.last + 1, len)
-        (lo until hi by splitSize).map { s0 =>
-          val length = math.min(splitSize, hi - s0)
-          JsonlPartition(f, s0, length,
-            includeOnly = diff.filter(o => o >= s0 && o <= s0 + length),
-            changeType = "delete")
-        }
-      }
-    }
-    (inserts ++ deletes).toArray[InputPartition]
+    JsonlChanges.plan(path, from, JsonlVersions.load(fs, root, v1), splitSize)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -2460,8 +2398,8 @@ private[graft] class JsonlReaderFactory(
     extends PartitionReaderFactory {
 
   private def range(p: InputPartition): JsonlPartition = p match {
-    case jp: JsonlPartition                 => jp
-    case JsonlKeyedPartition(f, s, l, _, d) => JsonlPartition(f, s, l, d)
+    case jp: JsonlPartition      => jp
+    case kp: JsonlKeyedPartition => kp.split
   }
 
   /** Columnar is offered exactly when every projected column has a
@@ -2925,14 +2863,13 @@ private[sources] class JsonlBatchWrite(
         case other  => other
       }).toSet
       val stats = JsonlV2.loadStats(path)
-      JsonlV2.listFiles(path).foreach { case (f, _) =>
-        val name = f.substring(f.lastIndexOf('/') + 1)
-        val pv = stats.get(name).flatMap(_.pvals)
+      JsonlV2.listFiles(path).foreach { f =>
+        val pv = stats.get(f.name).flatMap(_.pvals)
         require(pv.isDefined || routes.isEmpty,
-          s"graft-jsonl: dynamic overwrite cannot decide $name — the file " +
+          s"graft-jsonl: dynamic overwrite cannot decide ${f.name} — the file " +
             "carries no partition-routing proof; rewrite or drop it first")
         if (routes.isEmpty || incoming.contains(pv.get))
-          fs.delete(new Path(f), false)
+          fs.delete(new Path(f.path), false)
       }
     }
     if (truncateFirst && fs.exists(root)) {

@@ -1692,8 +1692,8 @@ object Streams extends Entries {
     * to diff from. The staged table is s44's docs_cdc (append evens,
     * snapshot, append odds, MOR-delete %5, snapshot), so the one batch
     * this stream drains [v1 → v2] carries exactly the s44 feed — the
-    * entry aggregates the parquet the stream sank and shares s44's
-    * oracle. At 100 TB this is how a downstream embeds/indexes
+    * entry rolls up the parquet the stream sank with s44's rollup and
+    * answers to s44's oracle. At 100 TB this is how a downstream embeds/indexes
     * INCREMENTALLY: snapshot per ingest batch, one trigger per
     * snapshot, re-process the delta, never the lake. StreamingSpec
     * additionally pins row-level equality with the batch feed and that
@@ -1719,25 +1719,7 @@ object Streams extends Entries {
     }
 
   def st29ChangesStream(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(st29Out(s, d))
-      .groupBy(col("_change_type"), col("lang"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("n_chars")).as("sum_chars"),
-        min(col("doc_id")).as("min_doc"),
-        max(col("doc_id")).as("max_doc"))
-      .orderBy(col("_change_type"), col("lang"))
-
-  val st29Sql: String =
-    """WITH ch AS (
-      |  SELECT 'insert' AS ct, lang, n_chars, doc_id FROM documents
-      |  WHERE doc_id % 2 = 1 AND doc_id % 5 <> 0
-      |  UNION ALL
-      |  SELECT 'delete', lang, n_chars, doc_id FROM documents
-      |  WHERE doc_id % 2 = 0 AND doc_id % 5 = 0)
-      |SELECT ct AS "_change_type", lang, COUNT(*) AS n_rows,
-      |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-      |  MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-      |FROM ch GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+    graft.operators.Relational.changesRollup(s.read.parquet(st29Out(s, d)))
 
   def runToMemory(s: SparkSession, df: DataFrame, name: String,
       mode: String = "append"): DataFrame = {
@@ -1794,7 +1776,7 @@ object Streams extends Entries {
     Entry("st26_where_stream", st26WhereStream _, st26Sql),
     Entry("st27_streamed_lake", st27StreamedLake _, st27Sql),
     Entry("st28_stream_merge", st28StreamMerge _, st28Sql),
-    Entry("st29_changes_stream", st29ChangesStream _, st29Sql))
+    Entry("st29_changes_stream", st29ChangesStream _, graft.operators.Relational.s44Sql))
 }
 
 /** Keyed running aggregate emitted by [[Streams.statefulUserAgg]]. */

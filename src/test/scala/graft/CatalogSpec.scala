@@ -1366,6 +1366,56 @@ class CatalogSpec extends SparkSpec {
     } finally { q.stop(); spark.sql("DROP TABLE IF EXISTS cdc_mem") }
   }
 
+  test("batch changes face: a `changes` read pinned by `versionAsOf` (the " +
+    "`to` snapshot) from `startingVersion` equals JsonlChanges.between; an " +
+    "unpinned batch `changes` read still refuses") {
+    val cat = freshCat("cdcb")
+    spark.sql(s"CREATE NAMESPACE $cat.lake")
+    spark.sql(s"CREATE TABLE $cat.lake.t (doc_id BIGINT, source STRING, " +
+      s"n_chars BIGINT) PARTITIONED BY (source) " +
+      s"TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
+    val dir = spark.conf.get(s"spark.sql.catalog.$cat.warehouse") + "/lake/t"
+    docs.filter(expr("doc_id % 2 = 0")).writeTo(s"$cat.lake.t").append()
+    spark.sql(s"CALL $cat.system.snapshot(table => 'lake.t')")
+    docs.filter(expr("doc_id % 2 = 1")).writeTo(s"$cat.lake.t").append()
+    spark.sql(s"DELETE FROM $cat.lake.t WHERE doc_id % 3 = 0")
+    spark.sql(s"CALL $cat.system.snapshot(table => 'lake.t')")
+
+    def read(opts: (String, String)*) = opts.foldLeft(
+      spark.read.format("graft-jsonl").option("path", dir).option("changes", "true")) {
+      case (r, (k, v)) => r.option(k, v)
+    }.load()
+    val pinned = read("versionAsOf" -> "2", "startingVersion" -> "1")
+    assert(pinned.columns.toSeq === Seq("doc_id", "source", "n_chars", "_change_type"))
+    val got = pinned.collect().map(_.toString).sorted.toSeq
+    val want = graft.sources.JsonlChanges.between(spark, dir, 1, 2)
+      .collect().map(_.toString).sorted.toSeq
+    assert(got.nonEmpty && got === want)
+    assert(pinned.select("_change_type").distinct().collect().map(_.getString(0)).toSet ===
+      Set("insert", "delete"))
+
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    val e = intercept[Exception](read("startingVersion" -> "1").collect())
+    assert(messages(e).exists(_.contains("STREAMING face")),
+      s"wanted the unpinned batch refusal, got: ${messages(e)}")
+  }
+
+  test("JsonlChanges.between refuses version 0 by name: the stream's empty " +
+    "baseline before the first snapshot is not a batch endpoint") {
+    val cat = freshCat("cdc0")
+    spark.sql(s"CREATE NAMESPACE $cat.lake")
+    spark.sql(s"CREATE TABLE $cat.lake.t (doc_id BIGINT, source STRING, " +
+      s"n_chars BIGINT) PARTITIONED BY (source)")
+    val dir = spark.conf.get(s"spark.sql.catalog.$cat.warehouse") + "/lake/t"
+    docs.writeTo(s"$cat.lake.t").append()
+    spark.sql(s"CALL $cat.system.snapshot(table => 'lake.t')")
+    val e = intercept[IllegalArgumentException] {
+      graft.sources.JsonlChanges.between(spark, dir, 0, 1)
+    }
+    assert(e.getMessage.contains("no snapshot version 0"), e.getMessage)
+  }
+
   test("VERSION AS OF pins the snapshot-time schema: columns added after " +
     "the snapshot do not sprout (as nulls) in historical reads") {
     val cat = freshCat("ttschema")

@@ -123,7 +123,7 @@ class DataSourceV2Spec extends SparkSpec {
     "file listing, not a default guess") {
     val rel = Relational.s24Read(spark, dir)
     val sizes = rel.queryExecution.optimizedPlan.stats.sizeInBytes
-    val onDisk = graft.sources.JsonlV2.listFiles(dir).map(_._2).sum
+    val onDisk = graft.sources.JsonlV2.listFiles(dir).map(_.len).sum
     assert(sizes === BigInt(onDisk), s"stats $sizes != listing $onDisk")
   }
 

@@ -11,9 +11,11 @@ import graft.functions.GraftExtensions
   * operator's kernel call from that table's typed functions, every entry
   * from an [[Entry]] table, every artifact is a row of [[Artifacts.all]]
   * and every `CALL` procedure a row of [[graft.sources.JsonlProcedures.all]];
-  * the lake's write face implements each DSv2 write contract once: a
-  * builder, a registration, a map, a procedure or write class or a name in
-  * SQL text anywhere else is a second copy, free to drift. */
+  * the lake's write face implements each DSv2 write contract once, and its
+  * read face plans byte-range splits, change sets and file names once: a
+  * builder, a registration, a map, a procedure, write or stream class, a
+  * split loop or a name in SQL text anywhere else is a second copy, free
+  * to drift. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private def sources(f: File): Seq[File] =
@@ -140,5 +142,37 @@ class SessionGuardSpec extends AnyFunSuite {
       val hits = sites.collect { case (`c`, at) => at }
       assert(hits.size === 1, s"$c implemented at ${hits.size} sites: $hits")
     }
+  }
+
+  test("the lake's read face plans splits, change sets and file names at one site") {
+    val main = sources(root("src/main"))
+    // one split planner (JsonlV2.splits) under every scan, stream and feed
+    val splitLoops = for {
+      f <- main; l <- codeLines(f) if l.contains("by splitSize")
+    } yield s"${f.getName}: ${l.trim}"
+    assert(splitLoops.size === 1, s"byte-range splits planned at ${splitLoops.size} sites: $splitLoops")
+    // a listed file carries its own name (JsonlV2.DataFile)
+    val lake = main.filter(_.getPath.contains("graft/sources"))
+    val nameCuts = for {
+      f <- lake; l <- codeLines(f) if l.contains("lastIndexOf('/') + 1")
+    } yield s"${f.getName}: ${l.trim}"
+    assert(nameCuts === Nil)
+    // one stream over snapshot-version offsets (JsonlChangesStream), which
+    // plans through the one change-set planner: a top-level definition
+    // that implements MicroBatchStream and names the version offset is
+    // a second change planner
+    val header = """^(?:private\S*\s+)?(?:final\s+|abstract\s+|case\s+)*(?:class|object|trait)\s""".r
+    val stream = """\b(?:extends|with|new)\s+(?:[\w.]+\.)?MicroBatchStream\b""".r
+    val versionStreams = for {
+      f <- main
+      block <- codeLines(f).foldLeft(Vector.empty[Vector[String]]) { (bs, l) =>
+        if (header.findFirstIn(l).nonEmpty || bs.isEmpty) bs :+ Vector(l)
+        else bs.init :+ (bs.last :+ l)
+      }
+      if block.exists(stream.findFirstIn(_).nonEmpty) &&
+        block.exists(_.contains("JsonlVersionOffset("))
+    } yield s"${f.getName}: ${block.head.trim}"
+    assert(versionStreams.size === 1,
+      s"snapshot-version streams at ${versionStreams.size} sites: $versionStreams")
   }
 }

@@ -46,6 +46,18 @@ class VerifySpec extends SparkSpec {
     assert(dup.getMessage.contains("q01_top5_products"))
   }
 
+  test("an entry that fails leaves no output behind, so a stale dump cannot pass for it") {
+    withTempDir { tmp =>
+      val out = new File(tmp, "dump")
+      val q01 = new File(out, "q01_top5_products")
+      Verify.dump(spark, d, out.getPath, Seq("q01_top5_products"))
+      assert(q01.isDirectory)
+      Verify.dump(spark, new File(tmp, "no_such_sf").getPath, out.getPath,
+        Seq("q01_top5_products"))
+      assert(!q01.exists(), "the failed entry kept the previous run's output")
+    }
+  }
+
   test("an unknown name fails the dump before anything is written") {
     withTempDir { tmp =>
       val out = new File(tmp, "dump")
