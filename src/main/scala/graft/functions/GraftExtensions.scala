@@ -103,9 +103,9 @@ object GraftExtensions {
   val simHash64 = fn1("simhash64")(Simhash64(_))
   val sortedDigests = fn1("sorted_digests")(SortedDigests(_))
   val l2Sq = fn2("l2_sq")(L2Sq(_, _))
-  val topkAgg = fn2("topk_agg")(TopKAgg(_, _))
-  val topkRowsAgg = fn3("topk_rows_agg")(TopKRowsAgg(_, _, _))
-  val topkLongAgg = fn3("topk_long_agg")(TopKLongAgg(_, _, _))
+  val topkAgg = fn2("topk_agg")((v, k) => TopKAgg(TopKHeap.NoPayload, Seq(v, k)))
+  val topkRowsAgg = fn3("topk_rows_agg")((v, p, k) => TopKAgg(TopKHeap.StringPayload, Seq(v, p, k)))
+  val topkLongAgg = fn3("topk_long_agg")((v, id, k) => TopKAgg(TopKHeap.LongPayload, Seq(v, id, k)))
   val sortedInterCount = fn2("sorted_inter_count")(SortedInterCount(_, _))
   val sortedInter = fn2("sorted_inter")(SortedInter(_, _))
   val pairCodes = fn1("pair_codes")(PairCodes(_))

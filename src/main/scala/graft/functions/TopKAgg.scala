@@ -3,13 +3,22 @@ package graft.functions
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** `topk_agg(value, k)` → the k largest values per group, as a DESC-sorted
-  * `array<double>` — per-group top-k as an AGGREGATE instead of a window.
+/** Per-group top-k as an AGGREGATE instead of a window. Three kernel rows
+  * share this class, and each fixes the payload [[TopKHeap.Kind]]:
+  *  - `topk_agg(v, k)` → the k largest values as an `array<double>`;
+  *  - `topk_long_agg(v, id, k)` → the k best (v, id) pairs as an
+  *    `array<struct<v double, id bigint>>` (n06's neighbour selection);
+  *  - `topk_rows_agg(v, payload, k)` → the k best (v, payload) pairs as an
+  *    `array<struct<v double, payload string>>`.
+  * Each array is sorted in [[TopKHeap]]'s selection order, best first.
   *
   * Spark's native spelling of per-group top-k (`row_number() OVER
   * (PARTITION BY g ORDER BY v DESC)` then `rank <= k`) is the plan shape
@@ -19,64 +28,69 @@ import org.apache.spark.sql.types._
   * `WindowGroupLimitExec` requires its child SORTED on (g, v) — both the
   * partial and final stages sort their entire input — and still carries
   * every within-limit row through the final window. This aggregate keeps a
-  * bounded k-element min-heap per group instead, with no sort requirement
+  * bounded k-element heap per group instead, with no sort requirement
   * anywhere: as a proper `TypedImperativeAggregate` it plans two-phase, so
   * map-side partial heaps absorb rows in scan order and the shuffle
-  * carries at most k doubles per (group × map partition) — the reduction
+  * carries at most k entries per (group × map partition) — the reduction
   * `TakeOrderedAndProject` gives a global top-k (o01), made per-group.
-  * Sorting happens once, over k elements, at eval.
-  *
-  * Heap ties keep an arbitrary one of the equal values, so the OUTPUT value
-  * multiset is still deterministic — ordering metadata (which row carried
-  * the tied value) is deliberately not exposed.
-  */
+  * Sorting happens once, over k elements, at eval. The payload breaks
+  * value ties, so the result is fully deterministic — the property
+  * `row_number` top-k only gets from a unique tiebreak column. */
 case class TopKAgg(
-    child: Expression,
-    kExpr: Expression,
+    kind: TopKHeap.Kind[Any],
+    children: Seq[Expression],
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKAgg.Heap] with ImplicitCastInputTypes {
+  extends TypedImperativeAggregate[TopKHeap[Any]] with ImplicitCastInputTypes {
 
-  // k is plan-constant: it sizes every buffer, so it must fold at analysis
-  private lazy val k: Int = kExpr.eval() match {
-    case i: Int if i > 0 => i
-    case other => throw new IllegalArgumentException(
-      s"topk_agg k must be a positive INT literal, got $other")
-  }
+  private def kExpr = children.last
+  // k sizes every buffer; checkInputDataTypes proved it a positive literal
+  private lazy val k: Int = kExpr.eval().asInstanceOf[Int]
 
-  override def children: Seq[Expression] = Seq(child, kExpr)
-  override def inputTypes: Seq[DataType] = Seq(DoubleType, IntegerType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def inputTypes: Seq[DataType] = kind.inputTypes
+  override def dataType: DataType = kind.dataType
   override def nullable: Boolean = false
-  override def prettyName: String = "topk_agg"
+  override def prettyName: String = kind.prettyName
+  // the kind is the name: plans print the SQL arguments alone
+  override protected def flatArguments: Iterator[Any] = children.iterator
 
   // fail at ANALYSIS for a non-literal/non-positive k — deferring to the
-  // lazy val would surface as an opaque executor-side task failure
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+  // first update would surface as an opaque executor-side task failure
+  override def checkInputDataTypes(): TypeCheckResult = {
     val base = super.checkInputDataTypes()
     if (!base.isSuccess) base
-    else TopKAgg.checkK(prettyName, kExpr)
+    else if (!kExpr.foldable) TypeCheckFailure(s"$prettyName k must be a literal")
+    else kExpr.eval() match {
+      case i: Int if i > 0 => TypeCheckSuccess
+      case other => TypeCheckFailure(s"$prettyName k must be a positive INT literal, got $other")
+    }
   }
 
-  override def createAggregationBuffer(): TopKAgg.Heap = new TopKAgg.Heap(k)
+  override def createAggregationBuffer(): TopKHeap[Any] = new TopKHeap(k, kind)
 
-  override def update(buf: TopKAgg.Heap, input: InternalRow): TopKAgg.Heap = {
-    val v = child.eval(input)
-    if (v != null) buf.offer(v.asInstanceOf[Double])
+  override def update(buf: TopKHeap[Any], input: InternalRow): TopKHeap[Any] = {
+    val v = children.head.eval(input)
+    if (v != null) {
+      if (kind == TopKHeap.NoPayload) buf.offer(v.asInstanceOf[Double])
+      else children(1).eval(input) match {
+        case id: Long => buf.offer(v.asInstanceOf[Double], id)
+        case p: UTF8String => buf.offer(v.asInstanceOf[Double], p)
+        case _ => // a NULL payload ranks nothing
+      }
+    }
     buf
   }
 
-  override def merge(a: TopKAgg.Heap, b: TopKAgg.Heap): TopKAgg.Heap = {
+  override def merge(a: TopKHeap[Any], b: TopKHeap[Any]): TopKHeap[Any] = {
     a.absorb(b); a
   }
 
-  override def eval(buf: TopKAgg.Heap): Any =
-    new GenericArrayData(buf.sortedDesc)
+  override def eval(buf: TopKHeap[Any]): Any = buf.result
 
-  override def serialize(buf: TopKAgg.Heap): Array[Byte] = buf.toBytes
+  override def serialize(buf: TopKHeap[Any]): Array[Byte] = buf.toBytes
 
-  override def deserialize(bytes: Array[Byte]): TopKAgg.Heap =
-    TopKAgg.Heap.fromBytes(bytes)
+  override def deserialize(bytes: Array[Byte]): TopKHeap[Any] =
+    TopKHeap.fromBytes(bytes, kind)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TopKAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -84,429 +98,178 @@ case class TopKAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): TopKAgg =
-    copy(child = newChildren(0), kExpr = newChildren(1))
+    copy(children = newChildren)
 }
 
-object TopKAgg {
+/** Bounded min-heap of (value, payload) entries: the root is the weakest
+  * kept entry, so a candidate either beats the root (replace + sift down)
+  * or is discarded in O(1). Size and memory are k, independent of group
+  * size.
+  *
+  * The selection order is written once, in `compare`:
+  *  1. value DESC under Spark's SQL double order
+  *     (`SQLOrderingUtil.compareDoubles`): NaN is the largest value, as
+  *     in `ORDER BY v DESC`, and -0.0 ties 0.0 — a raw `<` would make
+  *     every NaN comparison false and wedge a NaN at the root;
+  *  2. then payload ASC: a BIGINT id numerically, a STRING in
+  *     `UTF8String`'s binary order, which is code-point order — the order
+  *     Spark's window sort and DuckDB use (Java's `String.compareTo` is
+  *     UTF-16 code-unit order, which disagrees on non-BMP characters);
+  *  3. then 0.0 before -0.0, so which of a tied pair is kept never depends
+  *     on arrival order.
+  * So over (0.0, 'b'), (-0.0, 'a') with k = 1 the heap keeps (-0.0, 'a'),
+  * as `row_number() OVER (ORDER BY v DESC, payload)` does, and the
+  * value-only heap keeps 0.0.
+  *
+  * Values live in a `double[]` and BIGINT ids in a `long[]`, so offering
+  * either allocates nothing: n06 feeds every scored pair of an O(N²)
+  * stream through this heap, and a per-update allocation there would BE
+  * the aggregation cost. A STRING payload is compared in place and copied
+  * only when its candidate is kept, since the caller's row buffer is
+  * reused. */
+final class TopKHeap[+R](val k: Int, val kind: TopKHeap.Kind[R]) {
+  // slot k holds the candidate under test (and serves swap as scratch),
+  // so every comparison is between two slots
+  private val vs = new Array[Double](k + 1)
+  private val ids = if (kind.payload == LongType) new Array[Long](k + 1) else null
+  private val ps = if (kind.payload == StringType) new Array[UTF8String](k + 1) else null
+  private var n = 0
 
-  /** Shared analysis-time guard: k must be a foldable positive INT. */
-  private[functions] def checkK(fn: String, kExpr: Expression)
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    if (!kExpr.foldable) TypeCheckFailure(s"$fn k must be a literal")
-    else kExpr.eval() match {
-      case i: Int if i > 0 => TypeCheckSuccess
-      case other => TypeCheckFailure(s"$fn k must be a positive INT literal, got $other")
+  /** > 0 iff slot i ranks above slot j. */
+  private def compare(i: Int, j: Int): Int = {
+    val byValue = SQLOrderingUtil.compareDoubles(vs(i), vs(j))
+    if (byValue != 0) byValue
+    else {
+      val byPayload =
+        if (ids != null) java.lang.Long.compare(ids(j), ids(i))
+        else if (ps != null) ps(j).binaryCompare(ps(i))
+        else 0
+      if (byPayload != 0) byPayload else java.lang.Double.compare(vs(i), vs(j))
     }
   }
 
-  /** Bounded min-heap over primitive doubles: root = smallest kept value,
-    * so a new candidate either beats the root (replace + sift) or is
-    * discarded in O(1). Size and memory are k, independent of group size.
-    * All comparisons go through `java.lang.Double.compare` — Spark's SQL
-    * total order — so NaN sorts as the LARGEST value exactly like the
-    * `row_number … ORDER BY v DESC` window form; a raw `<` would make
-    * every NaN comparison false, wedge a NaN at the root, and silently
-    * discard genuinely large values. */
-  final class Heap(val k: Int) {
-    private val arr = new Array[Double](k)
-    private var n = 0
+  def offer(v: Double): Unit = { vs(k) = v; push() }
+  def offer(v: Double, id: Long): Unit = { vs(k) = v; ids(k) = id; push() }
+  def offer(v: Double, p: UTF8String): Unit = { vs(k) = v; ps(k) = p; push() }
 
-    def offer(v: Double): Unit =
-      if (n < k) {
-        arr(n) = v; n += 1
-        var i = n - 1 // sift up
-        while (i > 0 && java.lang.Double.compare(arr((i - 1) / 2), arr(i)) > 0) {
-          val p = (i - 1) / 2
-          val t = arr(p); arr(p) = arr(i); arr(i) = t
-          i = p
-        }
-      } else if (java.lang.Double.compare(v, arr(0)) > 0) {
-        arr(0) = v
-        var i = 0 // sift down
-        var done = false
-        while (!done) {
-          val l = 2 * i + 1
-          val r = l + 1
-          var m = i
-          if (l < n && java.lang.Double.compare(arr(l), arr(m)) < 0) m = l
-          if (r < n && java.lang.Double.compare(arr(r), arr(m)) < 0) m = r
-          if (m == i) done = true
-          else { val t = arr(m); arr(m) = arr(i); arr(i) = t; i = m }
-        }
+  /** Keep slot k's candidate if it ranks among the best k seen. */
+  private def push(): Unit =
+    if (n < k) {
+      keep(n)
+      var i = n
+      n += 1
+      while (i > 0 && compare(i, (i - 1) / 2) < 0) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
+    } else if (compare(k, 0) > 0) {
+      keep(0)
+      var i = 0
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1
+        var m = i
+        if (l < n && compare(l, m) < 0) m = l
+        if (l + 1 < n && compare(l + 1, m) < 0) m = l + 1
+        if (m == i) done = true else { swap(i, m); i = m }
       }
-
-    def absorb(other: Heap): Unit = {
-      var i = 0
-      while (i < other.n) { offer(other.arr(i)); i += 1 }
     }
 
-    def sortedDesc: Array[Double] = {
-      val out = java.util.Arrays.copyOf(arr, n)
-      java.util.Arrays.sort(out) // Arrays.sort is Double.compare order: NaN last
-      var i = 0
-      var j = out.length - 1
-      while (i < j) { val t = out(i); out(i) = out(j); out(j) = t; i += 1; j -= 1 }
-      out
-    }
-
-    def toBytes: Array[Byte] = {
-      val bb = ByteBuffer.allocate(8 + 8 * n)
-      bb.putInt(k).putInt(n)
-      var i = 0
-      while (i < n) { bb.putDouble(arr(i)); i += 1 }
-      bb.array()
-    }
+  private def move(from: Int, to: Int): Unit = {
+    vs(to) = vs(from)
+    if (ids != null) ids(to) = ids(from)
+    if (ps != null) ps(to) = ps(from)
   }
-
-  object Heap {
-    def fromBytes(bytes: Array[Byte]): Heap = {
-      val bb = ByteBuffer.wrap(bytes)
-      val h = new Heap(bb.getInt())
-      val n = bb.getInt()
-      var i = 0
-      // re-offering preserves the heap invariant regardless of stored order
-      while (i < n) { h.offer(bb.getDouble()); i += 1 }
-      h
-    }
+  private def keep(to: Int): Unit = {
+    move(k, to)
+    if (ps != null) ps(to) = ps(to).clone()
   }
-}
+  private def swap(i: Int, j: Int): Unit = { move(i, k); move(j, i); move(k, j) }
 
-/** `topk_rows_agg(value, payload, k)` → the k largest (value, payload)
-  * pairs per group as a DESC-sorted `array<struct<v double, payload
-  * string>>` — [[TopKAgg]] extended to carry the ROW IDENTITY alongside the
-  * ranking value (the window form's remaining advantage). Ties on the value
-  * break by payload ASCENDING, so the result is fully deterministic — the
-  * property `row_number` top-k only gets from a unique tiebreak column,
-  * built into the aggregate. Same two-phase bounded-heap plan shape as
-  * [[TopKAgg]]: the shuffle carries ≤ k (double, string) pairs per (group ×
-  * map partition). */
-case class TopKRowsAgg(
-    first: Expression,
-    second: Expression,
-    third: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKRowsAgg.RowHeap] with ImplicitCastInputTypes {
-
-  private lazy val k: Int = third.eval() match {
-    case i: Int if i > 0 => i
-    case other => throw new IllegalArgumentException(
-      s"topk_rows_agg k must be a positive INT literal, got $other")
-  }
-
-  override def children: Seq[Expression] = Seq(first, second, third)
-  override def inputTypes: Seq[DataType] = Seq(DoubleType, StringType, IntegerType)
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("v", DoubleType, nullable = false),
-      StructField("payload", StringType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "topk_rows_agg"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (!base.isSuccess) base
-    else TopKAgg.checkK(prettyName, third)
-  }
-
-  override def createAggregationBuffer(): TopKRowsAgg.RowHeap =
-    new TopKRowsAgg.RowHeap(k)
-
-  override def update(buf: TopKRowsAgg.RowHeap, input: InternalRow): TopKRowsAgg.RowHeap = {
-    val v = first.eval(input)
-    val p = second.eval(input)
-    if (v != null && p != null)
-      buf.offer(v.asInstanceOf[Double],
-        p.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
-    buf
-  }
-
-  override def merge(a: TopKRowsAgg.RowHeap, b: TopKRowsAgg.RowHeap): TopKRowsAgg.RowHeap = {
-    a.absorb(b); a
-  }
-
-  override def eval(buf: TopKRowsAgg.RowHeap): Any = {
-    val rows = buf.sortedDesc.map { case (v, p) =>
-      InternalRow(v, org.apache.spark.unsafe.types.UTF8String.fromString(p))
-    }
-    new GenericArrayData(rows.asInstanceOf[Array[Any]])
-  }
-
-  override def serialize(buf: TopKRowsAgg.RowHeap): Array[Byte] = buf.toBytes
-
-  override def deserialize(bytes: Array[Byte]): TopKRowsAgg.RowHeap =
-    TopKRowsAgg.RowHeap.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): TopKRowsAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): TopKRowsAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): TopKRowsAgg =
-    copy(first = newChildren(0), second = newChildren(1), third = newChildren(2))
-}
-
-object TopKRowsAgg {
-
-  /** UTF-8 byte order = code-point order — the collation Spark's
-    * `UTF8String` and DuckDB both sort strings by. Java's `String.compareTo`
-    * is UTF-16 code-UNIT order, which disagrees for non-BMP payloads
-    * (surrogates 0xD800+ sort before U+E000..U+FFFF), so the tie-break
-    * compares code points explicitly. */
-  private def cmpUtf8(a: String, b: String): Int = {
+  def absorb(other: TopKHeap[Any]): Unit = {
     var i = 0
-    var j = 0
-    while (i < a.length && j < b.length) {
-      val ca = a.codePointAt(i)
-      val cb = b.codePointAt(j)
-      if (ca != cb) return Integer.compare(ca, cb)
-      i += Character.charCount(ca)
-      j += Character.charCount(cb)
-    }
-    Integer.compare(a.length - i, b.length - j)
-  }
-
-  /** Bounded min-heap over (value, payload) with total order: a is weaker
-    * than b iff a.v sorts below b.v (`Double.compare` — NaN largest, like
-    * the window form), or values tie and a.payload sorts AFTER b in
-    * code-point order (payload-ascending wins on ties). Root = weakest
-    * kept pair. */
-  final class RowHeap(val k: Int) {
-    private val vs = new Array[Double](k)
-    private val ps = new Array[String](k)
-    private var n = 0
-
-    private def weaker(i: Int, j: Int): Boolean = {
-      val c = java.lang.Double.compare(vs(i), vs(j))
-      c < 0 || (c == 0 && cmpUtf8(ps(i), ps(j)) > 0)
-    }
-    private def swap(i: Int, j: Int): Unit = {
-      val tv = vs(i); vs(i) = vs(j); vs(j) = tv
-      val tp = ps(i); ps(i) = ps(j); ps(j) = tp
-    }
-
-    def offer(v: Double, p: String): Unit =
-      if (n < k) {
-        vs(n) = v; ps(n) = p; n += 1
-        var i = n - 1
-        while (i > 0 && weaker(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
-      } else if ({
-        val c = java.lang.Double.compare(vs(0), v)
-        c < 0 || (c == 0 && cmpUtf8(ps(0), p) > 0)
-      }) {
-        // the candidate replaces the root iff the root is weaker than it
-        vs(0) = v; ps(0) = p
-        var i = 0
-        var done = false
-        while (!done) {
-          val l = 2 * i + 1
-          val r = l + 1
-          var m = i
-          if (l < n && weaker(l, m)) m = l
-          if (r < n && weaker(r, m)) m = r
-          if (m == i) done = true else { swap(i, m); i = m }
-        }
-      }
-
-    def absorb(other: RowHeap): Unit = {
-      var i = 0
-      while (i < other.n) { offer(other.vs(i), other.ps(i)); i += 1 }
-    }
-
-    /** DESC by value (NaN first, mirroring ORDER BY v DESC), ASC by
-      * payload code points on ties. */
-    def sortedDesc: Array[(Double, String)] = {
-      val out = new Array[(Double, String)](n)
-      var i = 0
-      while (i < n) { out(i) = (vs(i), ps(i)); i += 1 }
-      out.sortWith { case ((va, pa), (vb, pb)) =>
-        val c = java.lang.Double.compare(va, vb)
-        c > 0 || (c == 0 && cmpUtf8(pa, pb) < 0)
-      }
-    }
-
-    def toBytes: Array[Byte] = {
-      val payloadBytes = ps.take(n).map(_.getBytes("UTF-8"))
-      val size = 8 + n * 12 + payloadBytes.map(_.length).sum
-      val bb = ByteBuffer.allocate(size)
-      bb.putInt(k).putInt(n)
-      var i = 0
-      while (i < n) {
-        bb.putDouble(vs(i)).putInt(payloadBytes(i).length).put(payloadBytes(i))
-        i += 1
-      }
-      bb.array()
+    while (i < other.n) {
+      vs(k) = other.vs(i)
+      if (ids != null) ids(k) = other.ids(i)
+      if (ps != null) ps(k) = other.ps(i)
+      push()
+      i += 1
     }
   }
 
-  object RowHeap {
-    def fromBytes(bytes: Array[Byte]): RowHeap = {
-      val bb = ByteBuffer.wrap(bytes)
-      val h = new RowHeap(bb.getInt())
-      val n = bb.getInt()
-      var i = 0
-      while (i < n) {
-        val v = bb.getDouble()
-        val pb = new Array[Byte](bb.getInt())
-        bb.get(pb)
-        h.offer(v, new String(pb, "UTF-8"))
-        i += 1
-      }
-      h
+  /** The aggregate's result, best first: `array<double>`, or an array of
+    * (v, payload) structs. */
+  def result: GenericArrayData =
+    new GenericArrayData((0 until n).sortWith(compare(_, _) > 0).map { i =>
+      if (ids != null) InternalRow(vs(i), ids(i))
+      else if (ps != null) InternalRow(vs(i), ps(i))
+      else vs(i)
+    }.toArray[Any])
+
+  /** [[result]] as Scala values: a value, or a (value, payload) pair. */
+  def sortedDesc: IndexedSeq[R] = result.array.toIndexedSeq.map(kind.view)
+
+  /** k, n, then per entry the value, the BIGINT id or the STRING payload's
+    * length and UTF-8 bytes. */
+  def toBytes: Array[Byte] = {
+    var size = 8 + n * (if (ids != null) 16 else 8)
+    if (ps != null) for (i <- 0 until n) size += 4 + ps(i).numBytes
+    val bb = ByteBuffer.allocate(size).putInt(k).putInt(n)
+    for (i <- 0 until n) {
+      bb.putDouble(vs(i))
+      if (ids != null) bb.putLong(ids(i))
+      if (ps != null) { bb.putInt(ps(i).numBytes); ps(i).writeTo(bb) }
     }
+    bb.array()
+  }
+
+  /** Offer the `count` entries [[toBytes]] wrote; re-offering rebuilds the
+    * heap invariant whatever their stored order. */
+  private def load(bb: ByteBuffer, count: Int): Unit = for (_ <- 0 until count) {
+    vs(k) = bb.getDouble()
+    if (ids != null) ids(k) = bb.getLong()
+    if (ps != null) {
+      val len = bb.getInt()
+      ps(k) = UTF8String.fromBytes(bb.array(), bb.position(), len)
+      bb.position(bb.position() + len)
+    }
+    push()
   }
 }
 
-/** `topk_long_agg(value, id, k)` → the k largest (value, id) pairs per group
-  * as a DESC-sorted `array<struct<v double, id bigint>>` — [[TopKRowsAgg]]
-  * specialized to BIGINT row identity. The string form allocates a
-  * `UTF8String` + a `String` per update; over an O(N²) scored-pair stream
-  * (n06 feeds 2·pairs directed rows through the heap) those 10⁷-10⁸
-  * allocations ARE the aggregation cost — GC, not heap maintenance. This
-  * variant keeps primitive double[]/long[] arrays end to end: an update
-  * allocates nothing, so heap maintenance runs at memory-bandwidth speed.
-  * Ties on the value break by id ASCENDING (numeric — the oracle mirrors
-  * with ORDER BY v DESC, id), so the result is fully deterministic. */
-case class TopKLongAgg(
-    first: Expression,
-    second: Expression,
-    third: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKLongAgg.LongHeap] with ImplicitCastInputTypes {
+object TopKHeap {
 
-  private lazy val k: Int = third.eval() match {
-    case i: Int if i > 0 => i
-    case other => throw new IllegalArgumentException(
-      s"topk_long_agg k must be a positive INT literal, got $other")
+  /** The payload a kernel row ranks with its values — none, BIGINT `id` or
+    * STRING `payload` — with the row's name, its input and output types,
+    * and `view`, one result element as a Scala value. */
+  sealed abstract class Kind[+R](val prettyName: String, payloadField: Option[StructField])
+      extends Serializable {
+    def view(e: Any): R
+    private[functions] val payload: DataType = payloadField.map(_.dataType).orNull
+    val inputTypes: Seq[DataType] = DoubleType +: payloadField.map(_.dataType).toSeq :+ IntegerType
+    val dataType: DataType = ArrayType(payloadField.fold[DataType](DoubleType)(f =>
+      StructType(Seq(StructField("v", DoubleType, nullable = false), f))), containsNull = false)
   }
 
-  override def children: Seq[Expression] = Seq(first, second, third)
-  override def inputTypes: Seq[DataType] = Seq(DoubleType, LongType, IntegerType)
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("v", DoubleType, nullable = false),
-      StructField("id", LongType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "topk_long_agg"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (!base.isSuccess) base
-    else TopKAgg.checkK(prettyName, third)
+  case object NoPayload extends Kind[Double]("topk_agg", None) {
+    def view(e: Any): Double = e.asInstanceOf[Double]
   }
-
-  override def createAggregationBuffer(): TopKLongAgg.LongHeap =
-    new TopKLongAgg.LongHeap(k)
-
-  override def update(buf: TopKLongAgg.LongHeap, input: InternalRow): TopKLongAgg.LongHeap = {
-    val v = first.eval(input)
-    val p = second.eval(input)
-    if (v != null && p != null)
-      buf.offer(v.asInstanceOf[Double], p.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(a: TopKLongAgg.LongHeap, b: TopKLongAgg.LongHeap): TopKLongAgg.LongHeap = {
-    a.absorb(b); a
-  }
-
-  override def eval(buf: TopKLongAgg.LongHeap): Any = {
-    val rows = buf.sortedDesc.map { case (v, p) => InternalRow(v, p) }
-    new GenericArrayData(rows.asInstanceOf[Array[Any]])
-  }
-
-  override def serialize(buf: TopKLongAgg.LongHeap): Array[Byte] = buf.toBytes
-
-  override def deserialize(bytes: Array[Byte]): TopKLongAgg.LongHeap =
-    TopKLongAgg.LongHeap.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): TopKLongAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): TopKLongAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): TopKLongAgg =
-    copy(first = newChildren(0), second = newChildren(1), third = newChildren(2))
-}
-
-object TopKLongAgg {
-
-  /** Bounded min-heap over (value, id), primitive arrays only. Total order:
-    * a is weaker than b iff a.v sorts below b.v (`Double.compare` — NaN
-    * largest, like the window form), or values tie and a.id > b.id
-    * (id-ascending wins on ties). Root = weakest kept pair. */
-  final class LongHeap(val k: Int) {
-    private val vs = new Array[Double](k)
-    private val ids = new Array[Long](k)
-    private var n = 0
-
-    private def weaker(i: Int, j: Int): Boolean = {
-      val c = java.lang.Double.compare(vs(i), vs(j))
-      c < 0 || (c == 0 && ids(i) > ids(j))
+  case object LongPayload
+      extends Kind[(Double, Long)]("topk_long_agg", Some(StructField("id", LongType, nullable = false))) {
+    def view(e: Any): (Double, Long) = {
+      val r = e.asInstanceOf[InternalRow]
+      (r.getDouble(0), r.getLong(1))
     }
-    private def swap(i: Int, j: Int): Unit = {
-      val tv = vs(i); vs(i) = vs(j); vs(j) = tv
-      val tp = ids(i); ids(i) = ids(j); ids(j) = tp
-    }
-
-    def offer(v: Double, id: Long): Unit =
-      if (n < k) {
-        vs(n) = v; ids(n) = id; n += 1
-        var i = n - 1
-        while (i > 0 && weaker(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
-      } else if ({
-        val c = java.lang.Double.compare(vs(0), v)
-        c < 0 || (c == 0 && ids(0) > id)
-      }) {
-        vs(0) = v; ids(0) = id
-        var i = 0
-        var done = false
-        while (!done) {
-          val l = 2 * i + 1
-          val r = l + 1
-          var m = i
-          if (l < n && weaker(l, m)) m = l
-          if (r < n && weaker(r, m)) m = r
-          if (m == i) done = true else { swap(i, m); i = m }
-        }
-      }
-
-    def absorb(other: LongHeap): Unit = {
-      var i = 0
-      while (i < other.n) { offer(other.vs(i), other.ids(i)); i += 1 }
-    }
-
-    /** DESC by value (NaN first, mirroring ORDER BY v DESC), ASC by id on
-      * ties. */
-    def sortedDesc: Array[(Double, Long)] = {
-      val out = new Array[(Double, Long)](n)
-      var i = 0
-      while (i < n) { out(i) = (vs(i), ids(i)); i += 1 }
-      out.sortWith { case ((va, pa), (vb, pb)) =>
-        val c = java.lang.Double.compare(va, vb)
-        c > 0 || (c == 0 && pa < pb)
-      }
-    }
-
-    def toBytes: Array[Byte] = {
-      val bb = ByteBuffer.allocate(8 + n * 16)
-      bb.putInt(k).putInt(n)
-      var i = 0
-      while (i < n) { bb.putDouble(vs(i)).putLong(ids(i)); i += 1 }
-      bb.array()
+  }
+  case object StringPayload
+      extends Kind[(Double, String)]("topk_rows_agg", Some(StructField("payload", StringType, nullable = false))) {
+    def view(e: Any): (Double, String) = {
+      val r = e.asInstanceOf[InternalRow]
+      (r.getDouble(0), r.getUTF8String(1).toString)
     }
   }
 
-  object LongHeap {
-    def fromBytes(bytes: Array[Byte]): LongHeap = {
-      val bb = ByteBuffer.wrap(bytes)
-      val h = new LongHeap(bb.getInt())
-      val n = bb.getInt()
-      var i = 0
-      while (i < n) { h.offer(bb.getDouble(), bb.getLong()); i += 1 }
-      h
-    }
+  def fromBytes[R](bytes: Array[Byte], kind: Kind[R]): TopKHeap[R] = {
+    val bb = ByteBuffer.wrap(bytes)
+    val h = new TopKHeap(bb.getInt(), kind)
+    h.load(bb, bb.getInt())
+    h
   }
 }

@@ -447,43 +447,12 @@ object Similarity extends Entries {
         .collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
         .sortBy(t => (t._1, t._2))
-      def l2(a: Array[Double], b: Seq[Double]): Double = {
-        var acc = 0.0; var i = 0
-        while (i < a.length) { val dd = a(i) - b(i); acc += dd * dd; i += 1 }
-        acc
-      }
-      var cb: Seq[(Int, Int, Seq[Double])] = sample
-        .filter(_._1 < kcent)
-        .map { case (v, sub, a) => (sub, v, a.toSeq) }
-        .sortBy(t => (t._1, t._2)).toSeq
-      for (_ <- 1 to PqIters) {
-        val bySub = cb.groupBy(_._1)
-        // Seq.groupBy preserves per-key encounter order, so each cluster's
-        // members stay in (vec_id, sub) order and the double mean is exact
-        // the same way every run
-        val means: Map[(Int, Int), Seq[Double]] = sample.toSeq
-          .map { case (_, sub, a) =>
-            val (_, code, _) = bySub(sub)
-              .map { case (_, c, cv) => (l2(a, cv), c, cv) }
-              .minBy(t => (t._1, t._2))
-            ((sub, code), a)
-          }
-          .groupBy(_._1)
-          .map { case (k, members) =>
-            val dim = members.head._2.length
-            val m = new Array[Double](dim)
-            members.foreach { case (_, a) =>
-              var i = 0; while (i < dim) { m(i) += a(i); i += 1 }
-            }
-            k -> m.map(_ / members.size).toSeq
-          }
-        // empty clusters keep their previous centroid (deterministic carryover)
-        cb = cb.map { case (sub, code, old) =>
-          (sub, code, means.getOrElse((sub, code), old))
-        }
-      }
-      cb.map { case (sub, code, cv) =>
-        (sub.toLong, code.toLong, cv.map(_.toString).mkString(","))
+      // one Lloyd run per subspace, over its points in vec_id order;
+      // codes are the vec_ids of the seeding points
+      sample.groupBy(_._2).toSeq.sortBy(_._1).flatMap { case (sub, pts) =>
+        val seeds = pts.filter(_._1 < kcent)
+        seeds.map(_._1).zip(lloyd(pts.map(_._3).toSeq, seeds.map(_._3).toSeq, PqIters))
+          .map { case (code, cv) => (sub.toLong, code.toLong, cv.mkString(",")) }
       }.toDF("k1", "k2", "v")
     }.collect()
       .map(r => (r.getLong(0).toInt, r.getLong(1).toInt,
@@ -550,24 +519,20 @@ object Similarity extends Entries {
     * codebook and the corpus, and three entries (n04, n08, n12) each used
     * to re-run the full encode scan inside their own invocation. The
     * parquet materialization is the shingle/adjacency pattern: computed
-    * once per session, scanned by every consumer. Memo instances are
-    * keyed by (corpus-variant tag, config, normalize) — the same triple
-    * that picks the codebook — so distinct index configurations never
-    * collide. */
-  private val pqCodesMemos =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.SessionMemo[String, DataFrame]]
+    * once per session, scanned by every consumer. Keyed by (corpus dir,
+    * config tag), the tag naming the corpus variant, config and normalize
+    * flag — the same triple that picks the codebook — so distinct index
+    * configurations never collide. */
+  private val pqCodesMemo = new graft.SessionMemo[(String, String), DataFrame]
 
   private def pqCodesFor(s: SparkSession, d: String, raw: DataFrame,
       cfg: PqConfig, normalize: Boolean, tag: String): DataFrame = {
     import s.implicits._
-    val memo = pqCodesMemos.computeIfAbsent(
-      s"$tag-m${cfg.m}-k${cfg.kcent}-$normalize",
-      _ => new graft.SessionMemo[String, DataFrame])
-    memo.computeIfAbsent(s, d, _ => {
+    val cfgTag = s"pq_codes_${tag}_m${cfg.m}k${cfg.kcent}_$normalize"
+    pqCodesMemo.computeIfAbsent(s, (d, cfgTag), _ => {
       val sv = pqSubvectors(pqCorpus(raw, normalize), cfg)
       val cents = pqBooks(s, d, sv, cfg, normalize).toDF("sub", "code", "cv")
-      val out = Scratch.path(
-        s"pq_codes_${tag}_m${cfg.m}k${cfg.kcent}_$normalize", d, s)
+      val out = Scratch.path(cfgTag, d, s)
       sv.join(broadcast(cents), Seq("sub"))
         .withColumn("dist", l2Dist)
         .groupBy(col("vec_id"), col("sub"))
@@ -1243,33 +1208,35 @@ object Similarity extends Entries {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
+    val seeds = sample.filter(_._1 % RerankG == 0).take(IvfK).map(_._2).toSeq
+    lloyd(sample.map(_._2).toSeq, seeds, IvfIters).zipWithIndex.map { case (cv, c) =>
+      (c.toLong, 0L, cv.mkString(","))
+    }.toDF("k1", "k2", "v")
+  }
+
+  /** The driver k-means both model trainers run (PQ per subspace, the IVF
+    * coarse quantizer): `iters` Lloyd rounds from `seeds` over a bounded
+    * sample. Each point joins its nearest centroid by squared L2 (ties to
+    * the lower index), each centroid becomes the mean of its members
+    * summed in `points` order, and an empty cluster keeps its centroid —
+    * so a retrain reproduces the model bit for bit. */
+  private def lloyd(points: Seq[Array[Double]], seeds: Seq[Array[Double]],
+      iters: Int): IndexedSeq[Array[Double]] = {
     def l2(a: Array[Double], b: Array[Double]): Double = {
       var acc = 0.0; var i = 0
       while (i < a.length) { val dd = a(i) - b(i); acc += dd * dd; i += 1 }
       acc
     }
-    var cents: Seq[(Int, Array[Double])] = sample
-      .filter(_._1 % RerankG == 0).take(IvfK)
-      .zipWithIndex.map { case ((_, a), c) => (c, a) }.toSeq
-    for (_ <- 1 to IvfIters) {
-      val means = sample.toSeq
-        .map { case (_, a) =>
-          val (_, c) = cents.map { case (c, cv) => (l2(a, cv), c) }.minBy(identity)
-          (c, a)
-        }
-        .groupBy(_._1)
-        .map { case (c, members) =>
-          val m = new Array[Double](members.head._2.length)
-          members.foreach { case (_, a) =>
-            var i = 0; while (i < m.length) { m(i) += a(i); i += 1 }
-          }
-          c -> m.map(_ / members.size)
-        }
-      cents = cents.map { case (c, old) => (c, means.getOrElse(c, old)) }
+    var cents = seeds.toIndexedSeq
+    for (_ <- 1 to iters) {
+      val members = points.groupBy(a => cents.indices.minBy(c => (l2(a, cents(c)), c)))
+      cents = cents.indices.map(c => members.get(c).fold(cents(c)) { ms =>
+        val m = new Array[Double](ms.head.length)
+        ms.foreach { a => var i = 0; while (i < m.length) { m(i) += a(i); i += 1 } }
+        m.map(_ / ms.size)
+      })
     }
-    cents.map { case (c, cv) =>
-      (c.toLong, 0L, cv.map(_.toString).mkString(","))
-    }.toDF("k1", "k2", "v")
+    cents
   }
 
   /** N12 (extension): the full production vector-serving index — FAISS

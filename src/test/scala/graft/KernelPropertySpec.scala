@@ -464,14 +464,14 @@ class KernelPropertySpec extends AnyFunSuite {
 
   test("topk heaps: NaN sorts largest (Double.compare order) and non-BMP " +
     "payload ties break in code-point order, matching the window form") {
-    val h = new graft.functions.TopKAgg.Heap(2)
+    val h = new graft.functions.TopKHeap(2, graft.functions.TopKHeap.NoPayload)
     Seq(Double.NaN, 5.0, 9.0).foreach(h.offer)
     val kept = h.sortedDesc
     assert(kept.length == 2 && kept(0).isNaN && kept(1) === 9.0,
       s"raw < would wedge NaN at the root and drop 9.0: ${kept.toSeq}")
-    val rh = new graft.functions.TopKRowsAgg.RowHeap(1)
-    rh.offer(1.0, "𐀀") // U+10000 — UTF-16 code units sort it first
-    rh.offer(1.0, "")       // U+E000 — but code points sort it first
+    val rh = new graft.functions.TopKHeap(1, graft.functions.TopKHeap.StringPayload)
+    rh.offer(1.0, UTF8String.fromString("𐀀")) // U+10000 — UTF-16 code units sort it first
+    rh.offer(1.0, UTF8String.fromString(""))       // U+E000 — but code points sort it first
     assert(rh.sortedDesc.head._2 === "",
       "tie-break must be code-point (UTF8String/DuckDB) order, not UTF-16")
   }
@@ -485,21 +485,79 @@ class KernelPropertySpec extends AnyFunSuite {
       va > vb || (va == vb && ia < ib)
     }.take(5)
     // one heap fed sequentially
-    val h1 = new graft.functions.TopKLongAgg.LongHeap(5)
+    val h1 = new graft.functions.TopKHeap(5, graft.functions.TopKHeap.LongPayload)
     rows.foreach { case (v, i) => h1.offer(v, i) }
     assert(h1.sortedDesc.toSeq === expected)
     // partial heaps absorbed in shuffled order (the two-phase plan shape)
     val parts = rows.grouped(37).map { chunk =>
-      val h = new graft.functions.TopKLongAgg.LongHeap(5)
+      val h = new graft.functions.TopKHeap(5, graft.functions.TopKHeap.LongPayload)
       chunk.foreach { case (v, i) => h.offer(v, i) }
       h
     }.toSeq
-    val merged = new graft.functions.TopKLongAgg.LongHeap(5)
+    val merged = new graft.functions.TopKHeap(5, graft.functions.TopKHeap.LongPayload)
     new scala.util.Random(7).shuffle(parts).foreach(merged.absorb)
     assert(merged.sortedDesc.toSeq === expected, "merge must be order-free")
     // serde round-trip preserves the kept set
-    val rt = graft.functions.TopKLongAgg.LongHeap.fromBytes(merged.toBytes)
+    val rt = graft.functions.TopKHeap.fromBytes(merged.toBytes, graft.functions.TopKHeap.LongPayload)
     assert(rt.sortedDesc.toSeq === expected)
+  }
+
+  test("topk heaps tie -0.0 with 0.0 as ORDER BY does: the payload breaks " +
+    "the tie under any partitioning, and the value-only heap keeps 0.0") {
+    val spark = SparkSpec.session
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, lit, row_number}
+    import graft.functions.GraftExtensions.{topkAgg, topkLongAgg, topkRowsAgg}
+    val rows = Seq((1, 0.0, "b", 2L), (1, -0.0, "a", 1L)).toDF("g", "v", "p", "id")
+    def first(tiebreak: String) = rows
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy(col("g")).orderBy(col("v").desc, col(tiebreak))))
+      .filter(col("rnk") === 1).select(tiebreak).collect().map(_.get(0)).toSeq
+    assert(first("p") === Seq("a") && first("id") === Seq(1L),
+      "Spark's ORDER BY ties -0.0 with 0.0, so the second key decides")
+    for (parts <- Seq(1, 7)) {
+      val top = rows.repartition(parts).groupBy(col("g")).agg(
+        topkRowsAgg(col("v"), col("p"), lit(1)),
+        topkLongAgg(col("v"), col("id"), lit(1)),
+        topkAgg(col("v"), lit(1))).head()
+      assert(top.getSeq[Row](1).map(_.getString(1)) === first("p"), s"parts=$parts")
+      assert(top.getSeq[Row](2).map(_.getLong(1)) === first("id"), s"parts=$parts")
+      assert(top.getSeq[Double](3).map(java.lang.Double.doubleToRawLongBits) === Seq(0L),
+        s"parts=$parts: the value-only heap must keep 0.0, not -0.0")
+    }
+  }
+
+  test("topk heap: BIGINT-id offers, and STRING candidates it rejects, " +
+    "allocate nothing") {
+    import graft.functions.TopKHeap
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val n = 1000000
+    val rnd = new scala.util.Random(5)
+    // even offers rise past every kept value (kept, sifted), odd ones fall
+    // below the root (rejected)
+    val vs = Array.tabulate(n)(i => if (i % 2 == 0) i.toDouble else rnd.nextGaussian())
+    // a value tie with a larger payload: rejected after the payload compare
+    val late = Array("b", "zz", "\u00e9").map(UTF8String.fromString)
+    def offerAll(): Long = {
+      val ids = new TopKHeap(16, TopKHeap.LongPayload)
+      val strs = new TopKHeap(16, TopKHeap.StringPayload)
+      (0 until 16).foreach(_ => strs.offer(1.0, UTF8String.fromString("a")))
+      val tid = Thread.currentThread().getId
+      val before = mx.getThreadAllocatedBytes(tid)
+      var i = 0
+      while (i < n) {
+        ids.offer(vs(i), i.toLong)
+        strs.offer(if (i % 2 == 0) 1.0 else 0.5, late(i % 3))
+        i += 1
+      }
+      mx.getThreadAllocatedBytes(tid) - before
+    }
+    offerAll() // the first pass runs while the JIT compiles the heap
+    val allocated = offerAll()
+    assert(allocated < (1L << 20), s"$allocated bytes allocated over ${2 * n} offers")
   }
 
   test("topk_agg: non-literal k fails at analysis, not in a running task") {

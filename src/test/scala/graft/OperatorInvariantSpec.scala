@@ -2098,6 +2098,29 @@ class OperatorInvariantSpec extends SparkSpec {
     // (the candidate's own occurrence always verifies)
     assert(d18all.forall(r => r.getLong(2) >= 5L && r.getLong(3) >= 1L))
   }
+
+  test("ann models train bit-identically: the PQ codebooks and the IVF " +
+    "coarse centroids match their pinned SHA-256") {
+    // the n03/n04/n08/n12 goldens and oracles rest on these models, so a
+    // retrain must reproduce each one bit for bit
+    import graft.operators.{Relational, Similarity}
+    Similarity.forceAnnIndexes(spark, d)
+    val cat = Relational.s30Lake(spark, d)
+    val models = spark.sql(s"SHOW TABLES IN $cat.ann").collect().map(_.getString(1))
+      .filter(n => n.startsWith("pq_") || n.startsWith("ivf_coarse_")).sorted
+    val got = models.map { n =>
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      spark.table(s"$cat.ann.$n").filter(col("k1") >= 0L).collect()
+        .map(r => s"${r.getLong(0)},${r.getLong(1)},${r.getString(2)}\n").sorted
+        .foreach(l => md.update(l.getBytes("UTF-8")))
+      n -> md.digest().map("%02x".format(_)).mkString
+    }.toMap
+    assert(got === Map(
+      "ivf_coarse_k16" -> "0b493d758d3c6926ad24d0c7ac2109847398719750d64f06715cd19923a3f650",
+      "pq_m16_k64_norm" -> "8fd030eaabfda1c9711f9b570c30ff184646b654d2416c2b1de5209019883056",
+      "pq_m8_k32_raw" -> "9c0a995ee2526e38a814a1a99c377a55d57d4af5e2b8ea262eaf1b4e379b1d38"))
+  }
+
   test("ann index persistence: a fresh load path reads the catalog index " +
     "tables WITHOUT retraining, and a corpus that advances past the " +
     "index's recorded snapshot refuses loudly") {

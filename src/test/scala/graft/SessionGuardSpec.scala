@@ -12,10 +12,11 @@ import graft.functions.GraftExtensions
   * from an [[Entry]] table, every artifact is a row of [[Artifacts.all]]
   * and every `CALL` procedure a row of [[graft.sources.JsonlProcedures.all]];
   * the lake's write face implements each DSv2 write contract once, and its
-  * read face plans byte-range splits, change sets and file names once: a
-  * builder, a registration, a map, a procedure, write or stream class, a
-  * split loop or a name in SQL text anywhere else is a second copy, free
-  * to drift. */
+  * read face plans byte-range splits, change sets and file names once;
+  * one aggregate class and one heap ([[graft.functions.TopKHeap]]) rank
+  * every top-k: a builder, a registration, a map, a procedure, write or
+  * stream class, a split loop, an aggregate class, an order comparison
+  * or a name in SQL text anywhere else is a second copy, free to drift. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private def sources(f: File): Seq[File] =
@@ -37,6 +38,16 @@ class SessionGuardSpec extends AnyFunSuite {
       val t = l.trim
       t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
     }
+
+  /** [[codeLines]] cut into top-level definitions: each block opens with
+    * a class, object or trait header at column 0. */
+  private def topLevel(f: File): Seq[Seq[String]] = {
+    val header = """^(?:private\S*\s+)?(?:final\s+|abstract\s+|case\s+)*(?:class|object|trait)\s""".r
+    codeLines(f).foldLeft(Vector.empty[Vector[String]]) { (bs, l) =>
+      if (header.findFirstIn(l).nonEmpty || bs.isEmpty) bs :+ Vector(l)
+      else bs.init :+ (bs.last :+ l)
+    }
+  }
 
   test("GraftSession.scala is the only source that builds a SparkSession") {
     val needle = "SparkSession" + ".builder"
@@ -161,18 +172,33 @@ class SessionGuardSpec extends AnyFunSuite {
     // plans through the one change-set planner: a top-level definition
     // that implements MicroBatchStream and names the version offset is
     // a second change planner
-    val header = """^(?:private\S*\s+)?(?:final\s+|abstract\s+|case\s+)*(?:class|object|trait)\s""".r
     val stream = """\b(?:extends|with|new)\s+(?:[\w.]+\.)?MicroBatchStream\b""".r
     val versionStreams = for {
       f <- main
-      block <- codeLines(f).foldLeft(Vector.empty[Vector[String]]) { (bs, l) =>
-        if (header.findFirstIn(l).nonEmpty || bs.isEmpty) bs :+ Vector(l)
-        else bs.init :+ (bs.last :+ l)
-      }
+      block <- topLevel(f)
       if block.exists(stream.findFirstIn(_).nonEmpty) &&
         block.exists(_.contains("JsonlVersionOffset("))
     } yield s"${f.getName}: ${block.head.trim}"
     assert(versionStreams.size === 1,
       s"snapshot-version streams at ${versionStreams.size} sites: $versionStreams")
+  }
+
+  test("one top-k aggregate class, and one heap binds the selection order") {
+    val main = sources(root("src/main"))
+    val aggregate = """\b(?:extends|with)\s+TypedImperativeAggregate\b""".r
+    val aggregates = for {
+      f <- main; l <- codeLines(f) if aggregate.findFirstIn(l).nonEmpty
+    } yield s"${f.getName}: ${l.trim}"
+    assert(aggregates.size === 1,
+      s"${aggregates.size} TypedImperativeAggregate classes: $aggregates")
+    // a double or code-point comparison elsewhere in graft.functions is a
+    // second copy of the order TopKHeap writes once
+    val order = Seq("java.lang.Double.compare", "codePointAt")
+    val outside = for {
+      f <- main if f.getPath.contains("graft/functions")
+      block <- topLevel(f) if !block.head.startsWith("final class TopKHeap")
+      l <- block if order.exists(l.contains)
+    } yield s"${f.getName}: ${l.trim}"
+    assert(outside === Nil)
   }
 }
